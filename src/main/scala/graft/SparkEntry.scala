@@ -941,7 +941,7 @@ object SparkEntry {
       val m = operators.Ranking.readKeyedRefLm5(s, mp)
       val cuts = operators.Ranking.refLm5CutoffsByKeyCached(
         operators.Ranking.refLmKn5ScoreByKey(docs, "doc_id", "text", "lang", m,
-          minCount5 = 2, minCount4 = 2, checkpointTf = true),
+          minCount5 = 2, minCount4 = 2),
         "lang")
       try operators.Ranking.writeRefLmCutoffsByKey(cuts.df, cp)
       finally cuts.unpersist()
@@ -2819,7 +2819,7 @@ object SparkEntry {
       val m = operators.Ranking.readRefLm5(s, p)
       operators.Ranking.refLm5PerplexityBuckets(
         operators.Ranking.refLmKn5Score(docs, "doc_id", "text", m,
-          minCount5 = 2, minCount4 = 2, checkpointTf = true))
+          minCount5 = 2, minCount4 = 2))
     }),
 
     // ---- extension: per-language 5-gram Kneser-Ney ----
@@ -2836,7 +2836,7 @@ object SparkEntry {
       val m = operators.Ranking.readKeyedRefLm5(s, p)
       operators.Ranking.refLm5PerplexityBucketsByKey(
         operators.Ranking.refLmKn5ScoreByKey(docs, "doc_id", "text", "lang", m,
-          minCount5 = 2, minCount4 = 2, checkpointTf = true),
+          minCount5 = 2, minCount4 = 2),
         "lang")
     }),
 
@@ -2855,7 +2855,7 @@ object SparkEntry {
       val m = operators.Ranking.readKeyedRefLm5(s, mp)
       val cuts = operators.Ranking.readRefLmCutoffsByKey(s, cp)
       operators.Ranking.refLmKn5ScoreByKey(docs, "doc_id", "text", "lang", m,
-          minCount5 = 2, minCount4 = 2, checkpointTf = true)
+          minCount5 = 2, minCount4 = 2)
         .join(broadcast(cuts), Seq("lang"))
         .withColumn("bucket",
           when(col("logprob") >= col("v_head"), lit("head"))

@@ -1,49 +1,67 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The three-way diff outputs of a sync (reference `dbsync.go:138-142`
-  * `DiffOperations`). Each member is a lazy DataFrame — no action runs
-  * until the caller counts/collects/writes.
+/** The change set of a sync (reference `dbsync.go:138-142`
+  * `DiffOperations`): ONE lazy frame, `changes`, whose rows each carry
+  * an op tag ([[Differ.OpCol]]) and both sides of the row — the file
+  * values under their own names and the DB values under a `__db_`
+  * prefix. No action runs until the caller collects or writes.
   *
-  * `toUpdate` carries both sides: the new (file) values under their own
-  * names plus the previous (DB) values under a `__db_` prefix, so a
-  * dry-run plan can render before -> after per column
+  * `toInsert`, `toUpdate` and `toDelete` are filters of that one frame
+  * in the shapes of the sides they come from: inserts carry the file's
+  * columns, deletes the DB's columns and types, and updates the file's
+  * columns plus the previous DB values of the compared columns under
+  * the `__db_` prefix, so a dry-run plan can render before -> after
   * (reference `UpdateOperation`, `dbsync.go:132-135`).
   */
 final case class DiffOperations(
-    toInsert: DataFrame,
-    toUpdate: DataFrame,
-    toDelete: DataFrame)
+    changes: DataFrame,
+    fileCols: Seq[String],
+    dbCols: Seq[String],
+    compareCols: Seq[String]) {
+  private def tagged(op: String): DataFrame =
+    changes.filter(col(Differ.OpCol) === op)
+
+  def toInsert: DataFrame = tagged(Differ.Insert).select(fileCols.map(col): _*)
+
+  def toUpdate: DataFrame = tagged(Differ.Update)
+    .select((fileCols ++ compareCols.map(Differ.DbPrefix + _)).map(col): _*)
+
+  def toDelete: DataFrame = tagged(Differ.Delete)
+    .select(dbCols.map(c => col(Differ.DbPrefix + c).as(c)): _*)
+}
 
 /** Set-based diff engine.
   *
   * Re-expresses the reference's single-node hash-map diff
   * (`processFileRecords`/`findRecordsToDelete`/`diffData`,
-  * `dbsync.go:695-780`) as three relational joins on the canonical
-  * primary-key string:
+  * `dbsync.go:695-780`) as ONE full outer join of the file and the DB on
+  * the canonical primary-key string, tagged per row:
   *
-  *   - toInsert = file LEFT ANTI JOIN db ON pk
-  *   - toUpdate = file INNER JOIN db ON pk WHERE any compare column's
+  *   - insert: the key is in the file only
+  *   - delete: the key is in the DB only
+  *   - update: the key is on both sides and any compare column's
   *     canonical rendering differs (`compareRecords`, `dbsync.go:695-715`)
-  *   - toDelete = db LEFT ANTI JOIN file ON pk
   *
-  * Joining on [[Canonical.canonical]] strings reproduces the reference's
-  * cross-type key equality (`PrimaryKey`, `dbsync.go:21-48`: int `123`
-  * matches string `"123"`), and canonical change detection is null-safe
-  * by construction (NULL renders as "").
+  * Unchanged rows are dropped. Joining on [[Canonical.canonical]]
+  * strings reproduces the reference's cross-type key equality
+  * (`PrimaryKey`, `dbsync.go:21-48`: int `123` matches string `"123"`),
+  * and canonical change detection is null-safe by construction (NULL
+  * renders as "").
   *
-  * Scale notes: all three outputs shuffle on the same key, so Catalyst
-  * plans one exchange per side and AQE picks broadcast vs sort-merge at
-  * runtime from actual sizes. When the caller knows the file side is
-  * small (the common sync case — a changed-rows feed against a big
-  * table), `broadcastFile = true` pins a broadcast hash join and the big
-  * DB side is never shuffled at all.
+  * Scale notes: one join means one exchange per side, and AQE picks the
+  * join strategy and partition count at runtime from actual sizes.
   */
 object Differ {
   val PkKeyCol = "__pk"
   val DbPrefix = "__db_"
+  /** The op tag column of [[DiffOperations.changes]]. */
+  val OpCol = "__op"
+  val Insert = "insert"
+  val Update = "update"
+  val Delete = "delete"
 
   /** Adds the canonical PK join key and drops rows with a null/empty PK
     * (reference skips them: `dbsync.go:662-671`, `dbsync.go:724-728`).
@@ -53,45 +71,40 @@ object Differ {
         Canonical.canonical(df(pk), df.schema(pk).dataType))
       .filter(col(PkKeyCol) =!= "")
 
-  /** Three-way diff of `file` (desired state) against `db` (current
-    * state) on primary key `pk`.
+  /** Tagged diff of `file` (desired state) against `db` (current state)
+    * on primary key `pk`.
     *
     * @param compareCols columns whose change triggers an update; default
     *                    is every shared non-PK column (the reference's
     *                    `determineActualSyncColumns` intersection).
-    * @param broadcastFile force broadcast of the file side (small-side
-    *                      hint); leave false to let AQE decide.
     */
   def diff(
       file: DataFrame,
       db: DataFrame,
       pk: String,
-      compareCols: Seq[String] = Nil,
-      broadcastFile: Boolean = false): DiffOperations = {
+      compareCols: Seq[String] = Nil): DiffOperations = {
     val cols =
       if (compareCols.nonEmpty) compareCols
       else file.columns.intersect(db.columns).filterNot(_ == pk).toSeq
 
-    val f  = withPkKey(file, pk)
-    val d  = withPkKey(db, pk)
-    val fb = if (broadcastFile) broadcast(f) else f
-    val fKeys = if (broadcastFile) broadcast(f.select(PkKeyCol)) else f.select(PkKeyCol)
-
-    val toInsert = fb.join(d.select(PkKeyCol), Seq(PkKeyCol), "left_anti").drop(PkKeyCol)
-    val toDelete = d.join(fKeys, Seq(PkKeyCol), "left_anti").drop(PkKeyCol)
-
-    val dbSide = d.select(
-      col(PkKeyCol) +: cols.map(c => col(c).as(DbPrefix + c)): _*)
-    val joined = fb.join(dbSide, Seq(PkKeyCol), "inner")
+    val d = withPkKey(db, pk)
+    val dbSide = d.select(d.columns.map(c => col(c).as(DbPrefix + c)): _*)
+    val fileKey = col(PkKeyCol)
+    val dbKey = col(DbPrefix + PkKeyCol)
+    val joined = withPkKey(file, pk).join(dbSide, fileKey === dbKey, "full_outer")
     val changed = cols
       .map { c =>
-        Canonical.canonical(joined(c), file.schema(c).dataType) =!=
-          Canonical.canonical(joined(DbPrefix + c), db.schema(c).dataType)
+        Canonical.canonical(col(c), file.schema(c).dataType) =!=
+          Canonical.canonical(col(DbPrefix + c), db.schema(c).dataType)
       }
       .reduceOption(_ || _)
       .getOrElse(lit(false))
-    val toUpdate = joined.filter(changed).drop(PkKeyCol)
+    val changes = joined
+      .withColumn(OpCol,
+        when(dbKey.isNull, Insert).when(fileKey.isNull, Delete).when(changed, Update))
+      .filter(col(OpCol).isNotNull)
+      .drop(PkKeyCol, DbPrefix + PkKeyCol)
 
-    DiffOperations(toInsert, toUpdate, toDelete)
+    DiffOperations(changes, file.columns.toSeq, db.columns.toSeq, cols)
   }
 }

@@ -1,14 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.col
-
 /** Dry-run execution plan (reference `ExecutionPlan`,
   * `dbsync.go:145-250`, `generateExecutionPlan` `dbsync.go:347-400`):
   * operation counts plus a bounded sample of affected records with
   * before -> after values per changed column, annotated with
-  * timestamp/immutable column behavior. Counts run distributed; only
-  * the display samples are collected.
+  * timestamp/immutable column behavior. `SyncRunner` builds it from
+  * the change set it collected for the run.
   */
 final case class ExecutionPlan(
     table: String,
@@ -44,48 +41,4 @@ final case class ExecutionPlan(
 
 object ExecutionPlan {
   val SampleLimit = 10
-
-  def fromDiff(
-      table: String,
-      diff: DiffOperations,
-      pk: String,
-      cols: Seq[String],
-      timestampCols: Seq[String] = Nil,
-      immutableCols: Seq[String] = Nil): ExecutionPlan = {
-
-    val inserts = diff.toInsert.count()
-    val updates = diff.toUpdate.count()
-    val deletes = diff.toDelete.count()
-
-    // reference-parity value rendering (convertValueToString, incl.
-    // Go 'g' floats); null keeps the explicit NULL marker for display
-    def disp(v: Any): String = if (v == null) "NULL" else Canonical.goString(v)
-    def fmt(r: Row, cs: Seq[String]): String =
-      cs.map(c => s"$c=${disp(r.getAs[Any](c))}").mkString(", ")
-
-    val insertSamples = diff.toInsert.select(cols.map(col): _*)
-      .limit(SampleLimit).collect().toSeq.map(r => fmt(r, cols))
-
-    val nonPk = cols.filterNot(_ == pk)
-    val updateSamples = diff.toUpdate
-      .select((cols.map(col) ++ nonPk.map(c => col(Differ.DbPrefix + c))): _*)
-      .limit(SampleLimit).collect().toSeq.map { r =>
-        val changes = nonPk.flatMap { c =>
-          val before = disp(r.getAs[Any](Differ.DbPrefix + c))
-          val after = disp(r.getAs[Any](c))
-          if (before == after) None
-          else {
-            val note = if (immutableCols.contains(c)) " [immutable — skipped]" else ""
-            Some(s"$c: $before -> $after$note")
-          }
-        }
-        s"$pk=${disp(r.getAs[Any](pk))}: ${changes.mkString("; ")}"
-      }
-
-    val deleteSamples = diff.toDelete.select(cols.map(col): _*)
-      .limit(SampleLimit).collect().toSeq.map(r => fmt(r, cols))
-
-    ExecutionPlan(table, inserts, updates, deletes,
-      insertSamples, updateSamples, deleteSamples, timestampCols, immutableCols)
-  }
 }

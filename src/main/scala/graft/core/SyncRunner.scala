@@ -3,9 +3,9 @@ package graft.core
 import java.sql.Connection
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, when}
 
-import graft.config.{DependencyGraph, SyncConfig, TableSyncConfig}
+import graft.config.{DbConfig, DependencyGraph, SyncConfig, TableSyncConfig}
 import graft.sinks.JdbcSyncWriter
 import graft.sources.Readers
 
@@ -41,14 +41,15 @@ private final case class TableOps(
   * `dbsync.go:407-491`, `dbsync.go:931-1291`).
   *
   * The heavy relational work (scans, schema intersection, validation,
-  * three-way diff) runs distributed through Spark; the transaction
+  * the tagged diff) runs distributed through Spark; the transaction
   * boundary stays on the driver (one JDBC connection, one commit) to
   * preserve the reference's all-or-nothing guarantee.
   *
-  * Read/write phasing: every table's diff is computed and MATERIALIZED
-  * against the original DB state before the first write. That is safe
-  * because the three diff sets are disjoint by construction (toInsert =
-  * file∖db, toUpdate ⊆ file∩db, toDelete = db∖file), and necessary
+  * Read/write phasing: every table's change set is computed and
+  * MATERIALIZED — one collect per table, split by op tag on the driver
+  * — against the original DB state before the first write. That is
+  * safe because each changed key carries exactly one tag (insert =
+  * file∖db, update ⊆ file∩db, delete = db∖file), and necessary
   * because Spark's JDBC scans run on their own connections — a scan
   * issued after the driver transaction started writing would deadlock
   * on its row locks. (The reference re-reads between phases only
@@ -60,7 +61,8 @@ private final case class TableOps(
   *   2. read current DB table; resolve the actual sync column set as
   *      file-columns ∩ db-columns ∩ configured columns; the PK must
   *      survive (`determineActualSyncColumns`, `dbsync.go:321-344`)
-  *   3. diff mode: strict PK validation (aborts on violations)
+  *   3. diff mode: strict PK validation (aborts on violations), then
+  *      the tagged change set, collected in one action
   *   4. dry-run: build the ExecutionPlan, write nothing
   *   5. else: deletes child->parent, then inserts/updates
   *      parent->child, one commit
@@ -231,6 +233,95 @@ object SyncRunner {
     }
   }
 
+  /** One table's sync columns and the file and DB frames narrowed to
+    * them, the file's column types cast to the DB's.
+    */
+  private[graft] final case class SyncFrames(
+      cols: Seq[String], pk: String, file: DataFrame, db: DataFrame)
+
+  /** Resolves the sync column set of table `t` against the live DB
+    * table and aligns `file` to it — the one resolution both the batch
+    * sync and the streaming sync diff through.
+    *
+    * Columns are file-columns ∩ db-columns ∩ configured columns in
+    * file-header order (`determineActualSyncColumns`,
+    * `dbsync.go:321-344`); an empty file falls back to the DB column
+    * list (`dbsync.go:447-459`). In diff mode the PK must survive, and
+    * no sync column may take a name the diff reserves for itself.
+    *
+    * File column types are cast to the DB schema: the reference leans
+    * on MySQL's implicit coercion at INSERT time; casting up front keeps
+    * the diff and strict JDBC drivers coherent. A zero-column file (e.g.
+    * JSON `[]`) becomes an empty relation in the DB's shape — the
+    * reference's empty-file fallback: overwrite clears,
+    * diff+deleteNotInFile deletes everything, plain diff is a no-op.
+    */
+  private[graft] def syncFrames(
+      db: DbConfig,
+      conn: Connection,
+      t: TableSyncConfig,
+      file: DataFrame): SyncFrames = {
+    val dbCols = JdbcSyncWriter.tableColumns(conn, t.name)
+    val db0 = JdbcSyncWriter.readTable(file.sparkSession, db, t.name)
+    val dbLower = db0.toDF(db0.columns.map(_.toLowerCase): _*)
+
+    val fileCols = file.columns.map(_.toLowerCase).toSeq
+    val base = if (fileCols.isEmpty) dbCols else fileCols.filter(dbCols.contains)
+    val cols =
+      if (t.columns.nonEmpty) base.filter(c => t.columns.map(_.toLowerCase).contains(c))
+      else base
+    val pk = t.primaryKey.toLowerCase
+    if (t.mode == SyncConfig.ModeDiff) {
+      if (!cols.contains(pk))
+        throw new IllegalArgumentException(
+          s"table '${t.name}': primary key '${t.primaryKey}' not in sync columns ${cols.mkString(", ")}")
+      val reserved = cols.filter(c =>
+        c == Differ.PkKeyCol || c == Differ.OpCol || c.startsWith(Differ.DbPrefix))
+      if (reserved.nonEmpty)
+        throw new IllegalArgumentException(
+          s"table '${t.name}': column(s) ${reserved.mkString(", ")} use a name the diff " +
+            s"reserves (${Differ.PkKeyCol}, ${Differ.OpCol}, ${Differ.DbPrefix}*)")
+    }
+
+    val dbSel = dbLower.select(cols.map(col): _*)
+    val fileSel =
+      if (fileCols.isEmpty) dbSel.limit(0)
+      else {
+        val lowered = file.toDF(fileCols: _*).select(cols.map(col): _*)
+        cols.foldLeft(lowered) { (d, c) =>
+          val target = dbSel.schema(c).dataType
+          if (d.schema(c).dataType == target) d
+          else d.withColumn(c, col(c).cast(target))
+        }
+      }
+    SyncFrames(cols, pk, fileSel, dbSel)
+  }
+
+  /** Collects one table's change set in ONE action and splits it by op
+    * tag on the driver: (inserts, updates, deletes), each row holding
+    * the sync columns — a delete row's values come from the DB side.
+    * Delete rows are filtered out in Spark unless `deletes`; the
+    * `__db_` before-values of the non-PK columns ride along only for a
+    * dry run, whose plan is their only reader.
+    */
+  private[graft] def collectChanges(
+      diff: DiffOperations,
+      cols: Seq[String],
+      pk: String,
+      deletes: Boolean,
+      dryRun: Boolean): (Seq[Row], Seq[Row], Seq[Row]) = {
+    val op = col(Differ.OpCol)
+    val values = cols.map(c =>
+      when(op === Differ.Delete, col(Differ.DbPrefix + c)).otherwise(col(c)).as(c))
+    val before =
+      if (dryRun) cols.filterNot(_ == pk).map(c => col(Differ.DbPrefix + c)) else Nil
+    val changes = if (deletes) diff.changes else diff.changes.filter(op =!= Differ.Delete)
+    val byOp = changes.select((values ++ before :+ op): _*).collect().toSeq
+      .groupBy(_.getAs[String](Differ.OpCol))
+    def rows(tag: String): Seq[Row] = byOp.getOrElse(tag, Nil)
+    (rows(Differ.Insert), rows(Differ.Update), rows(Differ.Delete))
+  }
+
   private def computeOps(
       spark: SparkSession,
       config: SyncConfig,
@@ -238,41 +329,7 @@ object SyncRunner {
       t: TableSyncConfig): TableOps = {
 
     val file = Readers.forPath(spark, t.filePath, t.columns)
-    val dbCols = JdbcSyncWriter.tableColumns(conn, t.name)
-    val db0 = JdbcSyncWriter.readTable(spark, config.db, t.name)
-    val db = db0.toDF(db0.columns.map(_.toLowerCase): _*)
-
-    // three-way intersection, file-header order (dbsync.go:321-344);
-    // empty file falls back to the DB column list (dbsync.go:447-459)
-    val fileCols = file.columns.map(_.toLowerCase).toSeq
-    val base = if (fileCols.isEmpty) dbCols else fileCols.filter(dbCols.contains)
-    val cols =
-      if (t.columns.nonEmpty) base.filter(c => t.columns.map(_.toLowerCase).contains(c))
-      else base
-    val pk = t.primaryKey.toLowerCase
-    if (t.mode == SyncConfig.ModeDiff && !cols.contains(pk))
-      throw new IllegalArgumentException(
-        s"table '${t.name}': primary key '${t.primaryKey}' not in sync columns ${cols.mkString(", ")}")
-
-    // Align file column types to the DB schema before diffing/writing:
-    // the reference leans on MySQL's implicit coercion at INSERT time;
-    // casting up front keeps the diff and strict JDBC drivers coherent.
-    // A zero-column file (e.g. JSON `[]`) becomes an empty relation in
-    // the DB's shape — the reference's empty-file fallback
-    // (dbsync.go:447-459): overwrite clears, diff+deleteNotInFile
-    // deletes everything, plain diff is a no-op.
-    val dbSel = db.select(cols.map(col): _*)
-    val fileSel =
-      if (fileCols.isEmpty) dbSel.limit(0)
-      else {
-        val lowered = file.toDF(file.columns.map(_.toLowerCase): _*)
-          .select(cols.map(col): _*)
-        cols.foldLeft(lowered) { (d, c) =>
-          val target = dbSel.schema(c).dataType
-          if (d.schema(c).dataType == target) d
-          else d.withColumn(c, col(c).cast(target))
-        }
-      }
+    val SyncFrames(cols, pk, fileSel, dbSel) = syncFrames(config.db, conn, t, file)
 
     t.mode match {
       case SyncConfig.ModeOverwrite =>
@@ -317,15 +374,8 @@ object SyncRunner {
         // Change detection deliberately includes immutable columns —
         // the reference compares every sync column (dbsync.go:695-715)
         // and only excludes immutable ones from the UPDATE SET.
-        val diff = Differ.diff(fileSel, dbSel, pk)
-        val nonPk = cols.filterNot(_ == pk)
-        val ins = diff.toInsert.select(cols.map(col): _*).collect().toSeq
-        val upd = diff.toUpdate
-          .select((cols.map(col) ++ nonPk.map(c => col(Differ.DbPrefix + c))): _*)
-          .collect().toSeq
-        val del =
-          if (t.deleteNotInFile) diff.toDelete.select(cols.map(col): _*).collect().toSeq
-          else Nil
+        val (ins, upd, del) = collectChanges(Differ.diff(fileSel, dbSel, pk),
+          cols, pk, deletes = t.deleteNotInFile, dryRun = config.dryRun)
         TableOps(t, cols, pk, ins, upd, del, Nil, 0L)
     }
   }

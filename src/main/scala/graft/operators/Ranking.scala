@@ -1308,9 +1308,8 @@ object Ranking {
     * distinct+join-back design) — so the distinct exchange, the
     * join-back (which broadcast-hashed the whole per-doc frame on five
     * string keys), and the two-consumer tokenize checkpoint were pure
-    * overhead. `checkpointTf` is accepted for API stability but moot:
-    * the per-doc frame now has exactly one consumer, so the pool is
-    * tokenized once by construction. Determinism unchanged: ln() of
+    * overhead: the per-doc frame has exactly one consumer, so the pool
+    * is tokenized once by construction. Determinism unchanged: ln() of
     * the same fixed IEEE expression rounds to 9 decimals per row (equal
     * 5-tuples produce bit-equal logp9 wherever they are evaluated),
     * exact decimal doc sums, one final 6-round. Returns
@@ -1318,25 +1317,25 @@ object Ranking {
     */
   def refLmKn5Score(pool: DataFrame, idCol: String, textCol: String,
       model: RefLm5Model, dNum: Int = 3, dDen: Int = 4,
-      minCount5: Long = 1, minCount4: Long = 1,
-      checkpointTf: Boolean = false): DataFrame = {
+      minCount5: Long = 1, minCount4: Long = 1): DataFrame = {
     require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
     require(minCount5 >= 1 && minCount4 >= 1,
       s"count-pruning thresholds must be >= 1, got $minCount5/$minCount4")
-    val id = col(idCol)
+    // the id rides the join chain as `__id`, so an idCol named like a
+    // model column cannot make the chain's references ambiguous
+    val id = col("__id")
     val d = dNum.toDouble / dDen
     // the per-doc 5-tuple frame: the groupBy's exchange is also what
     // spreads the downstream join chain across tasks (the raw explode
     // runs inside the scan's split count)
     val tf = pool
-      .select(id, TextAnalysis.tokens(col(textCol)).as("__a"))
+      .select(col(idCol).as("__id"), TextAnalysis.tokens(col(textCol)).as("__a"))
       .select(id, fivegramQuints.as("__qg"))
       .select(id, col("__qg.w1").as("w1"), col("__qg.w2").as("w2"),
         col("__qg.w3").as("w3"), col("__qg.w4").as("w4"),
         col("__qg.w5").as("w5"))
       .groupBy(id, col("w1"), col("w2"), col("w3"), col("w4"), col("w5"))
       .agg(count(lit(1)).as("tfq"))
-    val _ = checkpointTf // kept for API stability; see scaladoc
     // pruned raw views — every derivation below reads these
     val five = model.fivegrams.filter(col("c5") >= lit(minCount5))
     val four = model.fourgrams.filter(col("c4") >= lit(minCount4))
@@ -1410,7 +1409,7 @@ object Ranking {
       .groupBy(id)
       .agg(sum(col("tfq")).as("n_5grams"),
         sum(col("tfq").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id, col("n_5grams"),
+      .select(id.as(idCol), col("n_5grams"),
         round(col("__slp").cast("double") / col("n_5grams"), 6).as("logprob"))
   }
 
@@ -2117,8 +2116,7 @@ object Ranking {
     * (r18 optimization round) the model-join chain runs DIRECTLY over
     * the per-doc 5-tuple rows: the order-5 distinct dedup is ~1.002x
     * (see [[refLmKn5Score]]'s measured factors), so the distinct
-    * exchange, join-back and tokenize checkpoint were pure overhead;
-    * `checkpointTf` is accepted but moot (single consumer).
+    * exchange, join-back and tokenize checkpoint were pure overhead.
     *
     * Key contract as [[refLmKn3ScoreByKey]]: totals join INNER on the
     * key (unmodeled keys absent), per-key distinct-bigram total LEFT
@@ -2128,15 +2126,16 @@ object Ranking {
   def refLmKn5ScoreByKey(pool: DataFrame, idCol: String, textCol: String,
       keyCol: String, model: KeyedRefLm5Model,
       dNum: Int = 3, dDen: Int = 4,
-      minCount5: Long = 1, minCount4: Long = 1,
-      checkpointTf: Boolean = false): DataFrame = {
+      minCount5: Long = 1, minCount4: Long = 1): DataFrame = {
     require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
     require(minCount5 >= 1 && minCount4 >= 1,
       s"count-pruning thresholds must be >= 1, got $minCount5/$minCount4")
-    val id = col(idCol)
+    // the id rides the join chain as `__id`, like the key as `__k`
+    val id = col("__id")
     val d = dNum.toDouble / dDen
     val tf = pool
-      .select(id, col(keyCol).as("__k"), TextAnalysis.tokens(col(textCol)).as("__a"))
+      .select(col(idCol).as("__id"), col(keyCol).as("__k"),
+        TextAnalysis.tokens(col(textCol)).as("__a"))
       .select(id, col("__k"), fivegramQuints.as("__qg"))
       .select(id, col("__k"), col("__qg.w1").as("w1"), col("__qg.w2").as("w2"),
         col("__qg.w3").as("w3"), col("__qg.w4").as("w4"),
@@ -2144,7 +2143,6 @@ object Ranking {
       .groupBy(id, col("__k"), col("w1"), col("w2"), col("w3"), col("w4"),
         col("w5"))
       .agg(count(lit(1)).as("tfq"))
-    val _ = checkpointTf // kept for API stability; see scaladoc
     // pruned raw views — every derivation below reads these
     val five = model.fivegrams.filter(col("c5") >= lit(minCount5))
     val four = model.fourgrams.filter(col("c4") >= lit(minCount4))
@@ -2215,7 +2213,7 @@ object Ranking {
       .groupBy(id, col("__k"))
       .agg(sum(col("tfq")).as("n_5grams"),
         sum(col("tfq").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id, col("__k").as(keyCol), col("n_5grams"),
+      .select(id.as(idCol), col("__k").as(keyCol), col("n_5grams"),
         round(col("__slp").cast("double") / col("n_5grams"), 6).as("logprob"))
   }
 

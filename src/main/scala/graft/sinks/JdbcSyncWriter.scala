@@ -5,7 +5,6 @@ import java.sql.{Connection, DriverManager, PreparedStatement, Timestamp}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.config.DbConfig
-import graft.core.DiffOperations
 
 /** Transactional JDBC sync sink.
   *
@@ -243,39 +242,6 @@ object JdbcSyncWriter {
     val st = conn.createStatement()
     try st.executeUpdate(s"DELETE FROM $table")
     finally st.close()
-  }
-
-  /** Transactional DELETE-all + reinsert (overwrite mode). */
-  def overwrite(
-      conn: Connection,
-      table: String,
-      cols: Seq[String],
-      rows: Seq[Row],
-      timestampCols: Seq[String] = Nil): Int = {
-    deleteAll(conn, table)
-    bulkInsert(conn, table, cols, rows, timestampCols)
-  }
-
-  /** Apply a three-way diff inside the caller's open transaction:
-    * insert, update, delete — in that order, like the reference's
-    * `executeSyncOperations` (`dbsync.go:532-565`). Does NOT commit.
-    */
-  def applyDiff(
-      conn: Connection,
-      table: String,
-      cols: Seq[String],
-      pk: String,
-      diff: DiffOperations,
-      timestampCols: Seq[String] = Nil,
-      immutableCols: Seq[String] = Nil): (Int, Int, Int) = {
-    val colCols = cols.map(org.apache.spark.sql.functions.col)
-    val ins = diff.toInsert.select(colCols: _*).collect().toSeq
-    val upd = diff.toUpdate.select(colCols: _*).collect().toSeq
-    val del = diff.toDelete.select(pk).collect().map(_.get(0)).toSeq
-    (
-      bulkInsert(conn, table, cols, ins, timestampCols),
-      bulkUpdate(conn, table, cols, pk, upd, timestampCols, immutableCols),
-      bulkDelete(conn, table, pk, del))
   }
 
   /** Scale-out append: Spark's parallel JDBC writer (executors write

@@ -1,12 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.config.{SyncConfig, TableSyncConfig}
-import graft.core.{Differ, PrimaryKeyValidator}
+import graft.core.{Differ, PrimaryKeyValidator, SyncRunner}
 import graft.sinks.JdbcSyncWriter
 
 /** Incremental sync: a Structured Streaming source feeding one
@@ -23,39 +22,23 @@ import graft.sinks.JdbcSyncWriter
   */
 object StreamingSync {
 
-  /** Apply one micro-batch as a transactional diff-sync. Returns
-    * (inserted, updated).
+  /** Apply one micro-batch as a transactional diff-sync: the batch
+    * resolves and aligns to the table exactly as a file sync does
+    * ([[SyncRunner.syncFrames]]) and its change set collects in one
+    * action. Returns (inserted, updated).
     */
   def applyBatchDiff(
       batch: DataFrame,
       config: SyncConfig,
       t: TableSyncConfig): (Int, Int) = {
-    val spark = batch.sparkSession
     val conn = JdbcSyncWriter.connect(config.db)
     try {
-      val dbCols = JdbcSyncWriter.tableColumns(conn, t.name)
-      val db0 = JdbcSyncWriter.readTable(spark, config.db, t.name)
-      val db = db0.toDF(db0.columns.map(_.toLowerCase): _*)
-      val fileCols = batch.columns.map(_.toLowerCase).toSeq
-      val cols = fileCols.filter(dbCols.contains)
-      val pk = t.primaryKey.toLowerCase
-      require(cols.contains(pk), s"primary key '$pk' missing from batch columns")
-
-      val dbSel = db.select(cols.map(col): _*)
-      val aligned = cols.foldLeft(
-        batch.toDF(batch.columns.map(_.toLowerCase): _*).select(cols.map(col): _*)) {
-        (d, c) =>
-          val target = dbSel.schema(c).dataType
-          if (d.schema(c).dataType == target) d
-          else d.withColumn(c, col(c).cast(target))
-      }
-      PrimaryKeyValidator.validateStrict(aligned, pk)
-
-      val diff = Differ.diff(aligned, dbSel, pk)
-      val ins = diff.toInsert.select(cols.map(col): _*).collect().toSeq
-      val upd = diff.toUpdate.select(cols.map(col): _*).collect().toSeq
-      val i = JdbcSyncWriter.bulkInsert(conn, t.name, cols, ins, t.timestampColumns)
-      val u = JdbcSyncWriter.bulkUpdate(conn, t.name, cols, pk, upd,
+      val s = SyncRunner.syncFrames(config.db, conn, t, batch)
+      PrimaryKeyValidator.validateStrict(s.file, s.pk)
+      val (ins, upd, _) = SyncRunner.collectChanges(Differ.diff(s.file, s.db, s.pk),
+        s.cols, s.pk, deletes = false, dryRun = false)
+      val i = JdbcSyncWriter.bulkInsert(conn, t.name, s.cols, ins, t.timestampColumns)
+      val u = JdbcSyncWriter.bulkUpdate(conn, t.name, s.cols, s.pk, upd,
         t.timestampColumns, t.immutableColumns)
       conn.commit()
       (i, u)

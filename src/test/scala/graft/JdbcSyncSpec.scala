@@ -97,10 +97,48 @@ class JdbcSyncSpec extends AnyFunSuite {
     val r = SyncRunner.run(spark, cfg).head
     val p = r.plan.get
     assert((p.inserts, p.updates, p.deletes) == ((1L, 1L, 1L)))
-    assert(p.render.contains("name: old -> new"))
+    assert(p.render ==
+      """=== Execution plan for table 'dry_table' (dry run — no writes) ===
+        |  inserts: 1, updates: 1, deletes: 1
+        |  INSERT
+        |    id=3, name=add
+        |  UPDATE (before -> after)
+        |    id=1: name: old -> new
+        |  DELETE
+        |    id=2, name=gone
+        |""".stripMargin)
     // DB untouched
     assert(query("SELECT id, name FROM dry_table ORDER BY id") ==
       Seq(Seq(1, "old"), Seq(2, "gone")))
+  }
+
+  test("sync columns named like the diff's internal columns are rejected before any write") {
+    // Derby needs delimited identifiers for names starting with '_'
+    for (reserved <- Seq("__pk", "__op", "__db_name")) {
+      dropIfExists("rsv_table")
+      exec(
+        s"""CREATE TABLE rsv_table (id INT PRIMARY KEY, name VARCHAR(20), "${reserved.toUpperCase}" VARCHAR(20))""",
+        "INSERT INTO rsv_table VALUES (1, 'keep', 'x'), (2, 'gone', 'y')")
+      val f = csvFile(s"id,name,$reserved\n1,new,x\n3,add,z\n")
+      val cfg = SyncConfig(db, Seq(TableSyncConfig(
+        name = "rsv_table", filePath = f, mode = "diff",
+        primaryKey = "id", deleteNotInFile = true)))
+      val e = intercept[IllegalArgumentException](SyncRunner.run(spark, cfg))
+      assert(e.getMessage.contains(reserved) && e.getMessage.contains("reserve"), e.getMessage)
+      assert(query("SELECT id, name FROM rsv_table ORDER BY id") ==
+        Seq(Seq(1, "keep"), Seq(2, "gone")), reserved)
+    }
+    // other double-underscore names are ordinary sync columns (a dry
+    // run: Derby cannot take the undelimited name in the DML)
+    dropIfExists("rsv_table")
+    exec(
+      """CREATE TABLE rsv_table (id INT PRIMARY KEY, "__NOTE" VARCHAR(20))""",
+      "INSERT INTO rsv_table VALUES (1, 'old')")
+    val f = csvFile("id,__note\n1,new\n")
+    val r = SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
+      name = "rsv_table", filePath = f, mode = "diff", primaryKey = "id")),
+      dryRun = true)).head
+    assert(r.plan.get.updateSamples == Seq("id=1: __note: old -> new"))
   }
 
   test("overwrite replaces the full table transactionally") {

@@ -160,6 +160,25 @@ class RefLmKn5Spec extends AnyFunSuite {
     }
   }
 
+  test("an id column named like a model column scores like any other id") {
+    val m = Ranking.refLm5Train(docs, "id", "text", col("is_ref"))
+    val pool = docs.filter(!col("is_ref"))
+    def scores(df: org.apache.spark.sql.DataFrame, idCol: String) =
+      df.select(col(idCol), col("n_5grams"), col("logprob"))
+        .as[(Long, Long, Double)].collect().toSet
+    val expect = scores(Ranking.refLmKn5Score(pool, "id", "text", m), "id")
+    val got = Ranking.refLmKn5Score(pool.withColumnRenamed("id", "c5"), "c5", "text", m)
+    assert(got.columns.toSeq == Seq("c5", "n_5grams", "logprob"))
+    assert(scores(got, "c5") == expect)
+    val km = Ranking.refLm5TrainByKey(docs.withColumn("lang", lit("L1")),
+      "id", "text", "lang", col("is_ref"))
+    val keyed = Ranking.refLmKn5ScoreByKey(
+      pool.withColumn("lang", lit("L1")).withColumnRenamed("id", "c5"),
+      "c5", "text", "lang", km)
+    assert(keyed.columns.toSeq == Seq("c5", "lang", "n_5grams", "logprob"))
+    assert(scores(keyed, "c5") == expect)
+  }
+
   test("keyed KN5 merge == keyed retrain, bit-for-bit across both languages") {
     val dir = Files.createTempDirectory("reflmkn5-keyed-merge").toString
     val p = s"$dir/model"
