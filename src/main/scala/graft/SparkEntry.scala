@@ -745,8 +745,7 @@ object SparkEntry {
       val p = tempArtifactDir("graft-reflm").resolve("model").toString
       val docs = T(s, dir, "documents")
       operators.Ranking.writeRefLm(
-        operators.Ranking.refLmTrain(
-          docs, "doc_id", "text", col("lang") === "en"), p)
+        operators.Ranking.refLmTrain(docs, "text", col("lang") === "en"), p)
       // the corpus snapshot stamp rides beside the count tables: the
       // deploy paths (q183/q184) verify it against the live corpus
       // before serving — a changed source can never silently serve
@@ -772,7 +771,7 @@ object SparkEntry {
       val p = base.resolve("model").toString
       val docs = T(s, dir, "documents")
       operators.Ranking.writeRefLm(
-        operators.Ranking.refLmTrain(docs, "doc_id", "text",
+        operators.Ranking.refLmTrain(docs, "text",
           col("lang") === "en" && col("doc_id") % 2 === 0), p)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       p
@@ -789,9 +788,8 @@ object SparkEntry {
       val base = tempArtifactDir("graft-reflm3")
       val p = base.resolve("model").toString
       val docs = T(s, dir, "documents")
-      operators.Ranking.writeRefLm3(
-        operators.Ranking.refLm3Train(
-          docs, "doc_id", "text", col("lang") === "en"), p)
+      operators.Ranking.writeRefLm(
+        operators.Ranking.refLmTrain(docs, "text", col("lang") === "en", 3), p)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       p
     }
@@ -810,9 +808,8 @@ object SparkEntry {
       val base = tempArtifactDir("graft-reflm5")
       val p = base.resolve("model").toString
       val docs = T(s, dir, "documents")
-      operators.Ranking.writeRefLm5(
-        operators.Ranking.refLm5Train(
-          docs, "doc_id", "text", col("lang") === "en"), p)
+      operators.Ranking.writeRefLm(
+        operators.Ranking.refLmTrain(docs, "text", col("lang") === "en", 5), p)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       p
     }
@@ -830,17 +827,16 @@ object SparkEntry {
       val base = tempArtifactDir("graft-reflm-keyed")
       val (mp, cp) = (base.resolve("model").toString, base.resolve("cutoffs").toString)
       val docs = T(s, dir, "documents")
-      val m = operators.Ranking.refLmTrainByKey(
-        docs, "doc_id", "text", "lang", col("source").isin("src0", "src1"))
-      operators.Ranking.writeKeyedRefLm(m, mp)
+      val m = operators.Ranking.refLmTrain(
+        docs, "text", col("source").isin("src0", "src1"), keyCol = Some("lang"))
+      operators.Ranking.writeRefLm(m, mp)
       // Cached variant: release the score histogram once the cutoff
       // artifact is written — the builder runs once per JVM but the
       // CachedDF discipline keeps the block from pinning regardless
-      val cuts = operators.Ranking.refLmCutoffsByKeyCached(
-        operators.Ranking.refLmScoreByKey(docs, "doc_id", "text", "lang", m,
-          checkpointTf = true),
-        "lang")
-      try operators.Ranking.writeRefLmCutoffsByKey(cuts.df, cp)
+      val cuts = operators.Ranking.refLmCutoffsCached(
+        operators.Ranking.refLmScore(docs, "doc_id", "text", m,
+          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
+      try operators.Ranking.writeRefLmCutoffs(cuts.df, cp)
       finally cuts.unpersist()
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       (mp, cp)
@@ -859,14 +855,13 @@ object SparkEntry {
       val base = tempArtifactDir("graft-reflm3-keyed")
       val (mp, cp) = (base.resolve("model").toString, base.resolve("cutoffs").toString)
       val docs = T(s, dir, "documents")
-      val m = operators.Ranking.refLm3TrainByKey(
-        docs, "doc_id", "text", "lang", col("source").isin("src0", "src1"))
-      operators.Ranking.writeKeyedRefLm3(m, mp)
-      val cuts = operators.Ranking.refLm3CutoffsByKeyCached(
-        operators.Ranking.refLm3ScoreByKey(docs, "doc_id", "text", "lang", m,
-          checkpointTf = true),
-        "lang")
-      try operators.Ranking.writeRefLmCutoffsByKey(cuts.df, cp)
+      val m = operators.Ranking.refLmTrain(
+        docs, "text", col("source").isin("src0", "src1"), 3, Some("lang"))
+      operators.Ranking.writeRefLm(m, mp)
+      val cuts = operators.Ranking.refLmCutoffsCached(
+        operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
+          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
+      try operators.Ranking.writeRefLmCutoffs(cuts.df, cp)
       finally cuts.unpersist()
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       (mp, cp)
@@ -889,12 +884,11 @@ object SparkEntry {
       val cp = base.resolve("cutoffs").toString
       val docs = T(s, dir, "documents")
       val (mp, _) = keyedRefLm3Artifacts(s, dir)
-      val m = operators.Ranking.readKeyedRefLm3(s, mp)
-      val cuts = operators.Ranking.refLm3CutoffsByKeyCached(
-        operators.Ranking.refLmKn3ScoreByKey(docs, "doc_id", "text", "lang", m,
-          checkpointTf = true),
-        "lang")
-      try operators.Ranking.writeRefLmCutoffsByKey(cuts.df, cp)
+      val m = operators.Ranking.readRefLm(s, mp)
+      val cuts = operators.Ranking.refLmCutoffsCached(
+        operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
+          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
+      try operators.Ranking.writeRefLmCutoffs(cuts.df, cp)
       finally cuts.unpersist()
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       cp
@@ -914,10 +908,9 @@ object SparkEntry {
       val base = tempArtifactDir("graft-reflm5-keyed")
       val p = base.resolve("model").toString
       val docs = T(s, dir, "documents")
-      operators.Ranking.writeKeyedRefLm5(
-        operators.Ranking.refLm5TrainByKey(
-          docs, "doc_id", "text", "lang",
-          col("source").isin("src0", "src1")), p)
+      operators.Ranking.writeRefLm(
+        operators.Ranking.refLmTrain(
+          docs, "text", col("source").isin("src0", "src1"), 5, Some("lang")), p)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       p
     }
@@ -938,12 +931,11 @@ object SparkEntry {
       val cp = base.resolve("cutoffs").toString
       val docs = T(s, dir, "documents")
       val mp = keyedRefLm5Artifact(s, dir)
-      val m = operators.Ranking.readKeyedRefLm5(s, mp)
-      val cuts = operators.Ranking.refLm5CutoffsByKeyCached(
-        operators.Ranking.refLmKn5ScoreByKey(docs, "doc_id", "text", "lang", m,
-          minCount5 = 2, minCount4 = 2),
-        "lang")
-      try operators.Ranking.writeRefLmCutoffsByKey(cuts.df, cp)
+      val m = operators.Ranking.readRefLm(s, mp)
+      val cuts = operators.Ranking.refLmCutoffsCached(
+        operators.Ranking.refLmKn5Score(docs, "doc_id", "text", m,
+          minCount5 = 2, minCount4 = 2, keyCol = Some("lang")), Some("lang"))
+      try operators.Ranking.writeRefLmCutoffs(cuts.df, cp)
       finally cuts.unpersist()
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       cp
@@ -982,9 +974,9 @@ object SparkEntry {
       val base = tempArtifactDir("graft-reflm3-keyed-base")
       val p = base.resolve("model").toString
       val docs = T(s, dir, "documents")
-      operators.Ranking.writeKeyedRefLm3(
-        operators.Ranking.refLm3TrainByKey(docs, "doc_id", "text", "lang",
-          col("source").isin("src0", "src1") && col("doc_id") % 2 === 0), p)
+      operators.Ranking.writeRefLm(
+        operators.Ranking.refLmTrain(docs, "text", col("source").isin("src0", "src1") &&
+          col("doc_id") % 2 === 0, 3, Some("lang")), p)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       p
     }
@@ -2483,7 +2475,7 @@ object SparkEntry {
     // with their context/unigram counts plus the model totals
     "q181_reflm_train" -> ((s, dir) => {
       val m = operators.Ranking.refLmTrain(
-        T(s, dir, "documents"), "doc_id", "text", col("lang") === "en")
+        T(s, dir, "documents"), "text", col("lang") === "en")
       m.bigrams
         .join(m.contexts, "w1")
         .join(m.unigrams.withColumnRenamed("term", "w2")
@@ -2503,8 +2495,7 @@ object SparkEntry {
     // scores, never a global row_number over the corpus
     "q182_perplexity_bucket" -> ((s, dir) => {
       val docs = T(s, dir, "documents")
-      val m = operators.Ranking.refLmTrain(
-        docs, "doc_id", "text", col("lang") === "en")
+      val m = operators.Ranking.refLmTrain(docs, "text", col("lang") === "en")
       operators.Ranking.refLmPerplexityBuckets(
         operators.Ranking.refLmScore(docs, "doc_id", "text", m,
           checkpointTf = true))
@@ -2538,13 +2529,11 @@ object SparkEntry {
     // window anywhere
     "q185_perplexity_by_lang" -> ((s, dir) => {
       val docs = T(s, dir, "documents")
-      val m = operators.Ranking.refLmTrainByKey(
-        docs, "doc_id", "text", "lang",
-        col("source").isin("src0", "src1"))
-      operators.Ranking.refLmPerplexityBucketsByKey(
-        operators.Ranking.refLmScoreByKey(docs, "doc_id", "text", "lang", m,
-          checkpointTf = true),
-        "lang")
+      val m = operators.Ranking.refLmTrain(
+        docs, "text", col("source").isin("src0", "src1"), keyCol = Some("lang"))
+      operators.Ranking.refLmPerplexityBuckets(
+        operators.Ranking.refLmScore(docs, "doc_id", "text", m,
+          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
     }),
 
     // ---- extension: tokenizer fit by language (BPE compression ratio) ----
@@ -2584,11 +2573,10 @@ object SparkEntry {
       val (mp, _) = keyedRefLmArtifacts(s, dir)
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(mp).getParent + "/stamp")
-      val m = operators.Ranking.readKeyedRefLm(s, mp)
-      operators.Ranking.refLmPerplexityBucketsByKey(
-        operators.Ranking.refLmScoreByKey(docs, "doc_id", "text", "lang", m,
-          checkpointTf = true),
-        "lang")
+      val m = operators.Ranking.readRefLm(s, mp)
+      operators.Ranking.refLmPerplexityBuckets(
+        operators.Ranking.refLmScore(docs, "doc_id", "text", m,
+          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
     }),
 
     // ---- extension: incremental reference-LM update ----
@@ -2615,7 +2603,7 @@ object SparkEntry {
       val p = tempArtifactDir("graft-reflm-inc").resolve("model")
       copyDirRecursive(java.nio.file.Paths.get(base), p)
       val merged = operators.Ranking.mergeIntoStoredRefLmReturning(s,
-        p.toString, docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
+        p.toString, docs.filter(col("doc_id") % 2 === 1), "text",
         isRef = col("lang") === "en")
         .getOrElse(sys.error("q190: fresh clone reported batch already applied"))
       operators.Ranking.refLmPerplexityBuckets(
@@ -2633,9 +2621,8 @@ object SparkEntry {
     // join — the scale shape is q182's
     "q191_reflm3_bucket" -> ((s, dir) => {
       val docs = T(s, dir, "documents")
-      val m = operators.Ranking.refLm3Train(
-        docs, "doc_id", "text", col("lang") === "en")
-      operators.Ranking.refLm3PerplexityBuckets(
+      val m = operators.Ranking.refLmTrain(docs, "text", col("lang") === "en", 3)
+      operators.Ranking.refLmPerplexityBuckets(
         operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
           checkpointTf = true))
     }),
@@ -2650,8 +2637,8 @@ object SparkEntry {
       val p = refLm3Artifact(s, dir)
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(p).getParent + "/stamp")
-      val m = operators.Ranking.readRefLm3(s, p)
-      operators.Ranking.refLm3PerplexityBuckets(
+      val m = operators.Ranking.readRefLm(s, p)
+      operators.Ranking.refLmPerplexityBuckets(
         operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
           checkpointTf = true))
     }),
@@ -2664,13 +2651,11 @@ object SparkEntry {
     // every window partitioned by (lang, centi-bin)
     "q195_reflm3_by_lang" -> ((s, dir) => {
       val docs = T(s, dir, "documents")
-      val m = operators.Ranking.refLm3TrainByKey(
-        docs, "doc_id", "text", "lang",
-        col("source").isin("src0", "src1"))
-      operators.Ranking.refLm3PerplexityBucketsByKey(
-        operators.Ranking.refLm3ScoreByKey(docs, "doc_id", "text", "lang", m,
-          checkpointTf = true),
-        "lang")
+      val m = operators.Ranking.refLmTrain(
+        docs, "text", col("source").isin("src0", "src1"), 3, Some("lang"))
+      operators.Ranking.refLmPerplexityBuckets(
+        operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
+          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
     }),
 
     // ---- extension: per-language deploy from the STORED keyed order-3 LM ----
@@ -2683,11 +2668,10 @@ object SparkEntry {
       val (mp, _) = keyedRefLm3Artifacts(s, dir)
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(mp).getParent + "/stamp")
-      val m = operators.Ranking.readKeyedRefLm3(s, mp)
-      operators.Ranking.refLm3PerplexityBucketsByKey(
-        operators.Ranking.refLm3ScoreByKey(docs, "doc_id", "text", "lang", m,
-          checkpointTf = true),
-        "lang")
+      val m = operators.Ranking.readRefLm(s, mp)
+      operators.Ranking.refLmPerplexityBuckets(
+        operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
+          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
     }),
 
     // ---- extension: curation with the SEMANTIC-dedup stage ----
@@ -2721,8 +2705,8 @@ object SparkEntry {
       val p = refLm3Artifact(s, dir)
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(p).getParent + "/stamp")
-      val m = operators.Ranking.readRefLm3(s, p)
-      operators.Ranking.refLm3PerplexityBuckets(
+      val m = operators.Ranking.readRefLm(s, p)
+      operators.Ranking.refLmPerplexityBuckets(
         operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
           checkpointTf = true))
     }),
@@ -2744,15 +2728,14 @@ object SparkEntry {
       // idempotence discipline)
       val p = tempArtifactDir("graft-reflm3-keyed-inc").resolve("model")
       copyDirRecursive(java.nio.file.Paths.get(base), p)
-      require(operators.Ranking.mergeIntoStoredKeyedRefLm3(s, p.toString,
-        docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", "lang",
-        isRef = col("source").isin("src0", "src1"), batchId = Some(1L)),
-        "q199: fresh clone reported batch already applied")
-      val m = operators.Ranking.readKeyedRefLm3(s, p.toString)
-      operators.Ranking.refLm3PerplexityBucketsByKey(
-        operators.Ranking.refLm3ScoreByKey(docs, "doc_id", "text", "lang", m,
-          checkpointTf = true),
-        "lang")
+      require(operators.Ranking.mergeIntoStoredRefLm(s, p.toString,
+        docs.filter(col("doc_id") % 2 === 1), "text",
+        isRef = col("source").isin("src0", "src1"), batchId = Some(1L),
+        keyCol = Some("lang")), "q199: fresh clone reported batch already applied")
+      val m = operators.Ranking.readRefLm(s, p.toString)
+      operators.Ranking.refLmPerplexityBuckets(
+        operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
+          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
     }),
 
     // ---- extension: per-language Kneser-Ney buckets ----
@@ -2766,11 +2749,10 @@ object SparkEntry {
       val (mp, _) = keyedRefLm3Artifacts(s, dir)
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(mp).getParent + "/stamp")
-      val m = operators.Ranking.readKeyedRefLm3(s, mp)
-      operators.Ranking.refLm3PerplexityBucketsByKey(
-        operators.Ranking.refLmKn3ScoreByKey(docs, "doc_id", "text", "lang", m,
-          checkpointTf = true),
-        "lang")
+      val m = operators.Ranking.readRefLm(s, mp)
+      operators.Ranking.refLmPerplexityBuckets(
+        operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
+          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
     }),
 
     // ---- extension: KN deploy at STORED per-language cutoffs ----
@@ -2787,10 +2769,10 @@ object SparkEntry {
       val cp = keyedKn3CutoffArtifact(s, dir)
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(cp).getParent + "/stamp")
-      val m = operators.Ranking.readKeyedRefLm3(s, mp)
-      val cuts = operators.Ranking.readRefLmCutoffsByKey(s, cp)
-      operators.Ranking.refLmKn3ScoreByKey(docs, "doc_id", "text", "lang", m,
-          checkpointTf = true)
+      val m = operators.Ranking.readRefLm(s, mp)
+      val cuts = operators.Ranking.readRefLmCutoffRows(s, cp)
+      operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
+          checkpointTf = true, keyCol = Some("lang"))
         .join(broadcast(cuts), Seq("lang"))
         .withColumn("bucket",
           when(col("logprob") >= col("v_head"), lit("head"))
@@ -2816,8 +2798,8 @@ object SparkEntry {
       val p = refLm5Artifact(s, dir)
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(p).getParent + "/stamp")
-      val m = operators.Ranking.readRefLm5(s, p)
-      operators.Ranking.refLm5PerplexityBuckets(
+      val m = operators.Ranking.readRefLm(s, p)
+      operators.Ranking.refLmPerplexityBuckets(
         operators.Ranking.refLmKn5Score(docs, "doc_id", "text", m,
           minCount5 = 2, minCount4 = 2))
     }),
@@ -2833,11 +2815,10 @@ object SparkEntry {
       val p = keyedRefLm5Artifact(s, dir)
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(p).getParent + "/stamp")
-      val m = operators.Ranking.readKeyedRefLm5(s, p)
-      operators.Ranking.refLm5PerplexityBucketsByKey(
-        operators.Ranking.refLmKn5ScoreByKey(docs, "doc_id", "text", "lang", m,
-          minCount5 = 2, minCount4 = 2),
-        "lang")
+      val m = operators.Ranking.readRefLm(s, p)
+      operators.Ranking.refLmPerplexityBuckets(
+        operators.Ranking.refLmKn5Score(docs, "doc_id", "text", m,
+          minCount5 = 2, minCount4 = 2, keyCol = Some("lang")), Some("lang"))
     }),
 
     // ---- extension: KN5 deploy at STORED per-language cutoffs ----
@@ -2852,10 +2833,10 @@ object SparkEntry {
       val cp = keyedKn5CutoffArtifact(s, dir)
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(cp).getParent + "/stamp")
-      val m = operators.Ranking.readKeyedRefLm5(s, mp)
-      val cuts = operators.Ranking.readRefLmCutoffsByKey(s, cp)
-      operators.Ranking.refLmKn5ScoreByKey(docs, "doc_id", "text", "lang", m,
-          minCount5 = 2, minCount4 = 2)
+      val m = operators.Ranking.readRefLm(s, mp)
+      val cuts = operators.Ranking.readRefLmCutoffRows(s, cp)
+      operators.Ranking.refLmKn5Score(docs, "doc_id", "text", m,
+          minCount5 = 2, minCount4 = 2, keyCol = Some("lang"))
         .join(broadcast(cuts), Seq("lang"))
         .withColumn("bucket",
           when(col("logprob") >= col("v_head"), lit("head"))

@@ -126,15 +126,15 @@ object DocPipeline {
     * as explicit routes instead.
     */
   final case class PerplexityStage(
-      model: Ranking.KeyedRefLm3Model,
+      model: Ranking.RefLmModel,
       cutoffs: DataFrame,
       keyCol: String,
       dropBuckets: Set[String] = Set("tail"))
 
   object PerplexityStage {
     /** The stage fully from stored artifacts: the six keyed count
-      * tables ([[Ranking.readKeyedRefLm3]]) and the per-key
-      * KN-measured cutoff table ([[Ranking.readRefLmCutoffsByKey]] —
+      * tables ([[Ranking.readRefLm]]) and the per-key
+      * KN-measured cutoff table ([[Ranking.readRefLmCutoffRows]] —
       * measured under the KN scorer, the q201 discipline: gating KN
       * scores at JM-measured cutoffs would mislabel systematically).
       */
@@ -145,8 +145,8 @@ object DocPipeline {
         keyCol: String,
         dropBuckets: Set[String] = Set("tail")): PerplexityStage =
       PerplexityStage(
-        Ranking.readKeyedRefLm3(spark, modelPath),
-        Ranking.readRefLmCutoffsByKey(spark, cutoffsPath),
+        Ranking.readRefLm(spark, modelPath),
+        Ranking.readRefLmCutoffRows(spark, cutoffsPath),
         keyCol, dropBuckets)
   }
 
@@ -426,9 +426,8 @@ object DocPipeline {
     val ppReps = perplexity.fold(semReps) { st =>
       val repDocs = cleaned.join(
         semReps.select(col(idCol)), Seq(idCol), "left_semi")
-      val dropped = Ranking.refLmKn3ScoreByKey(
-          repDocs, idCol, textCol, st.keyCol, st.model,
-          checkpointTf = true)
+      val dropped = Ranking.refLmKn3Score(repDocs, idCol, textCol, st.model,
+          checkpointTf = true, keyCol = Some(st.keyCol))
         .join(broadcast(st.cutoffs), Seq(st.keyCol))
         .withColumn("__bucket",
           when(col("logprob") >= col("v_head"), lit("head"))

@@ -346,257 +346,594 @@ object Ranking {
        |FROM d ORDER BY logw DESC, $idCol LIMIT $k""".stripMargin
 
   // --------------------------------------------------------------------
-  // Reference-trained interpolated bigram LM (CCNet-style perplexity
-  // filtering — Wenzek et al. 2020, "CCNet: Extracting High Quality
-  // Monolingual Datasets from Web Crawl Data", arXiv:1911.00359).
+  // Reference-trained n-gram LMs (CCNet-style perplexity filtering —
+  // Wenzek et al. 2020, "CCNet: Extracting High Quality Monolingual
+  // Datasets from Web Crawl Data", arXiv:1911.00359).
   //
   // [[unigramLogProb]]/[[bigramLogProb]] score a corpus against ITSELF
   // (MLE, no smoothing needed). The production filtering step is
   // different: the LM is trained on a trusted REFERENCE slice (CCNet:
   // per-language Wikipedia) and scores the whole POOL — so unseen pool
-  // bigrams/tokens are the norm, and the model must smooth. This family
+  // n-grams/tokens are the norm, and the model must smooth. This family
   // is that step, plus the suite's stored-artifact deploy pattern: the
   // trained counts persist as parquet tables ([[writeRefLm]]) and the
   // scoring fleet reads them ([[readRefLm]]) — retrain the reference LM
   // and every consumer re-scores with no code change.
+  //
+  // ONE engine serves every order (2, 3, 5) and both deployment shapes.
+  // The key is a possibly-empty list of leading columns, never a
+  // constant key column: a keyed model (one LM per value of `keyCol`,
+  // e.g. per LANGUAGE — the actual CCNet deployment, every model trained
+  // in ONE pass with no per-key job loop) carries `__k` first in every
+  // table, and every groupBy, window and join key starts with it; an
+  // unkeyed model has no key, so its corpus-level scalars (totals, the
+  // bigram-type count, the bucket cutoffs) are 1-row frames joined by
+  // broadcast crossJoin and its windows are unpartitioned — exactly the
+  // plans a dedicated unkeyed engine would build ([[joinOn]]).
+  //
+  // STORAGE CONTRACT (orders 4/5): distinct 5-grams approach the corpus
+  // token count, so unlike the vocabulary-bounded low orders the stored
+  // order-4/5 tables are CORPUS-scale — plain partitioned parquet keyed
+  // by the n-gram, merged with one partial-aggregated groupBy per table.
+  // Stored counts stay UNPRUNED: additivity is what makes the
+  // incremental merge bit-identical to a retrain, and pruning is not
+  // additive (a count crossing the threshold after a merge must
+  // reappear). Pruning is instead a SCORE-TIME view
+  // ([[refLmKn5Score]]'s minCount5/4 — KenLM's singleton pruning).
   // --------------------------------------------------------------------
 
-  /** A reference LM as four count tables — exactly what [[refLmScore]]
-    * consumes, and exactly what persists to parquet:
-    *  - `unigrams`: (term, c1) token counts over the reference slice;
-    *  - `contexts`: (w1, ctx)  bigram-context totals `c(w1 ·)`;
-    *  - `bigrams` : (w1, w2, cb) bigram counts;
-    *  - `totals`  : 1 row (n_ref_tokens, vocab).
-    * All integers — the model is exact, so training, storing and
-    * re-reading cannot drift.
+  /** A reference LM of order 2, 3 or 5 as exact integer tables — what
+    * the scorers consume, and exactly what persists to parquet:
+    *  - `counts(k - 1)`: the order-k counts — `unigram` (term, c1),
+    *    `bigram` (w1, w2, cb), `trigram` (w1..w3, ct), `fourgram`
+    *    (w1..w4, c4), `fivegram` (w1..w5, c5);
+    *  - `contextTables`: `ctx` (w1, ctx) = c(w1 ·) and, from order 3,
+    *    `tctx` (w1, w2, ctx3) = c(w1 w2 ·) — NOT the bigram count (a
+    *    document's final bigram has no continuation);
+    *  - `totals`: (n_ref_tokens, vocab), one row.
+    * A keyed model leads every table with `__k` (totals: one row per
+    * key) — keyedness is read from that schema, never flagged. Kneser-
+    * Ney's context, continuation and type tables are deliberately NOT
+    * stored: they derive at score time (one groupBy each), so the
+    * artifact holds only additive counts and a merge stays bit-equal
+    * to a retrain.
     */
   final case class RefLmModel(
-      unigrams: DataFrame, contexts: DataFrame,
-      bigrams: DataFrame, totals: DataFrame)
-
-  /** The adjacent-pair stream of a token array column `__a` — pairing
-    * happens inside the scan projection (a per-row `transform`), so
-    * bigram adjacency never shuffles.
-    */
-  private def bigramPairs: Column = explode(expr(
-    "transform(slice(__a, 1, greatest(size(__a) - 1, 0)), " +
-      "(w, i) -> struct(w AS w1, element_at(__a, i + 2) AS w2))"))
-
-  /** TRAIN the reference LM: count unigrams, bigrams and bigram
-    * contexts over the `isRef` slice of `docs`. Pure partial-aggregated
-    * groupBys over the tokenized scan — one shuffle per count table,
-    * nothing driver-side. Precondition: the reference slice is
-    * non-empty (an empty slice trains a null-total model that scores
-    * everything NULL; [[readRefLm]] fails fast on it).
-    */
-  def refLmTrain(
-      docs: DataFrame, idCol: String, textCol: String, isRef: Column): RefLmModel = {
-    val toks = docs.filter(isRef)
-      .select(TextAnalysis.tokens(col(textCol)).as("__a"))
-    val uni = toks.select(explode(col("__a")).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("c1"))
-    val big = toks.select(bigramPairs.as("__bg"))
-      .select(col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
-    val ctx = big.groupBy("w1").agg(sum("cb").as("ctx"))
-    val tot = uni.agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab"))
-    RefLmModel(uni, ctx, big, tot)
+      counts: Seq[DataFrame], contextTables: Seq[DataFrame], totals: DataFrame) {
+    def order: Int = counts.size
+    def keyed: Boolean = totals.columns.headOption.contains("__k")
+    def unigrams: DataFrame = counts(0)
+    def bigrams: DataFrame = counts(1)
+    def trigrams: DataFrame = counts(2)
+    def fourgrams: DataFrame = counts(3)
+    def fivegrams: DataFrame = counts(4)
+    def contexts: DataFrame = contextTables(0)
+    def triContexts: DataFrame = contextTables(1)
   }
+
+  /** (stored table name, count column) of the order-k count table. */
+  private val countTables = Seq(
+    "unigram" -> "c1", "bigram" -> "cb", "trigram" -> "ct",
+    "fourgram" -> "c4", "fivegram" -> "c5")
+
+  /** The n-gram columns of an order-n table. */
+  private def gramCols(n: Int): Seq[String] =
+    if (n == 1) Seq("term") else (1 to n).map(i => s"w$i")
+
+  /** The model-side key list: `__k` when keyed, empty otherwise. */
+  private def keyCols(keyCol: Option[String]): Seq[String] =
+    keyCol.map(_ => "__k").toSeq
+
+  private def cols(names: Seq[String]): Seq[Column] = names.map(col)
+
+  /** `df` projected to the key columns followed by `cs` — how a table
+    * is re-keyed onto a shifted n-gram position. */
+  private def rekey(df: DataFrame, ks: Seq[String], cs: Column*): DataFrame =
+    df.select(cols(ks) ++ cs: _*)
+
+  /** Join on `keys`, or crossJoin when there are none: with no key, a
+    * corpus-level scalar table is one row. */
+  private def joinOn(l: DataFrame, r: DataFrame, keys: Seq[String],
+      how: String = "inner"): DataFrame =
+    if (keys.isEmpty) l.crossJoin(r) else l.join(r, keys, how)
+
+  /** The adjacent n-tuple stream (a struct w1..wn) of a token array
+    * column `__a` — tupling happens inside the scan projection (a
+    * per-row `transform`), so adjacency never shuffles.
+    */
+  private def ngrams(n: Int): Column = explode(expr(
+    s"transform(slice(__a, 1, greatest(size(__a) - ${n - 1}, 0)), " +
+      (("w AS w1" +: (2 to n).map(j => s"element_at(__a, i + $j) AS w$j"))
+        .mkString("(w, i) -> struct(", ", ", "))"))))
+
+  /** The order-n rows of a token frame (`carry` columns plus `__a`):
+    * `carry` followed by the n-gram columns. */
+  private def gramRows(toks: DataFrame, n: Int, carry: Seq[String]): DataFrame =
+    if (n == 1) toks.select(cols(carry) :+ explode(col("__a")).as("term"): _*)
+    else toks.select(cols(carry) :+ ngrams(n).as("__g"): _*)
+      .select(cols(carry) ++ gramCols(n).map(w => col(s"__g.$w").as(w)): _*)
+
+  /** TRAIN a reference LM of `order` (2, 3 or 5) over the `isRef`
+    * slice of `docs`, one model per `keyCol` value when keyed (the key
+    * joins every groupBy key, so the count tables stay
+    * partial-aggregated and shuffle once each however many models
+    * train). Pure partial-aggregated groupBys over the tokenized scan —
+    * one shuffle per count table, nothing driver-side. Precondition:
+    * the reference slice is non-empty (an empty slice trains a
+    * null-total model that scores everything NULL; [[readRefLm]] fails
+    * fast on it).
+    */
+  def refLmTrain(docs: DataFrame, textCol: String, isRef: Column,
+      order: Int = 2, keyCol: Option[String] = None): RefLmModel = {
+    require(Set(2, 3, 5)(order), s"reference-LM order must be 2, 3 or 5, got $order")
+    val ks = keyCols(keyCol)
+    val toks = docs.filter(isRef).select(
+      keyCol.map(col(_).as("__k")).toSeq :+ TextAnalysis.tokens(col(textCol)).as("__a"): _*)
+    withDerived((1 to order).map { n =>
+      gramRows(toks, n, ks).groupBy(cols(ks ++ gramCols(n)): _*)
+        .agg(count(lit(1)).as(countTables(n - 1)._2))
+    }, ks)
+  }
+
+  /** The model over additive `counts`: context tables and totals
+    * re-derive from them (vocab is NOT additive across overlapping
+    * vocabularies, so a merge must re-derive, never add). */
+  private def withDerived(counts: Seq[DataFrame], ks: Seq[String]): RefLmModel = {
+    val ctx = counts(1).groupBy(cols(ks :+ "w1"): _*).agg(sum("cb").as("ctx"))
+    val tctx = counts.lift(2).map(
+      _.groupBy(cols(ks ++ Seq("w1", "w2")): _*).agg(sum("ct").as("ctx3")))
+    val tot = counts(0).groupBy(cols(ks): _*)
+      .agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab"))
+    RefLmModel(counts, ctx +: tctx.toSeq, tot)
+  }
+
+  /** The scorer-side key list, checked against the model: an order-n
+    * scorer needs a model of order ≥ n, and a keyed model scores with a
+    * `keyCol` (an unkeyed one without). */
+  private def keysOf(model: RefLmModel, keyCol: Option[String], order: Int): Seq[String] = {
+    require(model.order >= order,
+      s"an order-$order scorer needs a reference LM of order >= $order, got ${model.order}")
+    require(model.keyed == keyCol.isDefined,
+      if (model.keyed) "a keyed reference LM scores with a keyCol"
+      else s"an unkeyed reference LM cannot score by ${keyCol.getOrElse("")}")
+    keyCols(keyCol)
+  }
+
+  /** Per-doc n-gram frequencies of the pool: (__id, [__k], w1..wn,
+    * __tf). The id rides as `__id` and the key as `__k`, so an `idCol`
+    * named like a model or count column (`w1`, `c5`, `tfq`) cannot make
+    * any join or aggregate ambiguous; [[docMeans]] restores both names.
+    */
+  private def perDocGrams(pool: DataFrame, idCol: String, textCol: String,
+      keyCol: Option[String], n: Int): DataFrame = {
+    val carry = "__id" +: keyCols(keyCol)
+    val toks = pool.select(Seq(col(idCol).as("__id")) ++
+      keyCol.map(col(_).as("__k")) :+ TextAnalysis.tokens(col(textCol)).as("__a"): _*)
+    gramRows(toks, n, carry).groupBy(cols(carry ++ gramCols(n)): _*)
+      .agg(count(lit(1)).as("__tf"))
+  }
+
+  /** The per-doc mean log-probability from (__id, [__k], __tf, logp9)
+    * rows: exact decimal `tf · logp9` sums, one double division rounded
+    * to 6 (the [[unigramLogProb]] scheme). Returns
+    * (idCol, [keyCol], cntCol, logprob).
+    */
+  private def docMeans(rows: DataFrame, idCol: String, keyCol: Option[String],
+      cntCol: String): DataFrame =
+    rows.groupBy(cols("__id" +: keyCols(keyCol)): _*)
+      .agg(sum(col("__tf")).as(cntCol),
+        // decimal(18,0) cast: see unigramLogProb — keeps the product
+        // at exact scale 9 instead of a clamped decimal(38,8)
+        sum(col("__tf").cast("decimal(18,0)") * col("logp9")).as("__slp"))
+      .select(Seq(col("__id").as(idCol)) ++ keyCol.map(col("__k").as(_)) ++
+        Seq(col(cntCol),
+          round(col("__slp").cast("double") / col(cntCol), 6).as("logprob")): _*)
+
+  /** ln(p) rounded to 9 decimals — once per distinct n-gram (order 2/3)
+    * or per row (order 5); equal n-grams give bit-equal values
+    * wherever they are evaluated. */
+  private def logp9(p: Column): Column =
+    round(log(p), 9).cast("decimal(18,9)").as("logp9")
+
+  /** The distinct-tuple scoring shape of the order-2/3 scorers: per-doc
+    * n-gram frequencies partial-agg first; `chain` joins the model once
+    * per DISTINCT pool n-gram (the model tables are vocabulary-sized —
+    * no broadcast hint, AQE broadcasts them when it measures small) and
+    * `p` is its probability; the rounded log-probs join back to the
+    * per-doc rows for [[docMeans]]. The dedup pays at low orders
+    * (measured at sf0.1: 275x at order 2, 9.6x at order 3; ~1.0x at
+    * order 5, which is why [[refLmKn5Score]] joins per doc instead).
+    *
+    * `checkpointTf` (r17 optimization round): the per-doc frame feeds
+    * TWO consumers (the distinct model join and the join-back), and
+    * exchange reuse does not span their separate jobs — without a
+    * materialization the pool is tokenized twice per score. Batch
+    * query paths opt in (tokenize once, and every downstream AQE
+    * re-optimization plans over a LogicalRDD); the default stays lazy
+    * for the per-micro-batch streaming gates, where an eager checkpoint
+    * per batch would pin blocks for the stream's lifetime.
+    */
+  private def scoreDistinct(pool: DataFrame, idCol: String, textCol: String,
+      keyCol: Option[String], n: Int, checkpointTf: Boolean, cntCol: String)(
+      chain: DataFrame => DataFrame, p: Column): DataFrame = {
+    val grams = keyCols(keyCol) ++ gramCols(n)
+    val tfRaw = perDocGrams(pool, idCol, textCol, keyCol, n)
+    val tf = if (checkpointTf) tfRaw.localCheckpoint() else tfRaw
+    val logp = chain(tf.select(cols(grams): _*).distinct())
+      .select(cols(grams) :+ logp9(p): _*)
+    docMeans(tf.join(logp, grams), idCol, keyCol, cntCol)
+  }
+
+  /** The Jelinek-Mercer bigram mixture
+    * `λ·c(w1 w2)/c(w1 ·) + (1−λ)·(c(w2)+1)/(N+V)` over the joined
+    * `cb`/`ctx`/`c1`/totals columns — a fixed IEEE expression tree over
+    * exact integer counts. */
+  private def jmBigram(lamNum: Int, lamDen: Int): Column = {
+    require(lamNum > 0 && lamNum < lamDen, s"need 0 < λ < 1, got $lamNum/$lamDen")
+    val pC = coalesce(col("ctx"), lit(0L))
+    val pU = (coalesce(col("c1"), lit(0L)) + lit(1L)).cast("double")
+    val nv = (col("n_ref_tokens") + col("vocab")).cast("double")
+    lit(lamNum.toDouble / lamDen) * when(pC > lit(0L),
+      coalesce(col("cb"), lit(0L)).cast("double") / pC.cast("double")).otherwise(lit(0.0)) +
+      lit((lamDen - lamNum).toDouble / lamDen) * (pU / nv)
+  }
+
+  /** One interpolated Kneser-Ney level
+    * `(max(c − D, 0) + D·T·lower) / X`, backing off entirely to `lower`
+    * when the context total X is 0 (`c`, `x`, `t` name the joined
+    * count, context-total and type-count columns). */
+  private def knLevel(d: Double, c: String, x: String, t: String, lower: Column): Column = {
+    val pX = coalesce(col(x), lit(0L))
+    when(pX > lit(0L),
+      (greatest(coalesce(col(c), lit(0L)).cast("double") - lit(d), lit(0.0)) +
+        lit(d) * coalesce(col(t), lit(0L)).cast("double") * lower) /
+        pX.cast("double")).otherwise(lower)
+  }
+
+  /** The KN bottom level `Pc(w) = (N1+(·w) + 1) / (B + V)` over the
+    * joined left-neighbor count `__cu`, bigram-type total `__nbig` and
+    * vocabulary — add-1 smoothed (textbook KN gives an unseen word zero
+    * mass; the pool contains OOV tokens by construction, so the family
+    * keeps finite mass everywhere). A keyed model whose reference had
+    * no bigram joins no `__nbig` row and still bottoms out finite. */
+  private def knBottom: Column =
+    (coalesce(col("__cu"), lit(0L)).cast("double") + lit(1.0)) /
+      (coalesce(col("__nbig"), lit(0L)) + col("vocab")).cast("double")
 
   /** Score every pool document under the reference LM with
     * Jelinek-Mercer interpolation
     * `P(w2|w1) = λ·c(w1 w2)/c(w1 ·) + (1−λ)·(c(w2)+1)/(N+V)`
     * (λ = lamNum/lamDen; the unigram leg is add-1 smoothed over the
     * reference vocabulary, so out-of-vocabulary pool tokens still get
-    * finite mass). Returns (id, n_bigrams, logprob = mean bigram
-    * log-probability, rounded to 6) for every pool doc with ≥ 2
+    * finite mass). Returns (id, [keyCol], n_bigrams, logprob = mean
+    * bigram log-probability, rounded to 6) for every pool doc with ≥ 2
     * tokens. Lower logprob = higher perplexity = less reference-like.
     *
-    * Scale shape: pool bigrams partial-agg to per-doc (id, w1, w2, bf)
-    * counts; the model joins happen once per DISTINCT pool pair (the
-    * model tables are vocabulary-sized — no broadcast hint, AQE
-    * broadcasts them when it measures small); per-doc totals are one
-    * more partial agg. Determinism: the λ-mixture is a fixed IEEE
-    * expression tree over exact integer counts, its ln() is rounded to
-    * 9 decimals once per distinct PAIR, per-doc sums are exact decimal
-    * `bf · logp9`, and one final double division rounds to 6 — the
-    * [[unigramLogProb]] scheme.
+    * Keyed (`keyCol` given, keyed model): each document scores under
+    * the model of ITS key value; the totals join is INNER on the key,
+    * so documents whose key has no reference model are UNSCORED (absent
+    * from the output) rather than scored against nothing. Scale shape
+    * and determinism: [[scoreDistinct]].
     */
   def refLmScore(
       pool: DataFrame, idCol: String, textCol: String, model: RefLmModel,
       lamNum: Int = 7, lamDen: Int = 10,
-      checkpointTf: Boolean = false): DataFrame = {
-    require(lamNum > 0 && lamNum < lamDen, s"need 0 < λ < 1, got $lamNum/$lamDen")
-    val id = col(idCol)
-    val lam1 = lamNum.toDouble / lamDen
-    val lam2 = (lamDen - lamNum).toDouble / lamDen
-    val bfRaw = pool
-      .select(id, TextAnalysis.tokens(col(textCol)).as("__a"))
-      .select(id, bigramPairs.as("__bg"))
-      .select(id, col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
-      .groupBy(id, col("w1"), col("w2")).agg(count(lit(1)).as("bf"))
-    // checkpointTf (r17 optimization round): the per-doc pair table
-    // feeds TWO consumers (the distinct-pairs model join and the final
-    // per-doc aggregate), and exchange reuse does not span their
-    // separate jobs — without a materialization the pool is tokenized
-    // twice per score. Batch query paths opt in (tokenize once, and
-    // every downstream AQE re-optimization plans over a LogicalRDD);
-    // the default stays lazy for the per-micro-batch streaming gates,
-    // where an eager checkpoint per batch would pin blocks for the
-    // stream's lifetime.
-    val bf = if (checkpointTf) bfRaw.localCheckpoint() else bfRaw
-    val pairs = bf.select("w1", "w2").distinct()
-    val pB = coalesce(col("cb"), lit(0L)).cast("double")
-    val pC = coalesce(col("ctx"), lit(0L))
-    val pU = (coalesce(col("c1"), lit(0L)) + lit(1L)).cast("double")
-    val nv = (col("n_ref_tokens") + col("vocab")).cast("double")
-    val mix = lit(lam1) * when(pC > lit(0L), pB / pC.cast("double")).otherwise(lit(0.0)) +
-      lit(lam2) * (pU / nv)
-    val logp = pairs
-      .join(model.bigrams, Seq("w1", "w2"), "left")
-      .join(model.contexts, Seq("w1"), "left")
-      .join(model.unigrams.withColumnRenamed("term", "w2"), Seq("w2"), "left")
-      .crossJoin(broadcast(model.totals))
-      .select(col("w1"), col("w2"),
-        round(log(mix), 9).cast("decimal(18,9)").as("logp9"))
-    bf.join(logp, Seq("w1", "w2"))
-      .groupBy(id)
-      .agg(sum(col("bf")).as("n_bigrams"),
-        // decimal(18,0) cast: see unigramLogProb — keeps the product
-        // at exact scale 9 instead of a clamped decimal(38,8)
-        sum(col("bf").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id, col("n_bigrams"),
-        round(col("__slp").cast("double") / col("n_bigrams"), 6).as("logprob"))
+      checkpointTf: Boolean = false, keyCol: Option[String] = None): DataFrame = {
+    val ks = keysOf(model, keyCol, 2)
+    scoreDistinct(pool, idCol, textCol, keyCol, 2, checkpointTf, "n_bigrams")(
+      pairs => joinOn(pairs
+        .join(model.bigrams, ks ++ Seq("w1", "w2"), "left")
+        .join(model.contexts, ks :+ "w1", "left")
+        .join(model.unigrams.withColumnRenamed("term", "w2"), ks :+ "w2", "left"),
+        broadcast(model.totals), ks),
+      jmBigram(lamNum, lamDen))
   }
 
-  /** CCNet's head/middle/tail perplexity buckets over a [[refLmScore]]
-    * frame, by VALUE cutoffs at the exact tertile ranks: v_head is the
-    * score of the rank-⌈n/3⌉ doc (ordered by logprob desc), v_mid the
-    * rank-⌈2n/3⌉ score; head = logprob ≥ v_head, middle = [v_mid,
-    * v_head), tail = the rest. Tied scores land in one bucket — the
-    * cutoff is a value, not a row split — so the rule needs NO global
-    * row-number over the corpus: the order statistics come from a
-    * cumulative window over the HISTOGRAM of distinct rounded scores
-    * (≪ corpus-sized), and the bucketing itself is a broadcast of two
-    * scalars into the scan. Returns one row per non-empty bucket:
-    * (bucket, n_docs, min_logprob, max_logprob, n_bigrams), ordered by
-    * bucket name (head < middle < tail alphabetically).
+  /** Score every pool document under an order-3 reference LM with the
+    * Jelinek-Mercer BACKOFF CHAIN trigram→bigram→unigram
+    *   P(w3|w1 w2) = λ3·c(w1w2w3)/c(w1w2·)
+    *               + (1−λ3)·[ λ·c(w2w3)/c(w2·) + (1−λ)·(c(w3)+1)/(N+V) ]
+    * (λ3 = lam3Num/lam3Den, then the [[refLmScore]] bigram mixture).
+    * Returns (id, [keyCol], n_trigrams, logprob) for every pool doc
+    * with ≥ 3 tokens; key contract, scale shape and determinism as
+    * [[refLmScore]].
     */
-  def refLmPerplexityBuckets(scored: DataFrame): DataFrame =
-    refLmPerplexityBucketsCached(scored).df
+  def refLm3Score(pool: DataFrame, idCol: String, textCol: String,
+      model: RefLmModel, lam3Num: Int = 5, lam3Den: Int = 10,
+      lamNum: Int = 7, lamDen: Int = 10,
+      checkpointTf: Boolean = false, keyCol: Option[String] = None): DataFrame = {
+    require(lam3Num > 0 && lam3Num < lam3Den,
+      s"need 0 < λ3 < 1, got $lam3Num/$lam3Den")
+    val ks = keysOf(model, keyCol, 3)
+    val pTC = coalesce(col("ctx3"), lit(0L))
+    val mix = lit(lam3Num.toDouble / lam3Den) * when(pTC > lit(0L),
+      coalesce(col("ct"), lit(0L)).cast("double") / pTC.cast("double"))
+      .otherwise(lit(0.0)) +
+      lit((lam3Den - lam3Num).toDouble / lam3Den) * jmBigram(lamNum, lamDen)
+    scoreDistinct(pool, idCol, textCol, keyCol, 3, checkpointTf, "n_trigrams")(
+      triples => joinOn(triples
+        .join(model.trigrams, ks ++ Seq("w1", "w2", "w3"), "left")
+        .join(model.triContexts, ks ++ Seq("w1", "w2"), "left")
+        // the backoff bigram of (w1,w2,w3) is (w2,w3); rename via select
+        // (withColumnRenamed would collide with the existing w2/w3)
+        .join(rekey(model.bigrams, ks, col("w1").as("w2"), col("w2").as("w3"), col("cb")),
+          ks ++ Seq("w2", "w3"), "left")
+        .join(rekey(model.contexts, ks, col("w1").as("w2"), col("ctx")), ks :+ "w2", "left")
+        .join(rekey(model.unigrams, ks, col("term").as("w3"), col("c1")), ks :+ "w3", "left"),
+        broadcast(model.totals), ks),
+      mix)
+  }
 
-  /** [[refLmPerplexityBuckets]] exposing the persisted histogram
+  /** Score every pool document under an order-3 reference LM with
+    * INTERPOLATED KNESER-NEY smoothing (Kneser & Ney 1995; the
+    * interpolated formulation of Chen & Goodman 1998, "An Empirical
+    * Study of Smoothing Techniques for Language Modeling") — the
+    * smoothing CCNet's actual KenLM models use. Absolute discount
+    * `D = dNum/dDen` (default 3/4 — exactly representable in IEEE, so
+    * the replay is bit-portable):
+    *
+    *   P₃(w3|w1w2) = (max(c(w1w2w3)−D, 0) + D·T3(w1w2)·P₂(w3|w2)) / C3(w1w2)
+    *   P₂(w3|w2)   = (max(c'(w2w3)−D, 0) + D·T2(w2)·Pc(w3)) / C2(w2)
+    *   Pc(w3)      = (N1+(·w3) + 1) / (B + V)
+    *
+    * each level backing off entirely when its context total is 0. The
+    * LOWER orders use CONTINUATION counts (KN's defining move):
+    * `c'(w2w3) = N1+(·w2w3)` = distinct w1 preceding the bigram in a
+    * trigram, `C2(w2) = Σ_x c'(w2x)`, `T2(w2)` = distinct continuations
+    * of w2, `T3(w1w2)` = distinct continuations of the context,
+    * `N1+(·w3)` = distinct left-neighbors of w3 in the bigram table,
+    * `B` = distinct bigram types, `V` = vocabulary. Every table derives
+    * from the model's additive counts at score time, so the stored
+    * deploy and the bit-equal merge carry over to KN unchanged.
+    *
+    * Keyed: the per-key totals join is INNER (unmodeled keys absent);
+    * the per-key bigram-type total joins LEFT. Scale shape and
+    * determinism: [[scoreDistinct]]. Returns (id, [keyCol], n_trigrams,
+    * logprob) for every pool doc with ≥ 3 tokens.
+    */
+  def refLmKn3Score(pool: DataFrame, idCol: String, textCol: String,
+      model: RefLmModel, dNum: Int = 3, dDen: Int = 4,
+      checkpointTf: Boolean = false, keyCol: Option[String] = None): DataFrame = {
+    require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
+    val ks = keysOf(model, keyCol, 3)
+    val d = dNum.toDouble / dDen
+    def by(df: DataFrame, g: String*) = df.groupBy(cols(ks ++ g): _*)
+    // continuation tables, each one partial-aggregated groupBy over a
+    // MODEL table (trigram/bigram rows are distinct per key, so
+    // count(*) IS the distinct-continuation count)
+    val t3 = by(model.trigrams, "w1", "w2").agg(count(lit(1)).as("__t3"))
+    val cbig = by(model.trigrams, "w2", "w3").agg(count(lit(1)).as("__cc"))
+    val c2 = by(cbig, "w2").agg(sum("__cc").as("__c2"), count(lit(1)).as("__t2"))
+    val cu = by(model.bigrams, "w2").agg(count(lit(1)).as("__cu"))
+    val btot = by(model.bigrams).agg(count(lit(1)).as("__nbig"))
+    val p2 = knLevel(d, "__cc", "__c2", "__t2", knBottom)
+    val p3 = knLevel(d, "ct", "ctx3", "__t3", p2)
+    scoreDistinct(pool, idCol, textCol, keyCol, 3, checkpointTf, "n_trigrams")(
+      triples => joinOn(joinOn(triples
+        .join(model.trigrams, ks ++ Seq("w1", "w2", "w3"), "left")
+        .join(model.triContexts, ks ++ Seq("w1", "w2"), "left")
+        .join(t3, ks ++ Seq("w1", "w2"), "left")
+        // the continuation bigram of (w1,w2,w3) is keyed (w2,w3) already
+        .join(cbig, ks ++ Seq("w2", "w3"), "left")
+        .join(c2, ks :+ "w2", "left")
+        .join(rekey(cu, ks, col("w2").as("w3"), col("__cu")), ks :+ "w3", "left"),
+        broadcast(model.totals), ks), broadcast(btot), ks, "left"),
+      p3)
+  }
+
+  /** Score every pool document under 5-gram INTERPOLATED KNESER-NEY —
+    * [[refLmKn3Score]] at CCNet's production depth. The TOP order uses
+    * raw counts, every lower order continuation counts N1+(·w…) derived
+    * from the raw table ONE order up:
+    *
+    *   P₅ = (max(c(w1..w5)−D,0) + D·T5·P₄) / C5   (raw 5-gram counts)
+    *   P₄ = (max(N1+(·w2..w5)−D,0) + D·T4·P₃) / C4  (from 5-grams)
+    *   P₃ = (max(N1+(·w3w4w5)−D,0) + D·T3·P₂) / C3  (from 4-grams)
+    *   P₂ = (max(N1+(·w4w5)−D,0) + D·T2·Pc) / C2    (from trigrams)
+    *   Pc = (N1+(·w5) + 1) / (B + V)                (from bigrams)
+    *
+    * `minCount5`/`minCount4` (default 1 = no pruning) drop raw 5-/4-
+    * gram rows BELOW the threshold before any derivation — KenLM's
+    * count pruning as a score-time view: every derived table
+    * re-derives from the pruned table, so the pruned distribution stays
+    * normalized. The stored artifact is untouched.
+    *
+    * Scale shape (r18 optimization round): the model-join chain runs
+    * DIRECTLY over the per-doc 5-tuple rows — at order 5 the
+    * distinct-tuple dedup buys nothing (measured at sf0.1: 250,704
+    * per-doc rows vs 250,282 distinct 5-tuples, 1.002x), so the
+    * distinct exchange, the join-back and the two-consumer tokenize
+    * checkpoint of [[scoreDistinct]] would be pure overhead. Key
+    * contract as [[refLmKn3Score]]. Returns (id, [keyCol], n_5grams,
+    * logprob) for every pool doc with ≥ 5 tokens.
+    */
+  def refLmKn5Score(pool: DataFrame, idCol: String, textCol: String,
+      model: RefLmModel, dNum: Int = 3, dDen: Int = 4,
+      minCount5: Long = 1, minCount4: Long = 1,
+      keyCol: Option[String] = None): DataFrame = {
+    require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
+    require(minCount5 >= 1 && minCount4 >= 1,
+      s"count-pruning thresholds must be >= 1, got $minCount5/$minCount4")
+    val ks = keysOf(model, keyCol, 5)
+    val d = dNum.toDouble / dDen
+    def by(df: DataFrame, g: String*) = df.groupBy(cols(ks ++ g): _*)
+    // pruned raw views — every derivation below reads these
+    val five = model.fivegrams.filter(col("c5") >= lit(minCount5))
+    val four = model.fourgrams.filter(col("c4") >= lit(minCount4))
+    // top order: context totals + type counts over pruned 5-grams
+    val ce5 = by(five, "w1", "w2", "w3", "w4")
+      .agg(sum("c5").as("__c5x"), count(lit(1)).as("__t5"))
+    // order 4: continuation counts from the 5-gram table
+    val cc4 = by(five, "w2", "w3", "w4", "w5").agg(count(lit(1)).as("__cc4"))
+    val c4 = by(cc4, "w2", "w3", "w4")
+      .agg(sum("__cc4").as("__c4x"), count(lit(1)).as("__t4"))
+    // order 3: continuation counts from the 4-gram table, keyed as the
+    // (w3,w4,w5) trigram of the scored 5-tuple
+    val cc3 = rekey(by(four, "w2", "w3", "w4").agg(count(lit(1)).as("__cc3")), ks,
+      col("w2").as("w3"), col("w3").as("w4"), col("w4").as("w5"), col("__cc3"))
+    val c3 = by(cc3, "w3", "w4")
+      .agg(sum("__cc3").as("__c3x"), count(lit(1)).as("__t3"))
+    // order 2: continuation counts from the trigram table, keyed (w4,w5)
+    val cc2 = rekey(by(model.trigrams, "w2", "w3").agg(count(lit(1)).as("__cc2")), ks,
+      col("w2").as("w4"), col("w3").as("w5"), col("__cc2"))
+    val c2 = by(cc2, "w4").agg(sum("__cc2").as("__c2x"), count(lit(1)).as("__t2"))
+    // bottom: left-neighbor counts from the bigram table + B + V
+    val cu = by(model.bigrams, "w2").agg(count(lit(1)).as("__cu"))
+    val btot = by(model.bigrams).agg(count(lit(1)).as("__nbig"))
+    val p2 = knLevel(d, "__cc2", "__c2x", "__t2", knBottom)
+    val p3 = knLevel(d, "__cc3", "__c3x", "__t3", p2)
+    val p4 = knLevel(d, "__cc4", "__c4x", "__t4", p3)
+    val p5 = knLevel(d, "c5", "__c5x", "__t5", p4)
+    // the per-doc 5-tuple frame: the groupBy's exchange is also what
+    // spreads the join chain across tasks (the raw explode runs inside
+    // the scan's split count)
+    val rows = joinOn(joinOn(perDocGrams(pool, idCol, textCol, keyCol, 5)
+      .join(five, ks ++ gramCols(5), "left")
+      .join(ce5, ks ++ Seq("w1", "w2", "w3", "w4"), "left")
+      .join(cc4, ks ++ Seq("w2", "w3", "w4", "w5"), "left")
+      .join(c4, ks ++ Seq("w2", "w3", "w4"), "left")
+      .join(cc3, ks ++ Seq("w3", "w4", "w5"), "left")
+      .join(c3, ks ++ Seq("w3", "w4"), "left")
+      .join(cc2, ks ++ Seq("w4", "w5"), "left")
+      .join(c2, ks :+ "w4", "left")
+      .join(rekey(cu, ks, col("w2").as("w5"), col("__cu")), ks :+ "w5", "left"),
+      broadcast(model.totals), ks), broadcast(btot), ks, "left")
+    docMeans(rows.select(cols("__id" +: ks) ++ Seq(col("__tf"), logp9(p5)): _*),
+      idCol, keyCol, "n_5grams")
+  }
+
+  /** The per-doc count column of a scored frame — `n_bigrams`,
+    * `n_trigrams` or `n_5grams` by the scorer's order. */
+  private def countCol(scored: DataFrame): String = {
+    val cs = scored.columns.filter(Set("n_bigrams", "n_trigrams", "n_5grams"))
+    require(cs.length == 1,
+      s"a scored frame carries exactly one n-gram count column, got [${cs.mkString(", ")}]")
+    cs.head
+  }
+
+  /** CCNet's head/middle/tail perplexity buckets over a scored frame
+    * (any order), by VALUE cutoffs at the exact tertile ranks: v_head
+    * is the score of the rank-⌈n/3⌉ doc (ordered by logprob desc),
+    * v_mid the rank-⌈2n/3⌉ score; head = logprob ≥ v_head, middle =
+    * [v_mid, v_head), tail = the rest. Tied scores land in one bucket —
+    * the cutoff is a value, not a row split — so the rule needs NO
+    * global row-number over the corpus: the order statistics come from
+    * [[cutoffsFromHist]] over the HISTOGRAM of distinct rounded scores
+    * (≪ corpus-sized), and the bucketing itself is a broadcast of the
+    * cutoffs into the histogram. Returns one row per non-empty bucket:
+    * (bucket, n_docs, min_logprob, max_logprob, <count column>),
+    * ordered by bucket name (head < middle < tail alphabetically).
+    *
+    * With `keyCol` the cutoffs are PER KEY (each language gets its own
+    * tertile values — CCNet's per-language percentiles), every window
+    * partitioned by the key: one row per (keyCol, non-empty bucket).
+    */
+  def refLmPerplexityBuckets(scored: DataFrame,
+      keyCol: Option[String] = None): DataFrame =
+    refLmPerplexityBucketsCached(scored, keyCol).df
+
+  /** [[refLmPerplexityBuckets]] exposing the checkpointed histogram
     * handle (the [[Dedup.CachedDF]] contract): long-lived sessions
     * calling the bucket report repeatedly must be able to release the
-    * cached block; Verify/Bench release via their per-query
-    * `clearCache`.
+    * block; Verify/Bench release via their per-query `clearCache`.
     */
-  def refLmPerplexityBucketsCached(scored: DataFrame): Dedup.CachedDF =
-    bucketsFromScoredCached(scored, "n_bigrams")
-
-  /** The bucket-report body shared by the bigram and trigram families —
-    * parameterized only by the per-doc count column the scored frame
-    * carries (`n_bigrams` / `n_trigrams`), which is also the report's
-    * output column name.
-    */
-  private def bucketsFromScoredCached(
-      scored: DataFrame, cntCol: String): Dedup.CachedDF = {
-    val hist = scoreHist(scored, cntCol)
-    val df = hist.crossJoin(cutoffsFromHist(hist))
-      .select(
+  def refLmPerplexityBucketsCached(scored: DataFrame,
+      keyCol: Option[String] = None): Dedup.CachedDF = {
+    val ks = keyCol.toSeq
+    val hist = scoreHist(scored, ks)
+    val df = joinOn(hist, broadcast(cutoffsFromHist(hist, ks)), ks)
+      .select(cols(ks) ++ Seq(
         when(col("logprob") >= col("v_head"), lit("head"))
           .when(col("logprob") >= col("v_mid"), lit("middle"))
           .otherwise(lit("tail")).as("bucket"),
-        col("logprob"), col("nv"), col("snb"))
-      .groupBy("bucket")
+        col("logprob"), col("nv"), col("snb")): _*)
+      .groupBy(cols(ks :+ "bucket"): _*)
       .agg(sum("nv").as("n_docs"),
         min("logprob").as("min_logprob"),
         max("logprob").as("max_logprob"),
-        sum("snb").as(cntCol))
-      .orderBy("bucket")
+        sum("snb").as(countCol(scored)))
+      .orderBy(cols(ks :+ "bucket"): _*)
     Dedup.CachedDF(df, Nil,
       Seq(() => graftbridge.unpersistCheckpointed(hist)))
   }
 
-  /** The HISTOGRAM of a [[refLmScore]] frame — (logprob, nv = docs at
-    * that score, snb = their bigram total), PERSISTED: every
+  /** The HISTOGRAM of a scored frame — ([keys], logprob, nv = docs at
+    * that score, snb = their n-gram total), CHECKPOINTED: every
     * downstream consumer (cumulative ranks, totals, the bucket report
     * itself) works off these rows, so the expensive scoring pipeline
     * executes exactly ONCE no matter how many plan branches read it.
     * The histogram is bounded by the 6-decimal score value space, not
-    * the corpus, so caching it is artifact-sized; the per-query
-    * `clearCache` in Verify/Bench releases it (the near-dup
-    * candidate-pair precedent).
+    * the corpus, so materializing it is artifact-sized.
     */
-  private def scoreHist(
-      scored: DataFrame, cntCol: String = "n_bigrams"): DataFrame =
-    scored.groupBy("logprob")
-      .agg(count(lit(1)).as("nv"), sum(cntCol).as("snb"))
+  private def scoreHist(scored: DataFrame, ks: Seq[String]): DataFrame =
+    scored.groupBy(cols(ks :+ "logprob"): _*)
+      .agg(count(lit(1)).as("nv"), sum(countCol(scored)).as("snb"))
       // localCheckpoint, not persist (r17 optimization round, guide
       // §3.3): the histogram feeds ~8 downstream jobs (bin prefix,
-      // within-bin refinement, totals, the report's crossJoin) and a
+      // within-bin refinement, totals, the report's join) and a
       // persisted frame still carries the FULL scoring-pipeline plan
       // into every one of those jobs' AQE re-optimizations — measured
       // ~1.3 s of serial driver gaps per LM query at sf0.1. The
       // checkpoint truncates the downstream plans to a LogicalRDD over
-      // the same artifact-sized rows (bounded by the 6-decimal score
-      // value space, not the corpus); execution count is unchanged
-      // (the persist design already materialized scoring exactly once).
+      // the same artifact-sized rows; execution count is unchanged.
       .localCheckpoint()
 
-  /** (v_head, v_mid) from a [[scoreHist]] frame — cumulative counts by
-    * COARSE-BIN-THEN-REFINE, never one unpartitioned window over the
-    * full histogram: rows coarse-bin at centi-logprob
-    * (`floor(logprob·100)` — multiplication by a positive constant and
-    * floor are both monotone in IEEE, so bin order is consistent with
-    * score order and equal scores share a bin), the bin-DESC prefix
-    * runs over the BIN TABLE only (≤ the centi value space, thousands
-    * of rows), and the within-bin refinement window is PARTITIONED by
-    * bin (≤ 100 distinct 6-decimal scores each). cumn = strictly-
-    * greater-bin prefix + within-bin cumulative — identical to the
-    * single global window, but the largest single-task slice is one
-    * centi-bin, not the whole histogram (the worst case of which is
-    * ~10^7 rows at 100 TB — the r14 judge's melt-first watch item).
+  /** ([keys], v_head, v_mid) from a [[scoreHist]] frame — cumulative
+    * counts by COARSE-BIN-THEN-REFINE, never one window over the full
+    * histogram: rows coarse-bin at centi-logprob (`floor(logprob·100)`
+    * — multiplication by a positive constant and floor are both
+    * monotone in IEEE, so bin order is consistent with score order and
+    * equal scores share a bin), the bin-DESC prefix runs over the BIN
+    * TABLE only (≤ the centi value space), and the within-bin
+    * refinement window is PARTITIONED by bin (≤ 100 distinct 6-decimal
+    * scores each). cumn = strictly-greater-bin prefix + within-bin
+    * cumulative — identical to the single global window, but the
+    * largest single-task slice is one centi-bin, not the whole
+    * histogram. Keyed, every window is ALSO partitioned by the key: a
+    * dominant language refines in per-(key, centi-bin) slices.
     */
-  private def cutoffsFromHist(hist: DataFrame): DataFrame = {
+  private def cutoffsFromHist(hist: DataFrame, ks: Seq[String]): DataFrame = {
     val binned = hist.withColumn("__bin", floor(col("logprob") * lit(100.0)))
-    val binPrior = binned.groupBy("__bin").agg(sum("nv").as("__bn"))
-      .withColumn("__prior",
-        sum("__bn").over(Window.orderBy(col("__bin").desc)) - col("__bn"))
-      .select(col("__bin"), col("__prior"))
-    val cum = binned.join(broadcast(binPrior), "__bin")
+    val binPrior = binned.groupBy(cols(ks :+ "__bin"): _*).agg(sum("nv").as("__bn"))
+      .withColumn("__prior", sum("__bn").over(
+        Window.partitionBy(cols(ks): _*).orderBy(col("__bin").desc)) - col("__bn"))
+      .select(cols(ks ++ Seq("__bin", "__prior")): _*)
+    val cum = binned.join(broadcast(binPrior), ks :+ "__bin")
       .withColumn("cumn", col("__prior") + sum("nv").over(
-        Window.partitionBy(col("__bin")).orderBy(col("logprob").desc)))
-    val tot = hist.agg(sum("nv").as("n"))
-    broadcast(cum.crossJoin(broadcast(tot))
+        Window.partitionBy(cols(ks :+ "__bin"): _*).orderBy(col("logprob").desc)))
+    val tot = hist.groupBy(cols(ks): _*).agg(sum("nv").as("n"))
+    joinOn(cum, broadcast(tot), ks).groupBy(cols(ks): _*)
       .agg(
         max(when(col("cumn") >= expr("(n + 2) div 3"), col("logprob")))
           .as("v_head"),
         max(when(col("cumn") >= expr("(2 * n + 2) div 3"), col("logprob")))
-          .as("v_mid")))
+          .as("v_mid"))
   }
 
-  /** The two [[refLmPerplexityBuckets]] value cutoffs as one row
-    * (v_head, v_mid) — the MEASURED numbers a streaming ingest gates
-    * at ([[writeRefLmCutoffs]] persists them next to the model; the
-    * stream must not recompute corpus tertiles per micro-batch).
+  /** The two [[refLmPerplexityBuckets]] value cutoffs of a scored frame
+    * as one row (v_head, v_mid), or one row per key
+    * (keyCol, v_head, v_mid) — the MEASURED numbers a streaming ingest
+    * gates at ([[writeRefLmCutoffs]] persists them next to the model;
+    * the stream must not recompute corpus tertiles per micro-batch).
+    * Cutoffs MUST be measured under the same scorer (and pruning
+    * config) the gate serves with.
     */
-  def refLmCutoffs(scored: DataFrame): DataFrame =
-    refLmCutoffsCached(scored).df
+  def refLmCutoffs(scored: DataFrame, keyCol: Option[String] = None): DataFrame =
+    refLmCutoffsCached(scored, keyCol).df
 
-  /** [[refLmCutoffs]] exposing the persisted histogram handle (the
+  /** [[refLmCutoffs]] exposing the checkpointed histogram handle (the
     * [[Dedup.CachedDF]] contract — the bucket reports' discipline): a
     * long-lived session re-measuring cutoffs on a cadence must be able
-    * to release the MEMORY_AND_DISK block per measurement instead of
-    * leaning on a global cache scrub.
+    * to release the block per measurement.
     */
-  def refLmCutoffsCached(scored: DataFrame): Dedup.CachedDF = {
-    val hist = scoreHist(scored)
-    Dedup.CachedDF(cutoffsFromHist(hist), Nil,
+  def refLmCutoffsCached(scored: DataFrame,
+      keyCol: Option[String] = None): Dedup.CachedDF = {
+    val hist = scoreHist(scored, keyCol.toSeq)
+    Dedup.CachedDF(cutoffsFromHist(hist, keyCol.toSeq), Nil,
       Seq(() => graftbridge.unpersistCheckpointed(hist)))
   }
 
-  /** Persist the [[refLmCutoffs]] row beside the stored LM — the
+  /** Persist a [[refLmCutoffs]] frame beside the stored LM — the
     * measured-threshold artifact of the perplexity stage (the
     * stored-gate/probe-sweep pattern): re-measure the corpus and
     * overwrite, and every streaming consumer re-tunes with no code
@@ -605,8 +942,9 @@ object Ranking {
   def writeRefLmCutoffs(cutoffs: DataFrame, path: String): Unit =
     cutoffs.coalesce(1).write.mode("overwrite").parquet(path)
 
-  /** Read back a [[writeRefLmCutoffs]] artifact as (v_head, v_mid).
-    * Fails fast unless the table is exactly one non-null row.
+  /** Read back an unkeyed [[writeRefLmCutoffs]] artifact as
+    * (v_head, v_mid). Fails fast unless the table is exactly one
+    * non-null row.
     */
   def readRefLmCutoffs(spark: SparkSession, path: String): (Double, Double) = {
     val rows = spark.read.parquet(path)
@@ -614,6 +952,16 @@ object Ranking {
     require(rows.length == 1 && !rows(0).isNullAt(0) && !rows(0).isNullAt(1),
       s"reference-LM cutoff artifact at $path is not exactly one non-null row")
     (rows(0).getDouble(0), rows(0).getDouble(1))
+  }
+
+  /** Read back a keyed [[writeRefLmCutoffs]] artifact as its
+    * (keyCol, v_head, v_mid) rows. Fails fast on an empty table (a gate
+    * with no measured cutoffs must not silently label everything).
+    */
+  def readRefLmCutoffRows(spark: SparkSession, path: String): DataFrame = {
+    val df = spark.read.parquet(path)
+    require(!df.isEmpty, s"keyed cutoff artifact at $path is empty")
+    df
   }
 
   /** Run independent artifact-table writes CONCURRENTLY — the safe
@@ -679,35 +1027,45 @@ object Ranking {
     } finally { pool.shutdownNow(); () }
   }
 
-  /** Persist a [[RefLmModel]] as four parquet tables under `path` —
-    * the stored-artifact deploy pattern (the IVF centroid-table /
+  /** Persist a [[RefLmModel]] as parquet tables under `path` — the
+    * stored-artifact deploy pattern (the IVF centroid-table /
     * stored-gate shape applied to the reference LM): the scoring fleet
-    * reads counts, never retrains. The four independent writes overlap
+    * reads counts, never retrains. Order 2 writes `unigram`, `bigram`,
+    * `ctx` and `totals`; order 3 adds `trigram` and `tctx`; order 5
+    * adds `fourgram` and `fivegram`. The independent writes overlap
     * through [[writeTablesParallel]] (safe since round 16 — see its
     * scaladoc for the ConvertToLocalRelation race this used to be).
     */
   def writeRefLm(model: RefLmModel, path: String): Unit =
-    writeTablesParallel(Seq(
-      (model.unigrams, s"$path/unigram", false),
-      (model.contexts, s"$path/ctx", false),
-      (model.bigrams, s"$path/bigram", false),
-      (model.totals, s"$path/totals", true)))
+    writeTablesParallel((countTables.map(_._1).zip(model.counts) ++
+      Seq("ctx", "tctx").zip(model.contextTables) :+ ("totals" -> model.totals))
+      .map { case (name, df) => (df, s"$path/$name", name == "totals") })
 
-  /** Read back a [[writeRefLm]] artifact. Fails fast on a totals table
-    * that is not exactly one non-null row (the signature of an empty
-    * or partially-written model, which would otherwise silently score
-    * every document NULL).
+  /** Read back a [[writeRefLm]] artifact of any order and key shape:
+    * the stored order is the run of count tables present, and only
+    * those tables (plus the contexts they need) are read. Fails fast on
+    * a totals table that signals an empty or partially-written model,
+    * which would otherwise silently score every document NULL: an
+    * unkeyed model needs exactly one non-null row with a positive token
+    * count, a keyed one a non-empty table (some key trained a model).
     */
   def readRefLm(spark: SparkSession, path: String): RefLmModel = {
     val tot = spark.read.parquet(s"$path/totals")
-    val rows = tot.collect()
-    require(rows.length == 1 && !rows(0).isNullAt(0) && rows(0).getLong(0) > 0,
-      s"reference-LM artifact at $path has an empty or invalid totals table")
-    RefLmModel(
-      spark.read.parquet(s"$path/unigram"),
-      spark.read.parquet(s"$path/ctx"),
-      spark.read.parquet(s"$path/bigram"),
-      tot)
+    if (tot.columns.headOption.contains("__k"))
+      require(!tot.isEmpty,
+        s"keyed reference-LM artifact at $path has an empty totals table")
+    else {
+      val rows = tot.collect()
+      require(rows.length == 1 && !rows(0).isNullAt(0) && rows(0).getLong(0) > 0,
+        s"reference-LM artifact at $path has an empty or invalid totals table")
+    }
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def read(name: String) = spark.read.parquet(s"$path/$name")
+    val counts = countTables.map(_._1)
+      .takeWhile(name => fs.exists(new org.apache.hadoop.fs.Path(dir, name)))
+      .map(read)
+    RefLmModel(counts, Seq("ctx", "tctx").take(counts.size - 1).map(read), tot)
   }
 
   /** The merged model of [[mergeIntoStoredRefLmReturning]] plus the
@@ -724,24 +1082,48 @@ object Ranking {
   }
 
   /** Merge a NEW reference slice into a stored [[writeRefLm]] artifact
-    * in place — the incremental-update leg of the LM lifecycle: counts
-    * are additive, so the merged model is EXACTLY the model a from-
-    * scratch retrain on the union would produce (RefLmSpec asserts the
-    * bit-for-bit equality), at the cost of one delta-sized training
-    * pass plus a model-sized union-aggregate — never a re-read of the
-    * historical corpus. Context totals and (n, vocab) are re-derived
-    * from the merged tables (vocab is NOT additive across overlapping
-    * vocabularies). Returns true iff a merge was applied.
+    * in place and release the merged frames — the incremental-update
+    * leg of the LM lifecycle, at the stored model's order and key shape
+    * ([[mergeIntoStoredRefLmReturning]]). Returns true iff a merge was
+    * applied (false = `batchId` already logged, a replay no-op).
+    */
+  def mergeIntoStoredRefLm(spark: SparkSession, path: String,
+      delta: DataFrame, textCol: String,
+      isRef: Column = lit(true), batchId: Option[Long] = None,
+      keyCol: Option[String] = None): Boolean =
+    mergeIntoStoredRefLmReturning(spark, path, delta, textCol,
+        isRef, batchId, keyCol) match {
+      case Some(m) => m.unpersist(); true
+      case None => false
+    }
+
+  /** Merge a NEW reference slice into a stored [[writeRefLm]] artifact
+    * in place and hand back the merged model AS the persisted frames
+    * the staged write materialized, so the caller can score at once
+    * without re-reading the tables (and without the totals-collect
+    * barrier of [[readRefLm]]). `None` iff `batchId` was already
+    * applied.
+    *
+    * Counts are additive at every order and per key, so the merged
+    * model is EXACTLY the model a from-scratch retrain on the union
+    * would produce (RefLmSpec, RefLm3Spec, RefLmKn5Spec and
+    * KeyedRefLmMergeSpec assert the bit-for-bit equality), at the cost
+    * of one delta-sized training pass at the stored order plus one
+    * model-sized union-aggregate per count table — never a re-read of
+    * the historical corpus. Contexts and totals re-derive from the
+    * merged counts. A keyed model merges a delta of any key mix in ONE
+    * pass (`keyCol` names the delta's key; new keys appear, untouched
+    * keys keep their counts) — retraining a hundred languages because
+    * one grew is the anti-pattern this closes.
     *
     * Replay idempotence: pass `batchId` and the merge keeps an
     * applied-batch log INSIDE the model directory (`applied` table) —
-    * a batch id already in the log is a no-op (returns false), and the
-    * log stages and swaps WITH the count tables, so the model and its
-    * log can never disagree after a crash: either both absorbed the
-    * batch or neither did. This is what makes
-    * [[graft.streaming.StreamingPerplexity.ingestReference]] safe
-    * under micro-batch replay (the curation decision-log discipline
-    * applied to an additive model).
+    * a batch id already in the log is a no-op, and the log stages and
+    * swaps WITH the count tables, so the model and its log can never
+    * disagree after a crash: either both absorbed the batch or neither
+    * did. This is what makes
+    * [[graft.streaming.StreamingPerplexity.ingestReference]] safe under
+    * micro-batch replay.
     *
     * Crash safety: the merged tables stage into a sibling directory
     * and swap in by TWO renames (live→old, staged→live) — no mixed
@@ -752,88 +1134,42 @@ object Ranking {
     * recovery = the same rename). NOT safe concurrently with another
     * writer of `path`; quiesce first.
     */
-  def mergeIntoStoredRefLm(spark: SparkSession, path: String,
-      delta: DataFrame, idCol: String, textCol: String,
-      isRef: Column = lit(true), batchId: Option[Long] = None): Boolean =
-    mergeIntoStoredRefLmReturning(spark, path, delta, idCol, textCol,
-        isRef, batchId) match {
-      case Some(m) => m.unpersist(); true
-      case None => false
-    }
-
-  /** [[mergeIntoStoredRefLm]] that hands back the merged model AS the
-    * persisted frames the staged write materialized, so the caller can
-    * score immediately without re-reading the four parquet tables (and
-    * without the totals-collect barrier of [[readRefLm]]). `None` iff
-    * `batchId` was already applied.
-    */
   def mergeIntoStoredRefLmReturning(spark: SparkSession, path: String,
-      delta: DataFrame, idCol: String, textCol: String,
-      isRef: Column = lit(true), batchId: Option[Long] = None): Option[MergedRefLm] = {
+      delta: DataFrame, textCol: String,
+      isRef: Column = lit(true), batchId: Option[Long] = None,
+      keyCol: Option[String] = None): Option[MergedRefLm] = {
     import org.apache.hadoop.fs.Path
     val live = new Path(path)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     healStranded(fs, live)
-    val stored = readRefLm(spark, path)
     val prevApplied = readApplied(spark, fs, live)
     if (isApplied(prevApplied, batchId)) return None
-    val d = refLmTrain(delta, idCol, textCol, isRef)
-    // persist the two merged count frames: each feeds TWO of the four
-    // staged writes (uni → unigram+totals, big → bigram+ctx), and
-    // without the pin every write re-runs the delta tokenization
-    val uni = stored.unigrams.unionByName(d.unigrams)
-      .groupBy("term").agg(sum("c1").as("c1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val big = stored.bigrams.unionByName(d.bigrams)
-      .groupBy("w1", "w2").agg(sum("cb").as("cb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ctx = big.groupBy("w1").agg(sum("cb").as("ctx"))
-    val tot = uni.agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab"))
+    val stored = readRefLm(spark, path)
+    require(stored.keyed == keyCol.isDefined,
+      s"the model at $path is ${if (stored.keyed) "" else "un"}keyed: " +
+        "merge with a keyCol exactly when it is keyed")
+    val ks = keyCols(keyCol)
+    val d = refLmTrain(delta, textCol, isRef, stored.order, keyCol)
+    // every merged count table persists: each feeds its own staged
+    // write plus a derived one (unigram → totals, bigram → ctx,
+    // trigram → tctx), and without the pin every write re-runs the
+    // delta tokenization
+    val counts = stored.counts.zip(d.counts).zipWithIndex.map { case ((s, t), i) =>
+      val c = countTables(i)._2
+      s.unionByName(t).groupBy(cols(ks ++ gramCols(i + 1)): _*).agg(sum(c).as(c))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    val merged = withDerived(counts, ks)
     val staged = new Path(live.getParent, live.getName + "__merging")
     if (fs.exists(staged)) fs.delete(staged, true)
-    val merged = RefLmModel(uni, ctx, big, tot)
     try {
       writeRefLm(merged, staged.toString)
       writeApplied(spark, staged, prevApplied, batchId)
       stagedSwap(fs, live, staged)
     } catch {
-      case e: Throwable => uni.unpersist(false); big.unpersist(false); throw e
+      case e: Throwable => counts.foreach(_.unpersist(false)); throw e
     }
-    Some(MergedRefLm(merged, Seq(uni, big)))
-  }
-
-  /** The staged-merge skeleton shared by the Boolean count-merges
-    * ([[mergeIntoStoredRefLm3]], [[mergeIntoStoredKeyedRefLm]],
-    * [[mergeIntoStoredKeyedRefLm3]]; [[mergeIntoStoredRefLmReturning]]
-    * stays custom — it hands its persisted frames to the caller
-    * instead of releasing them): heal a stranded swap, consult the
-    * applied-batch log, then let `body` read the stored model and
-    * build the merged tables, returning the persisted frame handles
-    * plus a writer of the staged directory. The skeleton stages the
-    * write, extends the applied log INSIDE the staged dir (so it
-    * swaps atomically with the counts), swaps it in, and always
-    * releases the handles. One implementation of the crash-safety
-    * protocol — a fix here fixes every merge. Returns true iff
-    * applied (false = `batchId` already logged, a replay no-op).
-    */
-  private def stagedCountMerge(spark: SparkSession, path: String,
-      batchId: Option[Long])(
-      body: () => (Seq[DataFrame], String => Unit)): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healStranded(fs, live)
-    val prevApplied = readApplied(spark, fs, live)
-    if (isApplied(prevApplied, batchId)) return false
-    val (handles, writeStaged) = body()
-    val staged = new Path(live.getParent, live.getName + "__merging")
-    if (fs.exists(staged)) fs.delete(staged, true)
-    try {
-      writeStaged(staged.toString)
-      writeApplied(spark, staged, prevApplied, batchId)
-      stagedSwap(fs, live, staged)
-    } finally handles.foreach(_.unpersist(false))
-    true
+    Some(MergedRefLm(merged, counts))
   }
 
   /** Self-heal the between-renames crash window of [[stagedSwap]]: a
@@ -899,593 +1235,6 @@ object Ranking {
       .parquet(new org.apache.hadoop.fs.Path(staged, "applied").toString))
   }
 
-  // --------------------------------------------------------------------
-  // Order-3 reference LM — the capability step toward CCNet's real
-  // 5-gram model: trigram counts over the same trusted slice, scored
-  // with a Jelinek-Mercer BACKOFF CHAIN trigram→bigram→unigram
-  //   P(w3|w1 w2) = λ3·c(w1w2w3)/c(w1w2·)
-  //               + (1−λ3)·[ λ·c(w2w3)/c(w2·) + (1−λ)·(c(w3)+1)/(N+V) ]
-  // — all counts exact additive integers, so the incremental
-  // count-merge's bit-equal-to-retrain property carries over to
-  // order 3 unchanged (RefLm3Spec asserts it).
-  // --------------------------------------------------------------------
-
-  /** An order-3 reference LM: the order-2 [[RefLmModel]] it backs off
-    * into, plus
-    *  - `trigrams`   : (w1, w2, w3, ct) trigram counts;
-    *  - `triContexts`: (w1, w2, ctx3)  trigram-context totals
-    *    `c(w1 w2 ·)` — NOT the bigram count `c(w1 w2)` (a document's
-    *    final bigram has no continuation), so it is its own derived
-    *    table, re-derivable from `trigrams` exactly like `contexts`
-    *    from `bigrams`.
-    */
-  final case class RefLm3Model(
-      base: RefLmModel, trigrams: DataFrame, triContexts: DataFrame)
-
-  /** The adjacent-triple stream of a token array column `__a` — the
-    * [[bigramPairs]] shape one order up; adjacency never shuffles.
-    */
-  private def trigramTriples: Column = explode(expr(
-    "transform(slice(__a, 1, greatest(size(__a) - 2, 0)), " +
-      "(w, i) -> struct(w AS w1, element_at(__a, i + 2) AS w2, " +
-      "element_at(__a, i + 3) AS w3))"))
-
-  /** TRAIN the order-3 reference LM: the order-2 counts plus trigram
-    * and trigram-context tables — one more partial-aggregated groupBy
-    * over the tokenized scan, same shuffle discipline as
-    * [[refLmTrain]].
-    */
-  def refLm3Train(docs: DataFrame, idCol: String, textCol: String,
-      isRef: Column): RefLm3Model = {
-    val base = refLmTrain(docs, idCol, textCol, isRef)
-    val toks = docs.filter(isRef)
-      .select(TextAnalysis.tokens(col(textCol)).as("__a"))
-    val tri = toks.select(trigramTriples.as("__tg"))
-      .select(col("__tg.w1").as("w1"), col("__tg.w2").as("w2"),
-        col("__tg.w3").as("w3"))
-      .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("ct"))
-    val tctx = tri.groupBy("w1", "w2").agg(sum("ct").as("ctx3"))
-    RefLm3Model(base, tri, tctx)
-  }
-
-  /** Score every pool document under the order-3 reference LM with the
-    * trigram→bigram→unigram backoff chain (λ3 = lam3Num/lam3Den over
-    * the trigram ML leg, then the [[refLmScore]] bigram mixture).
-    * Returns (id, n_trigrams, logprob = mean trigram log-probability,
-    * rounded to 6) for every pool doc with ≥ 3 tokens.
-    *
-    * Scale shape and determinism exactly as [[refLmScore]]: per-doc
-    * triple frequencies partial-agg first, the model joins happen once
-    * per DISTINCT pool triple, ln() rounds to 9 decimals per triple,
-    * per-doc sums are exact decimal, one final double division rounds
-    * to 6.
-    */
-  def refLm3Score(pool: DataFrame, idCol: String, textCol: String,
-      model: RefLm3Model, lam3Num: Int = 5, lam3Den: Int = 10,
-      lamNum: Int = 7, lamDen: Int = 10,
-      checkpointTf: Boolean = false): DataFrame = {
-    require(lam3Num > 0 && lam3Num < lam3Den,
-      s"need 0 < λ3 < 1, got $lam3Num/$lam3Den")
-    require(lamNum > 0 && lamNum < lamDen, s"need 0 < λ < 1, got $lamNum/$lamDen")
-    val id = col(idCol)
-    val l3a = lam3Num.toDouble / lam3Den
-    val l3b = (lam3Den - lam3Num).toDouble / lam3Den
-    val lam1 = lamNum.toDouble / lamDen
-    val lam2 = (lamDen - lamNum).toDouble / lamDen
-    val tfRaw = pool
-      .select(id, TextAnalysis.tokens(col(textCol)).as("__a"))
-      .select(id, trigramTriples.as("__tg"))
-      .select(id, col("__tg.w1").as("w1"), col("__tg.w2").as("w2"),
-        col("__tg.w3").as("w3"))
-      .groupBy(id, col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("tfq"))
-    // tokenize-once materialization for batch paths — [[refLmScore]]'s
-    // checkpointTf rationale
-    val tf = if (checkpointTf) tfRaw.localCheckpoint() else tfRaw
-    val triples = tf.select("w1", "w2", "w3").distinct()
-    val pT = coalesce(col("ct"), lit(0L)).cast("double")
-    val pTC = coalesce(col("ctx3"), lit(0L))
-    val pB = coalesce(col("cb"), lit(0L)).cast("double")
-    val pC = coalesce(col("ctx"), lit(0L))
-    val pU = (coalesce(col("c1"), lit(0L)) + lit(1L)).cast("double")
-    val nv = (col("n_ref_tokens") + col("vocab")).cast("double")
-    val bigMix =
-      lit(lam1) * when(pC > lit(0L), pB / pC.cast("double")).otherwise(lit(0.0)) +
-        lit(lam2) * (pU / nv)
-    val mix =
-      lit(l3a) * when(pTC > lit(0L), pT / pTC.cast("double")).otherwise(lit(0.0)) +
-        lit(l3b) * bigMix
-    val logp = triples
-      .join(model.trigrams, Seq("w1", "w2", "w3"), "left")
-      .join(model.triContexts, Seq("w1", "w2"), "left")
-      // the backoff bigram of (w1,w2,w3) is (w2,w3); rename via select
-      // (withColumnRenamed would collide with the existing w2/w3)
-      .join(model.base.bigrams
-        .select(col("w1").as("w2"), col("w2").as("w3"), col("cb")),
-        Seq("w2", "w3"), "left")
-      .join(model.base.contexts.select(col("w1").as("w2"), col("ctx")),
-        Seq("w2"), "left")
-      .join(model.base.unigrams.select(col("term").as("w3"), col("c1")),
-        Seq("w3"), "left")
-      .crossJoin(broadcast(model.base.totals))
-      .select(col("w1"), col("w2"), col("w3"),
-        round(log(mix), 9).cast("decimal(18,9)").as("logp9"))
-    tf.join(logp, Seq("w1", "w2", "w3"))
-      .groupBy(id)
-      .agg(sum(col("tfq")).as("n_trigrams"),
-        sum(col("tfq").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id, col("n_trigrams"),
-        round(col("__slp").cast("double") / col("n_trigrams"), 6).as("logprob"))
-  }
-
-  /** [[refLmPerplexityBuckets]] over an order-3 scored frame — same
-    * value-cutoff tertiles, reporting `n_trigrams`.
-    */
-  def refLm3PerplexityBuckets(scored: DataFrame): DataFrame =
-    refLm3PerplexityBucketsCached(scored).df
-
-  /** [[refLm3PerplexityBuckets]] exposing the persisted histogram
-    * handle — the [[Dedup.CachedDF]] contract.
-    */
-  def refLm3PerplexityBucketsCached(scored: DataFrame): Dedup.CachedDF =
-    bucketsFromScoredCached(scored, "n_trigrams")
-
-  /** The (v_head, v_mid) cutoff row of an order-3 scored frame — what
-    * [[writeRefLmCutoffs]] persists beside a stored [[RefLm3Model]] so
-    * the order-3 streaming gate
-    * ([[graft.streaming.StreamingPerplexity.gateBatch3]]) labels at
-    * measured numbers; same artifact format as the bigram family.
-    */
-  def refLm3Cutoffs(scored: DataFrame): DataFrame =
-    refLm3CutoffsCached(scored).df
-
-  /** [[refLm3Cutoffs]] exposing the persisted histogram handle — the
-    * [[Dedup.CachedDF]] contract.
-    */
-  def refLm3CutoffsCached(scored: DataFrame): Dedup.CachedDF = {
-    val hist = scoreHist(scored, "n_trigrams")
-    Dedup.CachedDF(cutoffsFromHist(hist), Nil,
-      Seq(() => graftbridge.unpersistCheckpointed(hist)))
-  }
-
-  /** Score every pool document under the order-3 reference LM with
-    * INTERPOLATED KNESER-NEY smoothing (Kneser & Ney 1995; the
-    * interpolated formulation of Chen & Goodman 1998, "An Empirical
-    * Study of Smoothing Techniques for Language Modeling") — the
-    * smoothing CCNet's actual KenLM models use, vs the Jelinek-Mercer
-    * mixture of [[refLm3Score]]. Absolute discount `D = dNum/dDen`
-    * (default 3/4 — exactly representable in IEEE, so the replay is
-    * bit-portable):
-    *
-    *   P₃(w3|w1w2) = (max(c(w1w2w3)−D, 0) + D·T3(w1w2)·P₂(w3|w2)) / C3(w1w2)
-    *                 — backing off entirely to P₂ when C3 = 0;
-    *   P₂(w3|w2)   = (max(c'(w2w3)−D, 0) + D·T2(w2)·Pc(w3)) / C2(w2)
-    *                 — backing off entirely to Pc when C2 = 0;
-    *   Pc(w3)      = (N1+(·w3) + 1) / (B + V)
-    *
-    * where the LOWER orders use CONTINUATION counts (KN's defining
-    * move — "how many contexts has this word completed", not raw
-    * frequency): `c'(w2w3) = N1+(·w2w3)` = distinct w1 preceding the
-    * bigram in a trigram, `C2(w2) = Σ_x c'(w2x)`, `T2(w2)` = distinct
-    * continuations of w2, `T3(w1w2)` = distinct continuations of the
-    * context, `N1+(·w3)` = distinct left-neighbors of w3 in the bigram
-    * table, `B` = distinct bigram types, `V` = vocabulary. The bottom
-    * level is add-1 smoothed over B+V (textbook KN gives an unseen
-    * word zero mass; the pool contains OOV tokens by construction, so
-    * the unigram leg keeps the [[refLmScore]] convention of finite
-    * mass everywhere).
-    *
-    * EVERY table here derives from the [[RefLm3Model]]'s base counts
-    * (trigrams, bigrams, unigrams — all exact additive integers), so
-    * the stored deploy ([[writeRefLm3]]/[[readRefLm3]]) and the
-    * bit-equal-to-retrain incremental merge
-    * ([[mergeIntoStoredRefLm3]]) carry over to KN UNCHANGED: merge the
-    * counts, and the KN probabilities re-derive from the merged tables
-    * exactly as a from-scratch retrain would (RefLmKn3Spec asserts
-    * it). No new artifact format, no new merge path.
-    *
-    * Scale shape and determinism exactly as [[refLm3Score]]: per-doc
-    * triple frequencies partial-agg first; the continuation tables are
-    * one groupBy each over the model tables (model-sized, never
-    * corpus-sized); model joins happen once per DISTINCT pool triple;
-    * ln() rounds to 9 decimals per triple; per-doc sums are exact
-    * decimal; one final double division rounds to 6. Returns
-    * (id, n_trigrams, logprob) for every pool doc with ≥ 3 tokens.
-    */
-  def refLmKn3Score(pool: DataFrame, idCol: String, textCol: String,
-      model: RefLm3Model, dNum: Int = 3, dDen: Int = 4,
-      checkpointTf: Boolean = false): DataFrame = {
-    require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
-    val id = col(idCol)
-    val d = dNum.toDouble / dDen
-    val tfRaw = pool
-      .select(id, TextAnalysis.tokens(col(textCol)).as("__a"))
-      .select(id, trigramTriples.as("__tg"))
-      .select(id, col("__tg.w1").as("w1"), col("__tg.w2").as("w2"),
-        col("__tg.w3").as("w3"))
-      .groupBy(id, col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("tfq"))
-    // tokenize-once materialization for batch paths — [[refLmScore]]'s
-    // checkpointTf rationale
-    val tf = if (checkpointTf) tfRaw.localCheckpoint() else tfRaw
-    val triples = tf.select("w1", "w2", "w3").distinct()
-    // continuation tables, each one partial-aggregated groupBy over a
-    // MODEL table (trigram/bigram rows are distinct per key, so
-    // count(*) IS the distinct-continuation count)
-    val t3 = model.trigrams.groupBy("w1", "w2").agg(count(lit(1)).as("__t3"))
-    val cbig = model.trigrams.groupBy("w2", "w3").agg(count(lit(1)).as("__cc"))
-    val c2 = cbig.groupBy("w2")
-      .agg(sum("__cc").as("__c2"), count(lit(1)).as("__t2"))
-    val cu = model.base.bigrams.groupBy("w2").agg(count(lit(1)).as("__cu"))
-    val btot = model.base.bigrams.agg(count(lit(1)).as("__nbig"))
-    val pT = coalesce(col("ct"), lit(0L)).cast("double")
-    val pC3 = coalesce(col("ctx3"), lit(0L))
-    val pT3 = coalesce(col("__t3"), lit(0L)).cast("double")
-    val pCC = coalesce(col("__cc"), lit(0L)).cast("double")
-    val pC2 = coalesce(col("__c2"), lit(0L))
-    val pT2 = coalesce(col("__t2"), lit(0L)).cast("double")
-    val pCU = coalesce(col("__cu"), lit(0L)).cast("double")
-    val bv = (col("__nbig") + col("vocab")).cast("double")
-    val pc = (pCU + lit(1.0)) / bv
-    val p2 = when(pC2 > lit(0L),
-      (greatest(pCC - lit(d), lit(0.0)) + lit(d) * pT2 * pc) /
-        pC2.cast("double")).otherwise(pc)
-    val p3 = when(pC3 > lit(0L),
-      (greatest(pT - lit(d), lit(0.0)) + lit(d) * pT3 * p2) /
-        pC3.cast("double")).otherwise(p2)
-    val logp = triples
-      .join(model.trigrams, Seq("w1", "w2", "w3"), "left")
-      .join(model.triContexts, Seq("w1", "w2"), "left")
-      .join(t3, Seq("w1", "w2"), "left")
-      // the continuation bigram of (w1,w2,w3) is keyed (w2,w3) already
-      .join(cbig, Seq("w2", "w3"), "left")
-      .join(c2, Seq("w2"), "left")
-      .join(cu.select(col("w2").as("w3"), col("__cu")), Seq("w3"), "left")
-      .crossJoin(broadcast(model.base.totals))
-      .crossJoin(broadcast(btot))
-      .select(col("w1"), col("w2"), col("w3"),
-        round(log(p3), 9).cast("decimal(18,9)").as("logp9"))
-    tf.join(logp, Seq("w1", "w2", "w3"))
-      .groupBy(id)
-      .agg(sum(col("tfq")).as("n_trigrams"),
-        sum(col("tfq").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id, col("n_trigrams"),
-        round(col("__slp").cast("double") / col("n_trigrams"), 6).as("logprob"))
-  }
-
-  /** Persist a [[RefLm3Model]] — the order-2 tables plus `trigram` and
-    * `tctx`, all six overlapped through [[writeTablesParallel]].
-    */
-  def writeRefLm3(model: RefLm3Model, path: String): Unit =
-    writeTablesParallel(Seq(
-      (model.base.unigrams, s"$path/unigram", false),
-      (model.base.contexts, s"$path/ctx", false),
-      (model.base.bigrams, s"$path/bigram", false),
-      (model.base.totals, s"$path/totals", true),
-      (model.trigrams, s"$path/trigram", false),
-      (model.triContexts, s"$path/tctx", false)))
-
-  /** Read back a [[writeRefLm3]] artifact ([[readRefLm]]'s fail-fast
-    * totals check included).
-    */
-  def readRefLm3(spark: SparkSession, path: String): RefLm3Model =
-    RefLm3Model(
-      readRefLm(spark, path),
-      spark.read.parquet(s"$path/trigram"),
-      spark.read.parquet(s"$path/tctx"))
-
-  /** [[mergeIntoStoredRefLm]] at order 3: unigram, bigram AND trigram
-    * counts are additive, context tables and totals re-derive from the
-    * merged counts, so the bit-equal-to-retrain property carries over
-    * unchanged (RefLm3Spec asserts it). Same staged swap, self-heal
-    * and applied-batch replay guard.
-    */
-  def mergeIntoStoredRefLm3(spark: SparkSession, path: String,
-      delta: DataFrame, idCol: String, textCol: String,
-      isRef: Column = lit(true), batchId: Option[Long] = None): Boolean =
-    stagedCountMerge(spark, path, batchId) { () =>
-      val stored = readRefLm3(spark, path)
-      val d = refLm3Train(delta, idCol, textCol, isRef)
-      // the three additive count frames persist for the staged writes:
-      // uni feeds unigram+totals, big feeds bigram+ctx, tri feeds
-      // trigram+tctx — without the pin every write re-tokenizes the delta
-      val uni = stored.base.unigrams.unionByName(d.base.unigrams)
-        .groupBy("term").agg(sum("c1").as("c1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val big = stored.base.bigrams.unionByName(d.base.bigrams)
-        .groupBy("w1", "w2").agg(sum("cb").as("cb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val tri = stored.trigrams.unionByName(d.trigrams)
-        .groupBy("w1", "w2", "w3").agg(sum("ct").as("ct"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ctx = big.groupBy("w1").agg(sum("cb").as("ctx"))
-      val tctx = tri.groupBy("w1", "w2").agg(sum("ct").as("ctx3"))
-      val tot = uni.agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab"))
-      (Seq(uni, big, tri), staged =>
-        writeRefLm3(RefLm3Model(RefLmModel(uni, ctx, big, tot), tri, tctx),
-          staged))
-    }
-
-  // --------------------------------------------------------------------
-  // Order-5 reference LM — CCNet's production depth (its KenLM models
-  // are 5-gram interpolated Kneser-Ney). The stored model is the
-  // order-3 artifact plus TWO more additive raw-count tables (4-grams,
-  // 5-grams); every KN table — contexts, continuation counts, type
-  // counts at all five orders — derives at score time with one
-  // groupBy each, so the staged-swap deploy and the
-  // bit-equal-to-retrain merge carry over with no new derivation
-  // stored.
-  //
-  // STORAGE CONTRACT (the trigram→5-gram step change): distinct
-  // 5-grams approach the corpus token count, so unlike the
-  // vocabulary-bounded low orders the stored order-4/5 tables are
-  // CORPUS-scale, not model-scale — plain partitioned parquet keyed by
-  // the n-gram, merged with one partial-aggregated groupBy per table
-  // (the same shuffle a corpus tokenization pays). Stored counts stay
-  // UNPRUNED: additivity is what makes the incremental merge
-  // bit-identical to a retrain, and pruning is not additive (a count
-  // crossing the threshold after a merge must reappear). Pruning is
-  // instead a SCORE-TIME config ([[refLmKn5Score]]'s minCount5/4 —
-  // KenLM's singleton pruning as a view), which bounds every scoring
-  // join side without touching the stored artifact; a deployment that
-  // must bound STORAGE can prune at write, accepting that merges then
-  // need the unpruned source of truth elsewhere.
-  // --------------------------------------------------------------------
-
-  /** An order-5 reference LM: the stored [[RefLm3Model]] plus raw
-    * `fourgrams` (w1..w4, c4) and `fivegrams` (w1..w5, c5) counts.
-    * Context and continuation tables deliberately NOT stored — KN
-    * derives them at score time (one groupBy each), so the artifact
-    * holds only additive counts and the merge stays bit-equal.
-    */
-  final case class RefLm5Model(
-      base3: RefLm3Model, fourgrams: DataFrame, fivegrams: DataFrame)
-
-  /** Adjacent 4-tuples of a token array column `__a`. */
-  private def fourgramQuads: Column = explode(expr(
-    "transform(slice(__a, 1, greatest(size(__a) - 3, 0)), " +
-      "(w, i) -> struct(w AS w1, element_at(__a, i + 2) AS w2, " +
-      "element_at(__a, i + 3) AS w3, element_at(__a, i + 4) AS w4))"))
-
-  /** Adjacent 5-tuples of a token array column `__a`. */
-  private def fivegramQuints: Column = explode(expr(
-    "transform(slice(__a, 1, greatest(size(__a) - 4, 0)), " +
-      "(w, i) -> struct(w AS w1, element_at(__a, i + 2) AS w2, " +
-      "element_at(__a, i + 3) AS w3, element_at(__a, i + 4) AS w4, " +
-      "element_at(__a, i + 5) AS w5))"))
-
-  /** TRAIN the order-5 reference LM: the order-3 counts plus raw
-    * 4-gram and 5-gram tables — two more partial-aggregated groupBys
-    * over the tokenized scan, same shuffle discipline as
-    * [[refLm3Train]].
-    */
-  def refLm5Train(docs: DataFrame, idCol: String, textCol: String,
-      isRef: Column): RefLm5Model = {
-    val base3 = refLm3Train(docs, idCol, textCol, isRef)
-    val toks = docs.filter(isRef)
-      .select(TextAnalysis.tokens(col(textCol)).as("__a"))
-    val four = toks.select(fourgramQuads.as("__fg"))
-      .select(col("__fg.w1").as("w1"), col("__fg.w2").as("w2"),
-        col("__fg.w3").as("w3"), col("__fg.w4").as("w4"))
-      .groupBy("w1", "w2", "w3", "w4").agg(count(lit(1)).as("c4"))
-    val five = toks.select(fivegramQuints.as("__qg"))
-      .select(col("__qg.w1").as("w1"), col("__qg.w2").as("w2"),
-        col("__qg.w3").as("w3"), col("__qg.w4").as("w4"),
-        col("__qg.w5").as("w5"))
-      .groupBy("w1", "w2", "w3", "w4", "w5").agg(count(lit(1)).as("c5"))
-    RefLm5Model(base3, four, five)
-  }
-
-  /** Score every pool document under 5-gram INTERPOLATED KNESER-NEY —
-    * [[refLmKn3Score]] at CCNet's production depth. The chain follows
-    * Chen & Goodman 1998: the TOP order uses raw counts, every lower
-    * order uses continuation counts N1+(·w…) derived from the raw
-    * table ONE order up —
-    *
-    *   P₅ = (max(c(w1..w5)−D,0) + D·T5·P₄) / C5   (raw 5-gram counts)
-    *   P₄ = (max(N1+(·w2..w5)−D,0) + D·T4·P₃) / C4  (from 5-grams)
-    *   P₃ = (max(N1+(·w3w4w5)−D,0) + D·T3·P₂) / C3  (from 4-grams)
-    *   P₂ = (max(N1+(·w4w5)−D,0) + D·T2·Pc) / C2    (from trigrams)
-    *   Pc = (N1+(·w5) + 1) / (B + V)                (from bigrams)
-    *
-    * each level backing off entirely when its context total is 0; the
-    * bottom keeps the family's add-1 OOV convention.
-    *
-    * `minCount5`/`minCount4` (default 1 = no pruning) drop raw 5-/4-
-    * gram rows BELOW the threshold before any derivation — KenLM's
-    * count pruning as a score-time view: context totals, type counts
-    * and continuation counts all re-derive from the pruned table, so
-    * the pruned distribution stays normalized (the dropped mass routes
-    * through the discount backoff, exactly as if those n-grams were
-    * never observed). The stored artifact is untouched — see the
-    * storage contract above.
-    *
-    * Scale shape: per-doc 5-tuple frequencies partial-agg first,
-    * derivation tables are one groupBy over a model table each, and the
-    * model-join chain runs DIRECTLY over the per-doc 5-tuple rows
-    * (r18 optimization round): at order 5 the distinct-tuple dedup the
-    * lower-order scorers rely on buys nothing — measured at sf0.1,
-    * 250,704 per-doc rows vs 250,282 distinct 5-tuples (1.002x; the
-    * order-2 factor is 275x, order-3 is 9.6x — those keep the
-    * distinct+join-back design) — so the distinct exchange, the
-    * join-back (which broadcast-hashed the whole per-doc frame on five
-    * string keys), and the two-consumer tokenize checkpoint were pure
-    * overhead: the per-doc frame has exactly one consumer, so the pool
-    * is tokenized once by construction. Determinism unchanged: ln() of
-    * the same fixed IEEE expression rounds to 9 decimals per row (equal
-    * 5-tuples produce bit-equal logp9 wherever they are evaluated),
-    * exact decimal doc sums, one final 6-round. Returns
-    * (id, n_5grams, logprob) for every pool doc with ≥ 5 tokens.
-    */
-  def refLmKn5Score(pool: DataFrame, idCol: String, textCol: String,
-      model: RefLm5Model, dNum: Int = 3, dDen: Int = 4,
-      minCount5: Long = 1, minCount4: Long = 1): DataFrame = {
-    require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
-    require(minCount5 >= 1 && minCount4 >= 1,
-      s"count-pruning thresholds must be >= 1, got $minCount5/$minCount4")
-    // the id rides the join chain as `__id`, so an idCol named like a
-    // model column cannot make the chain's references ambiguous
-    val id = col("__id")
-    val d = dNum.toDouble / dDen
-    // the per-doc 5-tuple frame: the groupBy's exchange is also what
-    // spreads the downstream join chain across tasks (the raw explode
-    // runs inside the scan's split count)
-    val tf = pool
-      .select(col(idCol).as("__id"), TextAnalysis.tokens(col(textCol)).as("__a"))
-      .select(id, fivegramQuints.as("__qg"))
-      .select(id, col("__qg.w1").as("w1"), col("__qg.w2").as("w2"),
-        col("__qg.w3").as("w3"), col("__qg.w4").as("w4"),
-        col("__qg.w5").as("w5"))
-      .groupBy(id, col("w1"), col("w2"), col("w3"), col("w4"), col("w5"))
-      .agg(count(lit(1)).as("tfq"))
-    // pruned raw views — every derivation below reads these
-    val five = model.fivegrams.filter(col("c5") >= lit(minCount5))
-    val four = model.fourgrams.filter(col("c4") >= lit(minCount4))
-    // top order: context totals + type counts over pruned 5-grams
-    val ce5 = five.groupBy("w1", "w2", "w3", "w4")
-      .agg(sum("c5").as("__c5x"), count(lit(1)).as("__t5"))
-    // order 4: continuation counts from the 5-gram table
-    val cc4 = five.groupBy("w2", "w3", "w4", "w5")
-      .agg(count(lit(1)).as("__cc4"))
-    val c4 = cc4.groupBy("w2", "w3", "w4")
-      .agg(sum("__cc4").as("__c4x"), count(lit(1)).as("__t4"))
-    // order 3: continuation counts from the 4-gram table, keyed as the
-    // (w3,w4,w5) trigram of the scored 5-tuple
-    val cc3 = four.groupBy("w2", "w3", "w4")
-      .agg(count(lit(1)).as("__cc3"))
-      .select(col("w2").as("w3"), col("w3").as("w4"), col("w4").as("w5"),
-        col("__cc3"))
-    val c3 = cc3.groupBy("w3", "w4")
-      .agg(sum("__cc3").as("__c3x"), count(lit(1)).as("__t3"))
-    // order 2: continuation counts from the trigram table, keyed (w4,w5)
-    val cc2 = model.base3.trigrams.groupBy("w2", "w3")
-      .agg(count(lit(1)).as("__cc2"))
-      .select(col("w2").as("w4"), col("w3").as("w5"), col("__cc2"))
-    val c2 = cc2.groupBy("w4")
-      .agg(sum("__cc2").as("__c2x"), count(lit(1)).as("__t2"))
-    // bottom: left-neighbor counts from the bigram table + B + V
-    val cu = model.base3.base.bigrams.groupBy("w2")
-      .agg(count(lit(1)).as("__cu"))
-    val btot = model.base3.base.bigrams.agg(count(lit(1)).as("__nbig"))
-    val pC5 = coalesce(col("c5"), lit(0L)).cast("double")
-    val pX5 = coalesce(col("__c5x"), lit(0L))
-    val pT5 = coalesce(col("__t5"), lit(0L)).cast("double")
-    val pCC4 = coalesce(col("__cc4"), lit(0L)).cast("double")
-    val pX4 = coalesce(col("__c4x"), lit(0L))
-    val pT4 = coalesce(col("__t4"), lit(0L)).cast("double")
-    val pCC3 = coalesce(col("__cc3"), lit(0L)).cast("double")
-    val pX3 = coalesce(col("__c3x"), lit(0L))
-    val pT3 = coalesce(col("__t3"), lit(0L)).cast("double")
-    val pCC2 = coalesce(col("__cc2"), lit(0L)).cast("double")
-    val pX2 = coalesce(col("__c2x"), lit(0L))
-    val pT2 = coalesce(col("__t2"), lit(0L)).cast("double")
-    val pCU = coalesce(col("__cu"), lit(0L)).cast("double")
-    val bv = (col("__nbig") + col("vocab")).cast("double")
-    val pc = (pCU + lit(1.0)) / bv
-    val p2 = when(pX2 > lit(0L),
-      (greatest(pCC2 - lit(d), lit(0.0)) + lit(d) * pT2 * pc) /
-        pX2.cast("double")).otherwise(pc)
-    val p3 = when(pX3 > lit(0L),
-      (greatest(pCC3 - lit(d), lit(0.0)) + lit(d) * pT3 * p2) /
-        pX3.cast("double")).otherwise(p2)
-    val p4 = when(pX4 > lit(0L),
-      (greatest(pCC4 - lit(d), lit(0.0)) + lit(d) * pT4 * p3) /
-        pX4.cast("double")).otherwise(p3)
-    val p5 = when(pX5 > lit(0L),
-      (greatest(pC5 - lit(d), lit(0.0)) + lit(d) * pT5 * p4) /
-        pX5.cast("double")).otherwise(p4)
-    tf
-      .join(five, Seq("w1", "w2", "w3", "w4", "w5"), "left")
-      .join(ce5, Seq("w1", "w2", "w3", "w4"), "left")
-      .join(cc4, Seq("w2", "w3", "w4", "w5"), "left")
-      .join(c4, Seq("w2", "w3", "w4"), "left")
-      .join(cc3, Seq("w3", "w4", "w5"), "left")
-      .join(c3, Seq("w3", "w4"), "left")
-      .join(cc2, Seq("w4", "w5"), "left")
-      .join(c2, Seq("w4"), "left")
-      .join(cu.select(col("w2").as("w5"), col("__cu")), Seq("w5"), "left")
-      .crossJoin(broadcast(model.base3.base.totals))
-      .crossJoin(broadcast(btot))
-      .select(id, col("tfq"),
-        round(log(p5), 9).cast("decimal(18,9)").as("logp9"))
-      .groupBy(id)
-      .agg(sum(col("tfq")).as("n_5grams"),
-        sum(col("tfq").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id.as(idCol), col("n_5grams"),
-        round(col("__slp").cast("double") / col("n_5grams"), 6).as("logprob"))
-  }
-
-  /** [[refLmPerplexityBuckets]] over an order-5 scored frame — same
-    * value-cutoff tertiles, reporting `n_5grams`.
-    */
-  def refLm5PerplexityBuckets(scored: DataFrame): DataFrame =
-    refLm5PerplexityBucketsCached(scored).df
-
-  /** [[refLm5PerplexityBuckets]] exposing the persisted histogram
-    * handle — the [[Dedup.CachedDF]] contract.
-    */
-  def refLm5PerplexityBucketsCached(scored: DataFrame): Dedup.CachedDF =
-    bucketsFromScoredCached(scored, "n_5grams")
-
-  /** Persist a [[RefLm5Model]] — the six order-3 tables plus
-    * `fourgram` and `fivegram`, all eight overlapped through
-    * [[writeTablesParallel]].
-    */
-  def writeRefLm5(model: RefLm5Model, path: String): Unit =
-    writeTablesParallel(Seq(
-      (model.base3.base.unigrams, s"$path/unigram", false),
-      (model.base3.base.contexts, s"$path/ctx", false),
-      (model.base3.base.bigrams, s"$path/bigram", false),
-      (model.base3.base.totals, s"$path/totals", true),
-      (model.base3.trigrams, s"$path/trigram", false),
-      (model.base3.triContexts, s"$path/tctx", false),
-      (model.fourgrams, s"$path/fourgram", false),
-      (model.fivegrams, s"$path/fivegram", false)))
-
-  /** Read back a [[writeRefLm5]] artifact ([[readRefLm]]'s fail-fast
-    * totals check included).
-    */
-  def readRefLm5(spark: SparkSession, path: String): RefLm5Model =
-    RefLm5Model(
-      readRefLm3(spark, path),
-      spark.read.parquet(s"$path/fourgram"),
-      spark.read.parquet(s"$path/fivegram"))
-
-  /** [[mergeIntoStoredRefLm3]] at order 5: five additive raw-count
-    * tables merge (uni/bi/tri/four/five), context tables and totals
-    * re-derive, same staged swap and replay guard — and because KN's
-    * derivation tables are score-time groupBys over these counts,
-    * merge-then-KN stays bit-identical to retrain-then-KN at order 5
-    * (RefLmKn5Spec asserts it).
-    */
-  def mergeIntoStoredRefLm5(spark: SparkSession, path: String,
-      delta: DataFrame, idCol: String, textCol: String,
-      isRef: Column = lit(true), batchId: Option[Long] = None): Boolean =
-    stagedCountMerge(spark, path, batchId) { () =>
-      val stored = readRefLm5(spark, path)
-      val d = refLm5Train(delta, idCol, textCol, isRef)
-      val uni = stored.base3.base.unigrams.unionByName(d.base3.base.unigrams)
-        .groupBy("term").agg(sum("c1").as("c1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val big = stored.base3.base.bigrams.unionByName(d.base3.base.bigrams)
-        .groupBy("w1", "w2").agg(sum("cb").as("cb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val tri = stored.base3.trigrams.unionByName(d.base3.trigrams)
-        .groupBy("w1", "w2", "w3").agg(sum("ct").as("ct"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val four = stored.fourgrams.unionByName(d.fourgrams)
-        .groupBy("w1", "w2", "w3", "w4").agg(sum("c4").as("c4"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val five = stored.fivegrams.unionByName(d.fivegrams)
-        .groupBy("w1", "w2", "w3", "w4", "w5").agg(sum("c5").as("c5"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ctx = big.groupBy("w1").agg(sum("cb").as("ctx"))
-      val tctx = tri.groupBy("w1", "w2").agg(sum("ct").as("ctx3"))
-      val tot = uni.agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab"))
-      (Seq(uni, big, tri, four, five), staged =>
-        writeRefLm5(RefLm5Model(
-          RefLm3Model(RefLmModel(uni, ctx, big, tot), tri, tctx), four, five),
-          staged))
-    }
-
   /** The shared DuckDB CTE chain for the reference-LM family: trains
     * the model on `refPred` rows of `src`, scores the whole pool, and
     * leaves `scored(id, n_bigrams, logprob)` plus the model tables in
@@ -1540,781 +1289,8 @@ object Ranking {
        |  FROM pbf JOIN plp ON pbf.w1 = plp.w1 AND pbf.w2 = plp.w2
        |  GROUP BY 1)""".stripMargin
 
-  // --------------------------------------------------------------------
-  // Per-key reference LMs — the actual CCNet deployment shape: one LM
-  // per LANGUAGE, every model trained in ONE pass (the key rides every
-  // count table; there is no per-language job loop, which is the whole
-  // point at 100 TB with a hundred languages), and every pool document
-  // scored under ITS OWN key's model.
-  // --------------------------------------------------------------------
-
-  /** [[RefLmModel]] with the partition key as the leading column of
-    * every table: unigrams (__k, term, c1), contexts (__k, w1, ctx),
-    * bigrams (__k, w1, w2, cb), totals (__k, n_ref_tokens, vocab).
-    */
-  final case class KeyedRefLmModel(
-      unigrams: DataFrame, contexts: DataFrame,
-      bigrams: DataFrame, totals: DataFrame)
-
-  /** [[refLmTrain]] keyed by `keyCol`: all keys' models in one pass —
-    * the key simply joins every groupBy key, so the count tables stay
-    * partial-aggregated and shuffle once each regardless of how many
-    * models train.
-    */
-  def refLmTrainByKey(docs: DataFrame, idCol: String, textCol: String,
-      keyCol: String, isRef: Column): KeyedRefLmModel = {
-    val toks = docs.filter(isRef)
-      .select(col(keyCol).as("__k"), TextAnalysis.tokens(col(textCol)).as("__a"))
-    val uni = toks.select(col("__k"), explode(col("__a")).as("term"))
-      .groupBy("__k", "term").agg(count(lit(1)).as("c1"))
-    val big = toks.select(col("__k"), bigramPairs.as("__bg"))
-      .select(col("__k"), col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
-      .groupBy("__k", "w1", "w2").agg(count(lit(1)).as("cb"))
-    val ctx = big.groupBy("__k", "w1").agg(sum("cb").as("ctx"))
-    val tot = uni.groupBy("__k")
-      .agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab"))
-    KeyedRefLmModel(uni, ctx, big, tot)
-  }
-
-  /** [[refLmScore]] keyed: each pool document scores under the model
-    * of ITS `keyCol` value. Same λ-mixture, same determinism scheme;
-    * the totals join is INNER on the key, so documents whose key has
-    * no reference model are UNSCORED (absent from the output) rather
-    * than scored against nothing. Returns (id, keyCol, n_bigrams,
-    * logprob).
-    */
-  def refLmScoreByKey(pool: DataFrame, idCol: String, textCol: String,
-      keyCol: String, model: KeyedRefLmModel,
-      lamNum: Int = 7, lamDen: Int = 10,
-      checkpointTf: Boolean = false): DataFrame = {
-    require(lamNum > 0 && lamNum < lamDen, s"need 0 < λ < 1, got $lamNum/$lamDen")
-    val id = col(idCol)
-    val lam1 = lamNum.toDouble / lamDen
-    val lam2 = (lamDen - lamNum).toDouble / lamDen
-    val bfRaw = pool
-      .select(id, col(keyCol).as("__k"), TextAnalysis.tokens(col(textCol)).as("__a"))
-      .select(id, col("__k"), bigramPairs.as("__bg"))
-      .select(id, col("__k"), col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
-      .groupBy(id, col("__k"), col("w1"), col("w2")).agg(count(lit(1)).as("bf"))
-    // tokenize-once materialization for batch paths — [[refLmScore]]'s
-    // checkpointTf rationale
-    val bf = if (checkpointTf) bfRaw.localCheckpoint() else bfRaw
-    val pairs = bf.select("__k", "w1", "w2").distinct()
-    val pB = coalesce(col("cb"), lit(0L)).cast("double")
-    val pC = coalesce(col("ctx"), lit(0L))
-    val pU = (coalesce(col("c1"), lit(0L)) + lit(1L)).cast("double")
-    val nv = (col("n_ref_tokens") + col("vocab")).cast("double")
-    val mix = lit(lam1) * when(pC > lit(0L), pB / pC.cast("double")).otherwise(lit(0.0)) +
-      lit(lam2) * (pU / nv)
-    val logp = pairs
-      .join(model.bigrams, Seq("__k", "w1", "w2"), "left")
-      .join(model.contexts, Seq("__k", "w1"), "left")
-      .join(model.unigrams.withColumnRenamed("term", "w2"), Seq("__k", "w2"), "left")
-      // INNER on the key: the totals table is #keys rows (broadcast)
-      .join(broadcast(model.totals), Seq("__k"))
-      .select(col("__k"), col("w1"), col("w2"),
-        round(log(mix), 9).cast("decimal(18,9)").as("logp9"))
-    bf.join(logp, Seq("__k", "w1", "w2"))
-      .groupBy(id, col("__k"))
-      .agg(sum(col("bf")).as("n_bigrams"),
-        sum(col("bf").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id, col("__k").as(keyCol), col("n_bigrams"),
-        round(col("__slp").cast("double") / col("n_bigrams"), 6).as("logprob"))
-  }
-
-  /** [[refLmPerplexityBuckets]] keyed: head/middle/tail cutoffs are
-    * PER KEY (each language gets its own tertile values — CCNet's
-    * per-language percentiles), from the same histogram-of-rounded-
-    * scores order statistics, with the cumulative window PARTITIONED
-    * by the key — no single-partition window anywhere. Returns one row
-    * per (keyCol, non-empty bucket).
-    */
-  def refLmPerplexityBucketsByKey(scored: DataFrame, keyCol: String): DataFrame =
-    refLmPerplexityBucketsByKeyCached(scored, keyCol).df
-
-  /** [[refLmPerplexityBucketsByKey]] exposing the persisted histogram
-    * handle — see [[refLmPerplexityBucketsCached]].
-    */
-  def refLmPerplexityBucketsByKeyCached(
-      scored: DataFrame, keyCol: String): Dedup.CachedDF =
-    bucketsByKeyFromScoredCached(scored, keyCol, "n_bigrams")
-
-  /** The keyed bucket-report body shared by the bigram and trigram
-    * families — [[bucketsFromScoredCached]]'s keyed twin,
-    * parameterized by the per-doc count column (`n_bigrams` /
-    * `n_trigrams`), which is also the report's output column name.
-    */
-  private def bucketsByKeyFromScoredCached(
-      scored: DataFrame, keyCol: String, cntCol: String): Dedup.CachedDF = {
-    val k = col(keyCol)
-    val hist = keyedScoreHist(scored, keyCol, cntCol)
-    val cuts = cutoffsFromKeyedHist(hist, keyCol)
-    val df = hist.join(broadcast(cuts), keyCol)
-      .select(k,
-        when(col("logprob") >= col("v_head"), lit("head"))
-          .when(col("logprob") >= col("v_mid"), lit("middle"))
-          .otherwise(lit("tail")).as("bucket"),
-        col("logprob"), col("nv"), col("snb"))
-      .groupBy(k, col("bucket"))
-      .agg(sum("nv").as("n_docs"),
-        min("logprob").as("min_logprob"),
-        max("logprob").as("max_logprob"),
-        sum("snb").as(cntCol))
-      .orderBy(k, col("bucket"))
-    Dedup.CachedDF(df, Nil,
-      Seq(() => graftbridge.unpersistCheckpointed(hist)))
-  }
-
-  /** The keyed twin of [[scoreHist]]: one persisted histogram per
-    * (key, score) — scoring executes once; every branch reads rows.
-    */
-  private def keyedScoreHist(scored: DataFrame, keyCol: String,
-      cntCol: String = "n_bigrams"): DataFrame =
-    scored.groupBy(col(keyCol), col("logprob"))
-      .agg(count(lit(1)).as("nv"), sum(cntCol).as("snb"))
-      // localCheckpoint, not persist — same plan-truncation rationale
-      // as [[scoreHist]] (the keyed hist is per-(key, score) rows,
-      // still value-space bounded)
-      .localCheckpoint()
-
-  /** Per-key (v_head, v_mid) from a [[keyedScoreHist]] frame — the
-    * [[cutoffsFromHist]] coarse-bin-then-refine shape with every
-    * window ALSO partitioned by the key: a dominant language (90% of a
-    * 100 TB corpus in one key) refines in per-(key, centi-bin) slices
-    * instead of concentrating its whole histogram in one task.
-    */
-  private def cutoffsFromKeyedHist(hist: DataFrame, keyCol: String): DataFrame = {
-    val k = col(keyCol)
-    val binned = hist.withColumn("__bin", floor(col("logprob") * lit(100.0)))
-    val binPrior = binned.groupBy(k, col("__bin")).agg(sum("nv").as("__bn"))
-      .withColumn("__prior",
-        sum("__bn").over(Window.partitionBy(k).orderBy(col("__bin").desc)) -
-          col("__bn"))
-      .select(k, col("__bin"), col("__prior"))
-    val cum = binned.join(broadcast(binPrior), Seq(keyCol, "__bin"))
-      .withColumn("cumn", col("__prior") + sum("nv").over(
-        Window.partitionBy(k, col("__bin")).orderBy(col("logprob").desc)))
-    val tot = hist.groupBy(k).agg(sum("nv").as("n"))
-    cum.join(broadcast(tot), keyCol)
-      .groupBy(k)
-      .agg(
-        max(when(col("cumn") >= expr("(n + 2) div 3"), col("logprob")))
-          .as("v_head"),
-        max(when(col("cumn") >= expr("(2 * n + 2) div 3"), col("logprob")))
-          .as("v_mid"))
-  }
-
-  /** Per-key cutoff rows (keyCol, v_head, v_mid) of a
-    * [[refLmScoreByKey]] frame — what a per-language streaming ingest
-    * gates at ([[writeRefLmCutoffsByKey]] persists them beside the
-    * keyed model).
-    */
-  def refLmCutoffsByKey(scored: DataFrame, keyCol: String): DataFrame =
-    refLmCutoffsByKeyCached(scored, keyCol).df
-
-  /** [[refLmCutoffsByKey]] exposing the persisted histogram handle —
-    * see [[refLmCutoffsCached]].
-    */
-  def refLmCutoffsByKeyCached(scored: DataFrame, keyCol: String): Dedup.CachedDF = {
-    val hist = keyedScoreHist(scored, keyCol)
-    Dedup.CachedDF(cutoffsFromKeyedHist(hist, keyCol), Nil,
-      Seq(() => graftbridge.unpersistCheckpointed(hist)))
-  }
-
-  /** Persist per-key cutoffs ([[refLmCutoffsByKey]]'s shape). */
-  def writeRefLmCutoffsByKey(cutoffs: DataFrame, path: String): Unit =
-    cutoffs.coalesce(1).write.mode("overwrite").parquet(path)
-
-  /** Read back a [[writeRefLmCutoffsByKey]] artifact. Fails fast on an
-    * empty table (a gate with no measured cutoffs must not silently
-    * label everything).
-    */
-  def readRefLmCutoffsByKey(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    require(!df.isEmpty, s"keyed cutoff artifact at $path is empty")
-    df
-  }
-
-  /** Persist a [[KeyedRefLmModel]] as four parquet tables under
-    * `path` — the stored-artifact deploy pattern for the per-language
-    * LM fleet.
-    */
-  def writeKeyedRefLm(model: KeyedRefLmModel, path: String): Unit =
-    writeTablesParallel(Seq(
-      (model.unigrams, s"$path/unigram", false),
-      (model.contexts, s"$path/ctx", false),
-      (model.bigrams, s"$path/bigram", false),
-      (model.totals, s"$path/totals", true)))
-
-  /** Read back a [[writeKeyedRefLm]] artifact. Fails fast on an empty
-    * totals table (no key trained a model).
-    */
-  def readKeyedRefLm(spark: SparkSession, path: String): KeyedRefLmModel = {
-    val tot = spark.read.parquet(s"$path/totals")
-    require(!tot.isEmpty,
-      s"keyed reference-LM artifact at $path has an empty totals table")
-    KeyedRefLmModel(
-      spark.read.parquet(s"$path/unigram"),
-      spark.read.parquet(s"$path/ctx"),
-      spark.read.parquet(s"$path/bigram"),
-      tot)
-  }
-
-  // --------------------------------------------------------------------
-  // Keyed order-3 reference LMs — the full CCNet deployment matrix:
-  // one TRIGRAM-backoff model per language, all trained in one pass
-  // (the key rides every count table, including the trigram ones), and
-  // every pool document scored under its own key's backoff chain.
-  // --------------------------------------------------------------------
-
-  /** [[RefLm3Model]] keyed: the keyed order-2 model plus
-    *  - `trigrams`   : (__k, w1, w2, w3, ct)
-    *  - `triContexts`: (__k, w1, w2, ctx3)
-    */
-  final case class KeyedRefLm3Model(
-      base: KeyedRefLmModel, trigrams: DataFrame, triContexts: DataFrame)
-
-  /** [[refLm3Train]] keyed by `keyCol`: every language's trigram model
-    * in ONE pass — two more partial-aggregated groupBys (trigram +
-    * trigram-context) with the key riding them, no per-language job
-    * loop.
-    */
-  def refLm3TrainByKey(docs: DataFrame, idCol: String, textCol: String,
-      keyCol: String, isRef: Column): KeyedRefLm3Model = {
-    val base = refLmTrainByKey(docs, idCol, textCol, keyCol, isRef)
-    val toks = docs.filter(isRef)
-      .select(col(keyCol).as("__k"), TextAnalysis.tokens(col(textCol)).as("__a"))
-    val tri = toks.select(col("__k"), trigramTriples.as("__tg"))
-      .select(col("__k"), col("__tg.w1").as("w1"), col("__tg.w2").as("w2"),
-        col("__tg.w3").as("w3"))
-      .groupBy("__k", "w1", "w2", "w3").agg(count(lit(1)).as("ct"))
-    val tctx = tri.groupBy("__k", "w1", "w2").agg(sum("ct").as("ctx3"))
-    KeyedRefLm3Model(base, tri, tctx)
-  }
-
-  /** [[refLm3Score]] keyed: each pool document scores under ITS
-    * `keyCol` value's trigram→bigram→unigram backoff chain. The totals
-    * join is INNER on the key ([[refLmScoreByKey]]'s contract —
-    * documents of unmodeled keys are absent from the output), and the
-    * determinism scheme is unchanged: per-distinct (key, triple) ln
-    * rounded to 9, exact decimal doc sums, one final 6-round. Returns
-    * (id, keyCol, n_trigrams, logprob).
-    */
-  def refLm3ScoreByKey(pool: DataFrame, idCol: String, textCol: String,
-      keyCol: String, model: KeyedRefLm3Model,
-      lam3Num: Int = 5, lam3Den: Int = 10,
-      lamNum: Int = 7, lamDen: Int = 10,
-      checkpointTf: Boolean = false): DataFrame = {
-    require(lam3Num > 0 && lam3Num < lam3Den,
-      s"need 0 < λ3 < 1, got $lam3Num/$lam3Den")
-    require(lamNum > 0 && lamNum < lamDen, s"need 0 < λ < 1, got $lamNum/$lamDen")
-    val id = col(idCol)
-    val l3a = lam3Num.toDouble / lam3Den
-    val l3b = (lam3Den - lam3Num).toDouble / lam3Den
-    val lam1 = lamNum.toDouble / lamDen
-    val lam2 = (lamDen - lamNum).toDouble / lamDen
-    val tfRaw = pool
-      .select(id, col(keyCol).as("__k"), TextAnalysis.tokens(col(textCol)).as("__a"))
-      .select(id, col("__k"), trigramTriples.as("__tg"))
-      .select(id, col("__k"), col("__tg.w1").as("w1"), col("__tg.w2").as("w2"),
-        col("__tg.w3").as("w3"))
-      .groupBy(id, col("__k"), col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("tfq"))
-    // tokenize-once materialization for batch paths — [[refLmScore]]'s
-    // checkpointTf rationale
-    val tf = if (checkpointTf) tfRaw.localCheckpoint() else tfRaw
-    val triples = tf.select("__k", "w1", "w2", "w3").distinct()
-    val pT = coalesce(col("ct"), lit(0L)).cast("double")
-    val pTC = coalesce(col("ctx3"), lit(0L))
-    val pB = coalesce(col("cb"), lit(0L)).cast("double")
-    val pC = coalesce(col("ctx"), lit(0L))
-    val pU = (coalesce(col("c1"), lit(0L)) + lit(1L)).cast("double")
-    val nv = (col("n_ref_tokens") + col("vocab")).cast("double")
-    val bigMix =
-      lit(lam1) * when(pC > lit(0L), pB / pC.cast("double")).otherwise(lit(0.0)) +
-        lit(lam2) * (pU / nv)
-    val mix =
-      lit(l3a) * when(pTC > lit(0L), pT / pTC.cast("double")).otherwise(lit(0.0)) +
-        lit(l3b) * bigMix
-    val logp = triples
-      .join(model.trigrams, Seq("__k", "w1", "w2", "w3"), "left")
-      .join(model.triContexts, Seq("__k", "w1", "w2"), "left")
-      // backoff bigram of (w1,w2,w3) is (w2,w3) — rename via select
-      .join(model.base.bigrams
-        .select(col("__k"), col("w1").as("w2"), col("w2").as("w3"), col("cb")),
-        Seq("__k", "w2", "w3"), "left")
-      .join(model.base.contexts
-        .select(col("__k"), col("w1").as("w2"), col("ctx")),
-        Seq("__k", "w2"), "left")
-      .join(model.base.unigrams
-        .select(col("__k"), col("term").as("w3"), col("c1")),
-        Seq("__k", "w3"), "left")
-      // INNER on the key: the totals table is #keys rows (broadcast)
-      .join(broadcast(model.base.totals), Seq("__k"))
-      .select(col("__k"), col("w1"), col("w2"), col("w3"),
-        round(log(mix), 9).cast("decimal(18,9)").as("logp9"))
-    tf.join(logp, Seq("__k", "w1", "w2", "w3"))
-      .groupBy(id, col("__k"))
-      .agg(sum(col("tfq")).as("n_trigrams"),
-        sum(col("tfq").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id, col("__k").as(keyCol), col("n_trigrams"),
-        round(col("__slp").cast("double") / col("n_trigrams"), 6).as("logprob"))
-  }
-
-  /** [[refLmPerplexityBucketsByKey]] over a keyed order-3 scored
-    * frame — per-key tertile cutoffs, reporting `n_trigrams`.
-    */
-  def refLm3PerplexityBucketsByKey(scored: DataFrame, keyCol: String): DataFrame =
-    refLm3PerplexityBucketsByKeyCached(scored, keyCol).df
-
-  /** [[refLm3PerplexityBucketsByKey]] exposing the persisted histogram
-    * handle — the [[Dedup.CachedDF]] contract.
-    */
-  def refLm3PerplexityBucketsByKeyCached(
-      scored: DataFrame, keyCol: String): Dedup.CachedDF =
-    bucketsByKeyFromScoredCached(scored, keyCol, "n_trigrams")
-
-  /** Per-key cutoff rows (keyCol, v_head, v_mid) of a
-    * [[refLm3ScoreByKey]] frame — what the keyed order-3 streaming
-    * gate labels at ([[writeRefLmCutoffsByKey]] persists them beside
-    * the keyed order-3 model).
-    */
-  def refLm3CutoffsByKey(scored: DataFrame, keyCol: String): DataFrame =
-    refLm3CutoffsByKeyCached(scored, keyCol).df
-
-  /** [[refLm3CutoffsByKey]] exposing the persisted histogram handle —
-    * the [[Dedup.CachedDF]] contract.
-    */
-  def refLm3CutoffsByKeyCached(
-      scored: DataFrame, keyCol: String): Dedup.CachedDF = {
-    val hist = keyedScoreHist(scored, keyCol, "n_trigrams")
-    Dedup.CachedDF(cutoffsFromKeyedHist(hist, keyCol), Nil,
-      Seq(() => graftbridge.unpersistCheckpointed(hist)))
-  }
-
-  /** [[refLmKn3Score]] keyed: each pool document scores under ITS
-    * `keyCol` value's interpolated Kneser-Ney chain — the per-language
-    * deployment CCNet actually runs (one KenLM model per language).
-    * Every KN table derives from the stored KEYED count tables with
-    * the key riding each groupBy (still model-sized — the per-key
-    * continuation tables partition the unkeyed ones), so the six-table
-    * keyed stored deploy, freshness stamps and the bit-equal keyed
-    * merge ([[mergeIntoStoredKeyedRefLm3]]) carry over unchanged.
-    *
-    * Key contract as [[refLm3ScoreByKey]]: the per-key totals join is
-    * INNER (documents of unmodeled keys are absent — the streaming
-    * gate surfaces them as `unmodeled`); the per-key distinct-bigram
-    * total joins LEFT with a 0 default, so a modeled key whose
-    * reference had no bigram still bottoms out at finite add-1 mass
-    * rather than dropping. Determinism scheme unchanged: per-distinct
-    * (key, triple) ln rounded to 9, exact decimal doc sums, one final
-    * 6-round. Returns (id, keyCol, n_trigrams, logprob).
-    */
-  def refLmKn3ScoreByKey(pool: DataFrame, idCol: String, textCol: String,
-      keyCol: String, model: KeyedRefLm3Model,
-      dNum: Int = 3, dDen: Int = 4,
-      checkpointTf: Boolean = false): DataFrame = {
-    require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
-    val id = col(idCol)
-    val d = dNum.toDouble / dDen
-    val tfRaw = pool
-      .select(id, col(keyCol).as("__k"), TextAnalysis.tokens(col(textCol)).as("__a"))
-      .select(id, col("__k"), trigramTriples.as("__tg"))
-      .select(id, col("__k"), col("__tg.w1").as("w1"), col("__tg.w2").as("w2"),
-        col("__tg.w3").as("w3"))
-      .groupBy(id, col("__k"), col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("tfq"))
-    // tokenize-once materialization for batch paths — [[refLmScore]]'s
-    // checkpointTf rationale
-    val tf = if (checkpointTf) tfRaw.localCheckpoint() else tfRaw
-    val triples = tf.select("__k", "w1", "w2", "w3").distinct()
-    // keyed continuation tables — one partial-aggregated groupBy over a
-    // MODEL table each, exactly the unkeyed derivations with __k riding
-    val t3 = model.trigrams.groupBy("__k", "w1", "w2")
-      .agg(count(lit(1)).as("__t3"))
-    val cbig = model.trigrams.groupBy("__k", "w2", "w3")
-      .agg(count(lit(1)).as("__cc"))
-    val c2 = cbig.groupBy("__k", "w2")
-      .agg(sum("__cc").as("__c2"), count(lit(1)).as("__t2"))
-    val cu = model.base.bigrams.groupBy("__k", "w2")
-      .agg(count(lit(1)).as("__cu"))
-    // per-key distinct-bigram-type totals: #keys rows, broadcast
-    val btot = model.base.bigrams.groupBy("__k")
-      .agg(count(lit(1)).as("__nbig"))
-    val pT = coalesce(col("ct"), lit(0L)).cast("double")
-    val pC3 = coalesce(col("ctx3"), lit(0L))
-    val pT3 = coalesce(col("__t3"), lit(0L)).cast("double")
-    val pCC = coalesce(col("__cc"), lit(0L)).cast("double")
-    val pC2 = coalesce(col("__c2"), lit(0L))
-    val pT2 = coalesce(col("__t2"), lit(0L)).cast("double")
-    val pCU = coalesce(col("__cu"), lit(0L)).cast("double")
-    val bv = (coalesce(col("__nbig"), lit(0L)) + col("vocab")).cast("double")
-    val pc = (pCU + lit(1.0)) / bv
-    val p2 = when(pC2 > lit(0L),
-      (greatest(pCC - lit(d), lit(0.0)) + lit(d) * pT2 * pc) /
-        pC2.cast("double")).otherwise(pc)
-    val p3 = when(pC3 > lit(0L),
-      (greatest(pT - lit(d), lit(0.0)) + lit(d) * pT3 * p2) /
-        pC3.cast("double")).otherwise(p2)
-    val logp = triples
-      .join(model.trigrams, Seq("__k", "w1", "w2", "w3"), "left")
-      .join(model.triContexts, Seq("__k", "w1", "w2"), "left")
-      .join(t3, Seq("__k", "w1", "w2"), "left")
-      // the continuation bigram of (w1,w2,w3) is keyed (w2,w3) already
-      .join(cbig, Seq("__k", "w2", "w3"), "left")
-      .join(c2, Seq("__k", "w2"), "left")
-      .join(cu.select(col("__k"), col("w2").as("w3"), col("__cu")),
-        Seq("__k", "w3"), "left")
-      // INNER on the key via totals (modeled-keys contract); the
-      // bigram-type total rides LEFT with a 0 default
-      .join(broadcast(model.base.totals), Seq("__k"))
-      .join(broadcast(btot), Seq("__k"), "left")
-      .select(col("__k"), col("w1"), col("w2"), col("w3"),
-        round(log(p3), 9).cast("decimal(18,9)").as("logp9"))
-    tf.join(logp, Seq("__k", "w1", "w2", "w3"))
-      .groupBy(id, col("__k"))
-      .agg(sum(col("tfq")).as("n_trigrams"),
-        sum(col("tfq").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id, col("__k").as(keyCol), col("n_trigrams"),
-        round(col("__slp").cast("double") / col("n_trigrams"), 6).as("logprob"))
-  }
-
-  /** Persist a [[KeyedRefLm3Model]] — the keyed order-2 tables plus
-    * `trigram` and `tctx`, all six overlapped through
-    * [[writeTablesParallel]].
-    */
-  def writeKeyedRefLm3(model: KeyedRefLm3Model, path: String): Unit =
-    writeTablesParallel(Seq(
-      (model.base.unigrams, s"$path/unigram", false),
-      (model.base.contexts, s"$path/ctx", false),
-      (model.base.bigrams, s"$path/bigram", false),
-      (model.base.totals, s"$path/totals", true),
-      (model.trigrams, s"$path/trigram", false),
-      (model.triContexts, s"$path/tctx", false)))
-
-  /** Read back a [[writeKeyedRefLm3]] artifact ([[readKeyedRefLm]]'s
-    * empty-totals fail-fast included).
-    */
-  def readKeyedRefLm3(spark: SparkSession, path: String): KeyedRefLm3Model =
-    KeyedRefLm3Model(
-      readKeyedRefLm(spark, path),
-      spark.read.parquet(s"$path/trigram"),
-      spark.read.parquet(s"$path/tctx"))
-
-  /** [[mergeIntoStoredRefLm]] for the KEYED fleet: a delta of newly
-    * trusted documents (any mix of languages) merges into the stored
-    * [[writeKeyedRefLm]] artifact in ONE pass — per-key counts are
-    * additive exactly like the unkeyed ones, context totals and
-    * per-key (n, vocab) re-derive from the merged tables, and the
-    * result is bit-identical to a from-scratch [[refLmTrainByKey]] on
-    * the union (KeyedRefLmMergeSpec asserts it). This is the
-    * production pressure point the keyed fleet actually has:
-    * per-language reference corpora grow at different rates, and
-    * retraining a hundred languages because one grew is the
-    * anti-pattern. Same staged swap, self-heal and applied-batch
-    * replay guard as the unkeyed merge. Returns true iff applied.
-    */
-  def mergeIntoStoredKeyedRefLm(spark: SparkSession, path: String,
-      delta: DataFrame, idCol: String, textCol: String, keyCol: String,
-      isRef: Column = lit(true), batchId: Option[Long] = None): Boolean =
-    stagedCountMerge(spark, path, batchId) { () =>
-      val stored = readKeyedRefLm(spark, path)
-      val d = refLmTrainByKey(delta, idCol, textCol, keyCol, isRef)
-      // the two merged count frames persist for the staged writes: uni
-      // feeds unigram+totals, big feeds bigram+ctx — without the pin
-      // every write re-tokenizes the delta
-      val uni = stored.unigrams.unionByName(d.unigrams)
-        .groupBy("__k", "term").agg(sum("c1").as("c1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val big = stored.bigrams.unionByName(d.bigrams)
-        .groupBy("__k", "w1", "w2").agg(sum("cb").as("cb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ctx = big.groupBy("__k", "w1").agg(sum("cb").as("ctx"))
-      val tot = uni.groupBy("__k")
-        .agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab"))
-      (Seq(uni, big), staged =>
-        writeKeyedRefLm(KeyedRefLmModel(uni, ctx, big, tot), staged))
-    }
-
-  /** [[mergeIntoStoredKeyedRefLm]] at order 3: the keyed trigram and
-    * trigram-context tables merge additively alongside the order-2
-    * ones — six staged tables, one swap, same replay guard; bit-equal
-    * to [[refLm3TrainByKey]] on the union (KeyedRefLmMergeSpec).
-    */
-  def mergeIntoStoredKeyedRefLm3(spark: SparkSession, path: String,
-      delta: DataFrame, idCol: String, textCol: String, keyCol: String,
-      isRef: Column = lit(true), batchId: Option[Long] = None): Boolean =
-    stagedCountMerge(spark, path, batchId) { () =>
-      val stored = readKeyedRefLm3(spark, path)
-      val d = refLm3TrainByKey(delta, idCol, textCol, keyCol, isRef)
-      val uni = stored.base.unigrams.unionByName(d.base.unigrams)
-        .groupBy("__k", "term").agg(sum("c1").as("c1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val big = stored.base.bigrams.unionByName(d.base.bigrams)
-        .groupBy("__k", "w1", "w2").agg(sum("cb").as("cb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val tri = stored.trigrams.unionByName(d.trigrams)
-        .groupBy("__k", "w1", "w2", "w3").agg(sum("ct").as("ct"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ctx = big.groupBy("__k", "w1").agg(sum("cb").as("ctx"))
-      val tctx = tri.groupBy("__k", "w1", "w2").agg(sum("ct").as("ctx3"))
-      val tot = uni.groupBy("__k")
-        .agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab"))
-      (Seq(uni, big, tri), staged =>
-        writeKeyedRefLm3(
-          KeyedRefLm3Model(KeyedRefLmModel(uni, ctx, big, tot), tri, tctx),
-          staged))
-    }
-
-  // --------------------------------------------------------------------
-  // Keyed order-5 reference LMs — CCNet's ACTUAL production artifact:
-  // one 5-gram interpolated-Kneser-Ney model per language. The keyed
-  // high-order tables inherit the order-5 storage contract verbatim
-  // (distinct 5-grams ≈ corpus tokens, so `fourgram`/`fivegram` are
-  // corpus-scale partitioned parquet — now further partitioned by the
-  // key; stored counts stay UNPRUNED for additivity, KenLM-style
-  // singleton pruning is the score-time view).
-  // --------------------------------------------------------------------
-
-  /** [[RefLm5Model]] keyed: the keyed order-3 model plus
-    *  - `fourgrams`: (__k, w1..w4, c4)
-    *  - `fivegrams`: (__k, w1..w5, c5)
-    */
-  final case class KeyedRefLm5Model(
-      base3: KeyedRefLm3Model, fourgrams: DataFrame, fivegrams: DataFrame)
-
-  /** [[refLm5Train]] keyed by `keyCol`: every language's 5-gram model
-    * in ONE pass — two more partial-aggregated groupBys with the key
-    * riding, no per-language job loop.
-    */
-  def refLm5TrainByKey(docs: DataFrame, idCol: String, textCol: String,
-      keyCol: String, isRef: Column): KeyedRefLm5Model = {
-    val base3 = refLm3TrainByKey(docs, idCol, textCol, keyCol, isRef)
-    val toks = docs.filter(isRef)
-      .select(col(keyCol).as("__k"), TextAnalysis.tokens(col(textCol)).as("__a"))
-    val four = toks.select(col("__k"), fourgramQuads.as("__fg"))
-      .select(col("__k"), col("__fg.w1").as("w1"), col("__fg.w2").as("w2"),
-        col("__fg.w3").as("w3"), col("__fg.w4").as("w4"))
-      .groupBy("__k", "w1", "w2", "w3", "w4").agg(count(lit(1)).as("c4"))
-    val five = toks.select(col("__k"), fivegramQuints.as("__qg"))
-      .select(col("__k"), col("__qg.w1").as("w1"), col("__qg.w2").as("w2"),
-        col("__qg.w3").as("w3"), col("__qg.w4").as("w4"),
-        col("__qg.w5").as("w5"))
-      .groupBy("__k", "w1", "w2", "w3", "w4", "w5")
-      .agg(count(lit(1)).as("c5"))
-    KeyedRefLm5Model(base3, four, five)
-  }
-
-  /** [[refLmKn5Score]] keyed: each pool document scores under ITS
-    * `keyCol` value's 5-gram interpolated-Kneser-Ney chain. Every
-    * derivation table is the unkeyed one with `__k` riding its groupBy
-    * (per-key continuation tables partition the unkeyed ones), so the
-    * eight-table keyed stored deploy, stamps and the bit-equal keyed
-    * merge ([[mergeIntoStoredKeyedRefLm5]]) carry over unchanged.
-    * `minCount5`/`minCount4` prune the raw high-order tables per key
-    * BEFORE any derivation, exactly as [[refLmKn5Score]] — and like it
-    * (r18 optimization round) the model-join chain runs DIRECTLY over
-    * the per-doc 5-tuple rows: the order-5 distinct dedup is ~1.002x
-    * (see [[refLmKn5Score]]'s measured factors), so the distinct
-    * exchange, join-back and tokenize checkpoint were pure overhead.
-    *
-    * Key contract as [[refLmKn3ScoreByKey]]: totals join INNER on the
-    * key (unmodeled keys absent), per-key distinct-bigram total LEFT
-    * with a 0 default. Determinism unchanged. Returns
-    * (id, keyCol, n_5grams, logprob).
-    */
-  def refLmKn5ScoreByKey(pool: DataFrame, idCol: String, textCol: String,
-      keyCol: String, model: KeyedRefLm5Model,
-      dNum: Int = 3, dDen: Int = 4,
-      minCount5: Long = 1, minCount4: Long = 1): DataFrame = {
-    require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
-    require(minCount5 >= 1 && minCount4 >= 1,
-      s"count-pruning thresholds must be >= 1, got $minCount5/$minCount4")
-    // the id rides the join chain as `__id`, like the key as `__k`
-    val id = col("__id")
-    val d = dNum.toDouble / dDen
-    val tf = pool
-      .select(col(idCol).as("__id"), col(keyCol).as("__k"),
-        TextAnalysis.tokens(col(textCol)).as("__a"))
-      .select(id, col("__k"), fivegramQuints.as("__qg"))
-      .select(id, col("__k"), col("__qg.w1").as("w1"), col("__qg.w2").as("w2"),
-        col("__qg.w3").as("w3"), col("__qg.w4").as("w4"),
-        col("__qg.w5").as("w5"))
-      .groupBy(id, col("__k"), col("w1"), col("w2"), col("w3"), col("w4"),
-        col("w5"))
-      .agg(count(lit(1)).as("tfq"))
-    // pruned raw views — every derivation below reads these
-    val five = model.fivegrams.filter(col("c5") >= lit(minCount5))
-    val four = model.fourgrams.filter(col("c4") >= lit(minCount4))
-    val ce5 = five.groupBy("__k", "w1", "w2", "w3", "w4")
-      .agg(sum("c5").as("__c5x"), count(lit(1)).as("__t5"))
-    val cc4 = five.groupBy("__k", "w2", "w3", "w4", "w5")
-      .agg(count(lit(1)).as("__cc4"))
-    val c4 = cc4.groupBy("__k", "w2", "w3", "w4")
-      .agg(sum("__cc4").as("__c4x"), count(lit(1)).as("__t4"))
-    val cc3 = four.groupBy("__k", "w2", "w3", "w4")
-      .agg(count(lit(1)).as("__cc3"))
-      .select(col("__k"), col("w2").as("w3"), col("w3").as("w4"),
-        col("w4").as("w5"), col("__cc3"))
-    val c3 = cc3.groupBy("__k", "w3", "w4")
-      .agg(sum("__cc3").as("__c3x"), count(lit(1)).as("__t3"))
-    val cc2 = model.base3.trigrams.groupBy("__k", "w2", "w3")
-      .agg(count(lit(1)).as("__cc2"))
-      .select(col("__k"), col("w2").as("w4"), col("w3").as("w5"),
-        col("__cc2"))
-    val c2 = cc2.groupBy("__k", "w4")
-      .agg(sum("__cc2").as("__c2x"), count(lit(1)).as("__t2"))
-    val cu = model.base3.base.bigrams.groupBy("__k", "w2")
-      .agg(count(lit(1)).as("__cu"))
-    val btot = model.base3.base.bigrams.groupBy("__k")
-      .agg(count(lit(1)).as("__nbig"))
-    val pC5 = coalesce(col("c5"), lit(0L)).cast("double")
-    val pX5 = coalesce(col("__c5x"), lit(0L))
-    val pT5 = coalesce(col("__t5"), lit(0L)).cast("double")
-    val pCC4 = coalesce(col("__cc4"), lit(0L)).cast("double")
-    val pX4 = coalesce(col("__c4x"), lit(0L))
-    val pT4 = coalesce(col("__t4"), lit(0L)).cast("double")
-    val pCC3 = coalesce(col("__cc3"), lit(0L)).cast("double")
-    val pX3 = coalesce(col("__c3x"), lit(0L))
-    val pT3 = coalesce(col("__t3"), lit(0L)).cast("double")
-    val pCC2 = coalesce(col("__cc2"), lit(0L)).cast("double")
-    val pX2 = coalesce(col("__c2x"), lit(0L))
-    val pT2 = coalesce(col("__t2"), lit(0L)).cast("double")
-    val pCU = coalesce(col("__cu"), lit(0L)).cast("double")
-    val bv = (coalesce(col("__nbig"), lit(0L)) + col("vocab")).cast("double")
-    val pc = (pCU + lit(1.0)) / bv
-    val p2 = when(pX2 > lit(0L),
-      (greatest(pCC2 - lit(d), lit(0.0)) + lit(d) * pT2 * pc) /
-        pX2.cast("double")).otherwise(pc)
-    val p3 = when(pX3 > lit(0L),
-      (greatest(pCC3 - lit(d), lit(0.0)) + lit(d) * pT3 * p2) /
-        pX3.cast("double")).otherwise(p2)
-    val p4 = when(pX4 > lit(0L),
-      (greatest(pCC4 - lit(d), lit(0.0)) + lit(d) * pT4 * p3) /
-        pX4.cast("double")).otherwise(p3)
-    val p5 = when(pX5 > lit(0L),
-      (greatest(pC5 - lit(d), lit(0.0)) + lit(d) * pT5 * p4) /
-        pX5.cast("double")).otherwise(p4)
-    tf
-      .join(five, Seq("__k", "w1", "w2", "w3", "w4", "w5"), "left")
-      .join(ce5, Seq("__k", "w1", "w2", "w3", "w4"), "left")
-      .join(cc4, Seq("__k", "w2", "w3", "w4", "w5"), "left")
-      .join(c4, Seq("__k", "w2", "w3", "w4"), "left")
-      .join(cc3, Seq("__k", "w3", "w4", "w5"), "left")
-      .join(c3, Seq("__k", "w3", "w4"), "left")
-      .join(cc2, Seq("__k", "w4", "w5"), "left")
-      .join(c2, Seq("__k", "w4"), "left")
-      .join(cu.select(col("__k"), col("w2").as("w5"), col("__cu")),
-        Seq("__k", "w5"), "left")
-      .join(broadcast(model.base3.base.totals), Seq("__k"))
-      .join(broadcast(btot), Seq("__k"), "left")
-      .select(id, col("__k"), col("tfq"),
-        round(log(p5), 9).cast("decimal(18,9)").as("logp9"))
-      .groupBy(id, col("__k"))
-      .agg(sum(col("tfq")).as("n_5grams"),
-        sum(col("tfq").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id.as(idCol), col("__k").as(keyCol), col("n_5grams"),
-        round(col("__slp").cast("double") / col("n_5grams"), 6).as("logprob"))
-  }
-
-  /** [[refLmPerplexityBucketsByKey]] over a keyed order-5 scored
-    * frame — per-key tertile cutoffs, reporting `n_5grams`.
-    */
-  def refLm5PerplexityBucketsByKey(scored: DataFrame, keyCol: String): DataFrame =
-    refLm5PerplexityBucketsByKeyCached(scored, keyCol).df
-
-  /** [[refLm5PerplexityBucketsByKey]] exposing the persisted histogram
-    * handle — the [[Dedup.CachedDF]] contract.
-    */
-  def refLm5PerplexityBucketsByKeyCached(
-      scored: DataFrame, keyCol: String): Dedup.CachedDF =
-    bucketsByKeyFromScoredCached(scored, keyCol, "n_5grams")
-
-  /** Per-key cutoff rows (keyCol, v_head, v_mid) of a
-    * [[refLmKn5ScoreByKey]] frame — what the keyed order-5 gate labels
-    * at ([[writeRefLmCutoffsByKey]] persists them beside the keyed
-    * order-5 model). Cutoffs MUST be measured under the same scorer
-    * AND pruning config the gate serves with.
-    */
-  def refLm5CutoffsByKey(scored: DataFrame, keyCol: String): DataFrame =
-    refLm5CutoffsByKeyCached(scored, keyCol).df
-
-  /** [[refLm5CutoffsByKey]] exposing the persisted histogram handle —
-    * the [[Dedup.CachedDF]] contract.
-    */
-  def refLm5CutoffsByKeyCached(
-      scored: DataFrame, keyCol: String): Dedup.CachedDF = {
-    val hist = keyedScoreHist(scored, keyCol, "n_5grams")
-    Dedup.CachedDF(cutoffsFromKeyedHist(hist, keyCol), Nil,
-      Seq(() => graftbridge.unpersistCheckpointed(hist)))
-  }
-
-  /** Persist a [[KeyedRefLm5Model]] — the six keyed order-3 tables
-    * plus `fourgram` and `fivegram`, all eight overlapped through
-    * [[writeTablesParallel]].
-    */
-  def writeKeyedRefLm5(model: KeyedRefLm5Model, path: String): Unit =
-    writeTablesParallel(Seq(
-      (model.base3.base.unigrams, s"$path/unigram", false),
-      (model.base3.base.contexts, s"$path/ctx", false),
-      (model.base3.base.bigrams, s"$path/bigram", false),
-      (model.base3.base.totals, s"$path/totals", true),
-      (model.base3.trigrams, s"$path/trigram", false),
-      (model.base3.triContexts, s"$path/tctx", false),
-      (model.fourgrams, s"$path/fourgram", false),
-      (model.fivegrams, s"$path/fivegram", false)))
-
-  /** Read back a [[writeKeyedRefLm5]] artifact ([[readKeyedRefLm]]'s
-    * empty-totals fail-fast included).
-    */
-  def readKeyedRefLm5(spark: SparkSession, path: String): KeyedRefLm5Model =
-    KeyedRefLm5Model(
-      readKeyedRefLm3(spark, path),
-      spark.read.parquet(s"$path/fourgram"),
-      spark.read.parquet(s"$path/fivegram"))
-
-  /** [[mergeIntoStoredKeyedRefLm3]] at order 5: the keyed 4-/5-gram
-    * tables merge additively alongside the six — eight staged tables,
-    * one swap, same replay guard; bit-equal to [[refLm5TrainByKey]]
-    * on the union, and because KN derivations are score-time groupBys
-    * over these counts, merge-then-KN ≡ retrain-then-KN per key
-    * (RefLmKn5Spec asserts it).
-    */
-  def mergeIntoStoredKeyedRefLm5(spark: SparkSession, path: String,
-      delta: DataFrame, idCol: String, textCol: String, keyCol: String,
-      isRef: Column = lit(true), batchId: Option[Long] = None): Boolean =
-    stagedCountMerge(spark, path, batchId) { () =>
-      val stored = readKeyedRefLm5(spark, path)
-      val d = refLm5TrainByKey(delta, idCol, textCol, keyCol, isRef)
-      val uni = stored.base3.base.unigrams.unionByName(d.base3.base.unigrams)
-        .groupBy("__k", "term").agg(sum("c1").as("c1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val big = stored.base3.base.bigrams.unionByName(d.base3.base.bigrams)
-        .groupBy("__k", "w1", "w2").agg(sum("cb").as("cb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val tri = stored.base3.trigrams.unionByName(d.base3.trigrams)
-        .groupBy("__k", "w1", "w2", "w3").agg(sum("ct").as("ct"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val four = stored.fourgrams.unionByName(d.fourgrams)
-        .groupBy("__k", "w1", "w2", "w3", "w4").agg(sum("c4").as("c4"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val five = stored.fivegrams.unionByName(d.fivegrams)
-        .groupBy("__k", "w1", "w2", "w3", "w4", "w5").agg(sum("c5").as("c5"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ctx = big.groupBy("__k", "w1").agg(sum("cb").as("ctx"))
-      val tctx = tri.groupBy("__k", "w1", "w2").agg(sum("ct").as("ctx3"))
-      val tot = uni.groupBy("__k")
-        .agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab"))
-      (Seq(uni, big, tri, four, five), staged =>
-        writeKeyedRefLm5(
-          KeyedRefLm5Model(
-            KeyedRefLm3Model(KeyedRefLmModel(uni, ctx, big, tot), tri, tctx),
-            four, five),
-          staged))
-    }
-
-  /** DuckDB SQL twin of [[refLmTrainByKey]] → [[refLmScoreByKey]] →
-    * [[refLmPerplexityBucketsByKey]] over `keyCol` (surfaced under its
+  /** DuckDB SQL twin of keyed [[refLmTrain]] → [[refLmScore]] →
+    * [[refLmPerplexityBuckets]] over `keyCol` (surfaced under its
     * own name). Shared-chain CTEs are `AS MATERIALIZED`.
     */
   def refLmBucketsByKeySql(src: String, idCol: String, textCol: String,
@@ -2434,8 +1410,8 @@ object Ranking {
        |FROM scored CROSS JOIN cuts
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** DuckDB SQL equivalent of [[refLm3Train]] → [[refLm3Score]] →
-    * [[refLm3PerplexityBuckets]] — the shared oracle of the inline
+  /** DuckDB SQL equivalent of order-3 [[refLmTrain]] → [[refLm3Score]] →
+    * [[refLmPerplexityBuckets]] — the shared oracle of the inline
     * trigram report and its stored-deploy twin. Mirrors the engine's
     * backoff-chain arithmetic exactly (same λ parenthesization, same
     * 9-decimal per-triple round, same exact-decimal doc sums); every
@@ -2527,8 +1503,8 @@ object Ranking {
        |FROM scored CROSS JOIN cuts
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** DuckDB SQL twin of [[refLm3Train]] → [[refLmKn3Score]] →
-    * [[refLm3PerplexityBuckets]] — the interpolated Kneser-Ney chain
+  /** DuckDB SQL twin of order-3 [[refLmTrain]] → [[refLmKn3Score]] →
+    * [[refLmPerplexityBuckets]] — the interpolated Kneser-Ney chain
     * replayed exactly: same continuation-count derivations from the
     * same base count tables, same discount literal (an exact IEEE
     * division), same parenthesization of every mixture term, same
@@ -2638,8 +1614,8 @@ object Ranking {
        |GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  /** DuckDB SQL twin of [[refLm5Train]] → [[refLmKn5Score]] →
-    * [[refLm5PerplexityBuckets]]: the full 5-gram interpolated-KN
+  /** DuckDB SQL twin of order-5 [[refLmTrain]] → [[refLmKn5Score]] →
+    * [[refLmPerplexityBuckets]]: the full 5-gram interpolated-KN
     * chain — raw counts at the top, continuation counts N1+ derived
     * one order up at every lower level, add-1 bottom — with the
     * score-time count pruning mirrored as WHERE clauses on the raw
@@ -2805,8 +1781,8 @@ object Ranking {
        |GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  /** DuckDB SQL twin of [[refLm3TrainByKey]] → [[refLm3ScoreByKey]] →
-    * [[refLm3PerplexityBucketsByKey]]: the keyed-bucket chain at
+  /** DuckDB SQL twin of keyed order-3 [[refLmTrain]] → [[refLm3Score]] →
+    * [[refLmPerplexityBuckets]]: the keyed-bucket chain at
     * order 3 — [[refLm3BucketsSql]]'s backoff arithmetic with the key
     * riding every table and per-key tertile cutoffs. Shared-chain CTEs
     * are `AS MATERIALIZED`.
@@ -2907,8 +1883,8 @@ object Ranking {
        |JOIN vmid ON scored.k = vmid.k
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** DuckDB SQL twin of [[refLm3TrainByKey]] → [[refLmKn3ScoreByKey]] →
-    * [[refLm3PerplexityBucketsByKey]]: the keyed-bucket chain under
+  /** DuckDB SQL twin of keyed order-3 [[refLmTrain]] → [[refLmKn3Score]] →
+    * [[refLmPerplexityBuckets]]: the keyed-bucket chain under
     * interpolated Kneser-Ney — [[refLmKn3BucketsSql]]'s discount
     * arithmetic with the key riding every count AND continuation
     * table, per-key tertile cutoffs. The bigram-type total joins LEFT
@@ -3046,8 +2022,8 @@ object Ranking {
        |  GROUP BY 1, 2)""".stripMargin
   }
 
-  /** DuckDB SQL twin of [[refLm5TrainByKey]] → [[refLmKn5ScoreByKey]]
-    * → [[refLm5PerplexityBucketsByKey]]: the 5-gram interpolated-KN
+  /** DuckDB SQL twin of keyed order-5 [[refLmTrain]] → [[refLmKn5Score]]
+    * → [[refLmPerplexityBuckets]]: the 5-gram interpolated-KN
     * chain with the key riding every table ([[refLmKn5BucketsSql]]'s
     * arithmetic, including the score-time count-pruning views) and
     * per-key tertile cutoffs. Shared-chain CTEs are `AS MATERIALIZED`.

@@ -102,11 +102,11 @@ object StreamingPerplexity {
       decisionsDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val model = Ranking.readKeyedRefLm(spark, modelPath)
-    val cuts = Ranking.readRefLmCutoffsByKey(spark, cutoffsPath)
+    val model = Ranking.readRefLm(spark, modelPath)
+    val cuts = Ranking.readRefLmCutoffRows(spark, cutoffsPath)
     // persisted for the batch write — see [[gateBatch]]: two branches
     // read `scored`, the pin keeps scoring to one execution
-    val scored = Ranking.refLmScoreByKey(batch, idCol, textCol, keyCol, model)
+    val scored = Ranking.refLmScore(batch, idCol, textCol, model, keyCol = Some(keyCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // a row here SCORED, so its key has a model by construction
@@ -163,7 +163,7 @@ object StreamingPerplexity {
       .start()
 
   /** The ORDER-3 twin of [[gateBatch]]: score the micro-batch under
-    * the stored trigram-backoff model ([[Ranking.readRefLm3]]) and
+    * the stored trigram-backoff model ([[Ranking.readRefLm]]) and
     * label at the stored cutoff values — the same artifact format as
     * the bigram gate ((v_head, v_mid), [[Ranking.readRefLmCutoffs]]),
     * measured by the batch pipeline over an order-3 scored pool.
@@ -180,7 +180,7 @@ object StreamingPerplexity {
       decisionsDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val model = Ranking.readRefLm3(spark, modelPath)
+    val model = Ranking.readRefLm(spark, modelPath)
     val (vHead, vMid) = Ranking.readRefLmCutoffs(spark, cutoffsPath)
     // persisted for the batch write — see [[gateBatch]]: the labeled
     // branch and the missing-doc anti-join both read `scored`
@@ -224,7 +224,7 @@ object StreamingPerplexity {
       .start()
 
   /** The keyed ORDER-3 gate — [[gateBatchByKey]] under the stored
-    * per-language trigram-backoff models ([[Ranking.readKeyedRefLm3]])
+    * per-language trigram-backoff models ([[Ranking.readRefLm]])
     * at each key's stored cutoffs. Label split as the bigram keyed
     * gate: `unmodeled` = no model for the key (route to training),
     * `unscored` = modeled key but no trigram (< 3 tokens),
@@ -243,11 +243,11 @@ object StreamingPerplexity {
       decisionsDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val model = Ranking.readKeyedRefLm3(spark, modelPath)
-    val cuts = Ranking.readRefLmCutoffsByKey(spark, cutoffsPath)
+    val model = Ranking.readRefLm(spark, modelPath)
+    val cuts = Ranking.readRefLmCutoffRows(spark, cutoffsPath)
     // persisted for the batch write — see [[gateBatch]]: two branches
     // read `scored`, the pin keeps scoring to one execution
-    val scored = Ranking.refLm3ScoreByKey(batch, idCol, textCol, keyCol, model)
+    val scored = Ranking.refLm3Score(batch, idCol, textCol, model, keyCol = Some(keyCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // scored rows have a model by construction — see [[gateBatchByKey]]
@@ -257,7 +257,7 @@ object StreamingPerplexity {
             .when(col("logprob") >= col("v_head"), lit("head"))
             .when(col("logprob") >= col("v_mid"), lit("middle"))
             .otherwise(lit("tail")).as("bucket"))
-      val modeledKeys = model.base.totals.select(col("__k").as(keyCol))
+      val modeledKeys = model.totals.select(col("__k").as(keyCol))
         .withColumn("__modeled", lit(true))
       val missing = batch
         .join(scored.select(col(idCol)), Seq(idCol), "left_anti")
@@ -294,13 +294,13 @@ object StreamingPerplexity {
       .start()
 
   /** The keyed KNESER-NEY gate — [[gateBatch3ByKey]] scored with
-    * [[Ranking.refLmKn3ScoreByKey]] instead of the Jelinek-Mercer
+    * keyed [[Ranking.refLmKn3Score]] instead of the Jelinek-Mercer
     * chain: every micro-batch doc scores under its language's
     * interpolated-KN model derived from the SAME six stored keyed
     * count tables (no new artifact — the KN tables are per-key
     * groupBys over the stored counts, rebuilt per batch like the JM
     * joins are), labeled at the key's stored KN-MEASURED cutoffs
-    * ([[Ranking.refLm3CutoffsByKey]] over a KN-scored pool — gating a
+    * (keyed [[Ranking.refLmCutoffs]] over a KN-scored pool — gating a
     * KN score at JM cutoffs would mislabel systematically, since the
     * two smoothings shift the score distribution differently). Routing
     * split identical to the JM keyed gates: `unmodeled` = no model for
@@ -318,11 +318,11 @@ object StreamingPerplexity {
       decisionsDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val model = Ranking.readKeyedRefLm3(spark, modelPath)
-    val cuts = Ranking.readRefLmCutoffsByKey(spark, cutoffsPath)
+    val model = Ranking.readRefLm(spark, modelPath)
+    val cuts = Ranking.readRefLmCutoffRows(spark, cutoffsPath)
     // persisted for the batch write — see [[gateBatch]]: two branches
     // read `scored`, the pin keeps scoring to one execution
-    val scored = Ranking.refLmKn3ScoreByKey(batch, idCol, textCol, keyCol, model)
+    val scored = Ranking.refLmKn3Score(batch, idCol, textCol, model, keyCol = Some(keyCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // scored rows have a model by construction — see [[gateBatchByKey]]
@@ -332,7 +332,7 @@ object StreamingPerplexity {
             .when(col("logprob") >= col("v_head"), lit("head"))
             .when(col("logprob") >= col("v_mid"), lit("middle"))
             .otherwise(lit("tail")).as("bucket"))
-      val modeledKeys = model.base.totals.select(col("__k").as(keyCol))
+      val modeledKeys = model.totals.select(col("__k").as(keyCol))
         .withColumn("__modeled", lit(true))
       val missing = batch
         .join(scored.select(col(idCol)), Seq(idCol), "left_anti")
@@ -370,10 +370,10 @@ object StreamingPerplexity {
       minCount5: Long = 1,
       minCount4: Long = 1): Unit = {
     val spark = batch.sparkSession
-    val model = Ranking.readKeyedRefLm5(spark, modelPath)
-    val cuts = Ranking.readRefLmCutoffsByKey(spark, cutoffsPath)
-    val scored = Ranking.refLmKn5ScoreByKey(batch, idCol, textCol, keyCol,
-        model, minCount5 = minCount5, minCount4 = minCount4)
+    val model = Ranking.readRefLm(spark, modelPath)
+    val cuts = Ranking.readRefLmCutoffRows(spark, cutoffsPath)
+    val scored = Ranking.refLmKn5Score(batch, idCol, textCol, model,
+        minCount5 = minCount5, minCount4 = minCount4, keyCol = Some(keyCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val labeled = scored.join(broadcast(cuts), Seq(keyCol), "left")
@@ -382,7 +382,7 @@ object StreamingPerplexity {
             .when(col("logprob") >= col("v_head"), lit("head"))
             .when(col("logprob") >= col("v_mid"), lit("middle"))
             .otherwise(lit("tail")).as("bucket"))
-      val modeledKeys = model.base3.base.totals.select(col("__k").as(keyCol))
+      val modeledKeys = model.totals.select(col("__k").as(keyCol))
         .withColumn("__modeled", lit(true))
       val missing = batch
         .join(scored.select(col(idCol)), Seq(idCol), "left_anti")
@@ -461,14 +461,13 @@ object StreamingPerplexity {
     */
   def ingestReference(
       docs: DataFrame,
-      idCol: String,
       textCol: String,
       modelPath: String,
       checkpointDir: String): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestReferenceBatch(batch, idCol, textCol, modelPath, batchId); ()
+        ingestReferenceBatch(batch, textCol, modelPath, batchId); ()
       }
       .start()
 
@@ -479,30 +478,28 @@ object StreamingPerplexity {
     */
   def ingestReferenceBatch(
       batch: DataFrame,
-      idCol: String,
       textCol: String,
       modelPath: String,
       batchId: Long): Boolean =
     Ranking.mergeIntoStoredRefLm(batch.sparkSession, modelPath,
-      batch, idCol, textCol, batchId = Some(batchId))
+      batch, textCol, batchId = Some(batchId))
 
   /** [[ingestReference]] at order 3: every micro-batch merges its
     * unigram, bigram AND trigram counts into the stored
-    * [[Ranking.writeRefLm3]] artifact under the same replay guard —
-    * [[Ranking.mergeIntoStoredRefLm3]] keeps the applied-batch log
+    * order-3 [[Ranking.writeRefLm]] artifact under the same replay guard —
+    * [[Ranking.mergeIntoStoredRefLm]] keeps the applied-batch log
     * staged and swapped atomically with all six count tables, so a
     * re-delivered micro-batch is a no-op at order 3 too.
     */
   def ingestReference3(
       docs: DataFrame,
-      idCol: String,
       textCol: String,
       modelPath: String,
       checkpointDir: String): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestReference3Batch(batch, idCol, textCol, modelPath, batchId); ()
+        ingestReference3Batch(batch, textCol, modelPath, batchId); ()
       }
       .start()
 
@@ -512,24 +509,22 @@ object StreamingPerplexity {
     */
   def ingestReference3Batch(
       batch: DataFrame,
-      idCol: String,
       textCol: String,
       modelPath: String,
       batchId: Long): Boolean =
-    Ranking.mergeIntoStoredRefLm3(batch.sparkSession, modelPath,
-      batch, idCol, textCol, batchId = Some(batchId))
+    Ranking.mergeIntoStoredRefLm(batch.sparkSession, modelPath,
+      batch, textCol, batchId = Some(batchId))
 
   /** [[ingestReference]] for the KEYED fleet: a stream of newly
     * trusted documents carrying their language key grows EVERY
     * language's stored model in one merge per micro-batch
-    * ([[Ranking.mergeIntoStoredKeyedRefLm]] — the batch may mix
+    * (keyed [[Ranking.mergeIntoStoredRefLm]] — the batch may mix
     * languages freely; per-key counts merge additively in one pass).
     * Same replay guard: the applied-batch log swaps atomically with
     * the keyed count tables.
     */
   def ingestReferenceByKey(
       docs: DataFrame,
-      idCol: String,
       textCol: String,
       keyCol: String,
       modelPath: String,
@@ -537,8 +532,7 @@ object StreamingPerplexity {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestReferenceByKeyBatch(batch, idCol, textCol, keyCol,
-          modelPath, batchId); ()
+        ingestReferenceByKeyBatch(batch, textCol, keyCol, modelPath, batchId); ()
       }
       .start()
 
@@ -547,13 +541,12 @@ object StreamingPerplexity {
     */
   def ingestReferenceByKeyBatch(
       batch: DataFrame,
-      idCol: String,
       textCol: String,
       keyCol: String,
       modelPath: String,
       batchId: Long): Boolean =
-    Ranking.mergeIntoStoredKeyedRefLm(batch.sparkSession, modelPath,
-      batch, idCol, textCol, keyCol, batchId = Some(batchId))
+    Ranking.mergeIntoStoredRefLm(batch.sparkSession, modelPath,
+      batch, textCol, batchId = Some(batchId), keyCol = Some(keyCol))
 
   /** Start the streaming gate: `docs` is a streaming frame carrying
     * `idCol` + `textCol`; every micro-batch flows through

@@ -416,13 +416,13 @@ class CurateSpec extends AnyFunSuite {
       (15L, "hello world again", "L2"),  // unmodeled lang, KEPT
       (16L, "x y z w", "L3"))        // model but no cutoff row, KEPT
       .toDF("doc_id", "text", "lang")
-    val m = Ranking.refLm3TrainByKey(
-      ref, "doc_id", "text", "lang", lit(true))
-    val scored = Ranking.refLmKn3ScoreByKey(
-      corpus, "doc_id", "text", "lang", m)
+    val m = Ranking.refLmTrain(
+      ref, "text", lit(true), 3, Some("lang"))
+    val scored = Ranking.refLmKn3Score(
+      corpus, "doc_id", "text", m, keyCol = Some("lang"))
     // stored cutoffs measured under the KN scorer (the q201
     // discipline), with L3's row withheld — a half-deployed fleet
-    val cuts = Ranking.refLm3CutoffsByKey(scored, "lang")
+    val cuts = Ranking.refLmCutoffs(scored, Some("lang"))
       .filter(col("lang") =!= "L3")
     val expectedTail = scored.join(cuts, "lang")
       .filter(col("logprob") < col("v_mid"))

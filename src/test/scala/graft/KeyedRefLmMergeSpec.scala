@@ -32,42 +32,42 @@ class KeyedRefLmMergeSpec extends AnyFunSuite {
     (11L, "c a c a", "L3")
   ).toDF("id", "text", "lang")
 
-  private def uniSet(m: Ranking.KeyedRefLmModel) =
+  private def uniSet(m: Ranking.RefLmModel) =
     m.unigrams.as[(String, String, Long)].collect().toSet
-  private def bigSet(m: Ranking.KeyedRefLmModel) =
+  private def bigSet(m: Ranking.RefLmModel) =
     m.bigrams.as[(String, String, String, Long)].collect().toSet
-  private def totSet(m: Ranking.KeyedRefLmModel) =
+  private def totSet(m: Ranking.RefLmModel) =
     m.totals.as[(String, Long, Long)].collect().toSet
 
   test("keyed merge == keyed retrain on the union; replay-guarded; new keys appear") {
     val dir = Files.createTempDirectory("keyed-reflm-merge").toString
     val p = s"$dir/model"
-    Ranking.writeKeyedRefLm(
-      Ranking.refLmTrainByKey(baseDocs, "id", "text", "lang", lit(true)), p)
-    assert(Ranking.mergeIntoStoredKeyedRefLm(spark, p, deltaDocs,
-      "id", "text", "lang", batchId = Some(7L)))
-    val merged = Ranking.readKeyedRefLm(spark, p)
-    val full = Ranking.refLmTrainByKey(
-      baseDocs.unionByName(deltaDocs), "id", "text", "lang", lit(true))
+    Ranking.writeRefLm(
+      Ranking.refLmTrain(baseDocs, "text", lit(true), keyCol = Some("lang")), p)
+    assert(Ranking.mergeIntoStoredRefLm(spark, p, deltaDocs,
+      "text", batchId = Some(7L), keyCol = Some("lang")))
+    val merged = Ranking.readRefLm(spark, p)
+    val full = Ranking.refLmTrain(
+      baseDocs.unionByName(deltaDocs), "text", lit(true), keyCol = Some("lang"))
     assert(uniSet(merged) == uniSet(full))
     assert(bigSet(merged) == bigSet(full))
     assert(totSet(merged) == totSet(full))
     // L3 was born in the merge; L2 is untouched by the delta
     assert(totSet(merged).exists(_._1 == "L3"))
     assert(totSet(merged).filter(_._1 == "L2") ==
-      totSet(Ranking.refLmTrainByKey(baseDocs, "id", "text", "lang",
-        lit(true))).filter(_._1 == "L2"))
+      totSet(Ranking.refLmTrain(baseDocs, "text",
+        lit(true), keyCol = Some("lang"))).filter(_._1 == "L2"))
     // scoring under merged vs retrained is identical for every key
     val pool = Seq((20L, "a b c", "L1"), (21L, "a b c", "L2"),
       (22L, "c a", "L3")).toDF("id", "text", "lang")
-    assert(Ranking.refLmScoreByKey(pool, "id", "text", "lang", merged)
+    assert(Ranking.refLmScore(pool, "id", "text", merged, keyCol = Some("lang"))
         .as[(Long, String, Long, Double)].collect().toSet ==
-      Ranking.refLmScoreByKey(pool, "id", "text", "lang", full)
+      Ranking.refLmScore(pool, "id", "text", full, keyCol = Some("lang"))
         .as[(Long, String, Long, Double)].collect().toSet)
     // a replayed batch id is a no-op
-    assert(!Ranking.mergeIntoStoredKeyedRefLm(spark, p, deltaDocs,
-      "id", "text", "lang", batchId = Some(7L)))
-    assert(uniSet(Ranking.readKeyedRefLm(spark, p)) == uniSet(full))
+    assert(!Ranking.mergeIntoStoredRefLm(spark, p, deltaDocs,
+      "text", batchId = Some(7L), keyCol = Some("lang")))
+    assert(uniSet(Ranking.readRefLm(spark, p)) == uniSet(full))
     // staging/old siblings are gone after the swap
     assert(new java.io.File(dir).list().toSet == Set("model"))
   }
@@ -75,47 +75,47 @@ class KeyedRefLmMergeSpec extends AnyFunSuite {
   test("keyed order-3 merge == keyed order-3 retrain on the union; replay-guarded") {
     val dir = Files.createTempDirectory("keyed-reflm3-merge").toString
     val p = s"$dir/model"
-    Ranking.writeKeyedRefLm3(
-      Ranking.refLm3TrainByKey(baseDocs, "id", "text", "lang", lit(true)), p)
-    assert(Ranking.mergeIntoStoredKeyedRefLm3(spark, p, deltaDocs,
-      "id", "text", "lang", batchId = Some(3L)))
-    val merged = Ranking.readKeyedRefLm3(spark, p)
-    val full = Ranking.refLm3TrainByKey(
-      baseDocs.unionByName(deltaDocs), "id", "text", "lang", lit(true))
+    Ranking.writeRefLm(
+      Ranking.refLmTrain(baseDocs, "text", lit(true), 3, Some("lang")), p)
+    assert(Ranking.mergeIntoStoredRefLm(spark, p, deltaDocs,
+      "text", batchId = Some(3L), keyCol = Some("lang")))
+    val merged = Ranking.readRefLm(spark, p)
+    val full = Ranking.refLmTrain(
+      baseDocs.unionByName(deltaDocs), "text", lit(true), 3, Some("lang"))
     assert(merged.trigrams.as[(String, String, String, String, Long)]
         .collect().toSet ==
       full.trigrams.as[(String, String, String, String, Long)].collect().toSet)
     assert(merged.triContexts.as[(String, String, String, Long)]
         .collect().toSet ==
       full.triContexts.as[(String, String, String, Long)].collect().toSet)
-    assert(uniSet(merged.base) == uniSet(full.base))
-    assert(totSet(merged.base) == totSet(full.base))
+    assert(uniSet(merged) == uniSet(full))
+    assert(totSet(merged) == totSet(full))
     val pool = Seq((20L, "a b a c", "L1"), (21L, "a b a c", "L2"),
       (22L, "c a c", "L3")).toDF("id", "text", "lang")
-    assert(Ranking.refLm3ScoreByKey(pool, "id", "text", "lang", merged)
+    assert(Ranking.refLm3Score(pool, "id", "text", merged, keyCol = Some("lang"))
         .as[(Long, String, Long, Double)].collect().toSet ==
-      Ranking.refLm3ScoreByKey(pool, "id", "text", "lang", full)
+      Ranking.refLm3Score(pool, "id", "text", full, keyCol = Some("lang"))
         .as[(Long, String, Long, Double)].collect().toSet)
-    assert(!Ranking.mergeIntoStoredKeyedRefLm3(spark, p, deltaDocs,
-      "id", "text", "lang", batchId = Some(3L)))
+    assert(!Ranking.mergeIntoStoredRefLm(spark, p, deltaDocs,
+      "text", batchId = Some(3L), keyCol = Some("lang")))
   }
 
   test("streaming keyed ingest merges mixed-language micro-batches replay-idempotently") {
     val dir = Files.createTempDirectory("keyed-reflm-stream").toString
     val p = s"$dir/model"
-    Ranking.writeKeyedRefLm(
-      Ranking.refLmTrainByKey(baseDocs, "id", "text", "lang", lit(true)), p)
+    Ranking.writeRefLm(
+      Ranking.refLmTrain(baseDocs, "text", lit(true), keyCol = Some("lang")), p)
     val batch = Seq((10L, "b c b", "L1"), (11L, "c a", "L2"))
       .toDF("doc_id", "text", "lang")
     assert(StreamingPerplexity.ingestReferenceByKeyBatch(
-      batch, "doc_id", "text", "lang", p, batchId = 0L))
-    val once = uniSet(Ranking.readKeyedRefLm(spark, p))
+      batch, "text", "lang", p, batchId = 0L))
+    val once = uniSet(Ranking.readRefLm(spark, p))
     assert(!StreamingPerplexity.ingestReferenceByKeyBatch(
-      batch, "doc_id", "text", "lang", p, batchId = 0L))
-    assert(uniSet(Ranking.readKeyedRefLm(spark, p)) == once)
+      batch, "text", "lang", p, batchId = 0L))
+    assert(uniSet(Ranking.readRefLm(spark, p)) == once)
     // counts are bit-equal to one clean delivery over the union
-    assert(once == uniSet(Ranking.refLmTrainByKey(
+    assert(once == uniSet(Ranking.refLmTrain(
       baseDocs.unionByName(batch.toDF("id", "text", "lang")),
-      "id", "text", "lang", lit(true))))
+      "text", lit(true), keyCol = Some("lang"))))
   }
 }

@@ -42,17 +42,17 @@ class RefLm3Spec extends AnyFunSuite {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("trigram counts and contexts are the exact reference statistics") {
-    val m = Ranking.refLm3Train(refPoolDocs, "id", "text", col("is_ref"))
+    val m = Ranking.refLmTrain(refPoolDocs, "text", col("is_ref"), 3)
     assert(m.trigrams.as[(String, String, String, Long)].collect().toSet ==
       Set(("a", "b", "a", 2L), ("b", "a", "b", 1L)))
     assert(m.triContexts.as[(String, String, Long)].collect().toSet ==
       Set(("a", "b", 2L), ("b", "a", 1L)))
     // the base model rides along unchanged
-    assert(m.base.totals.as[(Long, Long)].collect().toSeq == Seq((7L, 3L)))
+    assert(m.totals.as[(Long, Long)].collect().toSeq == Seq((7L, 3L)))
   }
 
   test("scores are the hand-computed backoff chain; short docs unscored") {
-    val m = Ranking.refLm3Train(refPoolDocs, "id", "text", col("is_ref"))
+    val m = Ranking.refLmTrain(refPoolDocs, "text", col("is_ref"), 3)
     val got = Ranking.refLm3Score(
         refPoolDocs.filter(!col("is_ref")), "id", "text", m)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
@@ -72,22 +72,22 @@ class RefLm3Spec extends AnyFunSuite {
   test("order-3 merge is bit-identical to a from-scratch retrain; replay-guarded") {
     val dir = Files.createTempDirectory("reflm3-merge").toString
     val p = s"$dir/model"
-    Ranking.writeRefLm3(
-      Ranking.refLm3Train(refPoolDocs, "id", "text",
-        col("is_ref") && col("id") === 1L), p)
-    assert(Ranking.mergeIntoStoredRefLm3(spark, p,
-      refPoolDocs.filter(col("id") === 2L), "id", "text",
+    Ranking.writeRefLm(
+      Ranking.refLmTrain(refPoolDocs, "text",
+        col("is_ref") && col("id") === 1L, 3), p)
+    assert(Ranking.mergeIntoStoredRefLm(spark, p,
+      refPoolDocs.filter(col("id") === 2L), "text",
       batchId = Some(3L)))
-    val merged = Ranking.readRefLm3(spark, p)
-    val full = Ranking.refLm3Train(refPoolDocs, "id", "text", col("is_ref"))
+    val merged = Ranking.readRefLm(spark, p)
+    val full = Ranking.refLmTrain(refPoolDocs, "text", col("is_ref"), 3)
     assert(merged.trigrams.as[(String, String, String, Long)].collect().toSet ==
       full.trigrams.as[(String, String, String, Long)].collect().toSet)
     assert(merged.triContexts.as[(String, String, Long)].collect().toSet ==
       full.triContexts.as[(String, String, Long)].collect().toSet)
-    assert(merged.base.unigrams.as[(String, Long)].collect().toSet ==
-      full.base.unigrams.as[(String, Long)].collect().toSet)
-    assert(merged.base.totals.as[(Long, Long)].collect().toSeq ==
-      full.base.totals.as[(Long, Long)].collect().toSeq)
+    assert(merged.unigrams.as[(String, Long)].collect().toSet ==
+      full.unigrams.as[(String, Long)].collect().toSet)
+    assert(merged.totals.as[(Long, Long)].collect().toSeq ==
+      full.totals.as[(Long, Long)].collect().toSeq)
     // scoring under merged vs retrained is identical
     val pool = refPoolDocs.filter(!col("is_ref"))
     assert(Ranking.refLm3Score(pool, "id", "text", merged)
@@ -95,10 +95,10 @@ class RefLm3Spec extends AnyFunSuite {
       Ranking.refLm3Score(pool, "id", "text", full)
         .as[(Long, Long, Double)].collect().toSet)
     // a replayed batch id is a no-op at order 3 too
-    assert(!Ranking.mergeIntoStoredRefLm3(spark, p,
-      refPoolDocs.filter(col("id") === 2L), "id", "text",
+    assert(!Ranking.mergeIntoStoredRefLm(spark, p,
+      refPoolDocs.filter(col("id") === 2L), "text",
       batchId = Some(3L)))
-    assert(Ranking.readRefLm3(spark, p)
+    assert(Ranking.readRefLm(spark, p)
         .trigrams.as[(String, String, String, Long)].collect().toSet ==
       full.trigrams.as[(String, String, String, Long)].collect().toSet)
     // staging/old siblings are gone after the swaps
@@ -108,14 +108,14 @@ class RefLm3Spec extends AnyFunSuite {
   test("stored round-trip: the deploy path reproduces inline buckets bit-for-bit") {
     val dir = Files.createTempDirectory("reflm3-store").toString
     val p = s"$dir/model"
-    val m = Ranking.refLm3Train(refPoolDocs, "id", "text", col("is_ref"))
-    Ranking.writeRefLm3(m, p)
+    val m = Ranking.refLmTrain(refPoolDocs, "text", col("is_ref"), 3)
+    Ranking.writeRefLm(m, p)
     val pool = refPoolDocs.filter(!col("is_ref"))
-    val inline = Ranking.refLm3PerplexityBuckets(
+    val inline = Ranking.refLmPerplexityBuckets(
       Ranking.refLm3Score(pool, "id", "text", m))
       .as[(String, Long, Double, Double, Long)].collect().toSeq
-    val stored = Ranking.refLm3PerplexityBuckets(
-      Ranking.refLm3Score(pool, "id", "text", Ranking.readRefLm3(spark, p)))
+    val stored = Ranking.refLmPerplexityBuckets(
+      Ranking.refLm3Score(pool, "id", "text", Ranking.readRefLm(spark, p)))
       .as[(String, Long, Double, Double, Long)].collect().toSeq
     assert(inline == stored)
   }
@@ -132,10 +132,10 @@ class RefLm3Spec extends AnyFunSuite {
   ).toDF("id", "text", "lang", "is_ref")
 
   test("keyed order-3: each doc scores under ITS language's chain, equal to the per-slice unkeyed model") {
-    val km = Ranking.refLm3TrainByKey(keyedDocs, "id", "text", "lang",
-      col("is_ref"))
-    val got = Ranking.refLm3ScoreByKey(keyedDocs.filter(!col("is_ref")),
-        "id", "text", "lang", km)
+    val km = Ranking.refLmTrain(keyedDocs, "text",
+      col("is_ref"), 3, Some("lang"))
+    val got = Ranking.refLm3Score(keyedDocs.filter(!col("is_ref")),
+        "id", "text", km, keyCol = Some("lang"))
       .as[(Long, String, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     // unmodeled language: absent, never scored against nothing
@@ -143,8 +143,8 @@ class RefLm3Spec extends AnyFunSuite {
     // per-key equivalence: the keyed one-pass result for language K is
     // bit-identical to the unkeyed engine trained on K's slice alone
     Seq("L1", "L2").foreach { k =>
-      val slice = Ranking.refLm3Train(keyedDocs.filter(col("lang") === k),
-        "id", "text", col("is_ref"))
+      val slice = Ranking.refLmTrain(keyedDocs.filter(col("lang") === k),
+        "text", col("is_ref"), 3)
       val solo = Ranking.refLm3Score(
           keyedDocs.filter(!col("is_ref") && col("lang") === k),
           "id", "text", slice)
@@ -157,9 +157,9 @@ class RefLm3Spec extends AnyFunSuite {
       "L1 and L2 trained on different stats must disagree on the same text")
     // keyed stored round-trip serves the same scores
     val dir = Files.createTempDirectory("reflm3-keyed").toString
-    Ranking.writeKeyedRefLm3(km, s"$dir/model")
-    val back = Ranking.refLm3ScoreByKey(keyedDocs.filter(!col("is_ref")),
-        "id", "text", "lang", Ranking.readKeyedRefLm3(spark, s"$dir/model"))
+    Ranking.writeRefLm(km, s"$dir/model")
+    val back = Ranking.refLm3Score(keyedDocs.filter(!col("is_ref")),
+        "id", "text", Ranking.readRefLm(spark, s"$dir/model"), keyCol = Some("lang"))
       .as[(Long, String, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(back == got)

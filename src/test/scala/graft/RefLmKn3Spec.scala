@@ -53,7 +53,7 @@ class RefLmKn3Spec extends AnyFunSuite {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("KN scores are the hand-computed discount chain; unseen stays finite") {
-    val m = Ranking.refLm3Train(docs, "id", "text", col("is_ref"))
+    val m = Ranking.refLmTrain(docs, "text", col("is_ref"), 3)
     val got = Ranking.refLmKn3Score(
         docs.filter(!col("is_ref")), "id", "text", m)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
@@ -82,7 +82,7 @@ class RefLmKn3Spec extends AnyFunSuite {
   }
 
   test("discount sanity: seen mass above unseen, probabilities in (0, 1]") {
-    val m = Ranking.refLm3Train(docs, "id", "text", col("is_ref"))
+    val m = Ranking.refLmTrain(docs, "text", col("is_ref"), 3)
     val scored = Ranking.refLmKn3Score(
         docs.filter(!col("is_ref")), "id", "text", m)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap
@@ -109,14 +109,14 @@ class RefLmKn3Spec extends AnyFunSuite {
       (10L, "a b a b", "L1", false), (11L, "a b x", "L1", false),
       (12L, "a b a b", "L2", false), (13L, "x y z", "L2", false)
     ).toDF("id", "text", "lang", "is_ref")
-    val km = Ranking.refLm3TrainByKey(keyed, "id", "text", "lang", col("is_ref"))
-    val got = Ranking.refLmKn3ScoreByKey(
-        keyed.filter(!col("is_ref")), "id", "text", "lang", km)
+    val km = Ranking.refLmTrain(keyed, "text", col("is_ref"), 3, Some("lang"))
+    val got = Ranking.refLmKn3Score(
+        keyed.filter(!col("is_ref")), "id", "text", km, keyCol = Some("lang"))
       .as[(Long, String, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     val expect = Seq("L1", "L2").flatMap { lang =>
       val slice = keyed.filter(col("lang") === lang)
-      val m = Ranking.refLm3Train(slice, "id", "text", col("is_ref"))
+      val m = Ranking.refLmTrain(slice, "text", col("is_ref"), 3)
       Ranking.refLmKn3Score(slice.filter(!col("is_ref")), "id", "text", m)
         .as[(Long, Long, Double)].collect()
         .map(r => r._1 -> ((lang, r._2, r._3)))
@@ -130,25 +130,25 @@ class RefLmKn3Spec extends AnyFunSuite {
     val dir = Files.createTempDirectory("reflmkn3-merge").toString
     val p = s"$dir/model"
     // stored model trained on doc 1 only, then doc 2 merges in
-    Ranking.writeRefLm3(
-      Ranking.refLm3Train(docs, "id", "text",
-        col("is_ref") && col("id") === 1L), p)
-    assert(Ranking.mergeIntoStoredRefLm3(spark, p,
-      docs.filter(col("id") === 2L), "id", "text", batchId = Some(7L)))
+    Ranking.writeRefLm(
+      Ranking.refLmTrain(docs, "text",
+        col("is_ref") && col("id") === 1L, 3), p)
+    assert(Ranking.mergeIntoStoredRefLm(spark, p,
+      docs.filter(col("id") === 2L), "text", batchId = Some(7L)))
     val pool = docs.filter(!col("is_ref"))
     val viaMerge = Ranking.refLmKn3Score(
-        pool, "id", "text", Ranking.readRefLm3(spark, p))
+        pool, "id", "text", Ranking.readRefLm(spark, p))
       .orderBy("id").collect().map(_.toSeq).toSeq
     val viaRetrain = Ranking.refLmKn3Score(
         pool, "id", "text",
-        Ranking.refLm3Train(docs, "id", "text", col("is_ref")))
+        Ranking.refLmTrain(docs, "text", col("is_ref"), 3))
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(viaMerge == viaRetrain)
     // replay of the same batch id is a no-op and scores are unchanged
-    assert(!Ranking.mergeIntoStoredRefLm3(spark, p,
-      docs.filter(col("id") === 2L), "id", "text", batchId = Some(7L)))
+    assert(!Ranking.mergeIntoStoredRefLm(spark, p,
+      docs.filter(col("id") === 2L), "text", batchId = Some(7L)))
     val replayed = Ranking.refLmKn3Score(
-        pool, "id", "text", Ranking.readRefLm3(spark, p))
+        pool, "id", "text", Ranking.readRefLm(spark, p))
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(replayed == viaMerge)
   }

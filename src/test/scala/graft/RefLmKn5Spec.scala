@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -58,7 +59,7 @@ class RefLmKn5Spec extends AnyFunSuite {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("KN5 scores are the hand-computed five-level discount chain") {
-    val m = Ranking.refLm5Train(docs, "id", "text", col("is_ref"))
+    val m = Ranking.refLmTrain(docs, "text", col("is_ref"), 5)
     val got = Ranking.refLmKn5Score(
         docs.filter(!col("is_ref")), "id", "text", m)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
@@ -77,7 +78,7 @@ class RefLmKn5Spec extends AnyFunSuite {
   }
 
   test("count pruning is a score-time view: singletons route through the backoff") {
-    val m = Ranking.refLm5Train(docs, "id", "text", col("is_ref"))
+    val m = Ranking.refLmTrain(docs, "text", col("is_ref"), 5)
     // minCount5=2 drops BOTH 5-grams (each ct 1); minCount4=2 keeps
     // only abcd:2 — so for (a,b,c,d,e) every level above order 2
     // zeroes out (cc3 is keyed by the quint's (c,d,e), and the pruned
@@ -104,25 +105,25 @@ class RefLmKn5Spec extends AnyFunSuite {
   test("KN5 from a merged stored model is bit-identical to KN5 after a retrain") {
     val dir = Files.createTempDirectory("reflmkn5-merge").toString
     val p = s"$dir/model"
-    Ranking.writeRefLm5(
-      Ranking.refLm5Train(docs, "id", "text",
-        col("is_ref") && col("id") === 1L), p)
-    assert(Ranking.mergeIntoStoredRefLm5(spark, p,
-      docs.filter(col("id") === 2L), "id", "text", batchId = Some(7L)))
+    Ranking.writeRefLm(
+      Ranking.refLmTrain(docs, "text",
+        col("is_ref") && col("id") === 1L, 5), p)
+    assert(Ranking.mergeIntoStoredRefLm(spark, p,
+      docs.filter(col("id") === 2L), "text", batchId = Some(7L)))
     val pool = docs.filter(!col("is_ref"))
     val viaMerge = Ranking.refLmKn5Score(
-        pool, "id", "text", Ranking.readRefLm5(spark, p))
+        pool, "id", "text", Ranking.readRefLm(spark, p))
       .orderBy("id").collect().map(_.toSeq).toSeq
     val viaRetrain = Ranking.refLmKn5Score(
         pool, "id", "text",
-        Ranking.refLm5Train(docs, "id", "text", col("is_ref")))
+        Ranking.refLmTrain(docs, "text", col("is_ref"), 5))
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(viaMerge == viaRetrain)
     // replay of the same batch id is a no-op across all eight tables
-    assert(!Ranking.mergeIntoStoredRefLm5(spark, p,
-      docs.filter(col("id") === 2L), "id", "text", batchId = Some(7L)))
+    assert(!Ranking.mergeIntoStoredRefLm(spark, p,
+      docs.filter(col("id") === 2L), "text", batchId = Some(7L)))
     val replayed = Ranking.refLmKn5Score(
-        pool, "id", "text", Ranking.readRefLm5(spark, p))
+        pool, "id", "text", Ranking.readRefLm(spark, p))
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(replayed == viaMerge)
   }
@@ -141,16 +142,16 @@ class RefLmKn5Spec extends AnyFunSuite {
       (12L, "e d c b a", "L2", false),
       (13L, "u v w x y", "L2", false)
     ).toDF("id", "text", "lang", "is_ref")
-    val km = Ranking.refLm5TrainByKey(keyed, "id", "text", "lang", col("is_ref"))
+    val km = Ranking.refLmTrain(keyed, "text", col("is_ref"), 5, Some("lang"))
     for ((mc5, mc4) <- Seq((1L, 1L), (2L, 2L))) {
-      val got = Ranking.refLmKn5ScoreByKey(
-          keyed.filter(!col("is_ref")), "id", "text", "lang", km,
-          minCount5 = mc5, minCount4 = mc4)
+      val got = Ranking.refLmKn5Score(
+          keyed.filter(!col("is_ref")), "id", "text", km,
+          minCount5 = mc5, minCount4 = mc4, keyCol = Some("lang"))
         .as[(Long, String, Long, Double)].collect()
         .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
       val expect = Seq("L1", "L2").flatMap { lang =>
         val slice = keyed.filter(col("lang") === lang)
-        val m = Ranking.refLm5Train(slice, "id", "text", col("is_ref"))
+        val m = Ranking.refLmTrain(slice, "text", col("is_ref"), 5)
         Ranking.refLmKn5Score(slice.filter(!col("is_ref")), "id", "text", m,
             minCount5 = mc5, minCount4 = mc4)
           .as[(Long, Long, Double)].collect()
@@ -161,22 +162,40 @@ class RefLmKn5Spec extends AnyFunSuite {
   }
 
   test("an id column named like a model column scores like any other id") {
-    val m = Ranking.refLm5Train(docs, "id", "text", col("is_ref"))
+    // every scorer carries the id as `__id`, so an id named like a model
+    // column (c5, w1) or a per-doc count alias (tfq, bf) scores unchanged,
+    // keyed and unkeyed; the order-2/3 scorers read the order-5 model's
+    // lower tables
+    val m = Ranking.refLmTrain(docs, "text", col("is_ref"), 5)
+    val km = Ranking.refLmTrain(docs.withColumn("lang", lit("L1")),
+      "text", col("is_ref"), 5, Some("lang"))
     val pool = docs.filter(!col("is_ref"))
-    def scores(df: org.apache.spark.sql.DataFrame, idCol: String) =
-      df.select(col(idCol), col("n_5grams"), col("logprob"))
+    type Scorer = (DataFrame, String, Ranking.RefLmModel, Option[String]) => DataFrame
+    val scorers: Seq[(String, Scorer)] = Seq(
+      "n_bigrams" -> ((df, id, mm, k) =>
+        Ranking.refLmScore(df, id, "text", mm, keyCol = k)),
+      "n_trigrams" -> ((df, id, mm, k) =>
+        Ranking.refLm3Score(df, id, "text", mm, keyCol = k)),
+      "n_trigrams" -> ((df, id, mm, k) =>
+        Ranking.refLmKn3Score(df, id, "text", mm, keyCol = k)),
+      "n_5grams" -> ((df, id, mm, k) =>
+        Ranking.refLmKn5Score(df, id, "text", mm, keyCol = k)))
+    def scores(df: DataFrame, idCol: String, cnt: String) =
+      df.select(col(idCol), col(cnt), col("logprob"))
         .as[(Long, Long, Double)].collect().toSet
-    val expect = scores(Ranking.refLmKn5Score(pool, "id", "text", m), "id")
-    val got = Ranking.refLmKn5Score(pool.withColumnRenamed("id", "c5"), "c5", "text", m)
-    assert(got.columns.toSeq == Seq("c5", "n_5grams", "logprob"))
-    assert(scores(got, "c5") == expect)
-    val km = Ranking.refLm5TrainByKey(docs.withColumn("lang", lit("L1")),
-      "id", "text", "lang", col("is_ref"))
-    val keyed = Ranking.refLmKn5ScoreByKey(
-      pool.withColumn("lang", lit("L1")).withColumnRenamed("id", "c5"),
-      "c5", "text", "lang", km)
-    assert(keyed.columns.toSeq == Seq("c5", "lang", "n_5grams", "logprob"))
-    assert(scores(keyed, "c5") == expect)
+    for ((cnt, score) <- scorers) {
+      val expect = scores(score(pool, "id", m, None), "id", cnt)
+      assert(expect.nonEmpty, cnt)
+      for (idName <- Seq("c5", "w1", "tfq", "bf")) {
+        val got = score(pool.withColumnRenamed("id", idName), idName, m, None)
+        assert(got.columns.toSeq == Seq(idName, cnt, "logprob"))
+        assert(scores(got, idName, cnt) == expect, s"$cnt, id $idName")
+        val keyed = score(pool.withColumn("lang", lit("L1"))
+          .withColumnRenamed("id", idName), idName, km, Some("lang"))
+        assert(keyed.columns.toSeq == Seq(idName, "lang", cnt, "logprob"))
+        assert(scores(keyed, idName, cnt) == expect, s"keyed $cnt, id $idName")
+      }
+    }
   }
 
   test("keyed KN5 merge == keyed retrain, bit-for-bit across both languages") {
@@ -191,24 +210,24 @@ class RefLmKn5Spec extends AnyFunSuite {
     ).toDF("id", "text", "lang", "is_ref")
     // stored fleet trained without doc 2; the L1 delta merges in (L2
     // untouched — the keyed merge must not disturb other keys)
-    Ranking.writeKeyedRefLm5(
-      Ranking.refLm5TrainByKey(keyed, "id", "text", "lang",
-        col("is_ref") && col("id") =!= 2L), p)
-    assert(Ranking.mergeIntoStoredKeyedRefLm5(spark, p,
-      keyed.filter(col("id") === 2L), "id", "text", "lang",
-      batchId = Some(3L)))
+    Ranking.writeRefLm(
+      Ranking.refLmTrain(keyed, "text",
+        col("is_ref") && col("id") =!= 2L, 5, Some("lang")), p)
+    assert(Ranking.mergeIntoStoredRefLm(spark, p,
+      keyed.filter(col("id") === 2L), "text",
+      batchId = Some(3L), keyCol = Some("lang")))
     val pool = keyed.filter(!col("is_ref"))
-    val viaMerge = Ranking.refLmKn5ScoreByKey(
-        pool, "id", "text", "lang", Ranking.readKeyedRefLm5(spark, p))
+    val viaMerge = Ranking.refLmKn5Score(
+        pool, "id", "text", Ranking.readRefLm(spark, p), keyCol = Some("lang"))
       .orderBy("id").collect().map(_.toSeq).toSeq
-    val viaRetrain = Ranking.refLmKn5ScoreByKey(
-        pool, "id", "text", "lang",
-        Ranking.refLm5TrainByKey(keyed, "id", "text", "lang", col("is_ref")))
+    val viaRetrain = Ranking.refLmKn5Score(pool, "id", "text",
+        Ranking.refLmTrain(keyed, "text", col("is_ref"), 5, Some("lang")),
+        keyCol = Some("lang"))
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(viaMerge == viaRetrain)
     // replay guard covers the two new high-order tables too
-    assert(!Ranking.mergeIntoStoredKeyedRefLm5(spark, p,
-      keyed.filter(col("id") === 2L), "id", "text", "lang",
-      batchId = Some(3L)))
+    assert(!Ranking.mergeIntoStoredRefLm(spark, p,
+      keyed.filter(col("id") === 2L), "text",
+      batchId = Some(3L), keyCol = Some("lang")))
   }
 }

@@ -36,25 +36,25 @@ class RefLmParallelWriteSpec extends AnyFunSuite {
   test("8 concurrent six-table writes round-trip bit-exact counts") {
     // sequential ground truth, collected ONCE from a dedicated model
     val expected = {
-      val m = Ranking.refLm3Train(corpus, "id", "text", lit(true))
-      (m.base.unigrams.orderBy("term").collect().map(_.toSeq).toSeq,
-        m.base.bigrams.orderBy("w1", "w2").collect().map(_.toSeq).toSeq,
+      val m = Ranking.refLmTrain(corpus, "text", lit(true), 3)
+      (m.unigrams.orderBy("term").collect().map(_.toSeq).toSeq,
+        m.bigrams.orderBy("w1", "w2").collect().map(_.toSeq).toSeq,
         m.trigrams.orderBy("w1", "w2", "w3").collect().map(_.toSeq).toSeq,
-        m.base.totals.collect().map(_.toSeq).toSeq)
+        m.totals.collect().map(_.toSeq).toSeq)
     }
     (1 to 8).foreach { i =>
       val dir = Files.createTempDirectory(s"reflm-par-$i").toString
       // a FRESH model per iteration: fresh expression instances, so
       // each write round replays the full analyze-optimize-execute
       // path the race lived in
-      val m = Ranking.refLm3Train(corpus, "id", "text", lit(true))
-      Ranking.writeRefLm3(m, s"$dir/model")
-      val back = Ranking.readRefLm3(spark, s"$dir/model")
+      val m = Ranking.refLmTrain(corpus, "text", lit(true), 3)
+      Ranking.writeRefLm(m, s"$dir/model")
+      val back = Ranking.readRefLm(spark, s"$dir/model")
       val got = (
-        back.base.unigrams.orderBy("term").collect().map(_.toSeq).toSeq,
-        back.base.bigrams.orderBy("w1", "w2").collect().map(_.toSeq).toSeq,
+        back.unigrams.orderBy("term").collect().map(_.toSeq).toSeq,
+        back.bigrams.orderBy("w1", "w2").collect().map(_.toSeq).toSeq,
         back.trigrams.orderBy("w1", "w2", "w3").collect().map(_.toSeq).toSeq,
-        back.base.totals.collect().map(_.toSeq).toSeq)
+        back.totals.collect().map(_.toSeq).toSeq)
       assert(got == expected, s"concurrent write $i corrupted counts")
     }
   }
@@ -63,7 +63,7 @@ class RefLmParallelWriteSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("reflm-par-conf").toString
     val before = spark.conf.getOption("spark.sql.optimizer.excludedRules")
     Ranking.writeRefLm(
-      Ranking.refLmTrain(corpus, "id", "text", lit(true)), s"$dir/model")
+      Ranking.refLmTrain(corpus, "text", lit(true)), s"$dir/model")
     assert(spark.conf.getOption("spark.sql.optimizer.excludedRules") == before)
   }
 }

@@ -35,7 +35,7 @@ class RefLmSpec extends AnyFunSuite {
   }
 
   test("trained counts are the exact reference statistics") {
-    val m = Ranking.refLmTrain(refPoolDocs, "id", "text", col("is_ref"))
+    val m = Ranking.refLmTrain(refPoolDocs, "text", col("is_ref"))
     assert(m.unigrams.as[(String, Long)].collect().toMap ==
       Map("a" -> 3L, "b" -> 3L, "c" -> 1L))
     assert(m.bigrams.as[(String, String, Long)].collect().toSet ==
@@ -46,7 +46,7 @@ class RefLmSpec extends AnyFunSuite {
   }
 
   test("scores are the hand-computed λ-mixture, finite on OOV") {
-    val m = Ranking.refLmTrain(refPoolDocs, "id", "text", col("is_ref"))
+    val m = Ranking.refLmTrain(refPoolDocs, "text", col("is_ref"))
     val got = Ranking.refLmScore(
         refPoolDocs.filter(!col("is_ref")), "id", "text", m)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
@@ -85,7 +85,7 @@ class RefLmSpec extends AnyFunSuite {
   }
 
   test("stored round-trip: deploy path reproduces inline scoring bit-for-bit") {
-    val m = Ranking.refLmTrain(refPoolDocs, "id", "text", col("is_ref"))
+    val m = Ranking.refLmTrain(refPoolDocs, "text", col("is_ref"))
     val dir = Files.createTempDirectory("reflm-spec").toString
     Ranking.writeRefLm(m, s"$dir/model")
     val m2 = Ranking.readRefLm(spark, s"$dir/model")
@@ -101,14 +101,14 @@ class RefLmSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("reflm-swap").toString
     val pool = Seq((10L, "a b c")).toDF("id", "text")
     Ranking.writeRefLm(
-      Ranking.refLmTrain(refPoolDocs, "id", "text", col("is_ref")),
+      Ranking.refLmTrain(refPoolDocs, "text", col("is_ref")),
       s"$dir/model")
     val before = Ranking.refLmScore(pool, "id", "text",
         Ranking.readRefLm(spark, s"$dir/model"))
       .as[(Long, Long, Double)].collect().head
     // retrain on a DIFFERENT reference (only doc 2: "b c") and overwrite
     Ranking.writeRefLm(
-      Ranking.refLmTrain(refPoolDocs, "id", "text", col("id") === 2L),
+      Ranking.refLmTrain(refPoolDocs, "text", col("id") === 2L),
       s"$dir/model")
     val after = Ranking.refLmScore(pool, "id", "text",
         Ranking.readRefLm(spark, s"$dir/model"))
@@ -128,14 +128,14 @@ class RefLmSpec extends AnyFunSuite {
       (4L, "a b", "L2", false),
       (5L, "a b", "L3", false)
     ).toDF("id", "text", "lang", "is_ref")
-    val m = Ranking.refLmTrainByKey(docs, "id", "text", "lang", col("is_ref"))
+    val m = Ranking.refLmTrain(docs, "text", col("is_ref"), keyCol = Some("lang"))
 
     // one-pass training produced BOTH models
     assert(m.totals.as[(String, Long, Long)].collect().toSet ==
       Set(("L1", 5L, 2L), ("L2", 2L, 2L)))
 
-    val got = Ranking.refLmScoreByKey(
-        docs.filter(!col("is_ref")), "id", "text", "lang", m)
+    val got = Ranking.refLmScore(
+        docs.filter(!col("is_ref")), "id", "text", m, keyCol = Some("lang"))
       .as[(Long, String, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._4))).toMap
     // L3 has no reference model -> doc 5 is unscored
@@ -148,7 +148,7 @@ class RefLmSpec extends AnyFunSuite {
       Ranking.refLmScore(
           docs.filter(col("id") === poolId), "id", "text",
           Ranking.refLmTrain(docs.filter(col("lang") === lang && col("is_ref")),
-            "id", "text", lit(true)))
+            "text", lit(true)))
         .as[(Long, Long, Double)].collect().head._3
     assert(got(3L)._2 == single("L1", 3L))
     assert(got(4L)._2 == single("L2", 4L))
@@ -161,7 +161,7 @@ class RefLmSpec extends AnyFunSuite {
       (1L, "L1", 2L, -1.0), (2L, "L1", 2L, -2.0), (3L, "L1", 2L, -3.0),
       (4L, "L2", 2L, -10.0), (5L, "L2", 2L, -20.0)
     ).toDF("id", "lang", "n_bigrams", "logprob")
-    val got = Ranking.refLmPerplexityBucketsByKey(scored, "lang")
+    val got = Ranking.refLmPerplexityBuckets(scored, Some("lang"))
       .as[(String, String, Long, Double, Double, Long)].collect().toSeq
     assert(got == Seq(
       ("L1", "head", 1L, -1.0, -1.0, 2L),
@@ -176,12 +176,12 @@ class RefLmSpec extends AnyFunSuite {
     val p = s"$dir/model"
     // base = docs 1 only; delta = doc 2 (overlapping vocabulary)
     Ranking.writeRefLm(
-      Ranking.refLmTrain(refPoolDocs, "id", "text",
+      Ranking.refLmTrain(refPoolDocs, "text",
         col("is_ref") && col("id") === 1L), p)
     Ranking.mergeIntoStoredRefLm(spark, p,
-      refPoolDocs.filter(col("id") === 2L), "id", "text")
+      refPoolDocs.filter(col("id") === 2L), "text")
     val merged = Ranking.readRefLm(spark, p)
-    val full = Ranking.refLmTrain(refPoolDocs, "id", "text", col("is_ref"))
+    val full = Ranking.refLmTrain(refPoolDocs, "text", col("is_ref"))
     assert(merged.unigrams.as[(String, Long)].collect().toSet ==
       full.unigrams.as[(String, Long)].collect().toSet)
     assert(merged.bigrams.as[(String, String, Long)].collect().toSet ==
@@ -205,23 +205,23 @@ class RefLmSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("reflm-replay").toString
     val p = s"$dir/model"
     Ranking.writeRefLm(
-      Ranking.refLmTrain(refPoolDocs, "id", "text",
+      Ranking.refLmTrain(refPoolDocs, "text",
         col("is_ref") && col("id") === 1L), p)
     def modelCounts() = (
       Ranking.readRefLm(spark, p).unigrams.as[(String, Long)].collect().toSet,
       Ranking.readRefLm(spark, p).bigrams.as[(String, String, Long)].collect().toSet,
       Ranking.readRefLm(spark, p).totals.as[(Long, Long)].collect().toSeq)
     val delta = refPoolDocs.filter(col("id") === 2L)
-    assert(Ranking.mergeIntoStoredRefLm(spark, p, delta, "id", "text",
+    assert(Ranking.mergeIntoStoredRefLm(spark, p, delta, "text",
       batchId = Some(7L)))
     val once = modelCounts()
     // the crash-between-merge-and-checkpoint replay: same batch again
-    assert(!Ranking.mergeIntoStoredRefLm(spark, p, delta, "id", "text",
+    assert(!Ranking.mergeIntoStoredRefLm(spark, p, delta, "text",
       batchId = Some(7L)))
     assert(modelCounts() == once, "replayed batch must not double-count")
     // a NEW batch id still applies (the log guards ids, not contents)
     assert(Ranking.mergeIntoStoredRefLm(spark, p,
-      refPoolDocs.filter(col("id") === 1L), "id", "text",
+      refPoolDocs.filter(col("id") === 1L), "text",
       batchId = Some(8L)))
     assert(modelCounts() != once)
   }
@@ -230,15 +230,15 @@ class RefLmSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("reflm-heal").toString
     val p = s"$dir/model"
     Ranking.writeRefLm(
-      Ranking.refLmTrain(refPoolDocs, "id", "text",
+      Ranking.refLmTrain(refPoolDocs, "text",
         col("is_ref") && col("id") === 1L), p)
     // simulate a crash after rename(live -> old), before
     // rename(staged -> live): the complete model sits at __old
     assert(new java.io.File(p).renameTo(new java.io.File(s"${p}__old")))
     Ranking.mergeIntoStoredRefLm(spark, p,
-      refPoolDocs.filter(col("id") === 2L), "id", "text")
+      refPoolDocs.filter(col("id") === 2L), "text")
     val merged = Ranking.readRefLm(spark, p)
-    val full = Ranking.refLmTrain(refPoolDocs, "id", "text", col("is_ref"))
+    val full = Ranking.refLmTrain(refPoolDocs, "text", col("is_ref"))
     assert(merged.unigrams.as[(String, Long)].collect().toSet ==
       full.unigrams.as[(String, Long)].collect().toSet)
     assert(new java.io.File(dir).list().toSet == Set("model"))
@@ -248,10 +248,10 @@ class RefLmSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("reflm-ret").toString
     val p = s"$dir/model"
     Ranking.writeRefLm(
-      Ranking.refLmTrain(refPoolDocs, "id", "text",
+      Ranking.refLmTrain(refPoolDocs, "text",
         col("is_ref") && col("id") === 1L), p)
     val ret = Ranking.mergeIntoStoredRefLmReturning(spark, p,
-      refPoolDocs.filter(col("id") === 2L), "id", "text").get
+      refPoolDocs.filter(col("id") === 2L), "text").get
     try {
       val stored = Ranking.readRefLm(spark, p)
       assert(ret.model.unigrams.as[(String, Long)].collect().toSet ==
@@ -263,7 +263,7 @@ class RefLmSpec extends AnyFunSuite {
       // and the scoring path off the returned frames matches q182's
       // one-shot arithmetic (the frames ARE the model)
       val pool = refPoolDocs.filter(!col("is_ref"))
-      val full = Ranking.refLmTrain(refPoolDocs, "id", "text", col("is_ref"))
+      val full = Ranking.refLmTrain(refPoolDocs, "text", col("is_ref"))
       assert(Ranking.refLmScore(pool, "id", "text", ret.model)
           .as[(Long, Long, Double)].collect().toSet ==
         Ranking.refLmScore(pool, "id", "text", full)
@@ -278,10 +278,10 @@ class RefLmSpec extends AnyFunSuite {
     val p = s"$dir/model"
     Ranking.writeRefLm(
       Ranking.refLmTrain(Seq((1L, "a b a b a")).toDF("id", "text"),
-        "id", "text", lit(true)), p)
+        "text", lit(true)), p)
     val stream = MemoryStream[Doc]
     val q = graft.streaming.StreamingPerplexity.ingestReference(
-      stream.toDF(), "doc_id", "text", p, s"$dir/ck")
+      stream.toDF(), "text", p, s"$dir/ck")
     try {
       stream.addData(Doc(2L, "b c"))
       q.processAllAvailable()
@@ -289,7 +289,7 @@ class RefLmSpec extends AnyFunSuite {
     val grown = Ranking.readRefLm(spark, p)
     val full = Ranking.refLmTrain(
       Seq((1L, "a b a b a"), (2L, "b c")).toDF("id", "text"),
-      "id", "text", lit(true))
+      "text", lit(true))
     assert(grown.unigrams.as[(String, Long)].collect().toSet ==
       full.unigrams.as[(String, Long)].collect().toSet)
     assert(grown.totals.as[(Long, Long)].collect().toSeq ==
@@ -297,13 +297,22 @@ class RefLmSpec extends AnyFunSuite {
   }
 
   test("readRefLm fails fast on an empty-reference artifact") {
+    // one reader, both kept checks, every stored shape: an unkeyed model
+    // of any order needs one non-null totals row with a positive token
+    // count, a keyed model a non-empty totals table
     val dir = Files.createTempDirectory("reflm-empty").toString
-    Ranking.writeRefLm(
-      Ranking.refLmTrain(refPoolDocs, "id", "text", lit(false)),
-      s"$dir/model")
-    val e = intercept[IllegalArgumentException] {
-      Ranking.readRefLm(spark, s"$dir/model")
+    val empty = Seq(
+      "order2" -> Ranking.refLmTrain(refPoolDocs, "text", lit(false)),
+      "order3" -> Ranking.refLmTrain(refPoolDocs, "text", lit(false), 3),
+      "order5" -> Ranking.refLmTrain(refPoolDocs, "text", lit(false), 5),
+      "keyed" -> Ranking.refLmTrain(refPoolDocs.withColumn("lang", lit("L1")),
+        "text", lit(false), 3, Some("lang")))
+    empty.foreach { case (name, m) =>
+      Ranking.writeRefLm(m, s"$dir/$name")
+      val e = intercept[IllegalArgumentException] {
+        Ranking.readRefLm(spark, s"$dir/$name")
+      }
+      assert(e.getMessage.contains("totals"), name)
     }
-    assert(e.getMessage.contains("totals"))
   }
 }

@@ -30,11 +30,11 @@ class Round14PropertySpec extends AnyFunSuite {
       val dir = Files.createTempDirectory(s"reflm-prop-$trial").toString
       val p = s"$dir/model"
       Ranking.writeRefLm(
-        Ranking.refLmTrain(docs, "id", "text", col("id") <= cut), p)
+        Ranking.refLmTrain(docs, "text", col("id") <= cut), p)
       Ranking.mergeIntoStoredRefLm(spark, p,
-        docs.filter(col("id") > cut), "id", "text")
+        docs.filter(col("id") > cut), "text")
       val merged = Ranking.readRefLm(spark, p)
-      val full = Ranking.refLmTrain(docs, "id", "text", lit(true))
+      val full = Ranking.refLmTrain(docs, "text", lit(true))
       assert(merged.unigrams.as[(String, Long)].collect().toSet ==
         full.unigrams.as[(String, Long)].collect().toSet, s"trial $trial unigrams")
       assert(merged.bigrams.as[(String, String, Long)].collect().toSet ==
@@ -96,15 +96,15 @@ class Round14PropertySpec extends AnyFunSuite {
     }.toDF("id", "text", "k", "is_ref")
       // every key must end up with a non-empty reference slice
       .withColumn("is_ref", col("is_ref") || col("id") <= 3L)
-    val keyed = Ranking.refLmScoreByKey(
-        docs.filter(!col("is_ref")), "id", "text", "k",
-        Ranking.refLmTrainByKey(docs, "id", "text", "k", col("is_ref")))
+    val keyed = Ranking.refLmScore(docs.filter(!col("is_ref")), "id", "text",
+        Ranking.refLmTrain(docs, "text", col("is_ref"), keyCol = Some("k")),
+        keyCol = Some("k"))
       .as[(Long, String, Long, Double)].collect()
       .map(r => r._1 -> ((r._3, r._4))).toMap
     val perKey = keys.flatMap { k =>
       Ranking.refLmScore(
           docs.filter(!col("is_ref") && col("k") === k), "id", "text",
-          Ranking.refLmTrain(docs.filter(col("k") === k), "id", "text", col("is_ref")))
+          Ranking.refLmTrain(docs.filter(col("k") === k), "text", col("is_ref")))
         .as[(Long, Long, Double)].collect()
         .map(r => r._1 -> ((r._2, r._3)))
     }.toMap
@@ -113,7 +113,7 @@ class Round14PropertySpec extends AnyFunSuite {
 
   test("scores are bounded: never above 0, never below the OOV floor") {
     val ref = Seq((1L, "a b a b c a")).toDF("id", "text")
-    val m = Ranking.refLmTrain(ref, "id", "text", lit(true))
+    val m = Ranking.refLmTrain(ref, "text", lit(true))
     // N=6, V=3 -> the floor is one unseen-context pair: 0.3 * 1/(N+V)
     val floor = BigDecimal(math.log(0.3 * 1.0 / 9))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble

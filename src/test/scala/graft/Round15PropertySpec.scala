@@ -61,8 +61,8 @@ class Round15PropertySpec extends AnyFunSuite {
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         (i, keys(rng.nextInt(keys.size)), 1L + rng.nextInt(4).toLong, lp)
       }
-      val got = Ranking.refLmCutoffsByKey(
-          rows.toDF("id", "k", "n_bigrams", "logprob"), "k")
+      val got = Ranking.refLmCutoffs(
+          rows.toDF("id", "k", "n_bigrams", "logprob"), Some("k"))
         .as[(String, Double, Double)].collect()
         .map(r => r._1 -> ((r._2, r._3))).toMap
       val expect = rows.groupBy(_._2).map { case (k, rs) =>
@@ -80,23 +80,23 @@ class Round15PropertySpec extends AnyFunSuite {
       val cut = 5 + rng.nextInt(15)
       val dir = Files.createTempDirectory(s"reflm3-prop-$trial").toString
       val p = s"$dir/model"
-      Ranking.writeRefLm3(
-        Ranking.refLm3Train(docs, "id", "text", col("id") <= cut), p)
-      Ranking.mergeIntoStoredRefLm3(spark, p,
-        docs.filter(col("id") > cut), "id", "text")
-      val merged = Ranking.readRefLm3(spark, p)
-      val full = Ranking.refLm3Train(docs, "id", "text", lit(true))
+      Ranking.writeRefLm(
+        Ranking.refLmTrain(docs, "text", col("id") <= cut, 3), p)
+      Ranking.mergeIntoStoredRefLm(spark, p,
+        docs.filter(col("id") > cut), "text")
+      val merged = Ranking.readRefLm(spark, p)
+      val full = Ranking.refLmTrain(docs, "text", lit(true), 3)
       assert(merged.trigrams.as[(String, String, String, Long)].collect().toSet ==
         full.trigrams.as[(String, String, String, Long)].collect().toSet,
         s"trial $trial trigrams")
       assert(merged.triContexts.as[(String, String, Long)].collect().toSet ==
         full.triContexts.as[(String, String, Long)].collect().toSet,
         s"trial $trial tctx")
-      assert(merged.base.bigrams.as[(String, String, Long)].collect().toSet ==
-        full.base.bigrams.as[(String, String, Long)].collect().toSet,
+      assert(merged.bigrams.as[(String, String, Long)].collect().toSet ==
+        full.bigrams.as[(String, String, Long)].collect().toSet,
         s"trial $trial bigrams")
-      assert(merged.base.totals.as[(Long, Long)].collect().toSeq ==
-        full.base.totals.as[(Long, Long)].collect().toSeq, s"trial $trial totals")
+      assert(merged.totals.as[(Long, Long)].collect().toSeq ==
+        full.totals.as[(Long, Long)].collect().toSeq, s"trial $trial totals")
     }
   }
 
@@ -105,7 +105,7 @@ class Round15PropertySpec extends AnyFunSuite {
       val docs = (1L to 30L).map { i =>
         (i, randomDoc(10), i <= 12L)
       }.toDF("id", "text", "is_ref")
-      val m = Ranking.refLm3Train(docs, "id", "text", col("is_ref"))
+      val m = Ranking.refLmTrain(docs, "text", col("is_ref"), 3)
       val got = Ranking.refLm3Score(
           docs.filter(!col("is_ref")), "id", "text", m)
         .as[(Long, Long, Double)].collect()
@@ -188,14 +188,14 @@ class Round15PropertySpec extends AnyFunSuite {
         (1000L + j, "a b c a b", l, true)
       }
       val docs = seeded.toDF("id", "text", "lang", "is_ref")
-      val km = Ranking.refLm3TrainByKey(docs, "id", "text", "lang", col("is_ref"))
-      val got = Ranking.refLm3ScoreByKey(
-          docs.filter(!col("is_ref")), "id", "text", "lang", km)
+      val km = Ranking.refLmTrain(docs, "text", col("is_ref"), 3, Some("lang"))
+      val got = Ranking.refLm3Score(
+          docs.filter(!col("is_ref")), "id", "text", km, keyCol = Some("lang"))
         .as[(Long, String, Long, Double)].collect()
         .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
       val expect = langs.flatMap { l =>
         val slice = docs.filter(col("lang") === l)
-        val m = Ranking.refLm3Train(slice, "id", "text", col("is_ref"))
+        val m = Ranking.refLmTrain(slice, "text", col("is_ref"), 3)
         Ranking.refLm3Score(slice.filter(!col("is_ref")), "id", "text", m)
           .as[(Long, Long, Double)].collect()
           .map(r => r._1 -> ((l, r._2, r._3)))

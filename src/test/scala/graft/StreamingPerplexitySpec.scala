@@ -30,7 +30,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("stream-ppl").toString
     val (modelPath, cutPath) = (s"$dir/model", s"$dir/cutoffs")
-    val model = Ranking.refLmTrain(refDocs, "id", "text", lit(true))
+    val model = Ranking.refLmTrain(refDocs, "text", lit(true))
     Ranking.writeRefLm(model, modelPath)
     // cutoffs measured on a calibration pool the batch pipeline owns
     val calib = Seq(
@@ -87,16 +87,16 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     val refs = Seq(
       (1L, "a b a b a", "L1"), (2L, "b a", "L2"), (3L, "c d c", "L3")
     ).toDF("id", "text", "lang")
-    val m = Ranking.refLmTrainByKey(refs, "id", "text", "lang", lit(true))
-    Ranking.writeKeyedRefLm(m, modelPath)
+    val m = Ranking.refLmTrain(refs, "text", lit(true), keyCol = Some("lang"))
+    Ranking.writeRefLm(m, modelPath)
     val calib = Seq(
       (10L, "a b a", "L1"), (11L, "x y", "L1"),
       (12L, "b a b", "L2"), (13L, "x y", "L2"),
       (14L, "c", "L3")
     ).toDF("id", "text", "lang")
-    Ranking.writeRefLmCutoffsByKey(
-      Ranking.refLmCutoffsByKey(
-        Ranking.refLmScoreByKey(calib, "id", "text", "lang", m), "lang"),
+    Ranking.writeRefLmCutoffs(
+      Ranking.refLmCutoffs(
+        Ranking.refLmScore(calib, "id", "text", m, keyCol = Some("lang")), Some("lang")),
       cutPath)
 
     val stream = MemoryStream[LangDoc]
@@ -130,7 +130,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     // same text, different language models: L1 scores it higher
     assert(dec(100L)._2.get > dec(101L)._2.get)
     // labels agree with the batch keyed scorer at the stored cutoffs
-    val cuts = Ranking.readRefLmCutoffsByKey(spark, cutPath)
+    val cuts = Ranking.readRefLmCutoffRows(spark, cutPath)
       .as[(String, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     Seq(100L -> "L1", 101L -> "L2").foreach { case (id, lang) =>
@@ -146,7 +146,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("stream-ppl-swap").toString
     val (modelPath, cutPath) = (s"$dir/model", s"$dir/cutoffs")
     Ranking.writeRefLm(
-      Ranking.refLmTrain(refDocs, "id", "text", lit(true)), modelPath)
+      Ranking.refLmTrain(refDocs, "text", lit(true)), modelPath)
     // generous cutoffs: everything is head
     Ranking.writeRefLmCutoffs(
       Seq((-100.0, -100.0)).toDF("v_head", "v_mid"), cutPath)
@@ -173,26 +173,26 @@ class StreamingPerplexitySpec extends AnyFunSuite {
   test("reference ingest is replay-idempotent: a re-delivered batch cannot double-count") {
     val dir = Files.createTempDirectory("stream-ppl-replay").toString
     val p = s"$dir/model"
-    Ranking.writeRefLm(Ranking.refLmTrain(refDocs, "id", "text", lit(true)), p)
+    Ranking.writeRefLm(Ranking.refLmTrain(refDocs, "text", lit(true)), p)
     val batch = Seq((10L, "b c")).toDF("doc_id", "text")
     // batch 0 merges; the crash-before-checkpoint-commit replay
     // re-delivers the SAME batch id — the applied log (swapped
     // atomically with the counts) makes it a no-op
     assert(StreamingPerplexity.ingestReferenceBatch(
-      batch, "doc_id", "text", p, batchId = 0L))
+      batch, "text", p, batchId = 0L))
     val once = Ranking.readRefLm(spark, p)
       .unigrams.as[(String, Long)].collect().toSet
     assert(!StreamingPerplexity.ingestReferenceBatch(
-      batch, "doc_id", "text", p, batchId = 0L))
+      batch, "text", p, batchId = 0L))
     assert(Ranking.readRefLm(spark, p)
       .unigrams.as[(String, Long)].collect().toSet == once)
     // counts are bit-equal to one clean delivery over the union
     val full = Ranking.refLmTrain(
-      refDocs.unionByName(batch.toDF("id", "text")), "id", "text", lit(true))
+      refDocs.unionByName(batch.toDF("id", "text")), "text", lit(true))
     assert(once == full.unigrams.as[(String, Long)].collect().toSet)
     // the next batch id still applies
     assert(StreamingPerplexity.ingestReferenceBatch(
-      Seq((11L, "c d")).toDF("doc_id", "text"), "doc_id", "text", p,
+      Seq((11L, "c d")).toDF("doc_id", "text"), "text", p,
       batchId = 1L))
   }
 
@@ -200,13 +200,13 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("stream-ppl3").toString
     val (modelPath, cutPath) = (s"$dir/model", s"$dir/cutoffs")
-    val model = Ranking.refLm3Train(refDocs, "id", "text", lit(true))
-    Ranking.writeRefLm3(model, modelPath)
+    val model = Ranking.refLmTrain(refDocs, "text", lit(true), 3)
+    Ranking.writeRefLm(model, modelPath)
     val calib = Seq(
       (10L, "a b a b"), (11L, "a b x"), (12L, "x y x")
     ).toDF("id", "text")
     Ranking.writeRefLmCutoffs(
-      Ranking.refLm3Cutoffs(Ranking.refLm3Score(calib, "id", "text", model)),
+      Ranking.refLmCutoffs(Ranking.refLm3Score(calib, "id", "text", model)),
       cutPath)
     val (vHead, vMid) = Ranking.readRefLmCutoffs(spark, cutPath)
 
@@ -236,7 +236,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     val expect = Ranking.refLm3Score(
         Seq((100L, "a b a b a"), (101L, "x y x"), (102L, "a b a x"))
           .toDF("doc_id", "text"),
-        "doc_id", "text", Ranking.readRefLm3(spark, modelPath))
+        "doc_id", "text", Ranking.readRefLm(spark, modelPath))
       .as[(Long, Long, Double)].collect().map { case (id, _, lp) =>
         id -> ((lp, if (lp >= vHead) "head" else if (lp >= vMid) "middle" else "tail"))
       }.toMap
@@ -254,15 +254,15 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     val refs = Seq(
       (1L, "a b a b a", "L1"), (2L, "b a b", "L2")
     ).toDF("id", "text", "lang")
-    val m = Ranking.refLm3TrainByKey(refs, "id", "text", "lang", lit(true))
-    Ranking.writeKeyedRefLm3(m, modelPath)
+    val m = Ranking.refLmTrain(refs, "text", lit(true), 3, Some("lang"))
+    Ranking.writeRefLm(m, modelPath)
     val calib = Seq(
       (10L, "a b a b", "L1"), (11L, "x y z", "L1"),
       (12L, "b a b a", "L2"), (13L, "x y z", "L2")
     ).toDF("id", "text", "lang")
-    Ranking.writeRefLmCutoffsByKey(
-      Ranking.refLm3CutoffsByKey(
-        Ranking.refLm3ScoreByKey(calib, "id", "text", "lang", m), "lang"),
+    Ranking.writeRefLmCutoffs(
+      Ranking.refLmCutoffs(
+        Ranking.refLm3Score(calib, "id", "text", m, keyCol = Some("lang")), Some("lang")),
       cutPath)
 
     val stream = MemoryStream[LangDoc]
@@ -286,7 +286,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     assert(dec(102L) == (("L9", None, "unmodeled")))
     assert(dec(103L) == (("L1", None, "unscored")))
     // labels agree with the batch keyed order-3 scorer at stored cutoffs
-    val cuts = Ranking.readRefLmCutoffsByKey(spark, cutPath)
+    val cuts = Ranking.readRefLmCutoffRows(spark, cutPath)
       .as[(String, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     Seq(100L -> "L1", 101L -> "L2").foreach { case (id, lang) =>
@@ -308,8 +308,8 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     val refs = Seq(
       (1L, "a b a b a", "L1"), (2L, "b a b", "L2"), (3L, "c d c d", "L3")
     ).toDF("id", "text", "lang")
-    val m = Ranking.refLm3TrainByKey(refs, "id", "text", "lang", lit(true))
-    Ranking.writeKeyedRefLm3(m, modelPath)
+    val m = Ranking.refLmTrain(refs, "text", lit(true), 3, Some("lang"))
+    Ranking.writeRefLm(m, modelPath)
     val calib = Seq(
       (10L, "a b a b", "L1"), (11L, "x y z", "L1"),
       (12L, "b a b a", "L2"), (13L, "x y z", "L2"),
@@ -317,9 +317,9 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     ).toDF("id", "text", "lang")
     // cutoffs measured under the KN scorer — the gate's thresholds
     // must come from the same smoothing it scores with
-    Ranking.writeRefLmCutoffsByKey(
-      Ranking.refLm3CutoffsByKey(
-        Ranking.refLmKn3ScoreByKey(calib, "id", "text", "lang", m), "lang"),
+    Ranking.writeRefLmCutoffs(
+      Ranking.refLmCutoffs(
+        Ranking.refLmKn3Score(calib, "id", "text", m, keyCol = Some("lang")), Some("lang")),
       cutPath)
 
     val stream = MemoryStream[LangDoc]
@@ -348,16 +348,16 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     assert(dec(105L)._1 == "L3" && dec(105L)._3 == "unmeasured"
       && dec(105L)._2.isDefined)
     // decisions carry the KN score, not the JM one
-    val knExpect = Ranking.refLmKn3ScoreByKey(
+    val knExpect = Ranking.refLmKn3Score(
         Seq((100L, "a b a b a", "L1"), (101L, "a b a b a", "L2"))
           .toDF("doc_id", "text", "lang"),
-        "doc_id", "text", "lang", Ranking.readKeyedRefLm3(spark, modelPath))
+        "doc_id", "text", Ranking.readRefLm(spark, modelPath), keyCol = Some("lang"))
       .as[(Long, String, Long, Double)].collect()
       .map(r => r._1 -> r._4).toMap
     assert(dec(100L)._2.get == knExpect(100L))
     assert(dec(101L)._2.get == knExpect(101L))
     // labels agree with the stored KN cutoffs
-    val cuts = Ranking.readRefLmCutoffsByKey(spark, cutPath)
+    val cuts = Ranking.readRefLmCutoffRows(spark, cutPath)
       .as[(String, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     Seq(100L -> "L1", 101L -> "L2").foreach { case (id, lang) =>
@@ -371,30 +371,30 @@ class StreamingPerplexitySpec extends AnyFunSuite {
   test("order-3 reference ingest is replay-idempotent across all six tables") {
     val dir = Files.createTempDirectory("stream-ppl3-replay").toString
     val p = s"$dir/model"
-    Ranking.writeRefLm3(
-      Ranking.refLm3Train(refDocs, "id", "text", lit(true)), p)
+    Ranking.writeRefLm(
+      Ranking.refLmTrain(refDocs, "text", lit(true), 3), p)
     val batch = Seq((10L, "b c b")).toDF("doc_id", "text")
     assert(StreamingPerplexity.ingestReference3Batch(
-      batch, "doc_id", "text", p, batchId = 0L))
+      batch, "text", p, batchId = 0L))
     def snap() = {
-      val m = Ranking.readRefLm3(spark, p)
-      (m.base.unigrams.as[(String, Long)].collect().toSet,
+      val m = Ranking.readRefLm(spark, p)
+      (m.unigrams.as[(String, Long)].collect().toSet,
         m.trigrams.as[(String, String, String, Long)].collect().toSet)
     }
     val once = snap()
     // the re-delivered batch id is a no-op at order 3 too
     assert(!StreamingPerplexity.ingestReference3Batch(
-      batch, "doc_id", "text", p, batchId = 0L))
+      batch, "text", p, batchId = 0L))
     assert(snap() == once)
     // counts are bit-equal to one clean retrain over the union
-    val full = Ranking.refLm3Train(
-      refDocs.unionByName(batch.toDF("id", "text")), "id", "text", lit(true))
-    assert(once._1 == full.base.unigrams.as[(String, Long)].collect().toSet)
+    val full = Ranking.refLmTrain(
+      refDocs.unionByName(batch.toDF("id", "text")), "text", lit(true), 3)
+    assert(once._1 == full.unigrams.as[(String, Long)].collect().toSet)
     assert(once._2 ==
       full.trigrams.as[(String, String, String, Long)].collect().toSet)
     // the next batch id still applies
     assert(StreamingPerplexity.ingestReference3Batch(
-      Seq((11L, "c d c")).toDF("doc_id", "text"), "doc_id", "text", p,
+      Seq((11L, "c d c")).toDF("doc_id", "text"), "text", p,
       batchId = 1L))
   }
 
@@ -409,18 +409,18 @@ class StreamingPerplexitySpec extends AnyFunSuite {
       (2L, "e d c b a e d c b a", "L2"),
       (3L, "p q r s t p q r s t", "L3")
     ).toDF("id", "text", "lang")
-    val m = Ranking.refLm5TrainByKey(refs, "id", "text", "lang", lit(true))
-    Ranking.writeKeyedRefLm5(m, modelPath)
+    val m = Ranking.refLmTrain(refs, "text", lit(true), 5, Some("lang"))
+    Ranking.writeRefLm(m, modelPath)
     val calib = Seq(
       (10L, "a b c d e a", "L1"), (11L, "v w x y z", "L1"),
       (12L, "e d c b a e", "L2"), (13L, "v w x y z", "L2"),
       (14L, "p q r", "L3")
     ).toDF("id", "text", "lang")
     // cutoffs measured at the SERVING pruning config (2/2)
-    Ranking.writeRefLmCutoffsByKey(
-      Ranking.refLm5CutoffsByKey(
-        Ranking.refLmKn5ScoreByKey(calib, "id", "text", "lang", m,
-          minCount5 = 2, minCount4 = 2), "lang"),
+    Ranking.writeRefLmCutoffs(
+      Ranking.refLmCutoffs(
+        Ranking.refLmKn5Score(calib, "id", "text", m,
+          minCount5 = 2, minCount4 = 2, keyCol = Some("lang")), Some("lang")),
       cutPath)
 
     val stream = MemoryStream[LangDoc]
@@ -448,16 +448,16 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     assert(dec(105L)._1 == "L3" && dec(105L)._3 == "unmeasured"
       && dec(105L)._2.isDefined)
     // decisions carry the PRUNED-config KN5 score
-    val knExpect = Ranking.refLmKn5ScoreByKey(
+    val knExpect = Ranking.refLmKn5Score(
         Seq((100L, "a b c d e a b", "L1"), (101L, "a b c d e a b", "L2"))
           .toDF("doc_id", "text", "lang"),
-        "doc_id", "text", "lang", Ranking.readKeyedRefLm5(spark, modelPath),
-        minCount5 = 2, minCount4 = 2)
+        "doc_id", "text", Ranking.readRefLm(spark, modelPath),
+        minCount5 = 2, minCount4 = 2, keyCol = Some("lang"))
       .as[(Long, String, Long, Double)].collect()
       .map(r => r._1 -> r._4).toMap
     assert(dec(100L)._2.get == knExpect(100L))
     assert(dec(101L)._2.get == knExpect(101L))
-    val cuts5 = Ranking.readRefLmCutoffsByKey(spark, cutPath)
+    val cuts5 = Ranking.readRefLmCutoffRows(spark, cutPath)
       .as[(String, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     Seq(100L -> "L1", 101L -> "L2").foreach { case (id, lang) =>
