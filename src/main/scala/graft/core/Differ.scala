@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The change set of a sync (reference `dbsync.go:138-142`
@@ -15,12 +16,16 @@ import org.apache.spark.sql.functions._
   * columns plus the previous DB values of the compared columns under
   * the `__db_` prefix, so a dry-run plan can render before -> after
   * (reference `UpdateOperation`, `dbsync.go:132-135`).
+  *
+  * `changes` also tallies the file's strict PK validation as the frame
+  * runs (see [[Differ.diff]]); [[pkReport]] reads it back.
   */
 final case class DiffOperations(
     changes: DataFrame,
     fileCols: Seq[String],
     dbCols: Seq[String],
-    compareCols: Seq[String]) {
+    compareCols: Seq[String],
+    tally: String) {
   private def tagged(op: String): DataFrame =
     changes.filter(col(Differ.OpCol) === op)
 
@@ -31,6 +36,17 @@ final case class DiffOperations(
 
   def toDelete: DataFrame = tagged(Differ.Delete)
     .select(dbCols.map(c => col(Differ.DbPrefix + c).as(c)): _*)
+
+  /** The file's PK validation report, tallied by the action that ran
+    * `executed` — a frame derived from [[changes]]. Read it only after
+    * that action completed: before, the tallies are still zero.
+    */
+  def pkReport(executed: DataFrame): PkValidationReport = {
+    val m = executed.queryExecution.observedMetrics
+    def tallyOf(suffix: String) = m.getOrElse(tally + suffix, throw new IllegalStateException(
+      s"primary key tally '$tally$suffix' is not in the executed plan"))
+    PrimaryKeyValidator.tallied(tallyOf(Differ.CodesTally), tallyOf(Differ.DuplicatesTally))
+  }
 }
 
 /** Set-based diff engine.
@@ -51,17 +67,34 @@ final case class DiffOperations(
   * and canonical change detection is null-safe by construction (NULL
   * renders as "").
   *
+  * The file side also carries the strict PK validation
+  * ([[PrimaryKeyValidator]]), so it costs no pass of its own: each row
+  * gets its reason code, `Dataset.observe` tallies the codes before the
+  * null/empty keys are dropped, a count over `Window.partitionBy(__pk)`
+  * gives each key's multiplicity, and a second `observe` tallies the ok
+  * rows whose key repeats. The window clusters and sorts on the join
+  * key, so it runs on the exchange and sort the join needs anyway; the
+  * dropped null/empty keys never enter its partitions. The tallies fill
+  * in whatever action runs the frame; [[DiffOperations.pkReport]] reads
+  * them back.
+  *
   * Scale notes: one join means one exchange per side, and AQE picks the
   * join strategy and partition count at runtime from actual sizes.
   */
 object Differ {
   val PkKeyCol = "__pk"
+  /** The file side's per-key row count. */
+  val KeyCountCol = "__pk_n"
   val DbPrefix = "__db_"
   /** The op tag column of [[DiffOperations.changes]]. */
   val OpCol = "__op"
   val Insert = "insert"
   val Update = "update"
   val Delete = "delete"
+
+  private[core] val CodesTally = "_codes"
+  private[core] val DuplicatesTally = "_duplicates"
+  private val tallies = new java.util.concurrent.atomic.AtomicLong()
 
   /** Adds the canonical PK join key and drops rows with a null/empty PK
     * (reference skips them: `dbsync.go:662-671`, `dbsync.go:724-728`).
@@ -70,6 +103,19 @@ object Differ {
     df.withColumn(PkKeyCol,
         Canonical.canonical(df(pk), df.schema(pk).dataType))
       .filter(col(PkKeyCol) =!= "")
+
+  /** [[withPkKey]] of the file, tallying its PK validation under the
+    * observation names `tally` + [[CodesTally]] / [[DuplicatesTally]].
+    */
+  private def validatedFile(file: DataFrame, pk: String, tally: String): DataFrame = {
+    val codes = PrimaryKeyValidator.codeTallies
+    val coded = file
+      .withColumn(PrimaryKeyValidator.CodeCol, PrimaryKeyValidator.reasonCode(file, pk))
+      .observe(tally + CodesTally, codes.head, codes.tail: _*)
+    withPkKey(coded, pk)
+      .withColumn(KeyCountCol, count(lit(1)).over(Window.partitionBy(col(PkKeyCol))))
+      .observe(tally + DuplicatesTally, PrimaryKeyValidator.duplicateTally(col(KeyCountCol)))
+  }
 
   /** Tagged diff of `file` (desired state) against `db` (current state)
     * on primary key `pk`.
@@ -87,11 +133,12 @@ object Differ {
       if (compareCols.nonEmpty) compareCols
       else file.columns.intersect(db.columns).filterNot(_ == pk).toSeq
 
+    val tally = s"__pk_tally_${tallies.incrementAndGet()}"
     val d = withPkKey(db, pk)
     val dbSide = d.select(d.columns.map(c => col(c).as(DbPrefix + c)): _*)
     val fileKey = col(PkKeyCol)
     val dbKey = col(DbPrefix + PkKeyCol)
-    val joined = withPkKey(file, pk).join(dbSide, fileKey === dbKey, "full_outer")
+    val joined = validatedFile(file, pk, tally).join(dbSide, fileKey === dbKey, "full_outer")
     val changed = cols
       .map { c =>
         Canonical.canonical(col(c), file.schema(c).dataType) =!=
@@ -103,8 +150,8 @@ object Differ {
       .withColumn(OpCol,
         when(dbKey.isNull, Insert).when(fileKey.isNull, Delete).when(changed, Update))
       .filter(col(OpCol).isNotNull)
-      .drop(PkKeyCol, DbPrefix + PkKeyCol)
+      .drop(PkKeyCol, DbPrefix + PkKeyCol, PrimaryKeyValidator.CodeCol, KeyCountCol)
 
-    DiffOperations(changes, file.columns.toSeq, db.columns.toSeq, cols)
+    DiffOperations(changes, file.columns.toSeq, db.columns.toSeq, cols, tally)
   }
 }

@@ -41,9 +41,10 @@ private final case class TableOps(
   * `dbsync.go:407-491`, `dbsync.go:931-1291`).
   *
   * The heavy relational work (scans, schema intersection, validation,
-  * the tagged diff) runs distributed through Spark; the transaction
-  * boundary stays on the driver (one JDBC connection, one commit) to
-  * preserve the reference's all-or-nothing guarantee.
+  * the tagged diff) runs distributed through Spark, in one action per
+  * diff-mode table; the transaction boundary stays on the driver (one
+  * JDBC connection, one commit) to preserve the reference's
+  * all-or-nothing guarantee.
   *
   * Read/write phasing: every table's change set is computed and
   * MATERIALIZED — one collect per table, split by op tag on the driver
@@ -61,8 +62,9 @@ private final case class TableOps(
   *   2. read current DB table; resolve the actual sync column set as
   *      file-columns ∩ db-columns ∩ configured columns; the PK must
   *      survive (`determineActualSyncColumns`, `dbsync.go:321-344`)
-  *   3. diff mode: strict PK validation (aborts on violations), then
-  *      the tagged change set, collected in one action
+  *   3. diff mode: the tagged change set, collected in one action that
+  *      also tallies strict PK validation ([[Differ.diff]]); any
+  *      violation aborts the sync after that collect, before any write
   *   4. dry-run: build the ExecutionPlan, write nothing
   *   5. else: deletes child->parent, then inserts/updates
   *      parent->child, one commit
@@ -224,13 +226,9 @@ object SyncRunner {
       }
     } catch {
       case e: Throwable =>
-        // an interrupt-aborted connection is already dead (and rolled
-        // back server-side) — the explicit rollback then throws too
-        try conn.rollback() catch { case _: Throwable => () }
+        JdbcSyncWriter.rollbackQuietly(conn)
         throw e
-    } finally {
-      try conn.close() catch { case _: Throwable => () }
-    }
+    } finally JdbcSyncWriter.closeQuietly(conn)
   }
 
   /** One table's sync columns and the file and DB frames narrowed to
@@ -247,7 +245,8 @@ object SyncRunner {
     * file-header order (`determineActualSyncColumns`,
     * `dbsync.go:321-344`); an empty file falls back to the DB column
     * list (`dbsync.go:447-459`). In diff mode the PK must survive, and
-    * no sync column may take a name the diff reserves for itself.
+    * no sync column may take a name the diff or the PK validation
+    * reserves for itself: `__pk`*, `__op`, `__db_`*.
     *
     * File column types are cast to the DB schema: the reference leans
     * on MySQL's implicit coercion at INSERT time; casting up front keeps
@@ -276,11 +275,11 @@ object SyncRunner {
         throw new IllegalArgumentException(
           s"table '${t.name}': primary key '${t.primaryKey}' not in sync columns ${cols.mkString(", ")}")
       val reserved = cols.filter(c =>
-        c == Differ.PkKeyCol || c == Differ.OpCol || c.startsWith(Differ.DbPrefix))
+        c.startsWith(Differ.PkKeyCol) || c == Differ.OpCol || c.startsWith(Differ.DbPrefix))
       if (reserved.nonEmpty)
         throw new IllegalArgumentException(
           s"table '${t.name}': column(s) ${reserved.mkString(", ")} use a name the diff " +
-            s"reserves (${Differ.PkKeyCol}, ${Differ.OpCol}, ${Differ.DbPrefix}*)")
+            s"reserves (${Differ.PkKeyCol}*, ${Differ.OpCol}, ${Differ.DbPrefix}*)")
     }
 
     val dbSel = dbLower.select(cols.map(col): _*)
@@ -303,6 +302,11 @@ object SyncRunner {
     * Delete rows are filtered out in Spark unless `deletes`; the
     * `__db_` before-values of the non-PK columns ride along only for a
     * dry run, whose plan is their only reader.
+    *
+    * The same action tallies the file's strict PK validation: a file
+    * with any invalid key throws here, with
+    * [[PrimaryKeyValidator.validateStrict]]'s message, before the
+    * caller writes anything.
     */
   private[graft] def collectChanges(
       diff: DiffOperations,
@@ -316,8 +320,10 @@ object SyncRunner {
     val before =
       if (dryRun) cols.filterNot(_ == pk).map(c => col(Differ.DbPrefix + c)) else Nil
     val changes = if (deletes) diff.changes else diff.changes.filter(op =!= Differ.Delete)
-    val byOp = changes.select((values ++ before :+ op): _*).collect().toSeq
-      .groupBy(_.getAs[String](Differ.OpCol))
+    val selected = changes.select((values ++ before :+ op): _*)
+    val collected = selected.collect().toSeq
+    PrimaryKeyValidator.requireValid(pk, diff.pkReport(selected))
+    val byOp = collected.groupBy(_.getAs[String](Differ.OpCol))
     def rows(tag: String): Seq[Row] = byOp.getOrElse(tag, Nil)
     (rows(Differ.Insert), rows(Differ.Update), rows(Differ.Delete))
   }
@@ -370,7 +376,6 @@ object SyncRunner {
             overwriteCount = rows.length.toLong)
         }
       case _ =>
-        PrimaryKeyValidator.validateStrict(fileSel, pk)
         // Change detection deliberately includes immutable columns —
         // the reference compares every sync column (dbsync.go:695-715)
         // and only excludes immutable ones from the UPDATE SET.

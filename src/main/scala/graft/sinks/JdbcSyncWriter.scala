@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.sql.{Connection, DriverManager, PreparedStatement, Timestamp}
+import java.sql.{Connection, DatabaseMetaData, DriverManager, PreparedStatement, ResultSet, Timestamp}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -49,19 +49,35 @@ object JdbcSyncWriter {
     name
   }
 
-  /** Table existence via JDBC metadata — no failed-statement probing,
-    * which on Postgres would abort the open transaction.
-    *
-    * getTables takes LIKE patterns, so `_`/`%` in the name are escaped
-    * with the driver's escape string; a `schema.table` name probes that
-    * schema, an unqualified name probes the connection's current schema
-    * (falling back to any schema only when the driver reports none) —
-    * otherwise a same-named table elsewhere would shadow the verdict.
+  /** Rolls back `conn`, swallowing a failure of the rollback itself:
+    * called while another exception propagates, which must not be
+    * replaced. An interrupt-aborted connection is already dead (and
+    * rolled back server-side), so its explicit rollback throws too.
     */
-  def tableExists(conn: Connection, table: String): Boolean = {
+  def rollbackQuietly(conn: Connection): Unit =
+    try conn.rollback() catch { case _: Throwable => () }
+
+  /** Closes `conn`, swallowing a failure (e.g. of a dead connection). */
+  def closeQuietly(conn: Connection): Unit =
+    try conn.close() catch { case _: Throwable => () }
+
+  /** Rows of a JDBC metadata query (`getTables`, `getColumns`) for
+    * `table`, read by `row`.
+    *
+    * The metadata calls take LIKE patterns, so `_`/`%` in the names are
+    * escaped with the driver's escape string. A `schema.table` name
+    * looks in that schema, an unqualified name in the connection's
+    * current schema (in any schema only when the driver reports none) —
+    * otherwise a same-named table elsewhere would answer for it. The
+    * name is tried as given, upper- and lower-cased (unquoted
+    * identifiers are case-normalized differently per catalog), and the
+    * first variant with a hit wins. Where the driver cannot escape (Derby
+    * reports an EMPTY escape string) `_` still matches any character,
+    * so every row is re-checked against the exact schema and name.
+    */
+  private def tableMetadata[A](conn: Connection, table: String)(
+      query: (DatabaseMetaData, String, String) => ResultSet)(row: ResultSet => A): Seq[A] = {
     val md = conn.getMetaData
-    // escape LIKE wildcards where the driver supports it (Derby reports
-    // an EMPTY escape string — no escaping possible there)
     val esc = Option(md.getSearchStringEscape).filter(_.nonEmpty)
     def pat(n: String): String = esc match {
       case Some(e) => n.replace(e, e + e).replace("_", e + "_").replace("%", e + "%")
@@ -72,44 +88,37 @@ object JdbcSyncWriter {
       case _ =>
         (try Option(conn.getSchema) catch { case _: Exception => None }, table)
     }
-    // the pattern over-matches when escaping is unavailable ('_' is a
-    // one-char wildcard), so every hit is re-checked EXACTLY against
-    // the requested name (case-insensitive: unquoted identifiers are
-    // case-normalized differently per catalog)
-    def probe(n: String): Boolean = {
-      val rs = md.getTables(null, schema.map(pat).orNull, pat(n), Array("TABLE"))
+    val variants: Seq[String => String] = Seq(identity, _.toUpperCase, _.toLowerCase)
+    variants.iterator.map { v =>
+      val sc = schema.map(v)
+      val n = v(name)
+      val rs = query(md, sc.map(pat).orNull, pat(n))
       try {
-        var found = false
-        while (!found && rs.next()) {
-          val tn = rs.getString("TABLE_NAME")
-          found = tn != null && tn.equalsIgnoreCase(name)
-        }
-        found
+        val buf = scala.collection.mutable.ArrayBuffer[A]()
+        while (rs.next())
+          if (rs.getString("TABLE_NAME") == n &&
+              sc.forall(_ == rs.getString("TABLE_SCHEM")))
+            buf += row(rs)
+        buf.toSeq
       } finally rs.close()
-    }
-    probe(name) || probe(name.toUpperCase) || probe(name.toLowerCase)
+    }.find(_.nonEmpty).getOrElse(Nil)
   }
 
-  /** Live table columns in ordinal order via JDBC metadata (reference
-    * `getTableColumns`, `dbsync.go:253-279`).
+  /** Table existence via JDBC metadata ([[tableMetadata]]) — no
+    * failed-statement probing, which on Postgres would abort the open
+    * transaction.
     */
-  def tableColumns(conn: Connection, table: String): Seq[String] = {
-    val rs = conn.getMetaData.getColumns(null, null, table.toUpperCase, null)
-    val buf = scala.collection.mutable.ArrayBuffer[(Int, String)]()
-    while (rs.next())
-      buf += ((rs.getInt("ORDINAL_POSITION"), rs.getString("COLUMN_NAME")))
-    rs.close()
-    if (buf.nonEmpty) buf.sortBy(_._1).map(_._2.toLowerCase).toSeq
-    else {
-      // fall back to exact-case lookup for case-sensitive catalogs
-      val rs2 = conn.getMetaData.getColumns(null, null, table, null)
-      val b2 = scala.collection.mutable.ArrayBuffer[(Int, String)]()
-      while (rs2.next())
-        b2 += ((rs2.getInt("ORDINAL_POSITION"), rs2.getString("COLUMN_NAME")))
-      rs2.close()
-      b2.sortBy(_._1).map(_._2.toLowerCase).toSeq
-    }
-  }
+  def tableExists(conn: Connection, table: String): Boolean =
+    tableMetadata(conn, table)(_.getTables(null, _, _, Array("TABLE")))(_ => ()).nonEmpty
+
+  /** Live table columns in ordinal order via JDBC metadata
+    * ([[tableMetadata]]; reference `getTableColumns`,
+    * `dbsync.go:253-279`), lower-cased.
+    */
+  def tableColumns(conn: Connection, table: String): Seq[String] =
+    tableMetadata(conn, table)(_.getColumns(null, _, _, null))(rs =>
+      rs.getInt("ORDINAL_POSITION") -> rs.getString("COLUMN_NAME").toLowerCase)
+      .sortBy(_._1).map(_._2)
 
   /** Current DB state as a DataFrame (reference `getCurrentDBData`,
     * `dbsync.go:597-679` — but a lazy scan, not a driver-side map).
@@ -312,7 +321,7 @@ object JdbcSyncWriter {
       st.close()
       n
     } catch {
-      case e: Throwable => conn2.rollback(); throw e
-    } finally conn2.close()
+      case e: Throwable => rollbackQuietly(conn2); throw e
+    } finally closeQuietly(conn2)
   }
 }

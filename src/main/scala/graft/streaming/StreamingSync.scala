@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.config.{SyncConfig, TableSyncConfig}
-import graft.core.{Differ, PrimaryKeyValidator, SyncRunner}
+import graft.core.{Differ, SyncRunner}
 import graft.sinks.JdbcSyncWriter
 
 /** Incremental sync: a Structured Streaming source feeding one
@@ -24,8 +24,10 @@ object StreamingSync {
 
   /** Apply one micro-batch as a transactional diff-sync: the batch
     * resolves and aligns to the table exactly as a file sync does
-    * ([[SyncRunner.syncFrames]]) and its change set collects in one
-    * action. Returns (inserted, updated).
+    * ([[SyncRunner.syncFrames]]), and its change set collects in one
+    * action that also validates the batch's keys
+    * ([[SyncRunner.collectChanges]]): a batch with an invalid key is
+    * rejected before any write. Returns (inserted, updated).
     */
   def applyBatchDiff(
       batch: DataFrame,
@@ -34,7 +36,6 @@ object StreamingSync {
     val conn = JdbcSyncWriter.connect(config.db)
     try {
       val s = SyncRunner.syncFrames(config.db, conn, t, batch)
-      PrimaryKeyValidator.validateStrict(s.file, s.pk)
       val (ins, upd, _) = SyncRunner.collectChanges(Differ.diff(s.file, s.db, s.pk),
         s.cols, s.pk, deletes = false, dryRun = false)
       val i = JdbcSyncWriter.bulkInsert(conn, t.name, s.cols, ins, t.timestampColumns)
@@ -43,8 +44,8 @@ object StreamingSync {
       conn.commit()
       (i, u)
     } catch {
-      case e: Throwable => conn.rollback(); throw e
-    } finally conn.close()
+      case e: Throwable => JdbcSyncWriter.rollbackQuietly(conn); throw e
+    } finally JdbcSyncWriter.closeQuietly(conn)
   }
 
   /** Start an incremental sync from a file directory: every new CSV

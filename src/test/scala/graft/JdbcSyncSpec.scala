@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.{DbConfig, SyncConfig, TableSyncConfig}
 import graft.sinks.JdbcSyncWriter
-import graft.core.SyncRunner
+import graft.core.{PrimaryKeyValidator, SyncRunner}
 
 /** End-to-end sync against embedded Derby — the JDBC seam the reference
   * exercises against MySQL (main_test.go E2E suite): diff
@@ -70,6 +70,33 @@ class JdbcSyncSpec extends AnyFunSuite {
     dropIfExists("probeXtbl")
   }
 
+  test("tableColumns: only the current schema's table, '_' matched literally") {
+    dropIfExists("other.col_t")
+    dropIfExists("col_t")
+    dropIfExists("colXt")
+    try exec("CREATE SCHEMA other") catch { case _: Exception => () }
+    exec(
+      "CREATE TABLE col_t (id INT PRIMARY KEY, name VARCHAR(20))",
+      "CREATE TABLE other.col_t (id INT PRIMARY KEY, extra VARCHAR(20), name VARCHAR(20))",
+      "CREATE TABLE colXt (k INT, wild VARCHAR(20))")
+    val c = JdbcSyncWriter.connect(db)
+    try {
+      assert(JdbcSyncWriter.tableColumns(c, "col_t") == Seq("id", "name"))
+      assert(JdbcSyncWriter.tableColumns(c, "other.col_t") == Seq("id", "extra", "name"))
+      assert(JdbcSyncWriter.tableColumns(c, "colXt") == Seq("k", "wild"))
+    } finally { c.rollback(); c.close() }
+    // the sync column list follows: `extra` exists only in OTHER.COL_T
+    exec("INSERT INTO col_t VALUES (1, 'old')")
+    val r = SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
+      name = "col_t", filePath = csvFile("id,extra,name\n1,x,new\n"), mode = "diff",
+      primaryKey = "id")))).head
+    assert((r.inserts, r.updates, r.deletes) == ((0, 1, 0)))
+    assert(query("SELECT id, name FROM col_t") == Seq(Seq(1, "new")))
+    dropIfExists("other.col_t")
+    dropIfExists("col_t")
+    dropIfExists("colXt")
+  }
+
   test("diff sync: 1 insert + 1 update + 1 delete (e2e_csv_diff shape)") {
     dropIfExists("test_table")
     exec(
@@ -114,7 +141,7 @@ class JdbcSyncSpec extends AnyFunSuite {
 
   test("sync columns named like the diff's internal columns are rejected before any write") {
     // Derby needs delimited identifiers for names starting with '_'
-    for (reserved <- Seq("__pk", "__op", "__db_name")) {
+    for (reserved <- Seq("__pk", "__pk_n", "__op", "__db_name")) {
       dropIfExists("rsv_table")
       exec(
         s"""CREATE TABLE rsv_table (id INT PRIMARY KEY, name VARCHAR(20), "${reserved.toUpperCase}" VARCHAR(20))""",
@@ -510,6 +537,25 @@ class JdbcSyncSpec extends AnyFunSuite {
     intercept[Exception](query("SELECT COUNT(*) FROM merge_t_graft_stage"))
   }
 
+  test("a failed staged MERGE reports its own error when the rollback fails too") {
+    import spark.implicits._
+    dropIfExists("mrb_t_graft_stage")
+    dropIfExists("mrb_t")
+    exec(
+      "CREATE TABLE mrb_t (id INT PRIMARY KEY, score DOUBLE CHECK (score >= 0))",
+      "INSERT INTO mrb_t VALUES (1, 1.0)")
+    // the staging table takes no CHECK, so the MERGE is what fails
+    val upserts = Seq((1, -5.0), (2, 3.0)).toDF("id", "score")
+    try {
+      val e = intercept[java.sql.SQLException](JdbcSyncWriter.mergeViaStaging(
+        upserts, DbConfig(RollbackFailingDriver.url(db.url)), "mrb_t", "id", Seq("id", "score")))
+      assert(e.getMessage.toLowerCase.contains("check constraint"), e.getMessage)
+    } finally RollbackFailingDriver.release()
+    assert(query("SELECT id, score FROM mrb_t") == Seq(Seq(1, 1.0)))
+    dropIfExists("mrb_t_graft_stage")
+    dropIfExists("mrb_t")
+  }
+
   test("custom sql function array_dot registers and evaluates") {
     graft.functions.GraftFunctions.register(spark)
     val got = spark.sql(
@@ -533,6 +579,73 @@ class JdbcSyncSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](SyncRunner.run(spark, cfg))
     assert(e.getMessage.contains("not found"))
     assert(e.getMessage.contains("does-not-exist-9z.csv"))
+  }
+
+  test("strict pk validation in the diff: validateStrict's message, dry run or not, DB untouched") {
+    // the reason-precedence input: 2 valid, 2 duplicate, 2 invalid
+    // format (leading space, tab), 2 null-or-empty (empty cell, "na")
+    dropIfExists("pvp_table")
+    exec(
+      "CREATE TABLE pvp_table (id VARCHAR(32) PRIMARY KEY, name VARCHAR(50))",
+      "INSERT INTO pvp_table VALUES ('ok1', 'keep'), ('gone', 'keep')")
+    val keys = Seq("ok1", "ok2", "dup", "dup", " pad", "tab\tx", null, "na")
+    val f = csvFile("id,name\n" +
+      keys.zipWithIndex.map { case (k, i) => s"${Option(k).getOrElse("")},n$i" }.mkString("\n") + "\n")
+    import spark.implicits._
+    val expected = intercept[IllegalArgumentException](
+      PrimaryKeyValidator.validateStrict(keys.toDF("id"), "id")).getMessage
+    assert(expected.contains("duplicate=2, invalid_format=2, null_or_empty=2 (6 of 8 rows invalid)"),
+      expected)
+    for (dryRun <- Seq(true, false)) {
+      val cfg = SyncConfig(db, Seq(TableSyncConfig(
+        name = "pvp_table", filePath = f, mode = "diff",
+        primaryKey = "id", deleteNotInFile = true)), dryRun = dryRun)
+      val e = intercept[IllegalArgumentException](SyncRunner.run(spark, cfg))
+      assert(e.getMessage == expected, s"dryRun=$dryRun")
+      assert(query("SELECT id, name FROM pvp_table ORDER BY id") ==
+        Seq(Seq("gone", "keep"), Seq("ok1", "keep")), s"dryRun=$dryRun")
+    }
+  }
+
+  test("a file whose every key is null or empty aborts, though no row reaches the join") {
+    dropIfExists("pve_table")
+    exec(
+      "CREATE TABLE pve_table (id VARCHAR(32) PRIMARY KEY, name VARCHAR(50))",
+      "INSERT INTO pve_table VALUES ('1', 'keep')")
+    val f = csvFile("id,name\n,a\n,b\n")
+    val cfg = SyncConfig(db, Seq(TableSyncConfig(
+      name = "pve_table", filePath = f, mode = "diff",
+      primaryKey = "id", deleteNotInFile = true)))
+    val e = intercept[IllegalArgumentException](SyncRunner.run(spark, cfg))
+    assert(e.getMessage ==
+      "primary key validation failed for column 'id': null_or_empty=2 (2 of 2 rows invalid)")
+    assert(query("SELECT id, name FROM pve_table") == Seq(Seq("1", "keep")))
+  }
+
+  test("a duplicate child PK aborts a two-table FK sync: neither table is written") {
+    dropIfExists("pvc_child")
+    dropIfExists("pvc_parent")
+    exec(
+      "CREATE TABLE pvc_parent (id INT PRIMARY KEY, name VARCHAR(50))",
+      "CREATE TABLE pvc_child (id INT PRIMARY KEY, pid INT REFERENCES pvc_parent(id), v VARCHAR(50))",
+      "INSERT INTO pvc_parent VALUES (1, 'p1'), (2, 'p2')",
+      "INSERT INTO pvc_child VALUES (10, 1, 'c10'), (20, 2, 'c20')")
+    // the parent file alone is a valid sync (1 insert, 1 update,
+    // 1 delete); the child file repeats key 30
+    val pf = csvFile("id,name\n1,p1x\n3,p3\n")
+    val cf = csvFile("id,pid,v\n10,1,c10\n30,3,c30\n30,3,c30b\n")
+    val cfg = SyncConfig(db, Seq(
+      TableSyncConfig(name = "pvc_child", filePath = cf, mode = "diff",
+        primaryKey = "id", deleteNotInFile = true, dependencies = Seq("pvc_parent")),
+      TableSyncConfig(name = "pvc_parent", filePath = pf, mode = "diff",
+        primaryKey = "id", deleteNotInFile = true)))
+    val e = intercept[IllegalArgumentException](SyncRunner.run(spark, cfg))
+    assert(e.getMessage ==
+      "primary key validation failed for column 'id': duplicate=2 (2 of 3 rows invalid)")
+    assert(query("SELECT id, name FROM pvc_parent ORDER BY id") ==
+      Seq(Seq(1, "p1"), Seq(2, "p2")))
+    assert(query("SELECT id, pid, v FROM pvc_child ORDER BY id") ==
+      Seq(Seq(10, 1, "c10"), Seq(20, 2, "c20")))
   }
 
   test("strict pk validation aborts the sync before any write") {

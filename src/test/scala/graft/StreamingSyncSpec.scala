@@ -90,4 +90,38 @@ class StreamingSyncSpec extends AnyFunSuite {
     assert(query("SELECT id, name FROM replay_t ORDER BY id") ==
       Seq(Seq(1, "alice"), Seq(2, "bob")))
   }
+
+  test("a failed batch reports its own error when the rollback fails too") {
+    val c = DriverManager.getConnection(db.url)
+    try c.createStatement().executeUpdate(
+      "CREATE TABLE rbs_t (id INT PRIMARY KEY, name VARCHAR(5))")
+    finally c.close()
+    val t = TableSyncConfig(
+      name = "rbs_t", filePath = "", mode = "diff", primaryKey = "id")
+    val cfg = SyncConfig(DbConfig(RollbackFailingDriver.url(db.url)), Seq(t))
+    import spark.implicits._
+    try {
+      val e = intercept[java.sql.SQLException](StreamingSync.applyBatchDiff(
+        Seq((1, "waytoolong")).toDF("id", "name"), cfg, t))
+      assert(e.getMessage.contains("truncation"), e.getMessage)
+    } finally RollbackFailingDriver.release()
+    assert(query("SELECT COUNT(*) FROM rbs_t") == Seq(Seq(0)))
+  }
+
+  test("a micro-batch with a duplicate key is rejected and the table is unchanged") {
+    val c = DriverManager.getConnection(db.url)
+    try c.createStatement().executeUpdate(
+      "CREATE TABLE dupb_t (id INT PRIMARY KEY, name VARCHAR(50))")
+    finally c.close()
+    val t = TableSyncConfig(
+      name = "dupb_t", filePath = "", mode = "diff", primaryKey = "id")
+    val cfg = SyncConfig(db, Seq(t))
+    import spark.implicits._
+    assert(StreamingSync.applyBatchDiff(Seq((1, "alice")).toDF("id", "name"), cfg, t) == ((1, 0)))
+    val e = intercept[IllegalArgumentException](StreamingSync.applyBatchDiff(
+      Seq((1, "alice2"), (2, "bob"), (2, "bob2")).toDF("id", "name"), cfg, t))
+    assert(e.getMessage ==
+      "primary key validation failed for column 'id': duplicate=2 (2 of 3 rows invalid)")
+    assert(query("SELECT id, name FROM dupb_t ORDER BY id") == Seq(Seq(1, "alice")))
+  }
 }
