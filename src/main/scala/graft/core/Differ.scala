@@ -106,12 +106,16 @@ object Differ {
 
   /** [[withPkKey]] of the file, tallying its PK validation under the
     * observation names `tally` + [[CodesTally]] / [[DuplicatesTally]].
+    * A file that already carries [[PrimaryKeyValidator.CodeCol]] (coded
+    * on its keys as read, [[PrimaryKeyValidator.coded]]) is tallied on
+    * those codes.
     */
   private def validatedFile(file: DataFrame, pk: String, tally: String): DataFrame = {
     val codes = PrimaryKeyValidator.codeTallies
-    val coded = file
-      .withColumn(PrimaryKeyValidator.CodeCol, PrimaryKeyValidator.reasonCode(file, pk))
-      .observe(tally + CodesTally, codes.head, codes.tail: _*)
+    val withCode =
+      if (file.columns.contains(PrimaryKeyValidator.CodeCol)) file
+      else file.withColumn(PrimaryKeyValidator.CodeCol, PrimaryKeyValidator.reasonCode(file, pk))
+    val coded = withCode.observe(tally + CodesTally, codes.head, codes.tail: _*)
     withPkKey(coded, pk)
       .withColumn(KeyCountCol, count(lit(1)).over(Window.partitionBy(col(PkKeyCol))))
       .observe(tally + DuplicatesTally, PrimaryKeyValidator.duplicateTally(col(KeyCountCol)))
@@ -152,6 +156,7 @@ object Differ {
       .filter(col(OpCol).isNotNull)
       .drop(PkKeyCol, DbPrefix + PkKeyCol, PrimaryKeyValidator.CodeCol, KeyCountCol)
 
-    DiffOperations(changes, file.columns.toSeq, db.columns.toSeq, cols, tally)
+    DiffOperations(changes, file.columns.toSeq.filterNot(_ == PrimaryKeyValidator.CodeCol),
+      db.columns.toSeq, cols, tally)
   }
 }

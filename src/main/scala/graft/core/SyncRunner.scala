@@ -1,6 +1,9 @@
 package graft.core
 
-import java.sql.Connection
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors, Future}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, when}
@@ -55,19 +58,33 @@ private final case class TableOps(
   * issued after the driver transaction started writing would deadlock
   * on its row locks. (The reference re-reads between phases only
   * because its reads share the single transaction's connection —
-  * `dbsync.go:1185`, `dbsync.go:1260`.)
+  * `dbsync.go:1185`, `dbsync.go:1260`.) Since no table's change set
+  * depends on another's, the tables compute at once, one task each on
+  * a pool of `min(#tables, defaultParallelism)` threads, so one table's
+  * single-partition scans do not leave the other cores idle. Only the
+  * writes are ordered by foreign key, and they stay serial on the
+  * driver connection, which no pool thread touches.
   *
-  * Lifecycle per table:
-  *   1. read file (CSV/JSON by extension; RFC3339 promotion)
-  *   2. read current DB table; resolve the actual sync column set as
-  *      file-columns ∩ db-columns ∩ configured columns; the PK must
-  *      survive (`determineActualSyncColumns`, `dbsync.go:321-344`)
-  *   3. diff mode: the tagged change set, collected in one action that
-  *      also tallies strict PK validation ([[Differ.diff]]); any
-  *      violation aborts the sync after that collect, before any write
+  * Lifecycle per run:
+  *   1. on the sync thread, one table at a time: resolve each table's
+  *      live DB columns over the driver connection
+  *   2. per table, on the pool, under one job group for the run:
+  *      a. read file (CSV/JSON by extension; RFC3339 promotion)
+  *      b. read current DB table; resolve the actual sync column set as
+  *         file-columns ∩ db-columns ∩ configured columns; the PK must
+  *         survive (`determineActualSyncColumns`, `dbsync.go:321-344`)
+  *      c. diff mode: the tagged change set, collected in one action
+  *         that also tallies strict PK validation ([[Differ.diff]]);
+  *         overwrite mode: the scale probe and collect (or snapshot)
+  *   3. await the tables in insert order; the first failure in that
+  *      order aborts the run, after the job group is cancelled, every
+  *      task has ended and every overwrite snapshot is released — so
+  *      the error a user sees does not depend on which table failed
+  *      first in time
   *   4. dry-run: build the ExecutionPlan, write nothing
   *   5. else: deletes child->parent, then inserts/updates
-  *      parent->child, one commit
+  *      parent->child, one commit; then the post-commit distributed
+  *      appends of overwrite tables above the threshold
   */
 /** The sync exceeded its configured wall-clock budget (reference
   * `main.go:59-62`: the whole run is bounded by a 5-minute context).
@@ -136,6 +153,7 @@ object SyncRunner {
     config.validated()
     validateFilePaths(config)
     val conn = JdbcSyncWriter.connect(config.db)
+    var ops = Map.empty[String, TableOps]
     try {
       val graph = new DependencyGraph(
         config.tables.map(t => t.name -> t.dependencies).toMap)
@@ -143,10 +161,12 @@ object SyncRunner {
       val byName = config.tables.map(t => t.name -> t).toMap
 
       // Compute + materialize all ops before any write (see scaladoc).
-      // Files load before the DB work, mirroring the reference's
-      // outside-the-tx file loading (`dbsync.go:936-944`).
-      val ops = insertOrder.map(n =>
-        n -> computeOps(spark, config, conn, byName(n))).toMap
+      // Each table's file loads before its DB scan, mirroring the
+      // reference's outside-the-tx file loading (`dbsync.go:936-944`).
+      // The driver connection stays on this thread, which looks up the
+      // DB columns: a JDBC Connection is not safe to share across threads.
+      val tables = insertOrder.map(n => byName(n) -> JdbcSyncWriter.tableColumns(conn, n))
+      ops = insertOrder.zip(computeAll(spark, config, tables)).toMap
 
       val results =
         if (config.dryRun) {
@@ -202,10 +222,8 @@ object SyncRunner {
       // bulkInsert. Per-partition commits: a failure here leaves the
       // overwrite table partially loaded (documented relaxation) —
       // re-running the sync restores it (deleteAll + reinsert).
-      if (config.dryRun) {
-        ops.values.foreach(_.overwriteDf.foreach(_.unpersist(false)))
-        results
-      } else {
+      if (config.dryRun) results
+      else {
         val counts = insertOrder.flatMap { n =>
           ops(n).overwriteDf.map { df =>
             val o = ops(n)
@@ -213,7 +231,6 @@ object SyncRunner {
             val withTs = extraTs.foldLeft(df)((d, c) =>
               d.withColumn(c, org.apache.spark.sql.functions.current_timestamp()))
             JdbcSyncWriter.appendDistributed(withTs, config.db, n)
-            df.unpersist(false) // snapshot pinned since the scale probe
             n -> o.overwriteCount
           }
         }.toMap
@@ -228,7 +245,80 @@ object SyncRunner {
       case e: Throwable =>
         JdbcSyncWriter.rollbackQuietly(conn)
         throw e
-    } finally JdbcSyncWriter.closeQuietly(conn)
+    } finally {
+      // the overwrite snapshots are pinned since their scale probe; the
+      // append above is their last reader, and a failed run has none
+      releaseSnapshots(ops.values)
+      JdbcSyncWriter.closeQuietly(conn)
+    }
+  }
+
+  private def releaseSnapshots(ops: Iterable[TableOps]): Unit =
+    ops.foreach(_.overwriteDf.foreach(_.unpersist(false)))
+
+  private val runs = new AtomicLong()
+
+  /** Computes every table's [[TableOps]] at once: one task per table,
+    * given with its resolved DB columns, on a daemon pool of
+    * `min(#tables, defaultParallelism)` threads. Each task runs with
+    * `spark` as its active session, under one job group per run.
+    *
+    * Results are awaited in the given (insert) order, and the first
+    * failure in THAT order is rethrown, so which table fails first in
+    * time never changes the error. On any failure — or an interrupt of
+    * the calling thread, e.g. the sync deadline — the job group is
+    * cancelled, every task ends, and the snapshots of the tables that
+    * finished are released before the error propagates.
+    */
+  private def computeAll(
+      spark: SparkSession,
+      config: SyncConfig,
+      tables: Seq[(TableSyncConfig, Seq[String])]): Seq[TableOps] = {
+    val sc = spark.sparkContext
+    val group = s"graft-sync-${runs.incrementAndGet()}"
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(tables.size, sc.defaultParallelism)), (r: Runnable) => {
+        val th = new Thread(r, s"$group-compute-${threads.size}")
+        th.setDaemon(true)
+        threads.add(th)
+        th
+      })
+    // Joins every pool thread; an interrupt meanwhile is kept for the
+    // caller's next blocking call, not lost.
+    def awaitThreads(): Unit = {
+      var interrupted = false
+      threads.forEach { th =>
+        while (th.isAlive)
+          try th.join() catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+    val tasks: Seq[Future[TableOps]] = tables.map { case (t, dbCols) =>
+      pool.submit(new Callable[TableOps] {
+        def call(): TableOps = {
+          SparkSession.setActiveSession(spark)
+          // no description: a job's description would replace its call
+          // site (`collect at SyncRunner.scala:...`) as its SQL label
+          sc.setJobGroup(group, null, interruptOnCancel = true)
+          computeOps(spark, config, t, dbCols)
+        }
+      })
+    }
+    try tasks.map(f => try f.get() catch { case e: ExecutionException => throw e.getCause })
+    catch {
+      case e: Throwable =>
+        sc.cancelJobGroup(group)
+        pool.shutdownNow() // drops the tasks not started, interrupts the rest
+        awaitThreads()
+        // a task may have submitted a job after the first cancel
+        sc.cancelJobGroup(group)
+        releaseSnapshots(tasks.filter(_.isDone).flatMap(f => Try(f.get()).toOption))
+        throw e
+    } finally {
+      pool.shutdown()
+      awaitThreads()
+    }
   }
 
   /** One table's sync columns and the file and DB frames narrowed to
@@ -237,9 +327,10 @@ object SyncRunner {
   private[graft] final case class SyncFrames(
       cols: Seq[String], pk: String, file: DataFrame, db: DataFrame)
 
-  /** Resolves the sync column set of table `t` against the live DB
-    * table and aligns `file` to it — the one resolution both the batch
-    * sync and the streaming sync diff through.
+  /** Resolves the sync column set of table `t` against its live DB
+    * columns `dbCols` ([[JdbcSyncWriter.tableColumns]], looked up by the
+    * caller on its own connection) and aligns `file` to it — the one
+    * resolution both the batch sync and the streaming sync diff through.
     *
     * Columns are file-columns ∩ db-columns ∩ configured columns in
     * file-header order (`determineActualSyncColumns`,
@@ -254,13 +345,16 @@ object SyncRunner {
     * JSON `[]`) becomes an empty relation in the DB's shape — the
     * reference's empty-file fallback: overwrite clears,
     * diff+deleteNotInFile deletes everything, plain diff is a no-op.
+    *
+    * In diff mode the file also carries the PK reason code of each key
+    * as read, before its cast ([[PrimaryKeyValidator.coded]]), for the
+    * diff's strict validation to tally.
     */
   private[graft] def syncFrames(
       db: DbConfig,
-      conn: Connection,
+      dbCols: Seq[String],
       t: TableSyncConfig,
       file: DataFrame): SyncFrames = {
-    val dbCols = JdbcSyncWriter.tableColumns(conn, t.name)
     val db0 = JdbcSyncWriter.readTable(file.sparkSession, db, t.name)
     val dbLower = db0.toDF(db0.columns.map(_.toLowerCase): _*)
 
@@ -287,7 +381,11 @@ object SyncRunner {
       if (fileCols.isEmpty) dbSel.limit(0)
       else {
         val lowered = file.toDF(fileCols: _*).select(cols.map(col): _*)
-        cols.foldLeft(lowered) { (d, c) =>
+        val coded =
+          if (t.mode == SyncConfig.ModeDiff)
+            PrimaryKeyValidator.coded(lowered, pk, dbSel.schema(pk).dataType)
+          else lowered
+        cols.foldLeft(coded) { (d, c) =>
           val target = dbSel.schema(c).dataType
           if (d.schema(c).dataType == target) d
           else d.withColumn(c, col(c).cast(target))
@@ -331,11 +429,11 @@ object SyncRunner {
   private def computeOps(
       spark: SparkSession,
       config: SyncConfig,
-      conn: Connection,
-      t: TableSyncConfig): TableOps = {
+      t: TableSyncConfig,
+      dbCols: Seq[String]): TableOps = {
 
     val file = Readers.forPath(spark, t.filePath, t.columns)
-    val SyncFrames(cols, pk, fileSel, dbSel) = syncFrames(config.db, conn, t, file)
+    val SyncFrames(cols, pk, fileSel, dbSel) = syncFrames(config.db, dbCols, t, file)
 
     t.mode match {
       case SyncConfig.ModeOverwrite =>
@@ -364,16 +462,20 @@ object SyncRunner {
             Some(fileSel.persist(
               org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           else None
-        val probeCount = snapshot.fold(-1L)(_.limit(thr.toInt + 1).count())
-        val dbN = if (config.dryRun) dbSel.count() else 0L
-        if (probeCount > thr && probeCount >= 0)
-          TableOps(t, cols, pk, Nil, Nil, Nil, Nil, dbN,
-            overwriteDf = snapshot, overwriteCount = snapshot.get.count())
-        else {
-          val rows = snapshot.getOrElse(fileSel).collect()
-          snapshot.foreach(_.unpersist(false))
-          TableOps(t, cols, pk, Nil, Nil, Nil, rows.toSeq, dbN,
-            overwriteCount = rows.length.toLong)
+        try {
+          val probeCount = snapshot.fold(-1L)(_.limit(thr.toInt + 1).count())
+          val dbN = if (config.dryRun) dbSel.count() else 0L
+          if (probeCount > thr && probeCount >= 0)
+            TableOps(t, cols, pk, Nil, Nil, Nil, Nil, dbN,
+              overwriteDf = snapshot, overwriteCount = snapshot.get.count())
+          else {
+            val rows = snapshot.getOrElse(fileSel).collect()
+            snapshot.foreach(_.unpersist(false))
+            TableOps(t, cols, pk, Nil, Nil, Nil, rows.toSeq, dbN,
+              overwriteCount = rows.length.toLong)
+          }
+        } catch {
+          case e: Throwable => snapshot.foreach(_.unpersist(false)); throw e
         }
       case _ =>
         // Change detection deliberately includes immutable columns —

@@ -35,7 +35,7 @@ object StreamingSync {
       t: TableSyncConfig): (Int, Int) = {
     val conn = JdbcSyncWriter.connect(config.db)
     try {
-      val s = SyncRunner.syncFrames(config.db, conn, t, batch)
+      val s = SyncRunner.syncFrames(config.db, JdbcSyncWriter.tableColumns(conn, t.name), t, batch)
       val (ins, upd, _) = SyncRunner.collectChanges(Differ.diff(s.file, s.db, s.pk),
         s.cols, s.pk, deletes = false, dryRun = false)
       val i = JdbcSyncWriter.bulkInsert(conn, t.name, s.cols, ins, t.timestampColumns)

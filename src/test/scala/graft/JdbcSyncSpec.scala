@@ -3,11 +3,13 @@ package graft
 import java.nio.file.{Files, Path}
 import java.sql.DriverManager
 
+import org.scalatest.concurrent.Eventually.{eventually, interval, timeout}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.config.{DbConfig, SyncConfig, TableSyncConfig}
 import graft.sinks.JdbcSyncWriter
-import graft.core.{PrimaryKeyValidator, SyncRunner}
+import graft.core.{PrimaryKeyValidator, SyncRunner, SyncTimeoutException}
 
 /** End-to-end sync against embedded Derby — the JDBC seam the reference
   * exercises against MySQL (main_test.go E2E suite): diff
@@ -659,5 +661,142 @@ class JdbcSyncSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](SyncRunner.run(spark, cfg))
     assert(e.getMessage.contains("duplicate"))
     assert(query("SELECT id FROM pv_table") == Seq(Seq("1")))
+  }
+
+  for ((key, reason) <- Seq(" 12" -> "invalid_format", "na" -> "null_or_empty"))
+    test(s"a BIGINT key is coded as read, before its cast: '$key' is $reason") {
+      // the file's key is cast to the DB's BIGINT before the diff; the
+      // code must judge the key the file holds, as validateStrict does
+      dropIfExists("pvb_table")
+      exec(
+        "CREATE TABLE pvb_table (id BIGINT PRIMARY KEY, name VARCHAR(50))",
+        "INSERT INTO pvb_table VALUES (1, 'keep')")
+      import spark.implicits._
+      val expected = intercept[IllegalArgumentException](
+        PrimaryKeyValidator.validateStrict(Seq("1", key).toDF("id"), "id")).getMessage
+      assert(expected.endsWith(s": $reason=1 (1 of 2 rows invalid)"), expected)
+      val cfg = SyncConfig(db, Seq(TableSyncConfig(
+        name = "pvb_table", filePath = csvFile(s"id,name\n1,a\n$key,b\n"), mode = "diff",
+        primaryKey = "id", deleteNotInFile = true)))
+      val e = intercept[IllegalArgumentException](SyncRunner.run(spark, cfg))
+      assert(e.getMessage == expected)
+      assert(query("SELECT id, name FROM pvb_table") == Seq(Seq(1L, "keep")))
+    }
+
+  test("a failed sync releases the overwrite snapshots it pinned, in compute or in write") {
+    // threshold 1 pins snap_a's file snapshot for the post-commit
+    // append; snap_b then fails, first in its change-set collect (a
+    // duplicate key), then in the write phase (a VARCHAR(5) overflow)
+    dropIfExists("snap_a")
+    dropIfExists("snap_b")
+    exec(
+      "CREATE TABLE snap_a (id INT PRIMARY KEY, name VARCHAR(50))",
+      "CREATE TABLE snap_b (id INT PRIMARY KEY, name VARCHAR(5))",
+      "INSERT INTO snap_a VALUES (9, 'keep')",
+      "INSERT INTO snap_b VALUES (9, 'keep')")
+    for (bFile <- Seq("id,name\n5,x\n5,y\n", "id,name\n5,waytoolong\n")) {
+      val cfg = SyncConfig(db, Seq(
+        TableSyncConfig(name = "snap_a", filePath = csvFile("id,name\n1,a\n2,b\n"),
+          mode = "overwrite"),
+        TableSyncConfig(name = "snap_b", filePath = csvFile(bFile), mode = "diff",
+          primaryKey = "id")),
+        overwriteDistributedThreshold = 1L)
+      spark.catalog.clearCache()
+      intercept[Exception](SyncRunner.run(spark, cfg))
+      assert(spark.sharedState.cacheManager.isEmpty, bFile)
+      assert(query("SELECT id, name FROM snap_a") == Seq(Seq(9, "keep")), bFile)
+      assert(query("SELECT id, name FROM snap_b") == Seq(Seq(9, "keep")), bFile)
+    }
+  }
+
+  test("tables compute at once, but the error is the first failing table's in insert order") {
+    // det_a (first in insert order) fails after the collect of a 20k-row
+    // file; det_b fails after the collect of a two-row one, sooner
+    dropIfExists("det_a")
+    dropIfExists("det_b")
+    exec(
+      "CREATE TABLE det_a (id INT PRIMARY KEY, name VARCHAR(50))",
+      "CREATE TABLE det_b (id INT PRIMARY KEY, name VARCHAR(50))",
+      "INSERT INTO det_a VALUES (1, 'keep')",
+      "INSERT INTO det_b VALUES (1, 'keep')")
+    val aFile = csvFile("id,name\n" + (1 to 20000).map(i => s"$i,n$i").mkString("\n") + "\n7,dup\n")
+    val cfg = SyncConfig(db, Seq(
+      TableSyncConfig(name = "det_b", filePath = csvFile("id,name\n2,x\n,y\n"), mode = "diff",
+        primaryKey = "id", deleteNotInFile = true),
+      TableSyncConfig(name = "det_a", filePath = aFile, mode = "diff",
+        primaryKey = "id", deleteNotInFile = true)))
+    val messages = (1 to 5).map(_ => intercept[IllegalArgumentException](SyncRunner.run(spark, cfg)).getMessage)
+    assert(messages.forall(_ ==
+      "primary key validation failed for column 'id': duplicate=2 (2 of 20001 rows invalid)"), messages)
+    assert(query("SELECT id, name FROM det_a") == Seq(Seq(1, "keep")))
+    assert(query("SELECT id, name FROM det_b") == Seq(Seq(1, "keep")))
+  }
+
+  test("a failing multi-table sync cancels the other tables' jobs and ends its pool") {
+    // job_b's rows are locked, so its scan stalls until job_a's
+    // failure cancels it
+    dropIfExists("job_a")
+    dropIfExists("job_b")
+    exec(
+      "CREATE TABLE job_a (id INT PRIMARY KEY, name VARCHAR(50))",
+      "CREATE TABLE job_b (id INT PRIMARY KEY, name VARCHAR(50))",
+      "INSERT INTO job_a VALUES (1, 'keep')",
+      "INSERT INTO job_b VALUES (1, 'keep')")
+    val locker = DriverManager.getConnection(db.url)
+    locker.setAutoCommit(false)
+    locker.createStatement().executeUpdate("UPDATE job_b SET name = 'locked' WHERE id = 1")
+    try {
+      val cfg = SyncConfig(db, Seq(
+        TableSyncConfig(name = "job_a", filePath = csvFile("id,name\n3,x\n3,y\n"), mode = "diff",
+          primaryKey = "id"),
+        TableSyncConfig(name = "job_b", filePath = csvFile("id,name\n1,changed\n"), mode = "diff",
+          primaryKey = "id")))
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalArgumentException](SyncRunner.run(spark, cfg))
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(e.getMessage.contains("duplicate=2"))
+      assert(secs < 30, s"job_b's stalled scan was waited out, not cancelled ($secs s)")
+      val pool = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+        .filter(th => th.getName.matches("graft-sync-\\d+-compute-\\d+") && th.isAlive)
+      assert(pool.isEmpty, pool.map(_.getName).mkString(", "))
+      // job ends reach the status store through the listener bus; the
+      // stalled scan cannot end on its own while the lock is held
+      eventually(timeout(10.seconds), interval(50.millis)) {
+        assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+      }
+    } finally { locker.rollback(); locker.close() }
+    assert(query("SELECT id, name FROM job_a") == Seq(Seq(1, "keep")))
+    assert(query("SELECT id, name FROM job_b") == Seq(Seq(1, "keep")))
+  }
+
+  test("a two-table sync stalled on its child table aborts at the deadline, both unchanged") {
+    dropIfExists("stall_child")
+    dropIfExists("stall_parent")
+    exec(
+      "CREATE TABLE stall_parent (id INT PRIMARY KEY, name VARCHAR(50))",
+      "CREATE TABLE stall_child (id INT PRIMARY KEY, pid INT REFERENCES stall_parent(id), " +
+        "name VARCHAR(50))",
+      "INSERT INTO stall_parent VALUES (1, 'p1'), (2, 'p2')",
+      "INSERT INTO stall_child VALUES (10, 1, 'c10'), (20, 2, 'c20')")
+    val locker = DriverManager.getConnection(db.url)
+    locker.setAutoCommit(false)
+    locker.createStatement().executeUpdate(
+      "UPDATE stall_child SET name = 'locked' WHERE id = 10")
+    try {
+      val cfg = SyncConfig(db, Seq(
+        TableSyncConfig(name = "stall_child", filePath = csvFile("id,pid,name\n10,1,x\n30,3,y\n"),
+          mode = "diff", primaryKey = "id", dependencies = Seq("stall_parent")),
+        TableSyncConfig(name = "stall_parent", filePath = csvFile("id,name\n1,p1x\n3,p3\n"),
+          mode = "diff", primaryKey = "id")),
+        timeoutSeconds = 2)
+      val t0 = System.nanoTime()
+      intercept[SyncTimeoutException](SyncRunner.run(spark, cfg))
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(secs < 45, s"deadline did not cut the Derby 60s lock wait short ($secs s)")
+    } finally { locker.rollback(); locker.close() }
+    assert(query("SELECT id, name FROM stall_parent ORDER BY id") ==
+      Seq(Seq(1, "p1"), Seq(2, "p2")))
+    assert(query("SELECT id, pid, name FROM stall_child ORDER BY id") ==
+      Seq(Seq(10, 1, "c10"), Seq(20, 2, "c20")))
   }
 }
