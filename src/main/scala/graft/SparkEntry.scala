@@ -2770,14 +2770,12 @@ object SparkEntry {
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(cp).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, mp)
-      val cuts = operators.Ranking.readRefLmCutoffRows(s, cp)
+      val cuts = operators.Ranking.readRefLmCutoffs(s, cp, Some("lang"))
       operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
           checkpointTf = true, keyCol = Some("lang"))
         .join(broadcast(cuts), Seq("lang"))
-        .withColumn("bucket",
-          when(col("logprob") >= col("v_head"), lit("head"))
-            .when(col("logprob") >= col("v_mid"), lit("middle"))
-            .otherwise(lit("tail")))
+        .withColumn("bucket", operators.Ranking.perplexityBucket(
+          col("logprob"), col("v_head"), col("v_mid")))
         .groupBy("lang", "bucket")
         .agg(count(lit(1)).as("n_docs"),
           min("logprob").as("min_logprob"),
@@ -2834,14 +2832,12 @@ object SparkEntry {
       core.SnapshotStamp.assertFresh(docs, "doc_id",
         new java.io.File(cp).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, mp)
-      val cuts = operators.Ranking.readRefLmCutoffRows(s, cp)
+      val cuts = operators.Ranking.readRefLmCutoffs(s, cp, Some("lang"))
       operators.Ranking.refLmKn5Score(docs, "doc_id", "text", m,
           minCount5 = 2, minCount4 = 2, keyCol = Some("lang"))
         .join(broadcast(cuts), Seq("lang"))
-        .withColumn("bucket",
-          when(col("logprob") >= col("v_head"), lit("head"))
-            .when(col("logprob") >= col("v_mid"), lit("middle"))
-            .otherwise(lit("tail")))
+        .withColumn("bucket", operators.Ranking.perplexityBucket(
+          col("logprob"), col("v_head"), col("v_mid")))
         .groupBy("lang", "bucket")
         .agg(count(lit(1)).as("n_docs"),
           min("logprob").as("min_logprob"),

@@ -134,7 +134,7 @@ object DocPipeline {
   object PerplexityStage {
     /** The stage fully from stored artifacts: the six keyed count
       * tables ([[Ranking.readRefLm]]) and the per-key
-      * KN-measured cutoff table ([[Ranking.readRefLmCutoffRows]] —
+      * KN-measured cutoff table ([[Ranking.readRefLmCutoffs]] —
       * measured under the KN scorer, the q201 discipline: gating KN
       * scores at JM-measured cutoffs would mislabel systematically).
       */
@@ -146,7 +146,7 @@ object DocPipeline {
         dropBuckets: Set[String] = Set("tail")): PerplexityStage =
       PerplexityStage(
         Ranking.readRefLm(spark, modelPath),
-        Ranking.readRefLmCutoffRows(spark, cutoffsPath),
+        Ranking.readRefLmCutoffs(spark, cutoffsPath, Some(keyCol)),
         keyCol, dropBuckets)
   }
 
@@ -430,9 +430,7 @@ object DocPipeline {
           checkpointTf = true, keyCol = Some(st.keyCol))
         .join(broadcast(st.cutoffs), Seq(st.keyCol))
         .withColumn("__bucket",
-          when(col("logprob") >= col("v_head"), lit("head"))
-            .when(col("logprob") >= col("v_mid"), lit("middle"))
-            .otherwise(lit("tail")))
+          Ranking.perplexityBucket(col("logprob"), col("v_head"), col("v_mid")))
         .filter(col("__bucket").isin(st.dropBuckets.toSeq: _*))
         .select(col(idCol))
       semReps.join(dropped, Seq(idCol), "left_anti")

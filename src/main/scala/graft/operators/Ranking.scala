@@ -804,7 +804,7 @@ object Ranking {
 
   /** The per-doc count column of a scored frame — `n_bigrams`,
     * `n_trigrams` or `n_5grams` by the scorer's order. */
-  private def countCol(scored: DataFrame): String = {
+  def countCol(scored: DataFrame): String = {
     val cs = scored.columns.filter(Set("n_bigrams", "n_trigrams", "n_5grams"))
     require(cs.length == 1,
       s"a scored frame carries exactly one n-gram count column, got [${cs.mkString(", ")}]")
@@ -832,6 +832,17 @@ object Ranking {
       keyCol: Option[String] = None): DataFrame =
     refLmPerplexityBucketsCached(scored, keyCol).df
 
+  /** CCNet's bucket rule, the one place it is written: `head` when
+    * `logprob ≥ vHead`, `middle` when `logprob ≥ vMid`, else `tail`.
+    * A score equal to a cutoff lands in the upper bucket. A NULL cutoff
+    * compares as unknown and falls through to `tail`, which is why
+    * [[readRefLmCutoffs]] rejects NULL cutoffs.
+    */
+  def perplexityBucket(logprob: Column, vHead: Column, vMid: Column): Column =
+    when(logprob >= vHead, lit("head"))
+      .when(logprob >= vMid, lit("middle"))
+      .otherwise(lit("tail"))
+
   /** [[refLmPerplexityBuckets]] exposing the checkpointed histogram
     * handle (the [[Dedup.CachedDF]] contract): long-lived sessions
     * calling the bucket report repeatedly must be able to release the
@@ -843,9 +854,7 @@ object Ranking {
     val hist = scoreHist(scored, ks)
     val df = joinOn(hist, broadcast(cutoffsFromHist(hist, ks)), ks)
       .select(cols(ks) ++ Seq(
-        when(col("logprob") >= col("v_head"), lit("head"))
-          .when(col("logprob") >= col("v_mid"), lit("middle"))
-          .otherwise(lit("tail")).as("bucket"),
+        perplexityBucket(col("logprob"), col("v_head"), col("v_mid")).as("bucket"),
         col("logprob"), col("nv"), col("snb")): _*)
       .groupBy(cols(ks :+ "bucket"): _*)
       .agg(sum("nv").as("n_docs"),
@@ -942,26 +951,30 @@ object Ranking {
   def writeRefLmCutoffs(cutoffs: DataFrame, path: String): Unit =
     cutoffs.coalesce(1).write.mode("overwrite").parquet(path)
 
-  /** Read back an unkeyed [[writeRefLmCutoffs]] artifact as
-    * (v_head, v_mid). Fails fast unless the table is exactly one
-    * non-null row.
+  /** Read back a [[writeRefLmCutoffs]] artifact as its
+    * ([keyCol], v_head, v_mid) rows, for a gate to join on the key (or
+    * cross-join, unkeyed). Fails fast, naming `path`, on an empty
+    * table, a NULL cutoff, a repeated or NULL key, or (unkeyed) more
+    * than one row: a repeated key would emit each of its docs once per
+    * row, and a NULL `v_mid` would send every doc below `v_head` to
+    * `tail` ([[perplexityBucket]]). The check runs on one collect of
+    * the artifact-sized table (one row per key): the same single job
+    * as an emptiness probe, where a distinct-count aggregate would
+    * add two shuffle-stage jobs.
     */
-  def readRefLmCutoffs(spark: SparkSession, path: String): (Double, Double) = {
-    val rows = spark.read.parquet(path)
-      .select(col("v_head"), col("v_mid")).collect()
-    require(rows.length == 1 && !rows(0).isNullAt(0) && !rows(0).isNullAt(1),
-      s"reference-LM cutoff artifact at $path is not exactly one non-null row")
-    (rows(0).getDouble(0), rows(0).getDouble(1))
-  }
-
-  /** Read back a keyed [[writeRefLmCutoffs]] artifact as its
-    * (keyCol, v_head, v_mid) rows. Fails fast on an empty table (a gate
-    * with no measured cutoffs must not silently label everything).
-    */
-  def readRefLmCutoffRows(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    require(!df.isEmpty, s"keyed cutoff artifact at $path is empty")
-    df
+  def readRefLmCutoffs(spark: SparkSession, path: String,
+      keyCol: Option[String] = None): DataFrame = {
+    val ks = keyCol.toSeq
+    val cuts = spark.read.parquet(path).select(cols(ks ++ Seq("v_head", "v_mid")): _*)
+    val rows = cuts.collect()
+    val keys = rows.map(r => ks.indices.map(r.get))
+    def fail(why: String) = s"reference-LM cutoff artifact at $path $why"
+    require(rows.nonEmpty, fail("is empty"))
+    require(rows.forall(r => !r.isNullAt(ks.size) && !r.isNullAt(ks.size + 1)),
+      fail("has a NULL v_head or v_mid"))
+    require(keys.distinct.length == rows.length && !keys.exists(_.contains(null)),
+      fail(keyCol.fold("has more than one row")(k => s"has a repeated or NULL $k")))
+    cuts
   }
 
   /** Run independent artifact-table writes CONCURRENTLY — the safe

@@ -126,23 +126,6 @@ object JdbcSyncWriter {
   def readTable(spark: SparkSession, db: DbConfig, table: String): DataFrame =
     spark.read.jdbc(db.url, table, db.properties)
 
-  /** Parallel partitioned JDBC read: `numPartitions` concurrent range
-    * scans over a numeric `partitionColumn`. This is how the DB side of
-    * a big-table diff avoids the single-connection bottleneck — each
-    * executor pulls its own key range (the scalability lift over the
-    * reference's full-table single SELECT, `dbsync.go:617-619`).
-    */
-  def readTablePartitioned(
-      spark: SparkSession,
-      db: DbConfig,
-      table: String,
-      partitionColumn: String,
-      lowerBound: Long,
-      upperBound: Long,
-      numPartitions: Int): DataFrame =
-    spark.read.jdbc(db.url, table, partitionColumn,
-      lowerBound, upperBound, numPartitions, db.properties)
-
   private def setParam(ps: PreparedStatement, i: Int, v: Any): Unit = v match {
     case null => ps.setObject(i, null)
     case t: Timestamp => ps.setTimestamp(i, t)

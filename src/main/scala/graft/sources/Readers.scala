@@ -107,10 +107,6 @@ object Readers {
     if (sniffTimestamps) promoteRfc3339(projected) else projected
   }
 
-  /** Dispatch on file extension (reference `GetLoader`,
-    * `loader.go:203-213`; parquet/ORC are the reference's declared
-    * future work, `README.md:351` — free on Spark).
-    */
   /** XML via Spark 4's built-in XML source: one row per `rowTag`
     * element; missing requested columns error like JSON (an absent
     * element is a schema mismatch, not a silent drop). RFC3339
@@ -134,6 +130,10 @@ object Readers {
     if (sniffTimestamps) promoteRfc3339(projected) else projected
   }
 
+  /** Dispatch on file extension (reference `GetLoader`,
+    * `loader.go:203-213`; parquet/ORC are the reference's declared
+    * future work, `README.md:351` — free on Spark).
+    */
   def forPath(
       spark: SparkSession,
       path: String,

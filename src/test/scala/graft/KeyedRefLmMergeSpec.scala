@@ -107,11 +107,11 @@ class KeyedRefLmMergeSpec extends AnyFunSuite {
       Ranking.refLmTrain(baseDocs, "text", lit(true), keyCol = Some("lang")), p)
     val batch = Seq((10L, "b c b", "L1"), (11L, "c a", "L2"))
       .toDF("doc_id", "text", "lang")
-    assert(StreamingPerplexity.ingestReferenceByKeyBatch(
-      batch, "text", "lang", p, batchId = 0L))
+    assert(StreamingPerplexity.ingestReferenceBatch(
+      batch, "text", p, batchId = 0L, keyCol = Some("lang")))
     val once = uniSet(Ranking.readRefLm(spark, p))
-    assert(!StreamingPerplexity.ingestReferenceByKeyBatch(
-      batch, "text", "lang", p, batchId = 0L))
+    assert(!StreamingPerplexity.ingestReferenceBatch(
+      batch, "text", p, batchId = 0L, keyCol = Some("lang")))
     assert(uniSet(Ranking.readRefLm(spark, p)) == once)
     // counts are bit-equal to one clean delivery over the union
     assert(once == uniSet(Ranking.refLmTrain(

@@ -119,8 +119,7 @@ class ReadersSpec extends AnyFunSuite {
     assert(Readers.json(spark, p).columns.toSeq == Seq("id", "name"))
   }
 
-  test("parquet dispatch reads with projection; partitioned jdbc read works") {
-    import java.sql.DriverManager
+  test("parquet dispatch reads with projection") {
     val dir = Files.createTempDirectory("graft-pq")
     val p = s"$dir/part.parquet"
     import spark.implicits._
@@ -130,17 +129,6 @@ class ReadersSpec extends AnyFunSuite {
     assert(df.columns.toSeq == Seq("id", "score") && df.count() == 2)
     intercept[IllegalArgumentException](
       Readers.forPath(spark, p, columns = Seq("ghost")))
-
-    val db = graft.config.DbConfig("jdbc:derby:memory:partdb;create=true")
-    val c = DriverManager.getConnection(db.url)
-    c.createStatement().executeUpdate("CREATE TABLE pt (id INT PRIMARY KEY, v INT)")
-    c.createStatement().executeUpdate(
-      "INSERT INTO pt VALUES " + (1 to 50).map(i => s"($i, ${i * 10})").mkString(", "))
-    c.close()
-    val jdbcDf = graft.sinks.JdbcSyncWriter.readTablePartitioned(
-      spark, db, "pt", "id", 1, 50, 4)
-    assert(jdbcDf.rdd.getNumPartitions == 4)
-    assert(jdbcDf.count() == 50)
   }
 
   test("orc round-trip: dispatch, projection, missing-column error") {

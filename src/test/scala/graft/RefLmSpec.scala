@@ -82,6 +82,13 @@ class RefLmSpec extends AnyFunSuite {
     assert(got == Seq(
       ("head", 4L, -2.0, -1.0, 8L),
       ("tail", 2L, -4.0, -3.0, 4L)))
+    // the rule at distinct cutoffs: a score equal to one lands above it
+    val rule = Seq(
+      (-1.0, -1.0, -2.0), (-1.5, -1.0, -2.0), (-2.0, -1.0, -2.0), (-2.5, -1.0, -2.0)
+    ).toDF("logprob", "v_head", "v_mid")
+      .select(Ranking.perplexityBucket(col("logprob"), col("v_head"), col("v_mid")))
+      .as[String].collect().toSeq
+    assert(rule == Seq("head", "middle", "middle", "tail"))
   }
 
   test("stored round-trip: deploy path reproduces inline scoring bit-for-bit") {

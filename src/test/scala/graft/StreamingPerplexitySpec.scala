@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,10 +41,12 @@ class StreamingPerplexitySpec extends AnyFunSuite {
       Ranking.refLmCutoffs(Ranking.refLmScore(calib, "id", "text", model)),
       cutPath)
     val (vHead, vMid) = Ranking.readRefLmCutoffs(spark, cutPath)
+      .as[(Double, Double)].head()
 
     val stream = MemoryStream[Doc]
     val decDir = s"$dir/decisions"
-    val q = StreamingPerplexity.start(stream.toDF(), "doc_id", "text",
+    val q = StreamingPerplexity.start(stream.toDF(), "doc_id",
+      (b, m) => Ranking.refLmScore(b, "doc_id", "text", m),
       modelPath, cutPath, decDir, s"$dir/ck")
     try {
       stream.addData(Doc(100L, "a b a b a"), Doc(101L, "x y"),
@@ -101,8 +104,9 @@ class StreamingPerplexitySpec extends AnyFunSuite {
 
     val stream = MemoryStream[LangDoc]
     val decDir = s"$dir/decisions"
-    val q = StreamingPerplexity.startByKey(stream.toDF(), "doc_id", "text",
-      "lang", modelPath, cutPath, decDir, s"$dir/ck")
+    val q = StreamingPerplexity.start(stream.toDF(), "doc_id",
+      (b, m) => Ranking.refLmScore(b, "doc_id", "text", m, keyCol = Some("lang")),
+      modelPath, cutPath, decDir, s"$dir/ck", keyCol = Some("lang"))
     try {
       stream.addData(
         LangDoc(100L, "a b a b", "L1"),   // reference-like under L1
@@ -130,7 +134,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     // same text, different language models: L1 scores it higher
     assert(dec(100L)._2.get > dec(101L)._2.get)
     // labels agree with the batch keyed scorer at the stored cutoffs
-    val cuts = Ranking.readRefLmCutoffRows(spark, cutPath)
+    val cuts = Ranking.readRefLmCutoffs(spark, cutPath, Some("lang"))
       .as[(String, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     Seq(100L -> "L1", 101L -> "L2").foreach { case (id, lang) =>
@@ -139,6 +143,51 @@ class StreamingPerplexitySpec extends AnyFunSuite {
       val expect = if (lp >= vh) "head" else if (lp >= vm) "middle" else "tail"
       assert(dec(id)._3 == expect, s"doc $id")
     }
+  }
+
+  test("a malformed cutoff artifact fails the gate fast, naming its path") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("stream-ppl-badcuts").toString
+    val refs = Seq((1L, "a b a b a", "L1"), (2L, "b a b", "L2"))
+      .toDF("id", "text", "lang")
+    val (keyedModel, plainModel) = (s"$dir/keyed_model", s"$dir/model")
+    Ranking.writeRefLm(
+      Ranking.refLmTrain(refs, "text", lit(true), keyCol = Some("lang")), keyedModel)
+    Ranking.writeRefLm(Ranking.refLmTrain(refDocs, "text", lit(true)), plainModel)
+    val batch = Seq((100L, "a b a b", "L1"), (101L, "b a b a", "L2"))
+      .toDF("doc_id", "text", "lang")
+    val ok = Some(-1.0)
+    // artifacts the measurement never writes: each must stop the gate
+    // before a decision is appended, not relabel or duplicate docs
+    val keyedBad = Seq(
+      "empty" -> Seq.empty[(String, Option[Double], Option[Double])],
+      "repeated_key" -> Seq(("L1", ok, ok), ("L1", ok, ok), ("L2", ok, ok)),
+      "null_key" -> Seq((null, ok, ok), ("L1", ok, ok), ("L2", ok, ok)),
+      "null_v_head" -> Seq(("L1", None, ok), ("L2", ok, ok)),
+      "null_v_mid" -> Seq(("L1", ok, None), ("L2", ok, ok)))
+    val plainBad = Seq(
+      "two_rows" -> Seq((ok, ok), (ok, ok)),
+      "null_v_mid_plain" -> Seq((ok, None)))
+    val cases =
+      keyedBad.map { case (name, rows) =>
+        (name, rows.toDF("lang", "v_head", "v_mid"), keyedModel, Some("lang")) } ++
+      plainBad.map { case (name, rows) =>
+        (name, rows.toDF("v_head", "v_mid"), plainModel, None) }
+    cases.foreach { case (name, cuts, modelPath, keyCol) =>
+      val (cutPath, decDir) = (s"$dir/cutoffs_$name", s"$dir/decisions_$name")
+      cuts.write.parquet(cutPath)
+      val e = intercept[IllegalArgumentException] {
+        StreamingPerplexity.gateBatch(batch, "doc_id",
+          (b, m) => Ranking.refLmScore(b, "doc_id", "text", m, keyCol = keyCol),
+          modelPath, cutPath, decDir, 0L, keyCol)
+      }
+      assert(e.getMessage.contains(cutPath), name)
+      assert(!new java.io.File(decDir).exists, name)
+    }
+    // the curation stage reads the same artifact through the same check
+    intercept[IllegalArgumentException](
+      graft.operators.DocPipeline.PerplexityStage.fromStoredArtifacts(
+        spark, keyedModel, s"$dir/cutoffs_null_v_mid", "lang"))
   }
 
   test("re-measure swap: overwriting the stored cutoffs re-tunes the next batch") {
@@ -153,7 +202,8 @@ class StreamingPerplexitySpec extends AnyFunSuite {
 
     val stream = MemoryStream[Doc]
     val decDir = s"$dir/decisions"
-    val q = StreamingPerplexity.start(stream.toDF(), "doc_id", "text",
+    val q = StreamingPerplexity.start(stream.toDF(), "doc_id",
+      (b, m) => Ranking.refLmScore(b, "doc_id", "text", m),
       modelPath, cutPath, decDir, s"$dir/ck")
     try {
       stream.addData(Doc(1L, "x y"))
@@ -199,52 +249,63 @@ class StreamingPerplexitySpec extends AnyFunSuite {
   test("order-3 gate: micro-batches score under the stored trigram model; trigram-less docs are unscored") {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("stream-ppl3").toString
-    val (modelPath, cutPath) = (s"$dir/model", s"$dir/cutoffs")
+    val modelPath = s"$dir/model"
     val model = Ranking.refLmTrain(refDocs, "text", lit(true), 3)
     Ranking.writeRefLm(model, modelPath)
     val calib = Seq(
       (10L, "a b a b"), (11L, "a b x"), (12L, "x y x")
     ).toDF("id", "text")
-    Ranking.writeRefLmCutoffs(
-      Ranking.refLmCutoffs(Ranking.refLm3Score(calib, "id", "text", model)),
-      cutPath)
-    val (vHead, vMid) = Ranking.readRefLmCutoffs(spark, cutPath)
+    // the same gate under both order-3 smoothings, each at cutoffs
+    // measured under its own scorer
+    val scorers: Seq[(String, (DataFrame, String, Ranking.RefLmModel) => DataFrame)] = Seq(
+      "jm3" -> ((df, id, m) => Ranking.refLm3Score(df, id, "text", m)),
+      "kn3" -> ((df, id, m) => Ranking.refLmKn3Score(df, id, "text", m)))
+    scorers.foreach { case (name, score) =>
+      val cutPath = s"$dir/cutoffs_$name"
+      Ranking.writeRefLmCutoffs(
+        Ranking.refLmCutoffs(score(calib, "id", model)), cutPath)
+      val (vHead, vMid) = Ranking.readRefLmCutoffs(spark, cutPath)
+        .as[(Double, Double)].head()
 
-    val stream = MemoryStream[Doc]
-    val decDir = s"$dir/decisions"
-    val q = StreamingPerplexity.start3(stream.toDF(), "doc_id", "text",
-      modelPath, cutPath, decDir, s"$dir/ck")
-    try {
-      stream.addData(Doc(100L, "a b a b a"), Doc(101L, "x y x"),
-        Doc(104L, "a b")) // a bigram but NO trigram -> unscored at order 3
-      q.processAllAvailable()
-      stream.addData(Doc(102L, "a b a x"))
-      q.processAllAvailable()
-    } finally q.stop()
+      val stream = MemoryStream[Doc]
+      val decDir = s"$dir/decisions_$name"
+      val q = StreamingPerplexity.start(stream.toDF(), "doc_id",
+        (b, m) => score(b, "doc_id", m),
+        modelPath, cutPath, decDir, s"$dir/ck_$name")
+      try {
+        stream.addData(Doc(100L, "a b a b a"), Doc(101L, "x y x"),
+          Doc(104L, "a b")) // a bigram but NO trigram -> unscored at order 3
+        q.processAllAvailable()
+        stream.addData(Doc(102L, "a b a x"))
+        q.processAllAvailable()
+      } finally q.stop()
 
-    val all = spark.read.parquet(decDir)
-      .select("doc_id", "logprob", "bucket", "batch_id")
-      .as[(Long, Option[Double], String, Long)]
-      .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(all.keySet == Set(100L, 101L, 102L, 104L))
-    assert(all(104L)._1.isEmpty && all(104L)._2 == "unscored")
-    val dec = (all - 104L).map { case (k, (lp, b, bid)) => k -> ((lp.get, b, bid)) }
-    assert(dec(100L)._3 == 0L && dec(102L)._3 == 1L)
+      val log = spark.read.parquet(decDir)
+      assert(log.columns.toSeq ==
+        Seq("doc_id", "n_trigrams", "logprob", "bucket", "batch_id"), name)
+      val all = log.select("doc_id", "logprob", "bucket", "batch_id")
+        .as[(Long, Option[Double], String, Long)]
+        .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+      assert(all.keySet == Set(100L, 101L, 102L, 104L), name)
+      assert(all(104L)._1.isEmpty && all(104L)._2 == "unscored", name)
+      val dec = (all - 104L).map { case (k, (lp, b, bid)) => k -> ((lp.get, b, bid)) }
+      assert(dec(100L)._3 == 0L && dec(102L)._3 == 1L, name)
 
-    // every decision agrees with the batch order-3 scorer at the
-    // stored cutoffs
-    val expect = Ranking.refLm3Score(
-        Seq((100L, "a b a b a"), (101L, "x y x"), (102L, "a b a x"))
-          .toDF("doc_id", "text"),
-        "doc_id", "text", Ranking.readRefLm(spark, modelPath))
-      .as[(Long, Long, Double)].collect().map { case (id, _, lp) =>
-        id -> ((lp, if (lp >= vHead) "head" else if (lp >= vMid) "middle" else "tail"))
-      }.toMap
-    dec.foreach { case (id, (lp, bucket, _)) =>
-      assert((lp, bucket) == expect(id), s"doc $id")
+      // every decision agrees with the batch order-3 scorer at the
+      // stored cutoffs
+      val expect = score(
+          Seq((100L, "a b a b a"), (101L, "x y x"), (102L, "a b a x"))
+            .toDF("doc_id", "text"),
+          "doc_id", Ranking.readRefLm(spark, modelPath))
+        .as[(Long, Long, Double)].collect().map { case (id, _, lp) =>
+          id -> ((lp, if (lp >= vHead) "head" else if (lp >= vMid) "middle" else "tail"))
+        }.toMap
+      dec.foreach { case (id, (lp, bucket, _)) =>
+        assert((lp, bucket) == expect(id), s"$name doc $id")
+      }
+      // the reference-like doc outranks the OOV doc at order 3 too
+      assert(dec(100L)._1 > dec(101L)._1, name)
     }
-    // the reference-like doc outranks the OOV doc at order 3 too
-    assert(dec(100L)._1 > dec(101L)._1)
   }
 
   test("keyed order-3 gate: per-language trigram models; unmodeled vs unscored split holds") {
@@ -267,8 +328,9 @@ class StreamingPerplexitySpec extends AnyFunSuite {
 
     val stream = MemoryStream[LangDoc]
     val decDir = s"$dir/decisions"
-    val q = StreamingPerplexity.start3ByKey(stream.toDF(), "doc_id", "text",
-      "lang", modelPath, cutPath, decDir, s"$dir/ck")
+    val q = StreamingPerplexity.start(stream.toDF(), "doc_id",
+      (b, m) => Ranking.refLm3Score(b, "doc_id", "text", m, keyCol = Some("lang")),
+      modelPath, cutPath, decDir, s"$dir/ck", keyCol = Some("lang"))
     try {
       stream.addData(
         LangDoc(100L, "a b a b a", "L1"),  // reference-like under L1
@@ -286,7 +348,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     assert(dec(102L) == (("L9", None, "unmodeled")))
     assert(dec(103L) == (("L1", None, "unscored")))
     // labels agree with the batch keyed order-3 scorer at stored cutoffs
-    val cuts = Ranking.readRefLmCutoffRows(spark, cutPath)
+    val cuts = Ranking.readRefLmCutoffs(spark, cutPath, Some("lang"))
       .as[(String, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     Seq(100L -> "L1", 101L -> "L2").foreach { case (id, lang) =>
@@ -324,8 +386,9 @@ class StreamingPerplexitySpec extends AnyFunSuite {
 
     val stream = MemoryStream[LangDoc]
     val decDir = s"$dir/decisions"
-    val q = StreamingPerplexity.startKn3ByKey(stream.toDF(), "doc_id", "text",
-      "lang", modelPath, cutPath, decDir, s"$dir/ck")
+    val q = StreamingPerplexity.start(stream.toDF(), "doc_id",
+      (b, m) => Ranking.refLmKn3Score(b, "doc_id", "text", m, keyCol = Some("lang")),
+      modelPath, cutPath, decDir, s"$dir/ck", keyCol = Some("lang"))
     try {
       stream.addData(
         LangDoc(100L, "a b a b a", "L1"),  // reference-like under L1
@@ -341,6 +404,8 @@ class StreamingPerplexitySpec extends AnyFunSuite {
       .as[(Long, String, Option[Double], String)]
       .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(dec.keySet == Set(100L, 101L, 102L, 103L, 105L))
+    assert(spark.read.parquet(decDir).columns.toSeq ==
+      Seq("doc_id", "lang", "n_trigrams", "logprob", "bucket", "batch_id"))
     assert(dec(102L) == (("L9", None, "unmodeled")))
     assert(dec(103L) == (("L1", None, "unscored")))
     // scored under a modeled key with no measured KN cutoffs:
@@ -357,7 +422,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     assert(dec(100L)._2.get == knExpect(100L))
     assert(dec(101L)._2.get == knExpect(101L))
     // labels agree with the stored KN cutoffs
-    val cuts = Ranking.readRefLmCutoffRows(spark, cutPath)
+    val cuts = Ranking.readRefLmCutoffs(spark, cutPath, Some("lang"))
       .as[(String, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     Seq(100L -> "L1", 101L -> "L2").foreach { case (id, lang) =>
@@ -374,7 +439,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     Ranking.writeRefLm(
       Ranking.refLmTrain(refDocs, "text", lit(true), 3), p)
     val batch = Seq((10L, "b c b")).toDF("doc_id", "text")
-    assert(StreamingPerplexity.ingestReference3Batch(
+    assert(StreamingPerplexity.ingestReferenceBatch(
       batch, "text", p, batchId = 0L))
     def snap() = {
       val m = Ranking.readRefLm(spark, p)
@@ -383,7 +448,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     }
     val once = snap()
     // the re-delivered batch id is a no-op at order 3 too
-    assert(!StreamingPerplexity.ingestReference3Batch(
+    assert(!StreamingPerplexity.ingestReferenceBatch(
       batch, "text", p, batchId = 0L))
     assert(snap() == once)
     // counts are bit-equal to one clean retrain over the union
@@ -393,7 +458,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     assert(once._2 ==
       full.trigrams.as[(String, String, String, Long)].collect().toSet)
     // the next batch id still applies
-    assert(StreamingPerplexity.ingestReference3Batch(
+    assert(StreamingPerplexity.ingestReferenceBatch(
       Seq((11L, "c d c")).toDF("doc_id", "text"), "text", p,
       batchId = 1L))
   }
@@ -425,9 +490,10 @@ class StreamingPerplexitySpec extends AnyFunSuite {
 
     val stream = MemoryStream[LangDoc]
     val decDir = s"$dir/decisions"
-    val q = StreamingPerplexity.startKn5ByKey(stream.toDF(), "doc_id", "text",
-      "lang", modelPath, cutPath, decDir, s"$dir/ck",
-      minCount5 = 2, minCount4 = 2)
+    val q = StreamingPerplexity.start(stream.toDF(), "doc_id",
+      (b, m) => Ranking.refLmKn5Score(b, "doc_id", "text", m,
+        minCount5 = 2, minCount4 = 2, keyCol = Some("lang")),
+      modelPath, cutPath, decDir, s"$dir/ck", keyCol = Some("lang"))
     try {
       stream.addData(
         LangDoc(100L, "a b c d e a b", "L1"),  // reference-like under L1
@@ -457,7 +523,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
       .map(r => r._1 -> r._4).toMap
     assert(dec(100L)._2.get == knExpect(100L))
     assert(dec(101L)._2.get == knExpect(101L))
-    val cuts5 = Ranking.readRefLmCutoffRows(spark, cutPath)
+    val cuts5 = Ranking.readRefLmCutoffs(spark, cutPath, Some("lang"))
       .as[(String, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     Seq(100L -> "L1", 101L -> "L2").foreach { case (id, lang) =>
