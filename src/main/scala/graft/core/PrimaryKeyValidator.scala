@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
+import graft.sources.Readers
+
 /** Validation outcome summary (reference
   * `PrimaryKeyValidationResult`, `primary_key_validator.go:19-26`).
   */
@@ -61,17 +63,17 @@ object PrimaryKeyValidator {
   }
 
   /** `df` with [[CodeCol]] coded on the key as read, and the key then
-    * cast to `keyType` only where that code is ok. A sync casts the
-    * file to the DB's types before it diffs, and coding after the cast
-    * would judge the cast: `" 12"` casts to a clean `12`, and `na` fails
-    * the whole action with a cast error instead of being counted as
-    * null-or-empty. A row with a non-ok code aborts the sync anyway, so
-    * its key becomes NULL rather than a cast failure.
+    * turned into `keyType` ([[Readers.asDbType]]: a string key per cell)
+    * only where that code is ok. A sync casts the file to the DB's types
+    * before it diffs, and coding after the cast would judge the cast:
+    * `" 12"` casts to a clean `12`, and `na` fails the whole action with
+    * a cast error instead of being counted as null-or-empty. A row with
+    * a non-ok code aborts the sync anyway, so its key becomes NULL
+    * rather than a cast failure.
     */
   def coded(df: DataFrame, pk: String, keyType: DataType): DataFrame = {
-    val withCode = df.withColumn(CodeCol, reasonCode(df, pk))
-    if (df.schema(pk).dataType == keyType) withCode
-    else withCode.withColumn(pk, when(col(CodeCol) === CodeOk, col(pk).cast(keyType)))
+    df.withColumn(CodeCol, reasonCode(df, pk))
+      .withColumn(pk, when(col(CodeCol) === CodeOk, Readers.asDbType(df, pk, keyType)))
   }
 
   /** Counts over a frame carrying [[CodeCol]], named for [[tallied]]:

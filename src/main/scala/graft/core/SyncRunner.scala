@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, when}
+import org.apache.spark.sql.functions.{col, count, when}
 
 import graft.config.{DbConfig, DependencyGraph, SyncConfig, TableSyncConfig}
 import graft.sinks.JdbcSyncWriter
@@ -69,7 +69,9 @@ private final case class TableOps(
   *   1. on the sync thread, one table at a time: resolve each table's
   *      live DB columns over the driver connection
   *   2. per table, on the pool, under one job group for the run:
-  *      a. read file (CSV/JSON by extension; RFC3339 promotion)
+  *      a. read file (CSV/JSON by extension), lazily: a CSV header is
+  *         parsed on the driver, so the read runs no Spark job, and
+  *         RFC3339 cells convert per cell in the cast to the DB's types
   *      b. read current DB table; resolve the actual sync column set as
   *         file-columns ∩ db-columns ∩ configured columns; the PK must
   *         survive (`determineActualSyncColumns`, `dbsync.go:321-344`)
@@ -341,7 +343,10 @@ object SyncRunner {
     *
     * File column types are cast to the DB schema: the reference leans
     * on MySQL's implicit coercion at INSERT time; casting up front keeps
-    * the diff and strict JDBC drivers coherent. A zero-column file (e.g.
+    * the diff and strict JDBC drivers coherent. A string column turns
+    * into its DB type per cell ([[Readers.asDbType]]), so an RFC3339
+    * cell converts as the reference's `convertValue` converts it, in the
+    * same projection as the cast. A zero-column file (e.g.
     * JSON `[]`) becomes an empty relation in the DB's shape — the
     * reference's empty-file fallback: overwrite clears,
     * diff+deleteNotInFile deletes everything, plain diff is a no-op.
@@ -380,16 +385,21 @@ object SyncRunner {
     val fileSel =
       if (fileCols.isEmpty) dbSel.limit(0)
       else {
-        val lowered = file.toDF(fileCols: _*).select(cols.map(col): _*)
+        // The observation keeps every file column in the scan, though
+        // only the sync columns are selected: the CSV parser checks a
+        // row's length against the columns it reads, so a scan pruned
+        // to the sync columns would let a short or long row through
+        // FAILFAST. Its value is not read.
+        val whole = file.toDF(fileCols: _*)
+        val allNull = fileCols.map(col(_).isNull).reduce(_ && _)
+        val lowered = whole.observe("__file_whole_rows", count(when(allNull, 1)))
+          .select(cols.map(col): _*)
+        val diffMode = t.mode == SyncConfig.ModeDiff
         val coded =
-          if (t.mode == SyncConfig.ModeDiff)
-            PrimaryKeyValidator.coded(lowered, pk, dbSel.schema(pk).dataType)
+          if (diffMode) PrimaryKeyValidator.coded(lowered, pk, dbSel.schema(pk).dataType)
           else lowered
-        cols.foldLeft(coded) { (d, c) =>
-          val target = dbSel.schema(c).dataType
-          if (d.schema(c).dataType == target) d
-          else d.withColumn(c, col(c).cast(target))
-        }
+        coded.withColumns(cols.filterNot(c => diffMode && c == pk)
+          .map(c => c -> Readers.asDbType(coded, c, dbSel.schema(c).dataType)).toMap)
       }
     SyncFrames(cols, pk, fileSel, dbSel)
   }
@@ -432,7 +442,8 @@ object SyncRunner {
       t: TableSyncConfig,
       dbCols: Seq[String]): TableOps = {
 
-    val file = Readers.forPath(spark, t.filePath, t.columns)
+    // RFC3339 converts per cell in syncFrames' cast, not by a sniffing pass
+    val file = Readers.forPath(spark, t.filePath, t.columns, sniffTimestamps = false)
     val SyncFrames(cols, pk, fileSel, dbSel) = syncFrames(config.db, dbCols, t, file)
 
     t.mode match {

@@ -1,6 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Using
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.CodecStreams
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,14 +19,18 @@ import org.apache.spark.sql.types._
   *
   *   - CSV: mandatory header, configurable delimiter, strict
   *     row-shape check (FAILFAST), requested columns missing from the
-  *     header are silently dropped (`loader.go:109-115`).
+  *     header are silently dropped (`loader.go:109-115`). The header is
+  *     parsed on the driver and every column read as a string, so the
+  *     read itself runs no Spark job.
   *   - JSON: whole-file array of objects (multiLine), requested
   *     columns missing from the data are an error (`loader.go:189-193`).
-  *   - RFC3339 sniffing (`loader.go:28-43`): string columns whose
-  *     non-null values all parse as ISO-8601 timestamps are promoted to
-  *     TimestampType. The reference sniffs per *cell*; in a columnar
-  *     engine the faithful adaptation is per *column* (a DataFrame
-  *     column has one type), applied after load.
+  *   - RFC3339 (`loader.go:28-43`): the reference converts per *cell*.
+  *     A sync does the same inside its cast to the DB's types
+  *     ([[asDbType]]), and reads its file with `sniffTimestamps = false`.
+  *     A standalone read instead promotes, after load, each string
+  *     column whose non-null values are all RFC3339 instants to
+  *     TimestampType ([[promoteRfc3339]]): a DataFrame column has one
+  *     type, and no target type is known to convert into.
   *   - extension dispatch `.csv` / `.json` (`GetLoader`,
   *     `loader.go:203-213`).
   *
@@ -28,23 +42,92 @@ object Readers {
   private val Rfc3339 =
     "^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}(\\.\\d+)?(Z|[+-]\\d{2}:\\d{2})$"
 
+  /** `c` as a timestamp where it is an RFC3339 instant, else NULL. A
+    * value of that shape that names no instant (`2023-02-30T00:00:00Z`,
+    * `T24:00:00Z`) is NULL too: Go's `time.Parse` rejects it.
+    */
+  private def rfc3339Instant(c: Column): Column =
+    when(c.rlike(Rfc3339), try_to_timestamp(c))
+
+  /** Column `c` of `df` as a value of the DB column type `t`. A string
+    * column converts per cell as the reference's `convertValue` does
+    * (`loader.go:28-43`): an RFC3339 instant becomes that timestamp and
+    * then `t` (into VARCHAR, the timestamp's rendering); any other cell
+    * is cast as it stands. An RFC3339-shaped cell that names no instant
+    * is such a cell: into VARCHAR it stays raw, into TIMESTAMP its cast
+    * fails. Any other column is cast.
+    */
+  def asDbType(df: DataFrame, c: String, t: DataType): Column =
+    df.schema(c).dataType match {
+      case StringType => coalesce(rfc3339Instant(col(c)).cast(t), col(c).cast(t))
+      case `t` => col(c)
+      case _ => col(c).cast(t)
+    }
+
   def csv(
       spark: SparkSession,
       path: String,
       delimiter: String = ",",
       columns: Seq[String] = Nil,
       sniffTimestamps: Boolean = true): DataFrame = {
-    val df = spark.read
-      .option("header", "true")
-      .option("sep", delimiter)
-      .option("mode", "FAILFAST")
-      .csv(path)
+    val options = Map("header" -> "true", "sep" -> delimiter, "mode" -> "FAILFAST")
+    val schema = StructType(csvHeader(spark, path, options).map(StructField(_, StringType)))
+    val df = spark.read.options(options).schema(schema).csv(path)
     // CSV drops requested columns that are absent, silently.
     val projected =
       if (columns.isEmpty) df
       else df.select(columns.filter(df.columns.contains).map(col): _*)
     if (sniffTimestamps) promoteRfc3339(projected) else projected
   }
+
+  /** The column names Spark's header inference gives the CSV at `path`,
+    * found on the driver with no Spark job. Inference parses the first
+    * non-blank line of the scan's first split, and a scan orders its
+    * splits largest first: so this is the first non-blank line of the
+    * largest file (ties by path), parsed by the univocity parser Spark
+    * ships under the read's own options, then made safe as Spark makes
+    * it — an empty name becomes `_c<i>`, a repeated one `<name><i>`. A
+    * leading UTF-8 BOM is dropped, as Hadoop's line reader drops it. No
+    * line at all (a 0-byte file) gives no columns.
+    */
+  private def csvHeader(
+      spark: SparkSession, path: String, options: Map[String, String]): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val parsed = new CSVOptions(options, true, spark.conf.get("spark.sql.session.timeZone"))
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+    val files = Option(fs.globStatus(p)).toSeq.flatten.flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq
+        .filter(f => f.isFile && !hidden(f.getPath.getName))
+      else Seq(st)
+    }.sortBy((f: FileStatus) => (-f.getLen, f.getPath.toString))
+    files.iterator.flatMap(f => firstLine(conf, f.getPath, parsed)).nextOption()
+      .flatMap(line => Option(new CsvParser(parsed.asParserSettings).parseLine(line)))
+      .fold(Seq.empty[String]) { row =>
+        val caseSensitive = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+        CSVUtils.makeSafeHeader(row, caseSensitive, parsed).toSeq
+      }
+  }
+
+  /** The first line of file `p` that is not blank, BOM dropped. */
+  private def firstLine(conf: Configuration, p: Path, options: CSVOptions): Option[String] =
+    Using.resource(CodecStreams.createInputStreamWithCloseResource(conf, p)) { in =>
+      val reader = new LineReader(in, conf)
+      val text = new Text()
+      var start = true
+      var found = Option.empty[String]
+      while (found.isEmpty && reader.readLine(text) > 0) {
+        val b = text.getBytes
+        val bom = start && text.getLength >= 3 &&
+          b(0) == 0xEF.toByte && b(1) == 0xBB.toByte && b(2) == 0xBF.toByte
+        val skip = if (bom) 3 else 0
+        start = false
+        val line = new String(b, skip, text.getLength - skip, options.charset)
+        if (line.trim.nonEmpty) found = Some(line)
+      }
+      found
+    }
 
   def json(
       spark: SparkSession,
@@ -132,17 +215,21 @@ object Readers {
 
   /** Dispatch on file extension (reference `GetLoader`,
     * `loader.go:203-213`; parquet/ORC are the reference's declared
-    * future work, `README.md:351` — free on Spark).
+    * future work, `README.md:351` — free on Spark). `sniffTimestamps`
+    * goes to the CSV, JSON and XML readers; a sync passes `false` and
+    * converts RFC3339 per cell instead ([[asDbType]]).
     */
   def forPath(
       spark: SparkSession,
       path: String,
       columns: Seq[String] = Nil,
-      delimiter: String = ","): DataFrame = {
+      delimiter: String = ",",
+      sniffTimestamps: Boolean = true): DataFrame = {
     val lower = path.toLowerCase
-    if (lower.endsWith(".csv")) csv(spark, path, delimiter, columns)
-    else if (lower.endsWith(".json")) json(spark, path, columns)
-    else if (lower.endsWith(".xml")) xml(spark, path, columns = columns)
+    if (lower.endsWith(".csv")) csv(spark, path, delimiter, columns, sniffTimestamps)
+    else if (lower.endsWith(".json")) json(spark, path, columns, sniffTimestamps)
+    else if (lower.endsWith(".xml"))
+      xml(spark, path, columns = columns, sniffTimestamps = sniffTimestamps)
     else if (lower.endsWith(".parquet")) columnar(spark.read.parquet(path), columns)
     else if (lower.endsWith(".orc")) columnar(spark.read.orc(path), columns)
     else throw new IllegalArgumentException(
@@ -160,9 +247,12 @@ object Readers {
     if (columns.isEmpty) df else df.select(columns.map(col): _*)
   }
 
-  /** Promote string columns that are entirely RFC3339 (ignoring nulls,
-    * with at least one value) to TimestampType. One aggregate pass over
-    * the data computes all candidates' verdicts at once.
+  /** Promote string columns that are entirely RFC3339 instants
+    * (ignoring nulls, with at least one value) to TimestampType: the
+    * per-column reading of RFC3339 that a standalone read uses (a sync
+    * converts per cell, [[asDbType]]). One aggregate pass over the data
+    * computes all candidates' verdicts at once. A column holding an
+    * RFC3339-shaped value that names no instant stays a string.
     */
   def promoteRfc3339(df: DataFrame): DataFrame = {
     val candidates = df.schema.fields.collect {
@@ -171,7 +261,7 @@ object Readers {
     if (candidates.isEmpty) return df
     val checks = candidates.flatMap { n =>
       Seq(
-        count(when(col(n).isNotNull && !col(n).rlike(Rfc3339), 1)).as(s"__bad_$n"),
+        count(when(col(n).isNotNull && rfc3339Instant(col(n)).isNull, 1)).as(s"__bad_$n"),
         count(when(col(n).isNotNull, 1)).as(s"__n_$n"))
     }
     val row = df.agg(checks.head, checks.tail: _*).collect()(0)

@@ -47,12 +47,15 @@ object Probe {
       if (sys.env.contains("PROBE_EXPLAIN"))
         fn(spark, sfDir).explain("formatted")
       // AQE rewrites (ReusedExchange, broadcast/SMJ switches, skew
-      // splits) only show on an EXECUTED Dataset instance — the
-      // initial plan above double-counts any exchange AQE later dedups
+      // splits) only show in the plan of the QueryExecution that ran —
+      // the initial plan above double-counts any exchange AQE later
+      // dedups. A write or `foreach` runs a QueryExecution of its own,
+      // so this runs the query's own, whose plan it then prints
+      // (`isFinalPlan=true`).
       if (sys.env.contains("PROBE_EXPLAIN_EXECUTED")) {
-        val df = fn(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        df.explain("formatted")
+        val qe = fn(spark, sfDir).queryExecution
+        qe.toRdd.foreach(_ => ())
+        println(qe.explainString(org.apache.spark.sql.execution.FormattedMode))
       }
       // same inter-query isolation as Bench: drop cache entries and any
       // checkpoint/persist blocks the query pinned

@@ -799,4 +799,106 @@ class JdbcSyncSpec extends AnyFunSuite {
     assert(query("SELECT id, pid, name FROM stall_child ORDER BY id") ==
       Seq(Seq(10, 1, "c10"), Seq(20, 2, "c20")))
   }
+
+  test("an RFC3339-shaped value that names no instant syncs raw into VARCHAR") {
+    // Go's time.Parse rejects both, and convertValue passes the string on
+    dropIfExists("badts_v")
+    exec("CREATE TABLE badts_v (id INT PRIMARY KEY, ts VARCHAR(40))")
+    val f = csvFile("id,ts\n1,2023-02-30T00:00:00Z\n2,2023-01-01T24:00:00Z\n")
+    val r = SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
+      name = "badts_v", filePath = f, mode = "diff", primaryKey = "id")))).head
+    assert(r.inserts == 2)
+    assert(query("SELECT id, ts FROM badts_v ORDER BY id") ==
+      Seq(Seq(1, "2023-02-30T00:00:00Z"), Seq(2, "2023-01-01T24:00:00Z")))
+  }
+
+  test("an RFC3339-shaped value that names no instant fails a TIMESTAMP column before any write") {
+    dropIfExists("badts_t")
+    exec(
+      "CREATE TABLE badts_t (id INT PRIMARY KEY, ts TIMESTAMP)",
+      "INSERT INTO badts_t VALUES (1, TIMESTAMP('2023-01-01 00:00:00'))")
+    val f = csvFile("id,ts\n1,2023-01-02T00:00:00Z\n2,2023-02-30T00:00:00Z\n")
+    val e = intercept[Exception](SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
+      name = "badts_t", filePath = f, mode = "diff", primaryKey = "id",
+      deleteNotInFile = true)))))
+    assert(e.getMessage.contains("CAST_INVALID_INPUT") &&
+      e.getMessage.contains("2023-02-30T00:00:00Z"), e.getMessage)
+    assert(query("SELECT id, ts FROM badts_t") ==
+      Seq(Seq(1, java.sql.Timestamp.valueOf("2023-01-01 00:00:00"))))
+  }
+
+  test("RFC3339 converts per cell: a mixed column keeps its plain cells raw") {
+    // the reference's convertValue, per cell; a per-column sniff would
+    // leave the mixed column all raw. All-RFC3339 and plain columns keep
+    // the per-column result.
+    dropIfExists("mixts_t")
+    exec("CREATE TABLE mixts_t (id INT PRIMARY KEY, mixed VARCHAR(40), alls VARCHAR(40), " +
+      "plain VARCHAR(40), ts TIMESTAMP)")
+    val f = csvFile("id,mixed,alls,plain,ts\n" +
+      "1,2023-12-25T16:30:45+09:00,2023-12-25T15:30:45Z,a,2023-12-25T15:30:45Z\n" +
+      "2,not a time,2023-12-26T10:00:00.5Z,2023-12-25 15:30:45,2023-12-26 10:00:00\n")
+    SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
+      name = "mixts_t", filePath = f, mode = "diff", primaryKey = "id"))))
+    assert(query("SELECT id, mixed, alls, plain, ts FROM mixts_t ORDER BY id") == Seq(
+      Seq(1, "2023-12-25 07:30:45", "2023-12-25 15:30:45", "a",
+        java.sql.Timestamp.valueOf("2023-12-25 15:30:45")),
+      Seq(2, "not a time", "2023-12-26 10:00:00.5", "2023-12-25 15:30:45",
+        java.sql.Timestamp.valueOf("2023-12-26 10:00:00"))))
+  }
+
+  test("a short or long row fails the sync before any write, in diff and overwrite mode") {
+    // `extra` is not a sync column, yet every header column is checked
+    dropIfExists("shape_t")
+    exec("CREATE TABLE shape_t (id INT PRIMARY KEY, name VARCHAR(20))",
+      "INSERT INTO shape_t VALUES (9, 'keep')")
+    for (mode <- Seq("diff", "overwrite"); bad <- Seq("2,b", "2,y,b,z")) {
+      val f = csvFile(s"id,extra,name\n1,x,a\n$bad\n")
+      val e = intercept[Exception](SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
+        name = "shape_t", filePath = f, mode = mode, primaryKey = "id",
+        deleteNotInFile = mode == "diff")))))
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(_.getMessage.contains("MALFORMED_CSV_RECORD")), s"$mode $bad: $e")
+      assert(query("SELECT id, name FROM shape_t") == Seq(Seq(9, "keep")), s"$mode $bad")
+    }
+  }
+
+  test("a 0-byte CSV follows empty-file semantics") {
+    dropIfExists("zb_t")
+    exec("CREATE TABLE zb_t (id INT PRIMARY KEY, name VARCHAR(20))",
+      "INSERT INTO zb_t VALUES (1, 'a'), (2, 'b')")
+    val f = csvFile("")
+    val noop = SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
+      name = "zb_t", filePath = f, mode = "diff", primaryKey = "id")))).head
+    assert((noop.inserts, noop.updates, noop.deletes) == ((0, 0, 0)))
+    val r = SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
+      name = "zb_t", filePath = f, mode = "diff", primaryKey = "id",
+      deleteNotInFile = true)))).head
+    assert(r.deletes == 2)
+    assert(query("SELECT COUNT(*) FROM zb_t").head.head == 0)
+  }
+
+  test("a two-table FK diff sync runs at most 6 Spark jobs") {
+    // one change-set collect per table, 3 jobs each under AQE (two
+    // shuffle map stages and the result): the file reads add none
+    dropIfExists("jobs_child")
+    dropIfExists("jobs_parent")
+    exec(
+      "CREATE TABLE jobs_parent (id INT PRIMARY KEY, name VARCHAR(50), ts TIMESTAMP)",
+      "CREATE TABLE jobs_child (id INT PRIMARY KEY, pid INT REFERENCES jobs_parent(id), " +
+        "v VARCHAR(50))",
+      "INSERT INTO jobs_parent VALUES (1, 'p1', TIMESTAMP('2023-01-01 00:00:00')), " +
+        "(2, 'p2', TIMESTAMP('2023-01-01 00:00:00'))",
+      "INSERT INTO jobs_child VALUES (10, 1, 'c10'), (20, 2, 'c20')")
+    val cfg = SyncConfig(db, Seq(
+      TableSyncConfig(name = "jobs_child", filePath = csvFile("id,pid,v\n10,1,c10x\n30,3,c30\n"),
+        mode = "diff", primaryKey = "id", deleteNotInFile = true, dependencies = Seq("jobs_parent")),
+      TableSyncConfig(name = "jobs_parent",
+        filePath = csvFile("id,name,ts\n1,p1,2023-01-01T00:00:00Z\n3,p3,2023-06-01T12:00:00Z\n"),
+        mode = "diff", primaryKey = "id", deleteNotInFile = true)))
+    val jobs = JobCount(spark, "graft-sync-")(SyncRunner.run(spark, cfg))
+    assert(jobs <= 6, s"$jobs jobs")
+    assert(query("SELECT id FROM jobs_parent ORDER BY id") == Seq(Seq(1), Seq(3)))
+    assert(query("SELECT id, pid, v FROM jobs_child ORDER BY id") ==
+      Seq(Seq(10, 1, "c10x"), Seq(30, 3, "c30")))
+  }
 }

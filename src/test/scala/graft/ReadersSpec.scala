@@ -38,6 +38,50 @@ class ReadersSpec extends AnyFunSuite {
     assert(df.schema("label").dataType == StringType)
   }
 
+  test("csv: an RFC3339-shaped value that names no instant keeps its column a string") {
+    val p = tmpFile("bad.csv", "id,at\n1,2023-12-25T15:30:45Z\n2,2023-02-30T00:00:00Z\n")
+    val df = Readers.csv(spark, p)
+    assert(df.schema("at").dataType == StringType)
+    assert(df.collect().map(_.getString(1)).toSeq == Seq("2023-12-25T15:30:45Z", "2023-02-30T00:00:00Z"))
+  }
+
+  // (case, files as name -> content, delimiter)
+  private val headerCases: Seq[(String, Seq[(String, String)], String)] = Seq(
+    ("a quoted field holding the delimiter", Seq("q.csv" -> "\"a,b\",c\n1,2\n"), ","),
+    ("duplicate names and an empty name", Seq("d.csv" -> "id,name,,Name,name\n1,a,b,c,d\n"), ","),
+    ("a ';' delimiter", Seq("s.csv" -> "id;\"x;y\";name\n1;2;a\n"), ";"),
+    ("a leading blank line", Seq("l.csv" -> "\n  \nid,name\n1,a\n"), ","),
+    ("a BOM", Seq("bom.csv" -> "\uFEFFid,name\n1,a\n"), ","),
+    ("a BOM on a blank first line", Seq("bomb.csv" -> "\uFEFF\nid,name\n1,a\n"), ","),
+    ("a header-only file", Seq("h.csv" -> "id,name\n"), ","),
+    ("a 0-byte file", Seq("z.csv" -> ""), ","),
+    // the larger file sorts last by name: inference reads the largest first
+    ("a two-file directory of unequal sizes",
+      Seq("a.csv" -> "x,y\n1,2\n", "b.csv" -> "id,name,extra\n1,a,b\n2,c,d\n"), ","))
+
+  for ((label, files, delimiter) <- headerCases)
+    test(s"csv: the driver-parsed header is Spark's own, for $label") {
+      val dir = Files.createTempDirectory("graft-header")
+      files.foreach { case (n, content) => Files.writeString(dir.resolve(n), content) }
+      val p = if (files.size == 1) dir.resolve(files.head._1).toString else dir.toString
+      val spark0 = spark.read.option("header", "true").option("sep", delimiter).csv(p)
+      val ours = Readers.csv(spark, p, delimiter = delimiter, sniffTimestamps = false)
+      assert(ours.columns.toSeq == spark0.columns.toSeq)
+      // a directory's smaller file has a short row, which FAILFAST rejects
+      if (files.size > 1) assert(ours.columns.toSeq == Seq("id", "name", "extra"))
+      else assert(ours.collect().toSeq == spark0.collect().toSeq)
+    }
+
+  test("csv: the read itself runs no Spark job") {
+    val p = tmpFile("j.csv", "id,at,label\n1,2023-12-25T15:30:45Z,x\n")
+    val sc = spark.sparkContext
+    val jobs = JobCount(spark, "readers-header-read") {
+      sc.setJobGroup("readers-header-read", null)
+      try Readers.csv(spark, p, sniffTimestamps = false).columns finally sc.clearJobGroup()
+    }
+    assert(jobs == 0)
+  }
+
   test("xml: rowTag records, projection, RFC3339 promotion, dispatch") {
     val p = tmpFile("r.xml",
       """<rows>

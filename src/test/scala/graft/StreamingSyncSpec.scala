@@ -124,4 +124,19 @@ class StreamingSyncSpec extends AnyFunSuite {
       "primary key validation failed for column 'id': duplicate=2 (2 of 3 rows invalid)")
     assert(query("SELECT id, name FROM dupb_t ORDER BY id") == Seq(Seq(1, "alice")))
   }
+
+  test("a micro-batch converts RFC3339 per cell, as a file sync does") {
+    val c = DriverManager.getConnection(db.url)
+    try c.createStatement().executeUpdate(
+      "CREATE TABLE mixb_t (id INT PRIMARY KEY, v VARCHAR(40))")
+    finally c.close()
+    val t = TableSyncConfig(
+      name = "mixb_t", filePath = "", mode = "diff", primaryKey = "id")
+    import spark.implicits._
+    val batch = Seq((1, "2023-12-25T16:30:45+09:00"), (2, "plain"), (3, "2023-02-30T00:00:00Z"))
+      .toDF("id", "v")
+    assert(StreamingSync.applyBatchDiff(batch, SyncConfig(db, Seq(t)), t) == ((3, 0)))
+    assert(query("SELECT id, v FROM mixb_t ORDER BY id") == Seq(
+      Seq(1, "2023-12-25 07:30:45"), Seq(2, "plain"), Seq(3, "2023-02-30T00:00:00Z")))
+  }
 }
