@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, count, when}
+import org.apache.spark.sql.functions.{col, when}
 
 import graft.config.{DbConfig, DependencyGraph, SyncConfig, TableSyncConfig}
 import graft.sinks.JdbcSyncWriter
@@ -385,15 +385,7 @@ object SyncRunner {
     val fileSel =
       if (fileCols.isEmpty) dbSel.limit(0)
       else {
-        // The observation keeps every file column in the scan, though
-        // only the sync columns are selected: the CSV parser checks a
-        // row's length against the columns it reads, so a scan pruned
-        // to the sync columns would let a short or long row through
-        // FAILFAST. Its value is not read.
-        val whole = file.toDF(fileCols: _*)
-        val allNull = fileCols.map(col(_).isNull).reduce(_ && _)
-        val lowered = whole.observe("__file_whole_rows", count(when(allNull, 1)))
-          .select(cols.map(col): _*)
+        val lowered = file.toDF(fileCols: _*).select(cols.map(col): _*)
         val diffMode = t.mode == SyncConfig.ModeDiff
         val coded =
           if (diffMode) PrimaryKeyValidator.coded(lowered, pk, dbSel.schema(pk).dataType)

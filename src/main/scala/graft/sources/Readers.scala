@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.util.Using
 
 import com.univocity.parsers.csv.CsvParser
@@ -18,7 +20,8 @@ import org.apache.spark.sql.types._
   * (`loader.go:76-213`):
   *
   *   - CSV: mandatory header, configurable delimiter, strict
-  *     row-shape check (FAILFAST), requested columns missing from the
+  *     row-shape check (FAILFAST over every header column, whichever
+  *     columns are requested), requested columns missing from the
   *     header are silently dropped (`loader.go:109-115`). The header is
   *     parsed on the driver and every column read as a string, so the
   *     read itself runs no Spark job.
@@ -39,6 +42,11 @@ import org.apache.spark.sql.types._
   */
 object Readers {
 
+  /** Names each CSV read's row-shape observation apart: two reads
+    * observed under one name cannot meet in one plan.
+    */
+  private val observations = new AtomicLong
+
   private val Rfc3339 =
     "^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}(\\.\\d+)?(Z|[+-]\\d{2}:\\d{2})$"
 
@@ -50,17 +58,21 @@ object Readers {
     when(c.rlike(Rfc3339), try_to_timestamp(c))
 
   /** Column `c` of `df` as a value of the DB column type `t`. A string
-    * column converts per cell as the reference's `convertValue` does
-    * (`loader.go:28-43`): an RFC3339 instant becomes that timestamp and
-    * then `t` (into VARCHAR, the timestamp's rendering); any other cell
-    * is cast as it stands. An RFC3339-shaped cell that names no instant
-    * is such a cell: into VARCHAR it stays raw, into TIMESTAMP its cast
-    * fails. Any other column is cast.
+    * column going into a string, date or timestamp column converts per
+    * cell as the reference's `convertValue` does (`loader.go:28-43`): an
+    * RFC3339 instant becomes that timestamp and then `t` (into VARCHAR,
+    * the timestamp's rendering); any other cell is cast as it stands. An
+    * RFC3339-shaped cell that names no instant is such a cell: into
+    * VARCHAR it stays raw, into TIMESTAMP its cast fails. Into any other
+    * type (BOOLEAN, a number, binary) a string is cast as it stands: a
+    * timestamp has no BOOLEAN or binary cast under ANSI, and an instant
+    * is no number. Any other column is cast.
     */
   def asDbType(df: DataFrame, c: String, t: DataType): Column =
-    df.schema(c).dataType match {
-      case StringType => coalesce(rfc3339Instant(col(c)).cast(t), col(c).cast(t))
-      case `t` => col(c)
+    (df.schema(c).dataType, t) match {
+      case (StringType, StringType | DateType | TimestampType | TimestampNTZType) =>
+        coalesce(rfc3339Instant(col(c)).cast(t), col(c).cast(t))
+      case (`t`, _) => col(c)
       case _ => col(c).cast(t)
     }
 
@@ -72,7 +84,15 @@ object Readers {
       sniffTimestamps: Boolean = true): DataFrame = {
     val options = Map("header" -> "true", "sep" -> delimiter, "mode" -> "FAILFAST")
     val schema = StructType(csvHeader(spark, path, options).map(StructField(_, StringType)))
-    val df = spark.read.options(options).schema(schema).csv(path)
+    val read = spark.read.options(options).schema(schema).csv(path)
+    // The parser checks a row's length against the columns it reads, so
+    // a scan pruned to fewer columns would let a short or long row
+    // through FAILFAST. An observation over every header column keeps
+    // them all in the scan; its value is not read.
+    val df =
+      if (schema.isEmpty) read
+      else read.observe(s"__csv_whole_rows_${observations.getAndIncrement()}",
+        count(when(schema.fieldNames.map(read(_).isNull).reduce(_ && _), 1)))
     // CSV drops requested columns that are absent, silently.
     val projected =
       if (columns.isEmpty) df

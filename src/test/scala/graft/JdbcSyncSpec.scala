@@ -847,19 +847,41 @@ class JdbcSyncSpec extends AnyFunSuite {
   }
 
   test("a short or long row fails the sync before any write, in diff and overwrite mode") {
-    // `extra` is not a sync column, yet every header column is checked
+    // `extra` is not a sync column, yet every header column is checked,
+    // also when the table names its columns
     dropIfExists("shape_t")
     exec("CREATE TABLE shape_t (id INT PRIMARY KEY, name VARCHAR(20))",
       "INSERT INTO shape_t VALUES (9, 'keep')")
-    for (mode <- Seq("diff", "overwrite"); bad <- Seq("2,b", "2,y,b,z")) {
+    for (mode <- Seq("diff", "overwrite"); bad <- Seq("2,b", "2,y,b,z");
+         columns <- Seq(Nil, Seq("id", "name"))) {
       val f = csvFile(s"id,extra,name\n1,x,a\n$bad\n")
       val e = intercept[Exception](SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
-        name = "shape_t", filePath = f, mode = mode, primaryKey = "id",
+        name = "shape_t", filePath = f, mode = mode, primaryKey = "id", columns = columns,
         deleteNotInFile = mode == "diff")))))
       val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-      assert(causes.exists(_.getMessage.contains("MALFORMED_CSV_RECORD")), s"$mode $bad: $e")
-      assert(query("SELECT id, name FROM shape_t") == Seq(Seq(9, "keep")), s"$mode $bad")
+      assert(causes.exists(_.getMessage.contains("MALFORMED_CSV_RECORD")),
+        s"$mode $bad $columns: $e")
+      assert(query("SELECT id, name FROM shape_t") == Seq(Seq(9, "keep")), s"$mode $bad $columns")
     }
+  }
+
+  test("a CSV column casts as it stands into BOOLEAN and numeric columns") {
+    // the RFC3339 conversion feeds string, date and timestamp columns
+    // only: a timestamp has no BOOLEAN cast, and it is not a number
+    dropIfExists("boolcsv_t")
+    exec("CREATE TABLE boolcsv_t (id INT PRIMARY KEY, flag BOOLEAN, n INT)")
+    val r = SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
+      name = "boolcsv_t", filePath = csvFile("id,flag,n\n1,true,5\n2,false,6\n"),
+      mode = "diff", primaryKey = "id")))).head
+    assert(r.inserts == 2)
+    assert(query("SELECT id, flag, n FROM boolcsv_t ORDER BY id") ==
+      Seq(Seq(1, true, 5), Seq(2, false, 6)))
+    val e = intercept[Exception](SyncRunner.run(spark, SyncConfig(db, Seq(TableSyncConfig(
+      name = "boolcsv_t", filePath = csvFile("id,flag,n\n1,true,5\n3,true,2023-01-01T00:00:00Z\n"),
+      mode = "diff", primaryKey = "id")))))
+    assert(e.getMessage.contains("CAST_INVALID_INPUT") &&
+      e.getMessage.contains("2023-01-01T00:00:00Z"), e.getMessage)
+    assert(query("SELECT id FROM boolcsv_t ORDER BY id") == Seq(Seq(1), Seq(2)))
   }
 
   test("a 0-byte CSV follows empty-file semantics") {
