@@ -830,14 +830,9 @@ object SparkEntry {
       val m = operators.Ranking.refLmTrain(
         docs, "text", col("source").isin("src0", "src1"), keyCol = Some("lang"))
       operators.Ranking.writeRefLm(m, mp)
-      // Cached variant: release the score histogram once the cutoff
-      // artifact is written — the builder runs once per JVM but the
-      // CachedDF discipline keeps the block from pinning regardless
-      val cuts = operators.Ranking.refLmCutoffsCached(
+      operators.Ranking.writeRefLmCutoffs(operators.Ranking.refLmCutoffs(
         operators.Ranking.refLmScore(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
-      try operators.Ranking.writeRefLmCutoffs(cuts.df, cp)
-      finally cuts.unpersist()
+          checkpointTf = true, keyCol = Some("lang")), Some("lang")), cp)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       (mp, cp)
     }
@@ -858,11 +853,9 @@ object SparkEntry {
       val m = operators.Ranking.refLmTrain(
         docs, "text", col("source").isin("src0", "src1"), 3, Some("lang"))
       operators.Ranking.writeRefLm(m, mp)
-      val cuts = operators.Ranking.refLmCutoffsCached(
+      operators.Ranking.writeRefLmCutoffs(operators.Ranking.refLmCutoffs(
         operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
-      try operators.Ranking.writeRefLmCutoffs(cuts.df, cp)
-      finally cuts.unpersist()
+          checkpointTf = true, keyCol = Some("lang")), Some("lang")), cp)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       (mp, cp)
     }
@@ -885,11 +878,9 @@ object SparkEntry {
       val docs = T(s, dir, "documents")
       val (mp, _) = keyedRefLm3Artifacts(s, dir)
       val m = operators.Ranking.readRefLm(s, mp)
-      val cuts = operators.Ranking.refLmCutoffsCached(
+      operators.Ranking.writeRefLmCutoffs(operators.Ranking.refLmCutoffs(
         operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
-      try operators.Ranking.writeRefLmCutoffs(cuts.df, cp)
-      finally cuts.unpersist()
+          checkpointTf = true, keyCol = Some("lang")), Some("lang")), cp)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       cp
     }
@@ -932,11 +923,9 @@ object SparkEntry {
       val docs = T(s, dir, "documents")
       val mp = keyedRefLm5Artifact(s, dir)
       val m = operators.Ranking.readRefLm(s, mp)
-      val cuts = operators.Ranking.refLmCutoffsCached(
+      operators.Ranking.writeRefLmCutoffs(operators.Ranking.refLmCutoffs(
         operators.Ranking.refLmKn5Score(docs, "doc_id", "text", m,
-          minCount5 = 2, minCount4 = 2, keyCol = Some("lang")), Some("lang"))
-      try operators.Ranking.writeRefLmCutoffs(cuts.df, cp)
-      finally cuts.unpersist()
+          minCount5 = 2, minCount4 = 2, keyCol = Some("lang")), Some("lang")), cp)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       cp
     }
@@ -2507,15 +2496,18 @@ object SparkEntry {
     // trains nothing. Same oracle as q182: the stored-artifact read
     // must reproduce the inline-trained buckets bit-for-bit
     "q183_stored_reflm" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
       val p = refLmArtifact(s, dir)
       // the full production deploy: verify the stored counts are a
-      // measurement of THIS corpus before serving them
-      core.SnapshotStamp.assertFresh(docs, "doc_id", s"$p/stamp")
+      // measurement of THIS corpus before serving them — the stamp is
+      // observed on the scorer's own tokenize checkpoint, and checked
+      // before any scoring job ([[core.SnapshotStamp.observeFresh]])
+      val (docs, fresh) = core.SnapshotStamp.observeFresh(
+        T(s, dir, "documents"), "doc_id", s"$p/stamp")
       val m = operators.Ranking.readRefLm(s, p)
-      operators.Ranking.refLmPerplexityBuckets(
-        operators.Ranking.refLmScore(docs, "doc_id", "text", m,
-          checkpointTf = true))
+      val scored = operators.Ranking.refLmScore(docs, "doc_id", "text", m,
+        checkpointTf = true)
+      fresh()
+      operators.Ranking.refLmPerplexityBuckets(scored)
     }),
 
     // ---- extension: per-language perplexity buckets (one-pass multi-LM) ----
@@ -2569,14 +2561,14 @@ object SparkEntry {
     // (freshness-stamped), nothing retrains, and the bucket report
     // must reproduce the inline-trained q185 bit-for-bit
     "q189_stored_reflm_by_lang" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
       val (mp, _) = keyedRefLmArtifacts(s, dir)
-      core.SnapshotStamp.assertFresh(docs, "doc_id",
-        new java.io.File(mp).getParent + "/stamp")
+      val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
+        "doc_id", new java.io.File(mp).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, mp)
-      operators.Ranking.refLmPerplexityBuckets(
-        operators.Ranking.refLmScore(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
+      val scored = operators.Ranking.refLmScore(docs, "doc_id", "text", m,
+        checkpointTf = true, keyCol = Some("lang"))
+      fresh()
+      operators.Ranking.refLmPerplexityBuckets(scored, Some("lang"))
     }),
 
     // ---- extension: incremental reference-LM update ----
@@ -2633,14 +2625,14 @@ object SparkEntry {
     // (freshness-stamped), trains nothing, and must reproduce the
     // inline-trained buckets bit-for-bit (shared oracle)
     "q192_stored_reflm3" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
       val p = refLm3Artifact(s, dir)
-      core.SnapshotStamp.assertFresh(docs, "doc_id",
-        new java.io.File(p).getParent + "/stamp")
+      val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
+        "doc_id", new java.io.File(p).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, p)
-      operators.Ranking.refLmPerplexityBuckets(
-        operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
-          checkpointTf = true))
+      val scored = operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
+        checkpointTf = true)
+      fresh()
+      operators.Ranking.refLmPerplexityBuckets(scored)
     }),
 
     // ---- extension: per-language ORDER-3 perplexity buckets ----
@@ -2664,14 +2656,14 @@ object SparkEntry {
     // tables (freshness-stamped), nothing retrains, bit-identical
     // buckets (shared oracle)
     "q196_stored_reflm3_by_lang" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
       val (mp, _) = keyedRefLm3Artifacts(s, dir)
-      core.SnapshotStamp.assertFresh(docs, "doc_id",
-        new java.io.File(mp).getParent + "/stamp")
+      val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
+        "doc_id", new java.io.File(mp).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, mp)
-      operators.Ranking.refLmPerplexityBuckets(
-        operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
+      val scored = operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
+        checkpointTf = true, keyCol = Some("lang"))
+      fresh()
+      operators.Ranking.refLmPerplexityBuckets(scored, Some("lang"))
     }),
 
     // ---- extension: curation with the SEMANTIC-dedup stage ----
@@ -2701,14 +2693,14 @@ object SparkEntry {
     // continuation tables are groupBys over the stored counts, so the
     // bit-equal incremental merge carries over to KN unchanged)
     "q198_kn3_buckets" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
       val p = refLm3Artifact(s, dir)
-      core.SnapshotStamp.assertFresh(docs, "doc_id",
-        new java.io.File(p).getParent + "/stamp")
+      val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
+        "doc_id", new java.io.File(p).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, p)
-      operators.Ranking.refLmPerplexityBuckets(
-        operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
-          checkpointTf = true))
+      val scored = operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
+        checkpointTf = true)
+      fresh()
+      operators.Ranking.refLmPerplexityBuckets(scored)
     }),
 
     // ---- extension: keyed ORDER-3 incremental lifecycle ----
@@ -2745,14 +2737,14 @@ object SparkEntry {
     // tables q196 deploys from (freshness-stamped; nothing retrains,
     // no new artifact format)
     "q200_kn3_by_lang" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
       val (mp, _) = keyedRefLm3Artifacts(s, dir)
-      core.SnapshotStamp.assertFresh(docs, "doc_id",
-        new java.io.File(mp).getParent + "/stamp")
+      val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
+        "doc_id", new java.io.File(mp).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, mp)
-      operators.Ranking.refLmPerplexityBuckets(
-        operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
+      val scored = operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
+        checkpointTf = true, keyCol = Some("lang"))
+      fresh()
+      operators.Ranking.refLmPerplexityBuckets(scored, Some("lang"))
     }),
 
     // ---- extension: KN deploy at STORED per-language cutoffs ----
@@ -2764,16 +2756,16 @@ object SparkEntry {
     // ranks, so the rollup is bit-identical to q200's (shared oracle):
     // the deploy must reproduce exactly what the measurement saw
     "q201_stored_kn3_gate" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
       val (mp, _) = keyedRefLm3Artifacts(s, dir)
       val cp = keyedKn3CutoffArtifact(s, dir)
-      core.SnapshotStamp.assertFresh(docs, "doc_id",
-        new java.io.File(cp).getParent + "/stamp")
+      val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
+        "doc_id", new java.io.File(cp).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, mp)
       val cuts = operators.Ranking.readRefLmCutoffs(s, cp, Some("lang"))
-      operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang"))
-        .join(broadcast(cuts), Seq("lang"))
+      val scored = operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
+        checkpointTf = true, keyCol = Some("lang"))
+      fresh()
+      scored.join(broadcast(cuts), Seq("lang"))
         .withColumn("bucket", operators.Ranking.perplexityBucket(
           col("logprob"), col("v_head"), col("v_mid")))
         .groupBy("lang", "bucket")

@@ -6,7 +6,9 @@ import org.apache.spark.sql.types._
 
 /** Parquet table loading for the driver-generated TPC-H-ish test tables
   * (see TESTDATA.md). Reads are plain parquet scans so Catalyst pushes
-  * filters/column pruning down to the scan.
+  * filters/column pruning down to the scan; the schema comes from the
+  * file's footer on the driver ([[sources.Readers.parquet]]), so a load
+  * runs no Spark job.
   *
   * Timestamp normalization: the synthetic tables store naive
   * ms/ns-precision parquet timestamps. Depending on reader settings
@@ -24,7 +26,7 @@ object Tables {
     // The events table stores TIMESTAMP(NANOS) which the vectorized
     // reader refuses by default; read nanos as long and convert below.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = sources.Readers.parquet(spark, s"$dir/$name.parquet")
     raw.schema.fields.foldLeft(raw) { (df, f) =>
       f.dataType match {
         case TimestampNTZType =>

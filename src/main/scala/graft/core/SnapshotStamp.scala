@@ -1,9 +1,13 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge
 
 import graft.operators.Sampling
+import graft.sources.Readers
 
 /** Corpus snapshot stamps for stored artifacts.
   *
@@ -34,17 +38,27 @@ object SnapshotStamp {
   private def rowHash(idCol: Column, salt: String): Column =
     Sampling.hexPrefixValue(md5(concat(lit(salt), idCol.cast("string"))))
 
-  /** The 1-row stamp frame (n_rows, id_hash) of `df`'s `idCol`.
+  /** `df` with the per-row hash term of `idCol` as column `__stamp_h`,
+    * the input of [[stampAggs]]. */
+  private def hashed(df: DataFrame, idCol: String, salt: String): DataFrame =
+    df.withColumn("__stamp_h", rowHash(col(idCol), salt).cast("decimal(38,0)"))
+
+  /** The stamp aggregate (n_rows, id_hash) over a [[hashed]] frame, the
+    * one definition [[stamp]] aggregates and [[observeFresh]] observes.
+    * It references only the hash column, so an observation of it ships
+    * no hash expression with each task's metrics.
     * `id_hash` is surfaced as the exact decimal's canonical STRING:
     * engines' client bridges (DuckDB→pandas) demote wide decimals to
     * float64, which silently corrupts past 2^53 — a string is exact at
     * any corpus scale and compares exactly.
     */
+  private val stampAggs: Seq[Column] = Seq(
+    count(lit(1)).as("n_rows"),
+    coalesce(sum(col("__stamp_h")), lit(0L).cast("decimal(38,0)")).cast("string").as("id_hash"))
+
+  /** The 1-row stamp frame (n_rows, id_hash) of `df`'s `idCol`. */
   def stamp(df: DataFrame, idCol: String, salt: String = "stamp:"): DataFrame =
-    df.select(rowHash(col(idCol), salt).cast("decimal(38,0)").as("__h"))
-      .agg(count(lit(1)).as("n_rows"),
-        coalesce(sum(col("__h")), lit(0L).cast("decimal(38,0)"))
-          .cast("string").as("id_hash"))
+    hashed(df.select(col(idCol)), idCol, salt).agg(stampAggs.head, stampAggs.tail: _*)
 
   /** DuckDB twin of [[stamp]] — one SELECT over `src`. */
   def stampSql(src: String, idCol: String, salt: String = "stamp:"): String = {
@@ -66,30 +80,63 @@ object SnapshotStamp {
     * read.
     */
   def isFresh(live: DataFrame, idCol: String, path: String,
-      salt: String = "stamp:"): Boolean = {
-    val spark = live.sparkSession
-    val stored = readStamp(spark, path)
-    val now = stamp(live, idCol, salt).collect()(0)
-    stored == ((now.getLong(0), now.getString(1)))
-  }
+      salt: String = "stamp:"): Boolean =
+    readStamp(live.sparkSession, path) == liveStamp(live, idCol, salt)
 
   /** [[isFresh]] that fails fast with a named error carrying both
     * stamps — the read-side gate a production deploy path calls before
     * serving a stored artifact.
     */
   def assertFresh(live: DataFrame, idCol: String, path: String,
-      salt: String = "stamp:"): Unit = {
+      salt: String = "stamp:"): Unit =
+    requireFresh(readStamp(live.sparkSession, path), liveStamp(live, idCol, salt), path)
+
+  /** Names each [[observeFresh]] observation apart. */
+  private val observations = new AtomicLong
+
+  /** [[assertFresh]] without its own pass over the corpus: `live`
+    * observed with the [[stamp]] aggregate, plus the check. Use the
+    * observed frame in place of `live`, and call the check once an
+    * action has read the whole of it (an eager checkpoint of a frame
+    * built on it, say); the stamp then comes from that action's scan.
+    * The check never waits on an action that did not happen: when no
+    * action has reported the observation, it runs [[assertFresh]]'s
+    * stamp job over `live` instead. The observation counts every row
+    * that reaches it, so the frame must be read unfiltered.
+    */
+  def observeFresh(live: DataFrame, idCol: String, path: String,
+      salt: String = "stamp:"): (DataFrame, () => Unit) = {
     val spark = live.sparkSession
-    val stored = readStamp(spark, path)
-    val nowRow = stamp(live, idCol, salt).collect()(0)
-    val now = (nowRow.getLong(0), nowRow.getString(1))
+    val obs = Observation(s"__stamp_${observations.getAndIncrement()}")
+    require(!live.columns.contains("__stamp_h"), "a stamped frame has no column __stamp_h")
+    val observed = hashed(live, idCol, salt)
+      .observe(obs, stampAggs.head, stampAggs.tail: _*).drop("__stamp_h")
+    def reported: Option[Row] =
+      obs.future.value.flatMap(_.toOption).filter(_.length == 2)
+    (observed, () => {
+      // the action's end event reaches the observation through the
+      // listener bus: let the bus deliver what is already posted
+      val seen = reported.orElse {
+        graftbridge.drainListenerBus(spark, 10000L)
+        reported
+      }
+      requireFresh(readStamp(spark, path),
+        seen.fold(liveStamp(live, idCol, salt))(r => (r.getLong(0), r.getString(1))), path)
+    })
+  }
+
+  private def liveStamp(live: DataFrame, idCol: String, salt: String): (Long, String) = {
+    val r = stamp(live, idCol, salt).collect()(0)
+    (r.getLong(0), r.getString(1))
+  }
+
+  private def requireFresh(stored: (Long, String), now: (Long, String), path: String): Unit =
     require(stored == now,
       s"stale artifact stamp at $path: stored (n_rows, id_hash) = $stored " +
         s"but the live corpus is $now — rebuild the artifact before serving it")
-  }
 
   private def readStamp(spark: SparkSession, path: String): (Long, String) = {
-    val rows = spark.read.parquet(path)
+    val rows = Readers.parquet(spark, path)
       .select(col("n_rows"), col("id_hash")).collect()
     require(rows.length == 1 && !rows(0).isNullAt(0) && !rows(0).isNullAt(1),
       s"snapshot stamp at $path is not exactly one non-null row")

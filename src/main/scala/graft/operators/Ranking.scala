@@ -1,11 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.plans.TopKPerKey
+import graft.sources.Readers
 
 /** Corpus ranking / retrieval-index operators: BM25 scoring, inverted
   * index construction, and unigram language-model scoring.
@@ -823,10 +826,8 @@ object Ranking {
     * cutoffs into the histogram. Returns one row per non-empty bucket:
     * (bucket, n_docs, min_logprob, max_logprob, <count column>),
     * ordered by bucket name (head < middle < tail alphabetically).
-    *
-    * With `keyCol` the cutoffs are PER KEY (each language gets its own
-    * tertile values — CCNet's per-language percentiles), every window
-    * partitioned by the key: one row per (keyCol, non-empty bucket).
+    * With `keyCol` the cutoffs are PER KEY (CCNet's per-language
+    * percentiles): one row per (keyCol, non-empty bucket).
     */
   def refLmPerplexityBuckets(scored: DataFrame,
       keyCol: Option[String] = None): DataFrame =
@@ -844,9 +845,8 @@ object Ranking {
       .otherwise(lit("tail"))
 
   /** [[refLmPerplexityBuckets]] exposing the checkpointed histogram
-    * handle (the [[Dedup.CachedDF]] contract): long-lived sessions
-    * calling the bucket report repeatedly must be able to release the
-    * block; Verify/Bench release via their per-query `clearCache`.
+    * handle (the [[Dedup.CachedDF]] contract), for long-lived sessions
+    * to release; Verify/Bench release via their per-query `clearCache`.
     */
   def refLmPerplexityBucketsCached(scored: DataFrame,
       keyCol: Option[String] = None): Dedup.CachedDF = {
@@ -867,79 +867,80 @@ object Ranking {
   }
 
   /** The HISTOGRAM of a scored frame — ([keys], logprob, nv = docs at
-    * that score, snb = their n-gram total), CHECKPOINTED: every
-    * downstream consumer (cumulative ranks, totals, the bucket report
-    * itself) works off these rows, so the expensive scoring pipeline
-    * executes exactly ONCE no matter how many plan branches read it.
-    * The histogram is bounded by the 6-decimal score value space, not
-    * the corpus, so materializing it is artifact-sized.
+    * that score, snb = their n-gram total), CHECKPOINTED: the cutoff
+    * collects and the bucket report all read these rows, so the scoring
+    * pipeline executes exactly ONCE. The histogram is bounded by the
+    * 6-decimal score value space, not the corpus. A localCheckpoint,
+    * not a persist: a persisted frame carries the whole scoring plan
+    * into every later job's AQE re-optimization (~1.3 s of serial
+    * driver gaps per LM query at sf0.1, r17); the checkpoint truncates
+    * it to a LogicalRDD over the same rows.
     */
   private def scoreHist(scored: DataFrame, ks: Seq[String]): DataFrame =
     scored.groupBy(cols(ks :+ "logprob"): _*)
       .agg(count(lit(1)).as("nv"), sum(countCol(scored)).as("snb"))
-      // localCheckpoint, not persist (r17 optimization round, guide
-      // §3.3): the histogram feeds ~8 downstream jobs (bin prefix,
-      // within-bin refinement, totals, the report's join) and a
-      // persisted frame still carries the FULL scoring-pipeline plan
-      // into every one of those jobs' AQE re-optimizations — measured
-      // ~1.3 s of serial driver gaps per LM query at sf0.1. The
-      // checkpoint truncates the downstream plans to a LogicalRDD over
-      // the same artifact-sized rows; execution count is unchanged.
       .localCheckpoint()
 
-  /** ([keys], v_head, v_mid) from a [[scoreHist]] frame — cumulative
-    * counts by COARSE-BIN-THEN-REFINE, never one window over the full
-    * histogram: rows coarse-bin at centi-logprob (`floor(logprob·100)`
-    * — multiplication by a positive constant and floor are both
-    * monotone in IEEE, so bin order is consistent with score order and
-    * equal scores share a bin), the bin-DESC prefix runs over the BIN
-    * TABLE only (≤ the centi value space), and the within-bin
-    * refinement window is PARTITIONED by bin (≤ 100 distinct 6-decimal
-    * scores each). cumn = strictly-greater-bin prefix + within-bin
-    * cumulative — identical to the single global window, but the
-    * largest single-task slice is one centi-bin, not the whole
-    * histogram. Keyed, every window is ALSO partitioned by the key: a
-    * dominant language refines in per-(key, centi-bin) slices.
+  /** ([keys], v_head, v_mid) from a [[scoreHist]] frame by two-pass
+    * selection on the driver, in two jobs. Rows coarse-bin at
+    * centi-logprob (`floor(logprob·100)` is monotone: bin order follows
+    * score order, equal scores share a bin); the (key, bin, count) table,
+    * ≤ keys × the centi span of the scores, comes to the driver. Per
+    * key, its bin-desc prefix finds the bins of ranks `(n+2) div 3` and
+    * `(2n+2) div 3` and the count ahead of each; only those bins' rows
+    * follow (a 0.01-wide bin holds up to 10⁴ distinct 6-decimal scores:
+    * ≤ 2·10⁴ rows per key), and a cutoff is the largest score whose
+    * cumulative count reaches its rank, as in one global window. A NULL
+    * score counts in n but is no cutoff (its bin sorts last); a NULL
+    * key, or one with only NULL scores, has no row; unkeyed there is
+    * always one row. The result is a local relation.
     */
   private def cutoffsFromHist(hist: DataFrame, ks: Seq[String]): DataFrame = {
-    val binned = hist.withColumn("__bin", floor(col("logprob") * lit(100.0)))
-    val binPrior = binned.groupBy(cols(ks :+ "__bin"): _*).agg(sum("nv").as("__bn"))
-      .withColumn("__prior", sum("__bn").over(
-        Window.partitionBy(cols(ks): _*).orderBy(col("__bin").desc)) - col("__bn"))
-      .select(cols(ks ++ Seq("__bin", "__prior")): _*)
-    val cum = binned.join(broadcast(binPrior), ks :+ "__bin")
-      .withColumn("cumn", col("__prior") + sum("nv").over(
-        Window.partitionBy(cols(ks :+ "__bin"): _*).orderBy(col("logprob").desc)))
-    val tot = hist.groupBy(cols(ks): _*).agg(sum("nv").as("n"))
-    joinOn(cum, broadcast(tot), ks).groupBy(cols(ks): _*)
-      .agg(
-        max(when(col("cumn") >= expr("(n + 2) div 3"), col("logprob")))
-          .as("v_head"),
-        max(when(col("cumn") >= expr("(2 * n + 2) div 3"), col("logprob")))
-          .as("v_mid"))
+    val (keyAndBin, binned) = (ks :+ "__bin", hist.withColumn("__bin", floor(col("logprob") * 100.0)))
+    def keyOf(r: Row): Seq[Any] = keyAndBin.indices.map(r.get)
+    // docs per (key, bin), tallied per partition and merged here: one job
+    val tally = binned.select(cols(keyAndBin :+ "nv"): _*)
+    val bins = tally.mapPartitions(_.foldLeft(Map.empty[Seq[Any], Long]) { (m, r) =>
+        m.updated(keyOf(r), m.getOrElse(keyOf(r), 0L) + r.getLong(ks.size + 1))
+      }.iterator.map { case (k, n) => Row.fromSeq(k :+ n) })(Encoders.row(tally.schema))
+      .collect().groupMapReduce(keyOf)(_.getLong(ks.size + 1))(_ + _).toSeq
+      .groupBy(_._1.init).filter { case (k, kb) => !k.contains(null) && kb.exists(_._1.last != null) }
+    // per key and rank: (the rank's bin, the count ahead of that bin, the rank)
+    val targets = bins.map { case (k, kb) =>
+      val desc = kb.map { case (b, n) => (Option(b.last).map(_.asInstanceOf[Long]), n) }
+        .sortBy(_._1)(Ordering.Option(Ordering.Long).reverse)  // a NULL bin last
+      val ahead = desc.scanLeft(0L)(_ + _._2)
+      k -> Seq((ahead.last + 2) / 3, (2 * ahead.last + 2) / 3).map { rank =>
+        val i = ahead.indexWhere(_ >= rank) - 1
+        (desc(i)._1, ahead(i), rank)
+      }
+    }
+    val wanted = targets.toSeq.flatMap { case (k, ts) => ts.flatMap(_._1).map(k :+ _) }.distinct
+    val edge = if (wanted.isEmpty) Map.empty[Seq[Any], Array[Row]] else
+      binned.filter(struct(cols(keyAndBin): _*).isin(wanted.map(w => struct(
+          keyAndBin.zip(w).map { case (c, v) => lit(v).cast(binned.schema(c).dataType).as(c) }: _*)): _*))
+        .select(cols(keyAndBin ++ Seq("logprob", "nv")): _*).collect().groupBy(keyOf)
+    def cutoff(k: Seq[Any], t: (Option[Long], Long, Long)): Any = t._1.fold(null: Any) { bin =>
+      val rows = edge(k :+ bin).sortBy(_.getDouble(ks.size + 1))(Ordering.Double.TotalOrdering.reverse)
+      rows(rows.scanLeft(t._2)(_ + _.getLong(ks.size + 2)).indexWhere(_ >= t._3) - 1).get(ks.size + 1)
+    }
+    val out = if (ks.isEmpty && targets.isEmpty) Seq(Row(null, null))
+      else targets.toSeq.map { case (k, ts) => Row.fromSeq(k ++ ts.map(cutoff(k, _))) }
+    hist.sparkSession.createDataFrame(out.asJava, StructType(ks.map(hist.schema(_)) ++
+      Seq("v_head", "v_mid").map(StructField(_, DoubleType))))
   }
 
   /** The two [[refLmPerplexityBuckets]] value cutoffs of a scored frame
     * as one row (v_head, v_mid), or one row per key
     * (keyCol, v_head, v_mid) — the MEASURED numbers a streaming ingest
-    * gates at ([[writeRefLmCutoffs]] persists them next to the model;
-    * the stream must not recompute corpus tertiles per micro-batch).
-    * Cutoffs MUST be measured under the same scorer (and pruning
-    * config) the gate serves with.
+    * gates at ([[writeRefLmCutoffs]] persists them next to the model).
+    * Measure under the scorer (and pruning config) the gate serves
+    * with. A local relation: its histogram is released on return.
     */
-  def refLmCutoffs(scored: DataFrame, keyCol: Option[String] = None): DataFrame =
-    refLmCutoffsCached(scored, keyCol).df
-
-  /** [[refLmCutoffs]] exposing the checkpointed histogram handle (the
-    * [[Dedup.CachedDF]] contract — the bucket reports' discipline): a
-    * long-lived session re-measuring cutoffs on a cadence must be able
-    * to release the block per measurement.
-    */
-  def refLmCutoffsCached(scored: DataFrame,
-      keyCol: Option[String] = None): Dedup.CachedDF = {
+  def refLmCutoffs(scored: DataFrame, keyCol: Option[String] = None): DataFrame = {
     val hist = scoreHist(scored, keyCol.toSeq)
-    Dedup.CachedDF(cutoffsFromHist(hist, keyCol.toSeq), Nil,
-      Seq(() => graftbridge.unpersistCheckpointed(hist)))
+    try cutoffsFromHist(hist, keyCol.toSeq)
+    finally graftbridge.unpersistCheckpointed(hist)
   }
 
   /** Persist a [[refLmCutoffs]] frame beside the stored LM — the
@@ -957,15 +958,14 @@ object Ranking {
     * table, a NULL cutoff, a repeated or NULL key, or (unkeyed) more
     * than one row: a repeated key would emit each of its docs once per
     * row, and a NULL `v_mid` would send every doc below `v_head` to
-    * `tail` ([[perplexityBucket]]). The check runs on one collect of
-    * the artifact-sized table (one row per key): the same single job
-    * as an emptiness probe, where a distinct-count aggregate would
-    * add two shuffle-stage jobs.
+    * `tail` ([[perplexityBucket]]). The schema comes from the footer
+    * ([[Readers.parquet]]), so the check's one collect is the read's
+    * only job.
     */
   def readRefLmCutoffs(spark: SparkSession, path: String,
       keyCol: Option[String] = None): DataFrame = {
     val ks = keyCol.toSeq
-    val cuts = spark.read.parquet(path).select(cols(ks ++ Seq("v_head", "v_mid")): _*)
+    val cuts = Readers.parquet(spark, path).select(cols(ks ++ Seq("v_head", "v_mid")): _*)
     val rows = cuts.collect()
     val keys = rows.map(r => ks.indices.map(r.get))
     def fail(why: String) = s"reference-LM cutoff artifact at $path $why"
@@ -1056,14 +1056,14 @@ object Ranking {
 
   /** Read back a [[writeRefLm]] artifact of any order and key shape:
     * the stored order is the run of count tables present, and only
-    * those tables (plus the contexts they need) are read. Fails fast on
-    * a totals table that signals an empty or partially-written model,
-    * which would otherwise silently score every document NULL: an
-    * unkeyed model needs exactly one non-null row with a positive token
-    * count, a keyed one a non-empty table (some key trained a model).
+    * those tables (plus the contexts they need) are read, each schema
+    * from its footer ([[Readers.parquet]]). Fails fast on a totals table
+    * that signals an empty or partially-written model, which would
+    * otherwise score every document NULL: unkeyed, exactly one non-null
+    * row with a positive token count; keyed, a non-empty table.
     */
   def readRefLm(spark: SparkSession, path: String): RefLmModel = {
-    val tot = spark.read.parquet(s"$path/totals")
+    val tot = Readers.parquet(spark, s"$path/totals")
     if (tot.columns.headOption.contains("__k"))
       require(!tot.isEmpty,
         s"keyed reference-LM artifact at $path has an empty totals table")
@@ -1074,7 +1074,7 @@ object Ranking {
     }
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def read(name: String) = spark.read.parquet(s"$path/$name")
+    def read(name: String) = Readers.parquet(spark, s"$path/$name")
     val counts = countTables.map(_._1)
       .takeWhile(name => fs.exists(new org.apache.hadoop.fs.Path(dir, name)))
       .map(read)
@@ -1224,7 +1224,7 @@ object Ranking {
       spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
       live: org.apache.hadoop.fs.Path): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(live, "applied")
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+    if (fs.exists(p)) Some(Readers.parquet(spark, p.toString)) else None
   }
 
   private def isApplied(

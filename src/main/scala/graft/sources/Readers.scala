@@ -2,18 +2,23 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.util.Using
+import scala.util.{Try, Using}
 
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.CodecStreams
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.types._
 
 /** File-source readers with the reference loaders' semantics
@@ -36,6 +41,8 @@ import org.apache.spark.sql.types._
   *     type, and no target type is known to convert into.
   *   - extension dispatch `.csv` / `.json` (`GetLoader`,
   *     `loader.go:203-213`).
+  *   - parquet: the schema is read from one footer on the driver
+  *     ([[parquet]]), so this read runs no Spark job either.
   *
   * Reads are streaming multi-partition scans — nothing is materialized
   * driver-side, unlike the reference's ReadAll.
@@ -128,6 +135,42 @@ object Readers {
         val caseSensitive = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
         CSVUtils.makeSafeHeader(row, caseSensitive, parsed).toSeq
       }
+  }
+
+  /** The parquet at `path`, read under the schema Spark's inference
+    * gives it, found on the driver from one footer: the read itself runs
+    * no Spark job. The footer is the one `ParquetUtils.inferSchema`
+    * reads when it does not merge schemas (`_common_metadata`, else
+    * `_metadata`, else the first data file by path), converted under the
+    * session's parquet settings (`nanosAsLong`, `binaryAsString`, ...).
+    * Spark's own read, with its inference job, stays wherever one footer
+    * cannot stand for the schema: `mergeSchema` on, a glob, a directory
+    * with subdirectories (partition discovery), or no footer to read (the
+    * error is then Spark's own).
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    parquetFooterSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private def parquetFooterSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val sql = graftbridge.sqlConf(spark)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val summaries = Set("_common_metadata", "_metadata")
+    // the file or directory as Spark lists it; a glob is Spark's to expand
+    val leaves = Option.when(!sql.isParquetSchemaMergingEnabled &&
+        !path.exists("{}[]*?\\".contains(_)) && fs.exists(p))(fs.getFileStatus(p)).toSeq
+      .flatMap(st => if (st.isFile) Seq(st) else fs.listStatus(p).toSeq
+        .filterNot(f => graftbridge.hiddenPathName(f.getPath.getName)))
+    if (leaves.exists(_.isDirectory)) return None
+    val files = leaves.sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => !summaries(f.getPath.getName)))
+      .flatMap(f => Try(new Footer(f.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))).toOption)
+      .map(ParquetFileFormat.readSchemaFromFooter(_, new ParquetToSparkSchemaConverter(sql)))
   }
 
   /** The first line of file `p` that is not blank, BOM dropped. */
@@ -250,7 +293,7 @@ object Readers {
     else if (lower.endsWith(".json")) json(spark, path, columns, sniffTimestamps)
     else if (lower.endsWith(".xml"))
       xml(spark, path, columns = columns, sniffTimestamps = sniffTimestamps)
-    else if (lower.endsWith(".parquet")) columnar(spark.read.parquet(path), columns)
+    else if (lower.endsWith(".parquet")) columnar(parquet(spark, path), columns)
     else if (lower.endsWith(".orc")) columnar(spark.read.orc(path), columns)
     else throw new IllegalArgumentException(
       s"unsupported file format for $path (expected .csv, .json, .xml, .parquet, or .orc)")

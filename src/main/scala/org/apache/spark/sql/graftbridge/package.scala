@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.SQLConf
 
 /** Minimal bridge to the `private[sql]` Column <-> Expression
   * converters, for lifting custom Catalyst expressions into the public
@@ -51,4 +52,23 @@ package object graftbridge {
       case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking)
       case _ => ()
     }
+
+  /** The session's SQL conf: what Spark's own file readers build their
+    * parquet schema converter and read options from.
+    */
+  def sqlConf(spark: SparkSession): SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  /** Whether Spark's file listing skips a file or directory of this
+    * name: hidden `_`/`.` names, except the parquet summary files.
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** Wait at most `timeoutMs` for the listener bus to deliver every
+    * event posted so far. False when the wait timed out.
+    */
+  def drainListenerBus(spark: SparkSession, timeoutMs: Long): Boolean =
+    try { spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 }

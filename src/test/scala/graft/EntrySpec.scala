@@ -44,6 +44,8 @@ class EntrySpec extends AnyFunSuite {
     assert(fresh("q192_stored_reflm3") > 0)
     assert(fresh("q189_stored_reflm_by_lang") > 0)
     assert(fresh("q196_stored_reflm3_by_lang") > 0)
+    assert(fresh("q198_kn3_buckets") > 0)
+    assert(fresh("q201_stored_kn3_gate") > 0)
     // mutate both source tables the artifacts measure (drop one row)
     Seq("documents", "embeddings").foreach { t =>
       val idCol = if (t == "documents") "doc_id" else "vec_id"
@@ -65,7 +67,7 @@ class EntrySpec extends AnyFunSuite {
     }
     Seq("q179_stored_gate", "q180_stored_probe", "q190_reflm_increment",
         "q192_stored_reflm3", "q189_stored_reflm_by_lang",
-        "q196_stored_reflm3_by_lang")
+        "q196_stored_reflm3_by_lang", "q198_kn3_buckets", "q201_stored_kn3_gate")
       .foreach { name =>
         val e = intercept[IllegalArgumentException] { fresh(name) }
         assert(e.getMessage.contains("stale artifact stamp"),

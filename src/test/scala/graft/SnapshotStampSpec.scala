@@ -58,4 +58,44 @@ class SnapshotStampSpec extends AnyFunSuite {
     val b = SnapshotStamp.stamp(corpus(1L, 2L), "id", salt = "b:").collect()(0)
     assert(a.getString(1) != b.getString(1))
   }
+
+  private def jobsOf(group: String)(body: => Any): Int = {
+    val sc = spark.sparkContext
+    JobCount(spark, group) {
+      sc.setJobGroup(group, null)
+      try body finally sc.clearJobGroup()
+    }
+  }
+
+  test("observeFresh checks the stamp its frame's own action observed") {
+    val dir = Files.createTempDirectory("stamp-observed").toString
+    SnapshotStamp.write(corpus(1L, 2L), "id", s"$dir/stamp")
+    // fresh: the check reads only the stored stamp, one job
+    val (ok, okCheck) = SnapshotStamp.observeFresh(corpus(1L, 2L), "id", s"$dir/stamp")
+    assert(ok.localCheckpoint().count() == 2)
+    assert(jobsOf("stamp-observed-fresh")(okCheck()) == 1)
+    // stale: assertFresh's message, naming the path and both stamps
+    val (stale, staleCheck) =
+      SnapshotStamp.observeFresh(corpus(1L, 2L, 3L), "id", s"$dir/stamp")
+    stale.localCheckpoint()
+    val e = intercept[IllegalArgumentException](staleCheck())
+    val expect = intercept[IllegalArgumentException] {
+      SnapshotStamp.assertFresh(corpus(1L, 2L, 3L), "id", s"$dir/stamp")
+    }
+    assert(e.getMessage == expect.getMessage)
+    assert(e.getMessage.contains("stale artifact stamp") && e.getMessage.contains(s"$dir/stamp"))
+    assert(e.getMessage.contains("(2,") && e.getMessage.contains("(3,"))
+  }
+
+  test("an observed frame no action consumed falls back to the stamp job") {
+    val dir = Files.createTempDirectory("stamp-unobserved").toString
+    SnapshotStamp.write(corpus(1L, 2L), "id", s"$dir/stamp")
+    val (_, okCheck) = SnapshotStamp.observeFresh(corpus(1L, 2L), "id", s"$dir/stamp")
+    val t0 = System.nanoTime
+    assert(jobsOf("stamp-unobserved-fresh")(okCheck()) > 1)
+    assert((System.nanoTime - t0) / 1e9 < 30.0)
+    val (_, staleCheck) = SnapshotStamp.observeFresh(corpus(1L), "id", s"$dir/stamp")
+    val e = intercept[IllegalArgumentException](staleCheck())
+    assert(e.getMessage.contains("stale artifact stamp"))
+  }
 }
