@@ -114,14 +114,14 @@ object SnapshotStamp {
     def reported: Option[Row] =
       obs.future.value.flatMap(_.toOption).filter(_.length == 2)
     (observed, () => {
-      // the action's end event reaches the observation through the
-      // listener bus: let the bus deliver what is already posted
-      val seen = reported.orElse {
-        graftbridge.drainListenerBus(spark, 10000L)
-        reported
-      }
-      requireFresh(readStamp(spark, path),
-        seen.fold(liveStamp(live, idCol, salt))(r => (r.getLong(0), r.getString(1))), path)
+      // an action's end event reaches the observation through the
+      // listener bus: wait until the observation is reported or the bus
+      // is idle (then no action reported it), for 10 s at most
+      val deadline = System.nanoTime + 10000000000L
+      while (reported.isEmpty && !graftbridge.listenerBusIdle(spark, 10L) &&
+        System.nanoTime < deadline) ()
+      requireFresh(readStamp(spark, path), reported.fold(liveStamp(live, idCol, salt))(
+        r => (r.getLong(0), r.getString(1))), path)
     })
   }
 

@@ -65,10 +65,10 @@ package object graftbridge {
   def hiddenPathName(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 
-  /** Wait at most `timeoutMs` for the listener bus to deliver every
-    * event posted so far. False when the wait timed out.
+  /** Whether the listener bus goes idle, every event posted to it
+    * delivered, within `timeoutMs`.
     */
-  def drainListenerBus(spark: SparkSession, timeoutMs: Long): Boolean =
+  def listenerBusIdle(spark: SparkSession, timeoutMs: Long): Boolean =
     try { spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
     catch { case _: java.util.concurrent.TimeoutException => false }
 }

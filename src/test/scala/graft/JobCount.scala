@@ -37,4 +37,13 @@ object JobCount {
       groups.asScala.count(_.startsWith(groupPrefix))
     } finally sc.removeSparkListener(listener)
   }
+
+  /** [[apply]] with `body` run under the job group `group` itself. */
+  def inGroup(spark: SparkSession, group: String)(body: => Any): Int = {
+    val sc = spark.sparkContext
+    apply(spark, group) {
+      sc.setJobGroup(group, null)
+      try body finally sc.clearJobGroup()
+    }
+  }
 }

@@ -15,14 +15,6 @@ class LmJobsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def jobsOf(group: String)(body: => Any): Int = {
-    val sc = spark.sparkContext
-    JobCount(spark, group) {
-      sc.setJobGroup(group, null)
-      try body finally sc.clearJobGroup()
-    }
-  }
-
   /** 300 generated documents with the `documents` columns the LM
     * queries read. */
   private lazy val corpusDir: String = {
@@ -44,7 +36,7 @@ class LmJobsSpec extends AnyFunSuite {
     // the first pass builds the stored order-3 artifact and its stamp
     val expect = q198(spark, corpusDir).collect().toSeq
     var got = Seq.empty[Row]
-    val jobs = jobsOf("lm-jobs-q198") { got = q198(spark, corpusDir).collect().toSeq }
+    val jobs = JobCount.inGroup(spark, "lm-jobs-q198") { got = q198(spark, corpusDir).collect().toSeq }
     assert(got == expect)
     assert(expect.map(_.getString(0)) == Seq("head", "middle", "tail"))
     assert(jobs <= 30, s"a q198 pass ran $jobs jobs")
@@ -55,7 +47,7 @@ class LmJobsSpec extends AnyFunSuite {
     Seq(("en", -3.0, -4.0), ("de", -2.5, -3.5)).toDF("lang", "v_head", "v_mid")
       .coalesce(1).write.parquet(p)
     var n = 0
-    val jobs = jobsOf("lm-jobs-cutoffs") {
+    val jobs = JobCount.inGroup(spark, "lm-jobs-cutoffs") {
       n = Ranking.readRefLmCutoffs(spark, p, Some("lang")).columns.length
     }
     assert(n == 3)

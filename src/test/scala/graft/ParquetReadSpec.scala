@@ -28,14 +28,6 @@ class ParquetReadSpec extends AnyFunSuite {
   private def sameAsSpark(p: String): Unit =
     assert(Readers.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
 
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    JobCount(spark, "parquet-footer-read") {
-      sc.setJobGroup("parquet-footer-read", null)
-      try body finally sc.clearJobGroup()
-    }
-  }
-
   private def withConf[T](k: String, v: String)(body: => T): T = {
     val old = spark.conf.getOption(k)
     spark.conf.set(k, v)
@@ -85,7 +77,8 @@ class ParquetReadSpec extends AnyFunSuite {
       val tables = new java.io.File(p).list().toSeq.filterNot(_.startsWith("."))
       assert(tables.size == order + (if (order == 2) 2 else 3))
       for (t <- tables) sameAsSpark(s"$p/$t")
-      assert(jobsOf(tables.foreach(t => Readers.parquet(spark, s"$p/$t").schema)) == 0)
+      assert(JobCount.inGroup(spark, "parquet-footer-read")(
+        tables.foreach(t => Readers.parquet(spark, s"$p/$t").schema)) == 0)
       val cuts = s"$p-cutoffs"
       Ranking.writeRefLmCutoffs(Ranking.refLmCutoffs(
         Ranking.refLmScore(docs, "id", "text", m, keyCol = keyCol), keyCol), cuts)
@@ -94,7 +87,7 @@ class ParquetReadSpec extends AnyFunSuite {
     val stamp = dir.resolve("stamp").toString
     SnapshotStamp.write(docs, "id", stamp)
     sameAsSpark(stamp)
-    assert(jobsOf(Readers.parquet(spark, stamp).schema) == 0)
+    assert(JobCount.inGroup(spark, "parquet-footer-read")(Readers.parquet(spark, stamp).schema) == 0)
   }
 
   private def errorClass(read: => DataFrame): String =

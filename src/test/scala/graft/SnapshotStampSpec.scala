@@ -59,21 +59,13 @@ class SnapshotStampSpec extends AnyFunSuite {
     assert(a.getString(1) != b.getString(1))
   }
 
-  private def jobsOf(group: String)(body: => Any): Int = {
-    val sc = spark.sparkContext
-    JobCount(spark, group) {
-      sc.setJobGroup(group, null)
-      try body finally sc.clearJobGroup()
-    }
-  }
-
   test("observeFresh checks the stamp its frame's own action observed") {
     val dir = Files.createTempDirectory("stamp-observed").toString
     SnapshotStamp.write(corpus(1L, 2L), "id", s"$dir/stamp")
     // fresh: the check reads only the stored stamp, one job
     val (ok, okCheck) = SnapshotStamp.observeFresh(corpus(1L, 2L), "id", s"$dir/stamp")
     assert(ok.localCheckpoint().count() == 2)
-    assert(jobsOf("stamp-observed-fresh")(okCheck()) == 1)
+    assert(JobCount.inGroup(spark, "stamp-observed-fresh")(okCheck()) == 1)
     // stale: assertFresh's message, naming the path and both stamps
     val (stale, staleCheck) =
       SnapshotStamp.observeFresh(corpus(1L, 2L, 3L), "id", s"$dir/stamp")
@@ -92,7 +84,7 @@ class SnapshotStampSpec extends AnyFunSuite {
     SnapshotStamp.write(corpus(1L, 2L), "id", s"$dir/stamp")
     val (_, okCheck) = SnapshotStamp.observeFresh(corpus(1L, 2L), "id", s"$dir/stamp")
     val t0 = System.nanoTime
-    assert(jobsOf("stamp-unobserved-fresh")(okCheck()) > 1)
+    assert(JobCount.inGroup(spark, "stamp-unobserved-fresh")(okCheck()) > 1)
     assert((System.nanoTime - t0) / 1e9 < 30.0)
     val (_, staleCheck) = SnapshotStamp.observeFresh(corpus(1L), "id", s"$dir/stamp")
     val e = intercept[IllegalArgumentException](staleCheck())
