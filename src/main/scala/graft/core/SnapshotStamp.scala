@@ -2,7 +2,7 @@ package graft.core
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge
 
@@ -102,17 +102,20 @@ object SnapshotStamp {
     * The check never waits on an action that did not happen: when no
     * action has reported the observation, it runs [[assertFresh]]'s
     * stamp job over `live` instead. The observation counts every row
-    * that reaches it, so the frame must be read unfiltered.
+    * that reaches it, so the frame must be read unfiltered. It counts
+    * at least once, not exactly once (a retried or speculative task
+    * counts its rows again, a `limit` counts part of them), so an
+    * observed stamp that differs from the stored one is only a
+    * suspicion: the check then runs the stamp job before it fails.
     */
-  def observeFresh(live: DataFrame, idCol: String, path: String,
-      salt: String = "stamp:"): (DataFrame, () => Unit) = {
+  def observeFresh(live: DataFrame, idCol: String, path: String): (DataFrame, () => Unit) = {
     val spark = live.sparkSession
     val obs = Observation(s"__stamp_${observations.getAndIncrement()}")
     require(!live.columns.contains("__stamp_h"), "a stamped frame has no column __stamp_h")
-    val observed = hashed(live, idCol, salt)
+    val observed = hashed(live, idCol, "stamp:")
       .observe(obs, stampAggs.head, stampAggs.tail: _*).drop("__stamp_h")
-    def reported: Option[Row] =
-      obs.future.value.flatMap(_.toOption).filter(_.length == 2)
+    def reported: Option[(Long, String)] = obs.future.value.flatMap(_.toOption)
+      .filter(_.length == 2).map(r => (r.getLong(0), r.getString(1)))
     (observed, () => {
       // an action's end event reaches the observation through the
       // listener bus: wait until the observation is reported or the bus
@@ -120,8 +123,9 @@ object SnapshotStamp {
       val deadline = System.nanoTime + 10000000000L
       while (reported.isEmpty && !graftbridge.listenerBusIdle(spark, 10L) &&
         System.nanoTime < deadline) ()
-      requireFresh(readStamp(spark, path), reported.fold(liveStamp(live, idCol, salt))(
-        r => (r.getLong(0), r.getString(1))), path)
+      val stored = readStamp(spark, path)
+      if (!reported.contains(stored))
+        requireFresh(stored, liveStamp(live, idCol, "stamp:"), path)
     })
   }
 

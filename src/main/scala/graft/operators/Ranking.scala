@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
 import graft.plans.TopKPerKey
 import graft.sources.Readers
@@ -822,8 +822,9 @@ object Ranking {
     * the cutoff is a value, not a row split — so the rule needs NO
     * global row-number over the corpus: the order statistics come from
     * [[cutoffsFromHist]] over the HISTOGRAM of distinct rounded scores
-    * (≪ corpus-sized), and the bucketing itself is a broadcast of the
-    * cutoffs into the histogram. Returns one row per non-empty bucket:
+    * (≪ corpus-sized), and the bucketing reads the cutoffs as literals
+    * (keyed: a map on the key, which a NULL key or one with no cutoffs
+    * misses and drops out). Returns one row per non-empty bucket:
     * (bucket, n_docs, min_logprob, max_logprob, <count column>),
     * ordered by bucket name (head < middle < tail alphabetically).
     * With `keyCol` the cutoffs are PER KEY (CCNet's per-language
@@ -850,20 +851,20 @@ object Ranking {
     */
   def refLmPerplexityBucketsCached(scored: DataFrame,
       keyCol: Option[String] = None): Dedup.CachedDF = {
-    val ks = keyCol.toSeq
-    val hist = scoreHist(scored, ks)
-    val df = joinOn(hist, broadcast(cutoffsFromHist(hist, ks)), ks)
-      .select(cols(ks) ++ Seq(
-        perplexityBucket(col("logprob"), col("v_head"), col("v_mid")).as("bucket"),
+    val (ks, hist, vs) = (keyCol.toSeq, scoreHist(scored, keyCol.toSeq), ArrayType(DoubleType))
+    // each key's [v_head, v_mid] as a literal; keyed, a map on the key
+    val cuts = cutoffsFromHist(hist, ks).map(r => (r.toSeq.take(ks.size),
+      array(lit(r.get(ks.size)), lit(r.get(ks.size + 1))).cast(vs)))
+    val v = keyCol.fold(cuts.head._2)(k => if (cuts.isEmpty) lit(null).cast(vs) else map(cuts.flatMap {
+      case (key, c) => Seq(lit(key.head).cast(hist.schema(k).dataType), c) }: _*)(col(k)))
+    val df = hist.filter(v.isNotNull)
+      .select(cols(ks) ++ Seq(perplexityBucket(col("logprob"), v(0), v(1)).as("bucket"),
         col("logprob"), col("nv"), col("snb")): _*)
       .groupBy(cols(ks :+ "bucket"): _*)
-      .agg(sum("nv").as("n_docs"),
-        min("logprob").as("min_logprob"),
-        max("logprob").as("max_logprob"),
-        sum("snb").as(countCol(scored)))
+      .agg(sum("nv").as("n_docs"), min("logprob").as("min_logprob"),
+        max("logprob").as("max_logprob"), sum("snb").as(countCol(scored)))
       .orderBy(cols(ks :+ "bucket"): _*)
-    Dedup.CachedDF(df, Nil,
-      Seq(() => graftbridge.unpersistCheckpointed(hist)))
+    Dedup.CachedDF(df, Nil, Seq(() => graftbridge.unpersistCheckpointed(hist)))
   }
 
   /** The HISTOGRAM of a scored frame — ([keys], logprob, nv = docs at
@@ -893,9 +894,9 @@ object Ranking {
     * cumulative count reaches its rank, as in one global window. A NULL
     * score counts in n but is no cutoff (its bin sorts last); a NULL
     * key, or one with only NULL scores, has no row; unkeyed there is
-    * always one row. The result is a local relation.
+    * always one row.
     */
-  private def cutoffsFromHist(hist: DataFrame, ks: Seq[String]): DataFrame = {
+  private def cutoffsFromHist(hist: DataFrame, ks: Seq[String]): Seq[Row] = {
     val (keyAndBin, binned) = (ks :+ "__bin", hist.withColumn("__bin", floor(col("logprob") * 100.0)))
     def keyOf(r: Row): Seq[Any] = keyAndBin.indices.map(r.get)
     // docs per (key, bin), tallied per partition and merged here: one job
@@ -924,10 +925,8 @@ object Ranking {
       val rows = edge(k :+ bin).sortBy(_.getDouble(ks.size + 1))(Ordering.Double.TotalOrdering.reverse)
       rows(rows.scanLeft(t._2)(_ + _.getLong(ks.size + 2)).indexWhere(_ >= t._3) - 1).get(ks.size + 1)
     }
-    val out = if (ks.isEmpty && targets.isEmpty) Seq(Row(null, null))
-      else targets.toSeq.map { case (k, ts) => Row.fromSeq(k ++ ts.map(cutoff(k, _))) }
-    hist.sparkSession.createDataFrame(out.asJava, StructType(ks.map(hist.schema(_)) ++
-      Seq("v_head", "v_mid").map(StructField(_, DoubleType))))
+    if (ks.isEmpty && targets.isEmpty) Seq(Row(null, null))
+    else targets.toSeq.map { case (k, ts) => Row.fromSeq(k ++ ts.map(cutoff(k, _))) }
   }
 
   /** The two [[refLmPerplexityBuckets]] value cutoffs of a scored frame
@@ -938,8 +937,9 @@ object Ranking {
     * with. A local relation: its histogram is released on return.
     */
   def refLmCutoffs(scored: DataFrame, keyCol: Option[String] = None): DataFrame = {
-    val hist = scoreHist(scored, keyCol.toSeq)
-    try cutoffsFromHist(hist, keyCol.toSeq)
+    val (ks, hist) = (keyCol.toSeq, scoreHist(scored, keyCol.toSeq))
+    try scored.sparkSession.createDataFrame(cutoffsFromHist(hist, ks).asJava, StructType(
+      ks.map(hist.schema(_)) ++ Seq("v_head", "v_mid").map(StructField(_, DoubleType))))
     finally graftbridge.unpersistCheckpointed(hist)
   }
 

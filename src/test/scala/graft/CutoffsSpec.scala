@@ -12,7 +12,9 @@ import graft.operators.Ranking
   * two-pass selection. Two oracles check it: the window formulation it
   * replaced (bin-desc prefix over the bin table, within-bin cumulative
   * window, `max(logprob)` where `cumn ≥ rank`, kept here verbatim) and
-  * a plain sort per key.
+  * a plain sort per key. `Ranking.refLmPerplexityBuckets` reads the
+  * cutoffs as literals; its report is checked against the window
+  * cutoffs joined onto the histogram.
   */
 class CutoffsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -40,6 +42,22 @@ class CutoffsSpec extends AnyFunSuite {
       .agg(
         max(when(col("cumn") >= expr("(n + 2) div 3"), col("logprob"))).as("v_head"),
         max(when(col("cumn") >= expr("(2 * n + 2) div 3"), col("logprob"))).as("v_mid"))
+  }
+
+  /** The bucket report with the window cutoffs joined onto the
+    * histogram, as the report was written before it read the cutoffs
+    * as literals: the inner join drops a NULL key and a key with no
+    * cutoff row. */
+  private def joinedBuckets(scored: DataFrame, ks: Seq[String]): DataFrame = {
+    val hist = histOf(scored, ks)
+    val cuts = windowCutoffs(hist, ks)
+    (if (ks.isEmpty) hist.crossJoin(cuts) else hist.join(cuts, ks))
+      .select(cols(ks) ++ Seq(Ranking.perplexityBucket(col("logprob"), col("v_head"), col("v_mid"))
+        .as("bucket"), col("logprob"), col("nv"), col("snb")): _*)
+      .groupBy(cols(ks :+ "bucket"): _*)
+      .agg(sum("nv").as("n_docs"), min("logprob").as("min_logprob"),
+        max("logprob").as("max_logprob"), sum("snb").as("n_trigrams"))
+      .orderBy(cols(ks :+ "bucket"): _*)
   }
 
   /** The cutoffs by sorting each key's scores, NULL scores last. A key
@@ -76,6 +94,11 @@ class CutoffsSpec extends AnyFunSuite {
     val expect = asTriples(window, keyed)
     assert(expect == sortedCutoffs(rows, keyed), s"the oracles differ on $rows")
     assert(asTriples(got, keyed) == expect, s"keyed=$keyed rows=$rows")
+    val report = Ranking.refLmPerplexityBuckets(if (keyed) scored else scored.drop("k"),
+      if (keyed) Some("k") else None)
+    val joined = joinedBuckets(if (keyed) scored else scored.drop("k"), ks)
+    assert(report.schema == joined.schema)
+    assert(report.collect().toSeq == joined.collect().toSeq, s"report keyed=$keyed rows=$rows")
   }
 
   private def scores(lps: Double*): Seq[(Option[String], Option[Double])] =

@@ -79,6 +79,21 @@ class SnapshotStampSpec extends AnyFunSuite {
     assert(e.getMessage.contains("(2,") && e.getMessage.contains("(3,"))
   }
 
+  test("a partial observation re-checks with the stamp job instead of failing") {
+    val dir = Files.createTempDirectory("stamp-partial").toString
+    val ids = (1L to 6L)
+    SnapshotStamp.write(corpus(ids: _*), "id", s"$dir/stamp")
+    // a limit reads part of the frame, so the observation counts part of it
+    val (ok, okCheck) = SnapshotStamp.observeFresh(corpus(ids: _*).repartition(3), "id", s"$dir/stamp")
+    assert(ok.limit(1).collect().length == 1)
+    assert(JobCount.inGroup(spark, "stamp-partial-fresh")(okCheck()) > 1)
+    // a stale corpus still fails, with the stamp job's count
+    val (stale, staleCheck) = SnapshotStamp.observeFresh(corpus(ids.init: _*).repartition(3), "id", s"$dir/stamp")
+    stale.limit(1).collect()
+    val e = intercept[IllegalArgumentException](staleCheck())
+    assert(e.getMessage.contains("stale artifact stamp") && e.getMessage.contains("(5,"))
+  }
+
   test("an observed frame no action consumed falls back to the stamp job") {
     val dir = Files.createTempDirectory("stamp-unobserved").toString
     SnapshotStamp.write(corpus(1L, 2L), "id", s"$dir/stamp")
