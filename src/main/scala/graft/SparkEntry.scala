@@ -831,8 +831,8 @@ object SparkEntry {
         docs, "text", col("source").isin("src0", "src1"), keyCol = Some("lang"))
       operators.Ranking.writeRefLm(m, mp)
       operators.Ranking.writeRefLmCutoffs(operators.Ranking.refLmCutoffs(
-        operators.Ranking.refLmScore(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang")), cp)
+        operators.Ranking.refLmScore(docs, "doc_id", "text", m, keyCol = Some("lang")),
+          Some("lang")), cp)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       (mp, cp)
     }
@@ -854,8 +854,8 @@ object SparkEntry {
         docs, "text", col("source").isin("src0", "src1"), 3, Some("lang"))
       operators.Ranking.writeRefLm(m, mp)
       operators.Ranking.writeRefLmCutoffs(operators.Ranking.refLmCutoffs(
-        operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang")), cp)
+        operators.Ranking.refLm3Score(docs, "doc_id", "text", m, keyCol = Some("lang")),
+          Some("lang")), cp)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       (mp, cp)
     }
@@ -879,8 +879,8 @@ object SparkEntry {
       val (mp, _) = keyedRefLm3Artifacts(s, dir)
       val m = operators.Ranking.readRefLm(s, mp)
       operators.Ranking.writeRefLmCutoffs(operators.Ranking.refLmCutoffs(
-        operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang")), cp)
+        operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m, keyCol = Some("lang")),
+          Some("lang")), cp)
       core.SnapshotStamp.write(docs, "doc_id", base.resolve("stamp").toString)
       cp
     }
@@ -2486,8 +2486,7 @@ object SparkEntry {
       val docs = T(s, dir, "documents")
       val m = operators.Ranking.refLmTrain(docs, "text", col("lang") === "en")
       operators.Ranking.refLmPerplexityBuckets(
-        operators.Ranking.refLmScore(docs, "doc_id", "text", m,
-          checkpointTf = true))
+        operators.Ranking.refLmScore(docs, "doc_id", "text", m))
     }),
 
     // ---- extension: perplexity filter from the STORED reference LM ----
@@ -2499,15 +2498,16 @@ object SparkEntry {
       val p = refLmArtifact(s, dir)
       // the full production deploy: verify the stored counts are a
       // measurement of THIS corpus before serving them — the stamp is
-      // observed on the scorer's own tokenize checkpoint, and checked
-      // before any scoring job ([[core.SnapshotStamp.observeFresh]])
+      // observed on the scoring scan inside the report's eager
+      // histogram checkpoint, and checked before the report is served
+      // ([[core.SnapshotStamp.observeFresh]])
       val (docs, fresh) = core.SnapshotStamp.observeFresh(
         T(s, dir, "documents"), "doc_id", s"$p/stamp")
       val m = operators.Ranking.readRefLm(s, p)
-      val scored = operators.Ranking.refLmScore(docs, "doc_id", "text", m,
-        checkpointTf = true)
+      val report = operators.Ranking.refLmPerplexityBuckets(
+        operators.Ranking.refLmScore(docs, "doc_id", "text", m))
       fresh()
-      operators.Ranking.refLmPerplexityBuckets(scored)
+      report
     }),
 
     // ---- extension: per-language perplexity buckets (one-pass multi-LM) ----
@@ -2525,7 +2525,7 @@ object SparkEntry {
         docs, "text", col("source").isin("src0", "src1"), keyCol = Some("lang"))
       operators.Ranking.refLmPerplexityBuckets(
         operators.Ranking.refLmScore(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
+          keyCol = Some("lang")), Some("lang"))
     }),
 
     // ---- extension: tokenizer fit by language (BPE compression ratio) ----
@@ -2565,10 +2565,10 @@ object SparkEntry {
       val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
         "doc_id", new java.io.File(mp).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, mp)
-      val scored = operators.Ranking.refLmScore(docs, "doc_id", "text", m,
-        checkpointTf = true, keyCol = Some("lang"))
+      val report = operators.Ranking.refLmPerplexityBuckets(operators.Ranking.refLmScore(
+        docs, "doc_id", "text", m, keyCol = Some("lang")), Some("lang"))
       fresh()
-      operators.Ranking.refLmPerplexityBuckets(scored, Some("lang"))
+      report
     }),
 
     // ---- extension: incremental reference-LM update ----
@@ -2599,8 +2599,7 @@ object SparkEntry {
         isRef = col("lang") === "en")
         .getOrElse(sys.error("q190: fresh clone reported batch already applied"))
       operators.Ranking.refLmPerplexityBuckets(
-        operators.Ranking.refLmScore(docs, "doc_id", "text", merged.model,
-          checkpointTf = true))
+        operators.Ranking.refLmScore(docs, "doc_id", "text", merged.model))
     }),
 
     // ---- extension: order-3 reference LM (trigram backoff chain) ----
@@ -2609,14 +2608,13 @@ object SparkEntry {
     // with the Jelinek-Mercer backoff chain trigram→bigram→unigram
     // (λ3=0.5 over the trigram ML leg, then q182's bigram mixture),
     // bucketed by the same histogram-derived value tertiles. One more
-    // partial-aggregated count table and one wider distinct-triple
+    // partial-aggregated count table and one wider triple
     // join — the scale shape is q182's
     "q191_reflm3_bucket" -> ((s, dir) => {
       val docs = T(s, dir, "documents")
       val m = operators.Ranking.refLmTrain(docs, "text", col("lang") === "en", 3)
       operators.Ranking.refLmPerplexityBuckets(
-        operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
-          checkpointTf = true))
+        operators.Ranking.refLm3Score(docs, "doc_id", "text", m))
     }),
 
     // ---- extension: deploy from the STORED order-3 LM ----
@@ -2629,10 +2627,10 @@ object SparkEntry {
       val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
         "doc_id", new java.io.File(p).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, p)
-      val scored = operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
-        checkpointTf = true)
+      val report = operators.Ranking.refLmPerplexityBuckets(
+        operators.Ranking.refLm3Score(docs, "doc_id", "text", m))
       fresh()
-      operators.Ranking.refLmPerplexityBuckets(scored)
+      report
     }),
 
     // ---- extension: per-language ORDER-3 perplexity buckets ----
@@ -2647,7 +2645,7 @@ object SparkEntry {
         docs, "text", col("source").isin("src0", "src1"), 3, Some("lang"))
       operators.Ranking.refLmPerplexityBuckets(
         operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
+          keyCol = Some("lang")), Some("lang"))
     }),
 
     // ---- extension: per-language deploy from the STORED keyed order-3 LM ----
@@ -2660,10 +2658,10 @@ object SparkEntry {
       val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
         "doc_id", new java.io.File(mp).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, mp)
-      val scored = operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
-        checkpointTf = true, keyCol = Some("lang"))
+      val report = operators.Ranking.refLmPerplexityBuckets(operators.Ranking.refLm3Score(
+        docs, "doc_id", "text", m, keyCol = Some("lang")), Some("lang"))
       fresh()
-      operators.Ranking.refLmPerplexityBuckets(scored, Some("lang"))
+      report
     }),
 
     // ---- extension: curation with the SEMANTIC-dedup stage ----
@@ -2697,10 +2695,10 @@ object SparkEntry {
       val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
         "doc_id", new java.io.File(p).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, p)
-      val scored = operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
-        checkpointTf = true)
+      val report = operators.Ranking.refLmPerplexityBuckets(
+        operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m))
       fresh()
-      operators.Ranking.refLmPerplexityBuckets(scored)
+      report
     }),
 
     // ---- extension: keyed ORDER-3 incremental lifecycle ----
@@ -2727,7 +2725,7 @@ object SparkEntry {
       val m = operators.Ranking.readRefLm(s, p.toString)
       operators.Ranking.refLmPerplexityBuckets(
         operators.Ranking.refLm3Score(docs, "doc_id", "text", m,
-          checkpointTf = true, keyCol = Some("lang")), Some("lang"))
+          keyCol = Some("lang")), Some("lang"))
     }),
 
     // ---- extension: per-language Kneser-Ney buckets ----
@@ -2741,10 +2739,10 @@ object SparkEntry {
       val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
         "doc_id", new java.io.File(mp).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, mp)
-      val scored = operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
-        checkpointTf = true, keyCol = Some("lang"))
+      val report = operators.Ranking.refLmPerplexityBuckets(operators.Ranking.refLmKn3Score(
+        docs, "doc_id", "text", m, keyCol = Some("lang")), Some("lang"))
       fresh()
-      operators.Ranking.refLmPerplexityBuckets(scored, Some("lang"))
+      report
     }),
 
     // ---- extension: KN deploy at STORED per-language cutoffs ----
@@ -2761,18 +2759,11 @@ object SparkEntry {
       val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
         "doc_id", new java.io.File(cp).getParent + "/stamp")
       val m = operators.Ranking.readRefLm(s, mp)
-      val cuts = operators.Ranking.readRefLmCutoffs(s, cp, Some("lang"))
-      val scored = operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m,
-        checkpointTf = true, keyCol = Some("lang"))
+      val report = operators.Ranking.refLmBucketsAtCutoffs(
+        operators.Ranking.refLmKn3Score(docs, "doc_id", "text", m, keyCol = Some("lang")),
+        operators.Ranking.readRefLmCutoffs(s, cp, Some("lang")), Some("lang"))
       fresh()
-      scored.join(broadcast(cuts), Seq("lang"))
-        .withColumn("bucket", operators.Ranking.perplexityBucket(
-          col("logprob"), col("v_head"), col("v_mid")))
-        .groupBy("lang", "bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          min("logprob").as("min_logprob"),
-          max("logprob").as("max_logprob"),
-          sum("n_trigrams").as("n_trigrams"))
+      report
     }),
 
     // ---- extension: 5-gram Kneser-Ney with count pruning ----

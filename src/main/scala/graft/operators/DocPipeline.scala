@@ -427,7 +427,7 @@ object DocPipeline {
       val repDocs = cleaned.join(
         semReps.select(col(idCol)), Seq(idCol), "left_semi")
       val dropped = Ranking.refLmKn3Score(repDocs, idCol, textCol, st.model,
-          checkpointTf = true, keyCol = Some(st.keyCol))
+          keyCol = Some(st.keyCol))
         .join(broadcast(st.cutoffs), Seq(st.keyCol))
         .withColumn("__bucket",
           Ranking.perplexityBucket(col("logprob"), col("v_head"), col("v_mid")))

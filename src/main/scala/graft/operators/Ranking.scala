@@ -2,10 +2,14 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.plans.TopKPerKey
 import graft.sources.Readers
@@ -191,18 +195,8 @@ object Ranking {
     // no broadcast hint: logp is vocabulary-sized (unbounded on a web
     // corpus) — the equi-join on term shuffles both sides; AQE still
     // broadcasts it when it measures small
-    tf.join(logp, "term")
-      .groupBy(id)
-      .agg(sum(col("tf")).as("n_tokens"),
-        // cast the count to decimal(18,0) first: long widens to
-        // decimal(20,0) and the product's precision-39 result gets
-        // CLAMPED to decimal(38,8) — every product silently rounded,
-        // where the oracle keeps exact scale 9
-        sum(col("tf").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id, col("n_tokens"),
-        round(col("__slp").cast("double") / col("n_tokens"), 6).as("logprob"))
-      .orderBy(col("logprob").asc, id)
-      .limit(k)
+    docMeans(tf.join(logp, "term").select(id.as("__id"), col("tf").as("__tf"), col("logp9")),
+      idCol, None, "n_tokens").orderBy(col("logprob").asc, id).limit(k)
   }
 
   /** Bigram language-model quality score: each document's mean bigram
@@ -230,12 +224,7 @@ object Ranking {
       textCol: String,
       k: Int = 20): DataFrame = {
     val id = col(idCol)
-    val bg = docs
-      .select(id, TextAnalysis.tokens(col(textCol)).as("__a"))
-      .select(id, explode(expr(
-        "transform(slice(__a, 1, greatest(size(__a) - 1, 0)), " +
-          "(w, i) -> struct(w AS w1, element_at(__a, i + 2) AS w2))")).as("__bg"))
-      .select(id, col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
+    val bg = gramRows(docs.select(id, TextAnalysis.tokens(col(textCol)).as("__a")), 2, Seq(idCol))
     val bf = bg.groupBy(id, col("w1"), col("w2")).agg(count(lit(1)).as("bf"))
     val cb = bf.groupBy(col("w1"), col("w2")).agg(sum(col("bf")).as("cb"))
     val c1 = cb.groupBy(col("w1")).agg(sum(col("cb")).as("c1"))
@@ -243,14 +232,8 @@ object Ranking {
       .select(col("w1"), col("w2"),
         round(log(col("cb").cast("double") / col("c1")), 9)
           .cast("decimal(18,9)").as("logp9"))
-    bf.join(logp, Seq("w1", "w2"))
-      .groupBy(id)
-      .agg(sum(col("bf")).as("n_bigrams"),
-        sum(col("bf").cast("decimal(18,0)") * col("logp9")).as("__slp"))
-      .select(id, col("n_bigrams"),
-        round(col("__slp").cast("double") / col("n_bigrams"), 6).as("logprob"))
-      .orderBy(col("logprob").asc, id)
-      .limit(k)
+    docMeans(bf.join(logp, Seq("w1", "w2")).select(id.as("__id"), col("bf").as("__tf"), col("logp9")),
+      idCol, None, "n_bigrams").orderBy(col("logprob").asc, id).limit(k)
   }
 
   /** DuckDB SQL equivalent of [[bigramLogProb]] — the two zipped
@@ -314,8 +297,7 @@ object Ranking {
       .join(logr, "term")
       .groupBy(id)
       .agg(sum(col("tf")).as("n_tokens"),
-        // decimal(18,0) cast: see unigramLogProb — keeps the product
-        // at exact scale 9 instead of a clamped decimal(38,8)
+        // decimal(18,0) cast: see docMeans
         sum(col("tf").cast("decimal(18,0)") * col("logr9")).as("__slr"))
       .select(id, col("n_tokens"),
         round(col("__slr").cast("double") / col("n_tokens"), 6).as("logw"))
@@ -368,11 +350,10 @@ object Ranking {
   // constant key column: a keyed model (one LM per value of `keyCol`,
   // e.g. per LANGUAGE — the actual CCNet deployment, every model trained
   // in ONE pass with no per-key job loop) carries `__k` first in every
-  // table, and every groupBy, window and join key starts with it; an
-  // unkeyed model has no key, so its corpus-level scalars (totals, the
-  // bigram-type count, the bucket cutoffs) are 1-row frames joined by
-  // broadcast crossJoin and its windows are unpartitioned — exactly the
-  // plans a dedicated unkeyed engine would build ([[joinOn]]).
+  // table, and every groupBy and join key starts with it; an unkeyed
+  // model has no key, so its corpus-level scalars are one row: literals
+  // when a stored model holds them on the driver, else a broadcast
+  // crossJoin ([[withScalars]], [[joinOn]]).
   //
   // STORAGE CONTRACT (orders 4/5): distinct 5-grams approach the corpus
   // token count, so unlike the vocabulary-bounded low orders the stored
@@ -393,7 +374,11 @@ object Ranking {
     *  - `contextTables`: `ctx` (w1, ctx) = c(w1 ·) and, from order 3,
     *    `tctx` (w1, w2, ctx3) = c(w1 w2 ·) — NOT the bigram count (a
     *    document's final bigram has no continuation);
-    *  - `totals`: (n_ref_tokens, vocab), one row.
+    *  - `totals`: (n_ref_tokens, vocab), one row;
+    *  - `bigramTypes`: the bigram table's row count when it is known on
+    *    the driver (an unkeyed stored model: [[readRefLm]] sums it from
+    *    the parquet footers), so a Kneser-Ney scorer reads `B` with no
+    *    job. Never stored.
     * A keyed model leads every table with `__k` (totals: one row per
     * key) — keyedness is read from that schema, never flagged. Kneser-
     * Ney's context, continuation and type tables are deliberately NOT
@@ -402,7 +387,8 @@ object Ranking {
     * to a retrain.
     */
   final case class RefLmModel(
-      counts: Seq[DataFrame], contextTables: Seq[DataFrame], totals: DataFrame) {
+      counts: Seq[DataFrame], contextTables: Seq[DataFrame], totals: DataFrame,
+      bigramTypes: Option[Long] = None) {
     def order: Int = counts.size
     def keyed: Boolean = totals.columns.headOption.contains("__k")
     def unigrams: DataFrame = counts(0)
@@ -502,69 +488,86 @@ object Ranking {
     keyCols(keyCol)
   }
 
-  /** Per-doc n-gram frequencies of the pool: (__id, [__k], w1..wn,
-    * __tf). The id rides as `__id` and the key as `__k`, so an `idCol`
-    * named like a model or count column (`w1`, `c5`, `tfq`) cannot make
-    * any join or aggregate ambiguous; [[docMeans]] restores both names.
+  /** The pool's n-gram occurrences: (__id, [__k], w1..wn), one row per
+    * occurrence. The id rides as `__id` and the key as `__k`, so an
+    * `idCol` named like a model or count column (`w1`, `c5`, `__tf`)
+    * cannot make any join or aggregate ambiguous; [[docMeans]] restores
+    * both names.
     */
-  private def perDocGrams(pool: DataFrame, idCol: String, textCol: String,
-      keyCol: Option[String], n: Int): DataFrame = {
-    val carry = "__id" +: keyCols(keyCol)
-    val toks = pool.select(Seq(col(idCol).as("__id")) ++
-      keyCol.map(col(_).as("__k")) :+ TextAnalysis.tokens(col(textCol)).as("__a"): _*)
-    gramRows(toks, n, carry).groupBy(cols(carry ++ gramCols(n)): _*)
-      .agg(count(lit(1)).as("__tf"))
-  }
+  private def poolGrams(pool: DataFrame, idCol: String, textCol: String,
+      keyCol: Option[String], n: Int): DataFrame =
+    gramRows(pool.select(Seq(col(idCol).as("__id")) ++ keyCol.map(col(_).as("__k")) :+
+      TextAnalysis.tokens(col(textCol)).as("__a"): _*), n, "__id" +: keyCols(keyCol))
 
   /** The per-doc mean log-probability from (__id, [__k], __tf, logp9)
     * rows: exact decimal `tf · logp9` sums, one double division rounded
     * to 6 (the [[unigramLogProb]] scheme). Returns
-    * (idCol, [keyCol], cntCol, logprob).
+    * (idCol, [keyCol], cntCol, logprob). The count casts to
+    * decimal(18,0) first: a long widens to decimal(20,0), and the
+    * product's precision-39 type would be CLAMPED to decimal(38,8),
+    * rounding every product where the oracle keeps exact scale 9.
     */
   private def docMeans(rows: DataFrame, idCol: String, keyCol: Option[String],
       cntCol: String): DataFrame =
     rows.groupBy(cols("__id" +: keyCols(keyCol)): _*)
       .agg(sum(col("__tf")).as(cntCol),
-        // decimal(18,0) cast: see unigramLogProb — keeps the product
-        // at exact scale 9 instead of a clamped decimal(38,8)
         sum(col("__tf").cast("decimal(18,0)") * col("logp9")).as("__slp"))
       .select(Seq(col("__id").as(idCol)) ++ keyCol.map(col("__k").as(_)) ++
         Seq(col(cntCol),
           round(col("__slp").cast("double") / col(cntCol), 6).as("logprob")): _*)
 
-  /** ln(p) rounded to 9 decimals — once per distinct n-gram (order 2/3)
-    * or per row (order 5); equal n-grams give bit-equal values
-    * wherever they are evaluated. */
+  /** ln(p) rounded to 9 decimals, once per scored row; equal n-grams
+    * give bit-equal values wherever they are evaluated. */
   private def logp9(p: Column): Column =
     round(log(p), 9).cast("decimal(18,9)").as("logp9")
 
-  /** The distinct-tuple scoring shape of the order-2/3 scorers: per-doc
-    * n-gram frequencies partial-agg first; `chain` joins the model once
-    * per DISTINCT pool n-gram (the model tables are vocabulary-sized —
-    * no broadcast hint, AQE broadcasts them when it measures small) and
-    * `p` is its probability; the rounded log-probs join back to the
-    * per-doc rows for [[docMeans]]. The dedup pays at low orders
-    * (measured at sf0.1: 275x at order 2, 9.6x at order 3; ~1.0x at
-    * order 5, which is why [[refLmKn5Score]] joins per doc instead).
-    *
-    * `checkpointTf` (r17 optimization round): the per-doc frame feeds
-    * TWO consumers (the distinct model join and the join-back), and
-    * exchange reuse does not span their separate jobs — without a
-    * materialization the pool is tokenized twice per score. Batch
-    * query paths opt in (tokenize once, and every downstream AQE
-    * re-optimization plans over a LogicalRDD); the default stays lazy
-    * for the per-micro-batch streaming gates, where an eager checkpoint
-    * per batch would pin blocks for the stream's lifetime.
+  /** The scoring shape of the order-2/3 scorers: `chain` joins the
+    * model onto every n-gram OCCURRENCE of the pool ([[poolGrams]]) and
+    * `p` is its probability; [[docMeans]] aggregates per doc once at
+    * `__tf` = 1, so its exact decimal sums (and every score) are those
+    * of per-doc frequencies. The model tables are vocabulary-sized and
+    * broadcast, and the pool is tokenized once, with no checkpoint.
+    * Measured on a q198 KN3 pass (2,000 generated docs, `local[4]`;
+    * about 104k occurrences against 21k model trigrams): the former
+    * distinct shape (dedup the pool's n-grams, join the model per
+    * distinct n-gram, join the log-probs back) paid a tokenize
+    * checkpoint, a distinct exchange and a join-back broadcasting every
+    * per-doc row, 29 jobs a pass; per occurrence the pass runs 17.
+    * Grouping per doc first, as [[refLmKn5Score]] does, cost about 1.2
+    * s more CPU, and so did a `repartition` on the id.
     */
-  private def scoreDistinct(pool: DataFrame, idCol: String, textCol: String,
-      keyCol: Option[String], n: Int, checkpointTf: Boolean, cntCol: String)(
-      chain: DataFrame => DataFrame, p: Column): DataFrame = {
-    val grams = keyCols(keyCol) ++ gramCols(n)
-    val tfRaw = perDocGrams(pool, idCol, textCol, keyCol, n)
-    val tf = if (checkpointTf) tfRaw.localCheckpoint() else tfRaw
-    val logp = chain(tf.select(cols(grams): _*).distinct())
-      .select(cols(grams) :+ logp9(p): _*)
-    docMeans(tf.join(logp, grams), idCol, keyCol, cntCol)
+  private def scoreGrams(pool: DataFrame, idCol: String, textCol: String,
+      keyCol: Option[String], n: Int, cntCol: String)(
+      chain: DataFrame => DataFrame, p: Column): DataFrame =
+    docMeans(chain(poolGrams(pool, idCol, textCol, keyCol, n)).select(
+      cols("__id" +: keyCols(keyCol)) ++ Seq(lit(1L).as("__tf"), logp9(p)): _*),
+      idCol, keyCol, cntCol)
+
+  /** The one row of a local relation, read with no job; None for any
+    * other plan. */
+  private def localRow(df: DataFrame): Option[Row] = df.queryExecution.analyzed match {
+    case l: LocalRelation if l.data.size == 1 => Some(df.collect().head)
+    case _ => None
+  }
+
+  /** `rows` with the model's corpus scalars `n_ref_tokens` and `vocab`
+    * and, with `nbig`, the bigram-type count `__nbig`. Keyed, each joins
+    * by broadcast on the key: totals INNER (a key with no model drops
+    * out), `__nbig` LEFT (a key whose reference had no bigram still
+    * scores). Unkeyed, what the model holds on the driver is a literal
+    * and costs no job: a stored model's totals (a local relation,
+    * [[readRefLm]]) and its [[RefLmModel.bigramTypes]]. An
+    * inline-trained model cross-joins its one-row tables.
+    */
+  private def withScalars(rows: DataFrame, model: RefLmModel, ks: Seq[String],
+      nbig: Boolean): DataFrame = {
+    val tot = Option.when(ks.isEmpty)(model.totals).flatMap(localRow).fold(
+      joinOn(rows, broadcast(model.totals), ks))(r => rows.select(col("*") +:
+        model.totals.schema.map(f => lit(r.getAs[Any](f.name)).cast(f.dataType).as(f.name)): _*))
+    if (!nbig) tot
+    else model.bigramTypes.filter(_ => ks.isEmpty).fold(joinOn(tot, broadcast(
+      model.bigrams.groupBy(cols(ks): _*).agg(count(lit(1)).as("__nbig"))), ks, "left"))(
+      b => tot.withColumn("__nbig", lit(b)))
   }
 
   /** The Jelinek-Mercer bigram mixture
@@ -616,19 +619,18 @@ object Ranking {
     * the model of ITS key value; the totals join is INNER on the key,
     * so documents whose key has no reference model are UNSCORED (absent
     * from the output) rather than scored against nothing. Scale shape
-    * and determinism: [[scoreDistinct]].
+    * and determinism: [[scoreGrams]].
     */
   def refLmScore(
       pool: DataFrame, idCol: String, textCol: String, model: RefLmModel,
-      lamNum: Int = 7, lamDen: Int = 10,
-      checkpointTf: Boolean = false, keyCol: Option[String] = None): DataFrame = {
+      lamNum: Int = 7, lamDen: Int = 10, keyCol: Option[String] = None): DataFrame = {
     val ks = keysOf(model, keyCol, 2)
-    scoreDistinct(pool, idCol, textCol, keyCol, 2, checkpointTf, "n_bigrams")(
-      pairs => joinOn(pairs
+    scoreGrams(pool, idCol, textCol, keyCol, 2, "n_bigrams")(
+      pairs => withScalars(pairs
         .join(model.bigrams, ks ++ Seq("w1", "w2"), "left")
         .join(model.contexts, ks :+ "w1", "left")
         .join(model.unigrams.withColumnRenamed("term", "w2"), ks :+ "w2", "left"),
-        broadcast(model.totals), ks),
+        model, ks, nbig = false),
       jmBigram(lamNum, lamDen))
   }
 
@@ -643,8 +645,7 @@ object Ranking {
     */
   def refLm3Score(pool: DataFrame, idCol: String, textCol: String,
       model: RefLmModel, lam3Num: Int = 5, lam3Den: Int = 10,
-      lamNum: Int = 7, lamDen: Int = 10,
-      checkpointTf: Boolean = false, keyCol: Option[String] = None): DataFrame = {
+      lamNum: Int = 7, lamDen: Int = 10, keyCol: Option[String] = None): DataFrame = {
     require(lam3Num > 0 && lam3Num < lam3Den,
       s"need 0 < λ3 < 1, got $lam3Num/$lam3Den")
     val ks = keysOf(model, keyCol, 3)
@@ -653,8 +654,8 @@ object Ranking {
       coalesce(col("ct"), lit(0L)).cast("double") / pTC.cast("double"))
       .otherwise(lit(0.0)) +
       lit((lam3Den - lam3Num).toDouble / lam3Den) * jmBigram(lamNum, lamDen)
-    scoreDistinct(pool, idCol, textCol, keyCol, 3, checkpointTf, "n_trigrams")(
-      triples => joinOn(triples
+    scoreGrams(pool, idCol, textCol, keyCol, 3, "n_trigrams")(
+      triples => withScalars(triples
         .join(model.trigrams, ks ++ Seq("w1", "w2", "w3"), "left")
         .join(model.triContexts, ks ++ Seq("w1", "w2"), "left")
         // the backoff bigram of (w1,w2,w3) is (w2,w3); rename via select
@@ -663,7 +664,7 @@ object Ranking {
           ks ++ Seq("w2", "w3"), "left")
         .join(rekey(model.contexts, ks, col("w1").as("w2"), col("ctx")), ks :+ "w2", "left")
         .join(rekey(model.unigrams, ks, col("term").as("w3"), col("c1")), ks :+ "w3", "left"),
-        broadcast(model.totals), ks),
+        model, ks, nbig = false),
       mix)
   }
 
@@ -690,37 +691,39 @@ object Ranking {
     * deploy and the bit-equal merge carry over to KN unchanged.
     *
     * Keyed: the per-key totals join is INNER (unmodeled keys absent);
-    * the per-key bigram-type total joins LEFT. Scale shape and
-    * determinism: [[scoreDistinct]]. Returns (id, [keyCol], n_trigrams,
-    * logprob) for every pool doc with ≥ 3 tokens.
+    * the per-key bigram-type total joins LEFT ([[withScalars]]). Scale
+    * shape and determinism: [[scoreGrams]]. Returns (id, [keyCol],
+    * n_trigrams, logprob) for every pool doc with ≥ 3 tokens.
     */
   def refLmKn3Score(pool: DataFrame, idCol: String, textCol: String,
       model: RefLmModel, dNum: Int = 3, dDen: Int = 4,
-      checkpointTf: Boolean = false, keyCol: Option[String] = None): DataFrame = {
+      keyCol: Option[String] = None): DataFrame = {
     require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
     val ks = keysOf(model, keyCol, 3)
     val d = dNum.toDouble / dDen
     def by(df: DataFrame, g: String*) = df.groupBy(cols(ks ++ g): _*)
     // continuation tables, each one partial-aggregated groupBy over a
     // MODEL table (trigram/bigram rows are distinct per key, so
-    // count(*) IS the distinct-continuation count)
-    val t3 = by(model.trigrams, "w1", "w2").agg(count(lit(1)).as("__t3"))
-    val cbig = by(model.trigrams, "w2", "w3").agg(count(lit(1)).as("__cc"))
+    // count(*) IS the distinct-continuation count). C3 is the stored
+    // tctx's sum, taken in T3's aggregate instead of read. cbig's
+    // not-null filter is the one its join infers, stated so that C2's
+    // copy of it is the same plan and its exchange runs once
+    val t3 = by(model.trigrams, "w1", "w2").agg(sum("ct").as("ctx3"), count(lit(1)).as("__t3"))
+    val cbig = by(model.trigrams.filter(col("w2").isNotNull && col("w3").isNotNull), "w2", "w3")
+      .agg(count(lit(1)).as("__cc"))
     val c2 = by(cbig, "w2").agg(sum("__cc").as("__c2"), count(lit(1)).as("__t2"))
     val cu = by(model.bigrams, "w2").agg(count(lit(1)).as("__cu"))
-    val btot = by(model.bigrams).agg(count(lit(1)).as("__nbig"))
     val p2 = knLevel(d, "__cc", "__c2", "__t2", knBottom)
     val p3 = knLevel(d, "ct", "ctx3", "__t3", p2)
-    scoreDistinct(pool, idCol, textCol, keyCol, 3, checkpointTf, "n_trigrams")(
-      triples => joinOn(joinOn(triples
+    scoreGrams(pool, idCol, textCol, keyCol, 3, "n_trigrams")(
+      triples => withScalars(triples
         .join(model.trigrams, ks ++ Seq("w1", "w2", "w3"), "left")
-        .join(model.triContexts, ks ++ Seq("w1", "w2"), "left")
         .join(t3, ks ++ Seq("w1", "w2"), "left")
         // the continuation bigram of (w1,w2,w3) is keyed (w2,w3) already
         .join(cbig, ks ++ Seq("w2", "w3"), "left")
         .join(c2, ks :+ "w2", "left")
         .join(rekey(cu, ks, col("w2").as("w3"), col("__cu")), ks :+ "w3", "left"),
-        broadcast(model.totals), ks), broadcast(btot), ks, "left"),
+        model, ks, nbig = true),
       p3)
   }
 
@@ -741,13 +744,13 @@ object Ranking {
     * re-derives from the pruned table, so the pruned distribution stays
     * normalized. The stored artifact is untouched.
     *
-    * Scale shape (r18 optimization round): the model-join chain runs
-    * DIRECTLY over the per-doc 5-tuple rows — at order 5 the
-    * distinct-tuple dedup buys nothing (measured at sf0.1: 250,704
-    * per-doc rows vs 250,282 distinct 5-tuples, 1.002x), so the
-    * distinct exchange, the join-back and the two-consumer tokenize
-    * checkpoint of [[scoreDistinct]] would be pure overhead. Key
-    * contract as [[refLmKn3Score]]. Returns (id, [keyCol], n_5grams,
+    * Scale shape: the model-join chain runs over the per-doc 5-tuple
+    * rows (one groupBy per doc first; its exchange is what spreads the
+    * chain across tasks). The order-2/3 scorers join per occurrence
+    * instead, ungrouped ([[scoreGrams]], with its measurement); at
+    * order 5 a per-doc 5-tuple is nearly always one occurrence (sf0.1:
+    * 250,704 per-doc rows vs 250,282 distinct 5-tuples). Key contract
+    * as [[refLmKn3Score]]. Returns (id, [keyCol], n_5grams,
     * logprob) for every pool doc with ≥ 5 tokens.
     */
   def refLmKn5Score(pool: DataFrame, idCol: String, textCol: String,
@@ -782,7 +785,6 @@ object Ranking {
     val c2 = by(cc2, "w4").agg(sum("__cc2").as("__c2x"), count(lit(1)).as("__t2"))
     // bottom: left-neighbor counts from the bigram table + B + V
     val cu = by(model.bigrams, "w2").agg(count(lit(1)).as("__cu"))
-    val btot = by(model.bigrams).agg(count(lit(1)).as("__nbig"))
     val p2 = knLevel(d, "__cc2", "__c2x", "__t2", knBottom)
     val p3 = knLevel(d, "__cc3", "__c3x", "__t3", p2)
     val p4 = knLevel(d, "__cc4", "__c4x", "__t4", p3)
@@ -790,7 +792,8 @@ object Ranking {
     // the per-doc 5-tuple frame: the groupBy's exchange is also what
     // spreads the join chain across tasks (the raw explode runs inside
     // the scan's split count)
-    val rows = joinOn(joinOn(perDocGrams(pool, idCol, textCol, keyCol, 5)
+    val rows = withScalars(poolGrams(pool, idCol, textCol, keyCol, 5)
+      .groupBy(cols(("__id" +: ks) ++ gramCols(5)): _*).agg(count(lit(1)).as("__tf"))
       .join(five, ks ++ gramCols(5), "left")
       .join(ce5, ks ++ Seq("w1", "w2", "w3", "w4"), "left")
       .join(cc4, ks ++ Seq("w2", "w3", "w4", "w5"), "left")
@@ -800,7 +803,7 @@ object Ranking {
       .join(cc2, ks ++ Seq("w4", "w5"), "left")
       .join(c2, ks :+ "w4", "left")
       .join(rekey(cu, ks, col("w2").as("w5"), col("__cu")), ks :+ "w5", "left"),
-      broadcast(model.totals), ks), broadcast(btot), ks, "left")
+      model, ks, nbig = true)
     docMeans(rows.select(cols("__id" +: ks) ++ Seq(col("__tf"), logp9(p5)): _*),
       idCol, keyCol, "n_5grams")
   }
@@ -822,17 +825,27 @@ object Ranking {
     * the cutoff is a value, not a row split — so the rule needs NO
     * global row-number over the corpus: the order statistics come from
     * [[cutoffsFromHist]] over the HISTOGRAM of distinct rounded scores
-    * (≪ corpus-sized), and the bucketing reads the cutoffs as literals
-    * (keyed: a map on the key, which a NULL key or one with no cutoffs
-    * misses and drops out). Returns one row per non-empty bucket:
-    * (bucket, n_docs, min_logprob, max_logprob, <count column>),
-    * ordered by bucket name (head < middle < tail alphabetically).
-    * With `keyCol` the cutoffs are PER KEY (CCNet's per-language
-    * percentiles): one row per (keyCol, non-empty bucket).
+    * (≪ corpus-sized), and [[bucketReport]] buckets it on the driver.
+    * Returns one row per non-empty bucket: (bucket, n_docs,
+    * min_logprob, max_logprob, <count column>), ordered by bucket name
+    * (head < middle < tail alphabetically). With `keyCol` the cutoffs
+    * are PER KEY (CCNet's per-language percentiles): one row per
+    * (keyCol, non-empty bucket). Eager: the scoring runs inside this
+    * call, and the result is a local relation.
     */
   def refLmPerplexityBuckets(scored: DataFrame,
       keyCol: Option[String] = None): DataFrame =
-    refLmPerplexityBucketsCached(scored, keyCol).df
+    bucketReport(scored, keyCol)(cutoffsFromHist(_, keyCol.toSeq))
+
+  /** [[refLmPerplexityBuckets]] at STORED cutoffs — the rows of
+    * [[readRefLmCutoffs]] — instead of the scored frame's own tertiles:
+    * the deploy gate's rollup. A doc whose key has no cutoff row drops
+    * out. Eager, as [[refLmPerplexityBuckets]].
+    */
+  def refLmBucketsAtCutoffs(scored: DataFrame, cutoffs: DataFrame,
+      keyCol: Option[String] = None): DataFrame =
+    bucketReport(scored, keyCol)(_ =>
+      cutoffs.select(cols(keyCol.toSeq ++ Seq("v_head", "v_mid")): _*).collect().toSeq)
 
   /** CCNet's bucket rule, the one place it is written: `head` when
     * `logprob ≥ vHead`, `middle` when `logprob ≥ vMid`, else `tail`.
@@ -845,37 +858,60 @@ object Ranking {
       .when(logprob >= vMid, lit("middle"))
       .otherwise(lit("tail"))
 
-  /** [[refLmPerplexityBuckets]] exposing the checkpointed histogram
-    * handle (the [[Dedup.CachedDF]] contract), for long-lived sessions
-    * to release; Verify/Bench release via their per-query `clearCache`.
+  /** One report row's running tally: docs, min and max score (NULL
+    * scores skipped, as `min`/`max` skip them) and n-gram total. */
+  private final case class BucketTally(n: Long, lo: Option[Double], hi: Option[Double],
+      grams: Long) {
+    def +(o: BucketTally): BucketTally = BucketTally(n + o.n,
+      (lo ++ o.lo).minOption(Ordering.Double.TotalOrdering),
+      (hi ++ o.hi).maxOption(Ordering.Double.TotalOrdering), grams + o.grams)
+  }
+
+  /** The bucket report of `scored` at the ([keys], v_head, v_mid) rows
+    * `cutoffs` gives for its [[scoreHist]]: one job tallies (key,
+    * bucket) → (docs, min, max, n-gram total) per histogram partition,
+    * and the driver merges the tallies and sorts the ≤ 3 rows per key
+    * by (key, bucket) as Spark orders them. A NULL key, or one with no
+    * cutoff row, drops out; a NULL cutoff compares as unknown
+    * ([[perplexityBucket]]). Returns a local relation; the histogram is
+    * released before it returns.
     */
-  def refLmPerplexityBucketsCached(scored: DataFrame,
-      keyCol: Option[String] = None): Dedup.CachedDF = {
-    val (ks, hist, vs) = (keyCol.toSeq, scoreHist(scored, keyCol.toSeq), ArrayType(DoubleType))
-    // each key's [v_head, v_mid] as a literal; keyed, a map on the key
-    val cuts = cutoffsFromHist(hist, ks).map(r => (r.toSeq.take(ks.size),
-      array(lit(r.get(ks.size)), lit(r.get(ks.size + 1))).cast(vs)))
-    val v = keyCol.fold(cuts.head._2)(k => if (cuts.isEmpty) lit(null).cast(vs) else map(cuts.flatMap {
-      case (key, c) => Seq(lit(key.head).cast(hist.schema(k).dataType), c) }: _*)(col(k)))
-    val df = hist.filter(v.isNotNull)
-      .select(cols(ks) ++ Seq(perplexityBucket(col("logprob"), v(0), v(1)).as("bucket"),
-        col("logprob"), col("nv"), col("snb")): _*)
-      .groupBy(cols(ks :+ "bucket"): _*)
-      .agg(sum("nv").as("n_docs"), min("logprob").as("min_logprob"),
-        max("logprob").as("max_logprob"), sum("snb").as(countCol(scored)))
-      .orderBy(cols(ks :+ "bucket"): _*)
-    Dedup.CachedDF(df, Nil, Seq(() => graftbridge.unpersistCheckpointed(hist)))
+  private def bucketReport(scored: DataFrame, keyCol: Option[String])(
+      cutoffs: DataFrame => Seq[Row]): DataFrame = {
+    val (ks, k, cnt) = (keyCol.toSeq, keyCol.size, countCol(scored))
+    val hist = scoreHist(scored, ks)
+    try {
+      val cuts = cutoffs(hist).map(r => (0 until k).map(r.get) -> r).toMap
+      val tallies = hist.rdd.mapPartitions(_.foldLeft(Map.empty[Seq[Any], BucketTally]) { (m, r) =>
+        val key = (0 until k).map(r.get)
+        cuts.get(key).fold(m) { c =>
+          val lp = Option(r.get(k)).map(_.asInstanceOf[Double])
+          def atLeast(i: Int) = lp.exists(x => !c.isNullAt(k + i) && x >= c.getDouble(k + i))
+          val kb = key :+ (if (atLeast(0)) "head" else if (atLeast(1)) "middle" else "tail")
+          val t = BucketTally(r.getLong(k + 1), lp, lp, r.getLong(k + 2))
+          m.updated(kb, m.get(kb).fold(t)(_ + t))
+        }
+      }.iterator).collect().groupMapReduce(_._1)(_._2)(_ + _)
+      val schema = StructType(ks.map(hist.schema(_)) ++ Seq(StructField("bucket", StringType, false),
+        StructField("n_docs", LongType), StructField("min_logprob", DoubleType),
+        StructField("max_logprob", DoubleType), StructField(cnt, LongType)))
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+      scored.sparkSession.createDataFrame(tallies.toSeq.map { case (kb, t) =>
+        Row.fromSeq(kb ++ Seq(t.n, t.lo.map(Double.box).orNull, t.hi.map(Double.box).orNull, t.grams))
+      }.sortBy(toCatalyst(_).asInstanceOf[InternalRow])(
+        RowOrdering.createNaturalAscendingOrdering(schema.take(k + 1).map(_.dataType))).asJava, schema)
+    } finally graftbridge.unpersistCheckpointed(hist)
   }
 
   /** The HISTOGRAM of a scored frame — ([keys], logprob, nv = docs at
     * that score, snb = their n-gram total), CHECKPOINTED: the cutoff
-    * collects and the bucket report all read these rows, so the scoring
-    * pipeline executes exactly ONCE. The histogram is bounded by the
-    * 6-decimal score value space, not the corpus. A localCheckpoint,
-    * not a persist: a persisted frame carries the whole scoring plan
-    * into every later job's AQE re-optimization (~1.3 s of serial
-    * driver gaps per LM query at sf0.1, r17); the checkpoint truncates
-    * it to a LogicalRDD over the same rows.
+    * collects and the bucket tally all read these rows, so the scoring
+    * pipeline executes exactly ONCE, in this eager checkpoint. The
+    * histogram is bounded by the 6-decimal score value space, not the
+    * corpus. A localCheckpoint, not a persist: a persisted frame
+    * carries the whole scoring plan into every later job's AQE
+    * re-optimization (~1.3 s of serial driver gaps per LM query at
+    * sf0.1, r17); the checkpoint truncates it to a LogicalRDD.
     */
   private def scoreHist(scored: DataFrame, ks: Seq[String]): DataFrame =
     scored.groupBy(cols(ks :+ "logprob"): _*)
@@ -960,7 +996,8 @@ object Ranking {
     * row, and a NULL `v_mid` would send every doc below `v_head` to
     * `tail` ([[perplexityBucket]]). The schema comes from the footer
     * ([[Readers.parquet]]), so the check's one collect is the read's
-    * only job.
+    * only job, and the rows it checked come back as a local relation:
+    * collecting them again runs no job.
     */
   def readRefLmCutoffs(spark: SparkSession, path: String,
       keyCol: Option[String] = None): DataFrame = {
@@ -974,64 +1011,42 @@ object Ranking {
       fail("has a NULL v_head or v_mid"))
     require(keys.distinct.length == rows.length && !keys.exists(_.contains(null)),
       fail(keyCol.fold("has more than one row")(k => s"has a repeated or NULL $k")))
-    cuts
+    spark.createDataFrame(rows.toSeq.asJava, cuts.schema)
   }
 
-  /** Run independent artifact-table writes CONCURRENTLY — the safe
-    * version of the round-15 landmine (see PLANS round-15): naive
+  /** Run independent artifact-table writes CONCURRENTLY, safely. Naive
     * concurrent writes of frames sharing expression-tree instances
-    * silently corrupted counts, because Catalyst's
+    * silently corrupted counts (round 15): Catalyst's
     * `ConvertToLocalRelation` folds projections over LocalRelations
-    * EAGERLY during optimization with interpreted expression
-    * evaluation, and concurrent optimization of plans sharing a
-    * higher-order function's `LambdaVariable` races on its value
-    * holder (reproduced: impossible bigrams, redistributed unigram
-    * totals; 8/8 clean with the rule excluded). Two independent
-    * defenses here, either sufficient:
-    *
-    *  1. every write re-analyzes the RAW logical plan under its own
-    *     thread (graftbridge `ofRows`), so lambda binding mints
-    *     FRESH `NamedLambdaVariable` instances per plan — nothing
-    *     mutable is shared across threads;
-    *  2. the writes run in a CLONED SparkSession with
-    *     `ConvertToLocalRelation` excluded (the experimentally-proven
-    *     fix), so the eager interpreted fold never runs at all. The
-    *     clone shares the SparkContext and the cache manager (persisted
-    *     merge frames still substitute) but owns its SQLConf, so the
-    *     exclusion never leaks into the caller's session.
-    *
-    * RefLmParallelWriteSpec is the promoted 8/8 concurrency test: it
-    * replays the exact racy shape (HOF tokenize lambdas over a local
-    * relation under every count table) and asserts bit-exact counts
-    * across repeated concurrent writes.
+    * eagerly with interpreted evaluation, and concurrent optimization of
+    * plans sharing a higher-order function's `LambdaVariable` races on
+    * its value holder. Two defenses, either sufficient: every write
+    * re-analyzes the RAW logical plan on its own thread (graftbridge
+    * `ofRows`), minting fresh lambda variables per plan; and the writes
+    * run in a CLONED session with `ConvertToLocalRelation` excluded,
+    * which shares the SparkContext and cache manager but owns its
+    * SQLConf, so the exclusion never leaks into the caller's session.
+    * RefLmParallelWriteSpec replays the racy shape and asserts
+    * bit-exact counts across repeated concurrent writes.
     */
-  private def writeTablesParallel(
-      tables: Seq[(DataFrame, String, Boolean)]): Unit = {
+  private def writeTablesParallel(tables: Seq[(DataFrame, String, Boolean)]): Unit = {
     require(tables.nonEmpty, "no tables to write")
-    val spark = tables.head._1.sparkSession
     // a true CLONE (not newSession): the writer must inherit the
-    // caller's RUNTIME SQL confs — e.g. the nanos-timestamp parquet
-    // conf Tables.load sets — or a written table whose lineage reads
-    // events.ts would execute under different conf than the
-    // sequential path did (ADVICE r16)
-    val writer = org.apache.spark.sql.graftbridge.cloneSession(spark)
+    // caller's RUNTIME SQL confs, such as the nanos-timestamp parquet
+    // conf Tables.load sets
+    val writer = graftbridge.cloneSession(tables.head._1.sparkSession)
     writer.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
     // raw plans captured on the caller thread; each task re-analyzes
     // its own copy under the writer session
-    val jobs = tables.map { case (df, path, one) =>
-      (df.queryExecution.logical, path, one)
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(jobs.size, 6))
+    val jobs = tables.map { case (df, path, one) => (df.queryExecution.logical, path, one) }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(jobs.size, 6))
     try {
       val futs = jobs.map { case (plan, path, one) =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = {
-            val rebound =
-              org.apache.spark.sql.graftbridge.ofRows(writer, plan)
-            (if (one) rebound.coalesce(1) else rebound)
-              .write.mode("overwrite").parquet(path)
+            val rebound = graftbridge.ofRows(writer, plan)
+            (if (one) rebound.coalesce(1) else rebound).write.mode("overwrite").parquet(path)
           }
         })
       }
@@ -1046,8 +1061,7 @@ object Ranking {
     * reads counts, never retrains. Order 2 writes `unigram`, `bigram`,
     * `ctx` and `totals`; order 3 adds `trigram` and `tctx`; order 5
     * adds `fourgram` and `fivegram`. The independent writes overlap
-    * through [[writeTablesParallel]] (safe since round 16 — see its
-    * scaladoc for the ConvertToLocalRelation race this used to be).
+    * through [[writeTablesParallel]].
     */
   def writeRefLm(model: RefLmModel, path: String): Unit =
     writeTablesParallel((countTables.map(_._1).zip(model.counts) ++
@@ -1060,25 +1074,30 @@ object Ranking {
     * from its footer ([[Readers.parquet]]). Fails fast on a totals table
     * that signals an empty or partially-written model, which would
     * otherwise score every document NULL: unkeyed, exactly one non-null
-    * row with a positive token count; keyed, a non-empty table.
+    * row with a positive token count; keyed, a non-empty table. That
+    * check's collect is the read's one job, and the model's totals are
+    * a local relation of the rows it collected; unkeyed, the bigram-type
+    * count comes from the bigram table's footers
+    * ([[Readers.parquetRowCount]]). An unkeyed scorer then reads its
+    * scalars with no job ([[withScalars]]).
     */
   def readRefLm(spark: SparkSession, path: String): RefLmModel = {
     val tot = Readers.parquet(spark, s"$path/totals")
-    if (tot.columns.headOption.contains("__k"))
-      require(!tot.isEmpty,
-        s"keyed reference-LM artifact at $path has an empty totals table")
-    else {
-      val rows = tot.collect()
-      require(rows.length == 1 && !rows(0).isNullAt(0) && rows(0).getLong(0) > 0,
-        s"reference-LM artifact at $path has an empty or invalid totals table")
-    }
-    val dir = new org.apache.hadoop.fs.Path(path)
+    val rows = tot.collect()
+    val keyed = tot.columns.headOption.contains("__k")
+    if (keyed) require(rows.nonEmpty,
+      s"keyed reference-LM artifact at $path has an empty totals table")
+    else require(rows.length == 1 && !rows(0).isNullAt(0) && rows(0).getLong(0) > 0,
+      s"reference-LM artifact at $path has an empty or invalid totals table")
+    val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def read(name: String) = Readers.parquet(spark, s"$path/$name")
     val counts = countTables.map(_._1)
-      .takeWhile(name => fs.exists(new org.apache.hadoop.fs.Path(dir, name)))
+      .takeWhile(name => fs.exists(new Path(dir, name)))
       .map(read)
-    RefLmModel(counts, Seq("ctx", "tctx").take(counts.size - 1).map(read), tot)
+    RefLmModel(counts, Seq("ctx", "tctx").take(counts.size - 1).map(read),
+      spark.createDataFrame(rows.toSeq.asJava, tot.schema),
+      Option.when(!keyed)(Readers.parquetRowCount(spark, s"$path/bigram")).flatten)
   }
 
   /** The merged model of [[mergeIntoStoredRefLmReturning]] plus the
@@ -1112,46 +1131,33 @@ object Ranking {
 
   /** Merge a NEW reference slice into a stored [[writeRefLm]] artifact
     * in place and hand back the merged model AS the persisted frames
-    * the staged write materialized, so the caller can score at once
-    * without re-reading the tables (and without the totals-collect
-    * barrier of [[readRefLm]]). `None` iff `batchId` was already
-    * applied.
+    * the staged write materialized, so the caller scores at once with
+    * no read-back. `None` iff `batchId` was already applied.
     *
     * Counts are additive at every order and per key, so the merged
-    * model is EXACTLY the model a from-scratch retrain on the union
-    * would produce (RefLmSpec, RefLm3Spec, RefLmKn5Spec and
-    * KeyedRefLmMergeSpec assert the bit-for-bit equality), at the cost
-    * of one delta-sized training pass at the stored order plus one
-    * model-sized union-aggregate per count table — never a re-read of
-    * the historical corpus. Contexts and totals re-derive from the
-    * merged counts. A keyed model merges a delta of any key mix in ONE
-    * pass (`keyCol` names the delta's key; new keys appear, untouched
-    * keys keep their counts) — retraining a hundred languages because
-    * one grew is the anti-pattern this closes.
+    * model is EXACTLY a from-scratch retrain on the union (RefLmSpec,
+    * RefLm3Spec, RefLmKn5Spec and KeyedRefLmMergeSpec assert it), for
+    * one delta-sized training pass plus one model-sized union-aggregate
+    * per count table; contexts and totals re-derive. A keyed model
+    * merges a delta of any key mix in ONE pass (`keyCol` names the
+    * delta's key; new keys appear, untouched keys keep their counts).
     *
-    * Replay idempotence: pass `batchId` and the merge keeps an
-    * applied-batch log INSIDE the model directory (`applied` table) —
-    * a batch id already in the log is a no-op, and the log stages and
-    * swaps WITH the count tables, so the model and its log can never
-    * disagree after a crash: either both absorbed the batch or neither
-    * did. This is what makes
-    * [[graft.streaming.StreamingPerplexity.ingestReference]] safe under
-    * micro-batch replay.
+    * Replay idempotence: with `batchId`, an applied-batch log (the
+    * `applied` table) lives INSIDE the model directory and stages and
+    * swaps WITH the counts, so a logged batch is a no-op and model and
+    * log never disagree after a crash
+    * ([[graft.streaming.StreamingPerplexity.ingestReference]]).
     *
-    * Crash safety: the merged tables stage into a sibling directory
-    * and swap in by TWO renames (live→old, staged→live) — no mixed
-    * model is ever visible, but a crash BETWEEN the renames leaves no
-    * model at `path` (it sits complete at `path__old`): readers fail
-    * with a missing path, never wrong counts, and the next merge
-    * self-heals by restoring `path__old` before proceeding (manual
-    * recovery = the same rename). NOT safe concurrently with another
-    * writer of `path`; quiesce first.
+    * Crash safety: the merged tables stage into a sibling directory and
+    * swap in by TWO renames (live→old, staged→live); a crash between
+    * them leaves the model complete at `path__old`, readers fail on the
+    * missing path, and the next merge restores it first. NOT safe
+    * concurrently with another writer of `path`.
     */
   def mergeIntoStoredRefLmReturning(spark: SparkSession, path: String,
       delta: DataFrame, textCol: String,
       isRef: Column = lit(true), batchId: Option[Long] = None,
       keyCol: Option[String] = None): Option[MergedRefLm] = {
-    import org.apache.hadoop.fs.Path
     val live = new Path(path)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     healStranded(fs, live)
@@ -1189,23 +1195,16 @@ object Ranking {
     * complete model at `__old` with nothing live is the only state the
     * swap can strand — restore it before reading.
     */
-  private def healStranded(
-      fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(
-      live.getParent, live.getName + "__old")
+  private def healStranded(fs: FileSystem, live: Path): Unit = {
+    val old = new Path(live.getParent, live.getName + "__old")
     if (!fs.exists(live) && fs.exists(old)) { fs.rename(old, live); () }
   }
 
   /** Swap a fully-written `staged` model dir in over `live` — two
     * renames through `__old`, restore-on-failure, never a mixed model.
     */
-  private def stagedSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path,
-      staged: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(
-      live.getParent, live.getName + "__old")
+  private def stagedSwap(fs: FileSystem, live: Path, staged: Path): Unit = {
+    val old = new Path(live.getParent, live.getName + "__old")
     if (fs.exists(old)) fs.delete(old, true)
     if (!fs.rename(live, old))
       throw new java.io.IOException(s"stagedSwap: could not stage out $live")
@@ -1220,10 +1219,8 @@ object Ranking {
   }
 
   /** The applied-batch log of a stored model dir, if one exists. */
-  private def readApplied(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(live, "applied")
+  private def readApplied(spark: SparkSession, fs: FileSystem, live: Path): Option[DataFrame] = {
+    val p = new Path(live, "applied")
     if (fs.exists(p)) Some(Readers.parquet(spark, p.toString)) else None
   }
 
@@ -1235,8 +1232,7 @@ object Ranking {
   /** Extend the applied-batch log INSIDE the staged dir so it swaps
     * atomically with the counts it describes.
     */
-  private def writeApplied(spark: SparkSession,
-      staged: org.apache.hadoop.fs.Path,
+  private def writeApplied(spark: SparkSession, staged: Path,
       prevApplied: Option[DataFrame], batchId: Option[Long]): Unit = {
     val newApplied = (prevApplied, batchId) match {
       case (p, Some(id)) =>
@@ -1245,7 +1241,7 @@ object Ranking {
       case (p, None) => p
     }
     newApplied.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(staged, "applied").toString))
+      .parquet(new Path(staged, "applied").toString))
   }
 
   /** The shared DuckDB CTE chain for the reference-LM family: trains

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Try, Using}
 
 import com.univocity.parsers.csv.CsvParser
@@ -152,23 +153,45 @@ object Readers {
     parquetFooterSchema(spark, path)
       .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
+  /** The row count of the parquet at `path`, summed on the driver from
+    * the row groups in its data files' footers: no Spark job. None
+    * where the footers cannot stand for the rows [[parquet]] reads: a
+    * glob, a directory with subdirectories, no data file, or a footer
+    * that does not read.
+    */
+  def parquetRowCount(spark: SparkSession, path: String): Option[Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    parquetLeaves(spark, path).map(_.filterNot(f => parquetSummaries(f.getPath.getName)))
+      .filter(_.nonEmpty)
+      .flatMap(files => Try(files.map(f => ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER)
+        .getBlocks.asScala.map(_.getRowCount).sum).sum).toOption)
+  }
+
+  private val parquetSummaries = Set("_common_metadata", "_metadata")
+
+  /** The files of the parquet at `path` as Spark lists them, by path;
+    * None for a glob (Spark's to expand), a missing path or a directory
+    * with subdirectories (partition discovery). */
+  private def parquetLeaves(spark: SparkSession, path: String): Option[Seq[FileStatus]] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option.when(!path.exists("{}[]*?\\".contains(_)) && fs.exists(p))(fs.getFileStatus(p))
+      .map(st => if (st.isFile) Seq(st) else fs.listStatus(p).toSeq
+        .filterNot(f => graftbridge.hiddenPathName(f.getPath.getName)))
+      .filterNot(_.exists(_.isDirectory))
+      .map(_.sortBy(_.getPath.toString))
+  }
+
   private def parquetFooterSchema(spark: SparkSession, path: String): Option[StructType] = {
     val sql = graftbridge.sqlConf(spark)
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val summaries = Set("_common_metadata", "_metadata")
-    // the file or directory as Spark lists it; a glob is Spark's to expand
-    val leaves = Option.when(!sql.isParquetSchemaMergingEnabled &&
-        !path.exists("{}[]*?\\".contains(_)) && fs.exists(p))(fs.getFileStatus(p)).toSeq
-      .flatMap(st => if (st.isFile) Seq(st) else fs.listStatus(p).toSeq
-        .filterNot(f => graftbridge.hiddenPathName(f.getPath.getName)))
-    if (leaves.exists(_.isDirectory)) return None
-    val files = leaves.sortBy(_.getPath.toString)
-    def named(n: String) = files.find(_.getPath.getName == n)
-    named("_common_metadata").orElse(named("_metadata"))
-      .orElse(files.find(f => !summaries(f.getPath.getName)))
-      .flatMap(f => Try(new Footer(f.getPath, ParquetFooterReader.readFooter(
+    val leaves = if (sql.isParquetSchemaMergingEnabled) None else parquetLeaves(spark, path)
+    leaves.flatMap { files =>
+      def named(n: String) = files.find(_.getPath.getName == n)
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(files.find(f => !parquetSummaries(f.getPath.getName)))
+    }.flatMap(f => Try(new Footer(f.getPath, ParquetFooterReader.readFooter(
         HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))).toOption)
       .map(ParquetFileFormat.readSchemaFromFooter(_, new ParquetToSparkSchemaConverter(sql)))
   }

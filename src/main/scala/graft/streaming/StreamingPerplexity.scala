@@ -26,7 +26,7 @@ import graft.operators.Ranking
   * ITS key's model and cutoff row (one model per language).
   *
   * Why `foreachBatch` and not a streaming aggregation: scoring needs
-  * a per-doc n-gram groupBy plus the model joins per batch —
+  * the model joins plus a per-doc aggregate per batch —
   * `foreachBatch` gives each micro-batch the full batch planner (the
   * [[StreamingCuration]] rationale), and the model tables are static
   * parquet the batch plan joins as ordinary relations (AQE broadcasts

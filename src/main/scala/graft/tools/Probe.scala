@@ -28,7 +28,20 @@ object Probe {
         graft.operators.Dedup.lshBuckets(
           graft.operators.Dedup.minhashSignatures(
             graft.Tables.load(s, dir, "documents"), "doc_id", "text", 9),
-          "doc_id", 9, 3))
+          "doc_id", 9, 3)),
+      // q198's scoring frame: the stored order-3 model, the stamp
+      // observed on the pool. q198 returns a local relation, so this is
+      // where its scoring plan shows
+      "x_kn3_scored" -> ((s, dir) => {
+        val docs = graft.Tables.load(s, dir, "documents")
+        val p = java.nio.file.Files.createTempDirectory("probe-kn3").toString
+        graft.operators.Ranking.writeRefLm(graft.operators.Ranking.refLmTrain(
+          docs, "text", org.apache.spark.sql.functions.col("lang") === "en", 3), s"$p/model")
+        graft.core.SnapshotStamp.write(docs, "doc_id", s"$p/stamp")
+        graft.operators.Ranking.refLmKn3Score(
+          graft.core.SnapshotStamp.observeFresh(docs, "doc_id", s"$p/stamp")._1,
+          "doc_id", "text", graft.operators.Ranking.readRefLm(s, s"$p/model"))
+      })
     )
     // `all` expands to every SparkEntry query (live per-query output —
     // unlike Bench, which prints one line at the very end)

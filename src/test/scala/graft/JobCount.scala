@@ -19,13 +19,20 @@ import org.scalatest.time.SpanSugar._
   * been seen.
   */
 object JobCount {
-  def apply(spark: SparkSession, groupPrefix: String)(body: => Any): Int = {
+  def apply(spark: SparkSession, groupPrefix: String)(body: => Any): Int =
+    sites(spark, groupPrefix)(body).size
+
+  /** The short call sites (`collect at Ranking.scala:123`) of the jobs
+    * [[apply]] counts, in start order. */
+  def sites(spark: SparkSession, groupPrefix: String)(body: => Any): Seq[String] = {
     val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
+      // a job's call site names its result stage, the last one
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+        jobs.add((Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""),
+          e.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name)))
     }
     sc.addSparkListener(listener)
     try {
@@ -33,15 +40,19 @@ object JobCount {
       val marker = s"job-count-marker-${UUID.randomUUID()}"
       sc.setJobGroup(marker, null)
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      eventually(timeout(30.seconds), interval(20.millis)) { assert(groups.contains(marker)) }
-      groups.asScala.count(_.startsWith(groupPrefix))
+      eventually(timeout(30.seconds), interval(20.millis)) { assert(jobs.asScala.exists(_._1 == marker)) }
+      jobs.asScala.toSeq.collect { case (g, site) if g.startsWith(groupPrefix) => site }
     } finally sc.removeSparkListener(listener)
   }
 
   /** [[apply]] with `body` run under the job group `group` itself. */
-  def inGroup(spark: SparkSession, group: String)(body: => Any): Int = {
+  def inGroup(spark: SparkSession, group: String)(body: => Any): Int =
+    sitesInGroup(spark, group)(body).size
+
+  /** [[sites]] with `body` run under the job group `group` itself. */
+  def sitesInGroup(spark: SparkSession, group: String)(body: => Any): Seq[String] = {
     val sc = spark.sparkContext
-    apply(spark, group) {
+    sites(spark, group) {
       sc.setJobGroup(group, null)
       try body finally sc.clearJobGroup()
     }
