@@ -778,8 +778,9 @@ object SparkEntry {
     }
 
   /** The STORED order-3 reference-LM artifact — [[refLmArtifact]] one
-    * order up: six count tables (q192 reads them, trains nothing),
-    * freshness-stamped like every corpus-derived stored artifact.
+    * order up: six count tables plus the four KN tables (q192 and q198
+    * read them, train nothing), freshness-stamped like every
+    * corpus-derived stored artifact.
     */
   private val refLm3ArtifactMemo = new SessionMemo[String, String]
 
@@ -2685,11 +2686,11 @@ object SparkEntry {
 
     // ---- extension: Kneser-Ney order-3 perplexity buckets ----
     // CCNet's actual smoothing (KenLM is interpolated KN, not JM):
-    // absolute discount 3/4 with CONTINUATION-count lower orders, all
-    // derived from the SAME six stored count tables q192 deploys from
-    // (freshness-stamped; nothing retrains, no new artifact format —
-    // continuation tables are groupBys over the stored counts, so the
-    // bit-equal incremental merge carries over to KN unchanged)
+    // absolute discount 3/4 with CONTINUATION-count lower orders, read
+    // from the SAME stored order-3 artifact q192 deploys from
+    // (freshness-stamped; nothing retrains): the continuation tables
+    // are groupBys over the counts, written with them and re-derived by
+    // a merge, so the bit-equal incremental merge carries over to KN)
     "q198_kn3_buckets" -> ((s, dir) => {
       val p = refLm3Artifact(s, dir)
       val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),
@@ -2730,10 +2731,9 @@ object SparkEntry {
 
     // ---- extension: per-language Kneser-Ney buckets ----
     // q198's smoothing family at the q195/q196 deployment matrix: every
-    // document scores under ITS language's interpolated-KN chain, all
-    // KN tables derived per key from the SAME six stored keyed count
-    // tables q196 deploys from (freshness-stamped; nothing retrains,
-    // no new artifact format)
+    // document scores under ITS language's interpolated-KN chain, its
+    // KN tables read per key from the SAME stored keyed order-3
+    // artifact q196 deploys from (freshness-stamped; nothing retrains)
     "q200_kn3_by_lang" -> ((s, dir) => {
       val (mp, _) = keyedRefLm3Artifacts(s, dir)
       val (docs, fresh) = core.SnapshotStamp.observeFresh(T(s, dir, "documents"),

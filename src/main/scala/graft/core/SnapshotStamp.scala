@@ -2,7 +2,7 @@ package graft.core
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge
 
@@ -76,8 +76,8 @@ object SnapshotStamp {
     stamp(df, idCol, salt).coalesce(1).write.mode("overwrite").parquet(path)
 
   /** Recompute the live stamp and compare against the stored one.
-    * One aggregate job over the live id column plus a 1-row artifact
-    * read.
+    * One aggregate job over the live id column; the stored stamp is read
+    * on the driver.
     */
   def isFresh(live: DataFrame, idCol: String, path: String,
       salt: String = "stamp:"): Boolean =
@@ -139,11 +139,13 @@ object SnapshotStamp {
       s"stale artifact stamp at $path: stored (n_rows, id_hash) = $stored " +
         s"but the live corpus is $now — rebuild the artifact before serving it")
 
+  /** The stored stamp, read on the driver with no job
+    * ([[Readers.parquetRows]]). */
   private def readStamp(spark: SparkSession, path: String): (Long, String) = {
-    val rows = Readers.parquet(spark, path)
-      .select(col("n_rows"), col("id_hash")).collect()
-    require(rows.length == 1 && !rows(0).isNullAt(0) && !rows(0).isNullAt(1),
+    val rows = Readers.parquetRows(spark, path)
+    def has(r: Row, c: String) = !r.isNullAt(r.fieldIndex(c))
+    require(rows.length == 1 && has(rows(0), "n_rows") && has(rows(0), "id_hash"),
       s"snapshot stamp at $path is not exactly one non-null row")
-    (rows(0).getLong(0), rows(0).getString(1))
+    (rows(0).getAs[Long]("n_rows"), rows(0).getAs[String]("id_hash"))
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, MapType, StringType, StructField, StructType}
 
 import graft.plans.TopKPerKey
 import graft.sources.Readers
@@ -374,21 +374,23 @@ object Ranking {
     *  - `contextTables`: `ctx` (w1, ctx) = c(w1 ·) and, from order 3,
     *    `tctx` (w1, w2, ctx3) = c(w1 w2 ·) — NOT the bigram count (a
     *    document's final bigram has no continuation);
-    *  - `totals`: (n_ref_tokens, vocab), one row;
-    *  - `bigramTypes`: the bigram table's row count when it is known on
-    *    the driver (an unkeyed stored model: [[readRefLm]] sums it from
-    *    the parquet footers), so a Kneser-Ney scorer reads `B` with no
-    *    job. Never stored.
+    *  - `totals`: (n_ref_tokens, vocab, n_bigram_types), one row;
+    *  - `knTables`: an order-3 model's Kneser-Ney tables `t3`, `cbig`,
+    *    `c2` and `cu` ([[kn3Tables]]); empty for any other order.
     * A keyed model leads every table with `__k` (totals: one row per
-    * key) — keyedness is read from that schema, never flagged. Kneser-
-    * Ney's context, continuation and type tables are deliberately NOT
-    * stored: they derive at score time (one groupBy each), so the
-    * artifact holds only additive counts and a merge stays bit-equal
-    * to a retrain.
+    * key) — keyedness is read from that schema, never flagged. Every
+    * table but the counts derives from the counts ([[withDerived]]), so
+    * a merge re-derives them and stays bit-equal to a retrain. The KN
+    * tables are stored as KenLM stores its model: built once, looked up
+    * by every pass. Derived at score time instead, a q198 pass paid 4
+    * aggregate jobs of its 17 (300 generated docs, `local[4]`); a
+    * model with no stored KN tables (an order-5 model scored at order
+    * 3, an artifact written without them) still derives them there
+    * ([[kn3]]).
     */
   final case class RefLmModel(
       counts: Seq[DataFrame], contextTables: Seq[DataFrame], totals: DataFrame,
-      bigramTypes: Option[Long] = None) {
+      knTables: Seq[DataFrame] = Nil) {
     def order: Int = counts.size
     def keyed: Boolean = totals.columns.headOption.contains("__k")
     def unigrams: DataFrame = counts(0)
@@ -398,12 +400,18 @@ object Ranking {
     def fivegrams: DataFrame = counts(4)
     def contexts: DataFrame = contextTables(0)
     def triContexts: DataFrame = contextTables(1)
+    /** `t3`, `cbig`, `c2`, `cu`: the stored tables, else derived. */
+    def kn3: Seq[DataFrame] =
+      if (knTables.nonEmpty) knTables else kn3Tables(counts, if (keyed) Seq("__k") else Nil)
   }
 
   /** (stored table name, count column) of the order-k count table. */
   private val countTables = Seq(
     "unigram" -> "c1", "bigram" -> "cb", "trigram" -> "ct",
     "fourgram" -> "c4", "fivegram" -> "c5")
+
+  /** The stored names of [[RefLmModel.knTables]], in order. */
+  private val kn3Names = Seq("t3", "cbig", "c2", "cu")
 
   /** The n-gram columns of an order-n table. */
   private def gramCols(n: Int): Seq[String] =
@@ -464,16 +472,43 @@ object Ranking {
     }, ks)
   }
 
-  /** The model over additive `counts`: context tables and totals
-    * re-derive from them (vocab is NOT additive across overlapping
-    * vocabularies, so a merge must re-derive, never add). */
+  /** The model over additive `counts`: context tables, totals and, at
+    * order 3, the KN tables re-derive from them (vocab is NOT additive
+    * across overlapping vocabularies, so a merge must re-derive, never
+    * add). A key with no bigram has `n_bigram_types` 0. */
   private def withDerived(counts: Seq[DataFrame], ks: Seq[String]): RefLmModel = {
     val ctx = counts(1).groupBy(cols(ks :+ "w1"): _*).agg(sum("cb").as("ctx"))
     val tctx = counts.lift(2).map(
       _.groupBy(cols(ks ++ Seq("w1", "w2")): _*).agg(sum("ct").as("ctx3")))
-    val tot = counts(0).groupBy(cols(ks): _*)
-      .agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab"))
-    RefLmModel(counts, ctx +: tctx.toSeq, tot)
+    val tot = joinOn(counts(0).groupBy(cols(ks): _*)
+      .agg(sum("c1").as("n_ref_tokens"), count(lit(1)).as("vocab")),
+      counts(1).groupBy(cols(ks): _*).agg(count(lit(1)).as("n_bigram_types")), ks, "left")
+      .select(cols(ks ++ Seq("n_ref_tokens", "vocab")) :+
+        coalesce(col("n_bigram_types"), lit(0L)).as("n_bigram_types"): _*)
+    RefLmModel(counts, ctx +: tctx.toSeq, tot,
+      if (counts.size == 3) kn3Tables(counts, ks) else Nil)
+  }
+
+  /** The Kneser-Ney tables of [[refLmKn3Score]] over a model's counts
+    * of order ≥ 3, each one partial-aggregated groupBy over a count
+    * table (trigram/bigram rows are distinct per key, so count(*) IS
+    * the distinct-continuation count), each led by the key:
+    *  - `t3` (w1, w2, ctx3, __t3): C3 and T3 of the context;
+    *  - `cbig` (w2, w3, __cc): the continuation count c'(w2 w3);
+    *  - `c2` (w2, __c2, __t2): C2 and T2 of w2, over `cbig`;
+    *  - `cu` (w2, __cu): distinct left neighbors of w2 in the bigrams.
+    * `cbig`'s not-null filter is the one its join infers, stated so
+    * that derived at score time, C2's copy of it is the same plan and
+    * its exchange runs once.
+    */
+  private[graft] def kn3Tables(counts: Seq[DataFrame], ks: Seq[String]): Seq[DataFrame] = {
+    def by(df: DataFrame, g: String*) = df.groupBy(cols(ks ++ g): _*)
+    val cbig = by(counts(2).filter(col("w2").isNotNull && col("w3").isNotNull), "w2", "w3")
+      .agg(count(lit(1)).as("__cc"))
+    Seq(by(counts(2), "w1", "w2").agg(sum("ct").as("ctx3"), count(lit(1)).as("__t3")),
+      cbig,
+      by(cbig, "w2").agg(sum("__cc").as("__c2"), count(lit(1)).as("__t2")),
+      by(counts(1), "w2").agg(count(lit(1)).as("__cu")))
   }
 
   /** The scorer-side key list, checked against the model: an order-n
@@ -543,31 +578,36 @@ object Ranking {
       cols("__id" +: keyCols(keyCol)) ++ Seq(lit(1L).as("__tf"), logp9(p)): _*),
       idCol, keyCol, cntCol)
 
-  /** The one row of a local relation, read with no job; None for any
+  /** The rows of a local relation, read with no job; None for any
     * other plan. */
-  private def localRow(df: DataFrame): Option[Row] = df.queryExecution.analyzed match {
-    case l: LocalRelation if l.data.size == 1 => Some(df.collect().head)
+  private def localRows(df: DataFrame): Option[Seq[Row]] = df.queryExecution.analyzed match {
+    case _: LocalRelation => Some(df.collect().toSeq)
     case _ => None
   }
 
-  /** `rows` with the model's corpus scalars `n_ref_tokens` and `vocab`
-    * and, with `nbig`, the bigram-type count `__nbig`. Keyed, each joins
-    * by broadcast on the key: totals INNER (a key with no model drops
-    * out), `__nbig` LEFT (a key whose reference had no bigram still
-    * scores). Unkeyed, what the model holds on the driver is a literal
-    * and costs no job: a stored model's totals (a local relation,
-    * [[readRefLm]]) and its [[RefLmModel.bigramTypes]]. An
-    * inline-trained model cross-joins its one-row tables.
+  /** `rows` with the model's corpus scalars `n_ref_tokens`, `vocab` and
+    * `n_bigram_types`. What the model holds on the driver (a stored
+    * model's totals, a local relation: [[readRefLm]]) is a literal and
+    * costs no job: unkeyed, one value per scalar; keyed, a literal map
+    * from the key to the scalars, where a NULL or unmodeled key finds
+    * nothing and drops out. An inline-trained model broadcast-joins its
+    * totals the same way: on the key INNER, unkeyed as a cross join.
     */
-  private def withScalars(rows: DataFrame, model: RefLmModel, ks: Seq[String],
-      nbig: Boolean): DataFrame = {
-    val tot = Option.when(ks.isEmpty)(model.totals).flatMap(localRow).fold(
-      joinOn(rows, broadcast(model.totals), ks))(r => rows.select(col("*") +:
-        model.totals.schema.map(f => lit(r.getAs[Any](f.name)).cast(f.dataType).as(f.name)): _*))
-    if (!nbig) tot
-    else model.bigramTypes.filter(_ => ks.isEmpty).fold(joinOn(tot, broadcast(
-      model.bigrams.groupBy(cols(ks): _*).agg(count(lit(1)).as("__nbig"))), ks, "left"))(
-      b => tot.withColumn("__nbig", lit(b)))
+  private def withScalars(rows: DataFrame, model: RefLmModel, ks: Seq[String]): DataFrame = {
+    val tot = model.totals
+    val scalars = tot.schema.fields.drop(ks.size)
+    def lits(r: Row) = scalars.map(f => lit(r.getAs[Any](f.name)).cast(f.dataType).as(f.name))
+    localRows(tot).fold(joinOn(rows, broadcast(tot), ks)) { rs =>
+      if (ks.isEmpty) rows.select(col("*") +: lits(rs.head): _*)
+      else {
+        val kt = tot.schema.head.dataType
+        val byKey = rs.filterNot(_.isNullAt(0))
+          .flatMap(r => Seq(lit(r.get(0)).cast(kt), struct(lits(r): _*)))
+        val m = if (byKey.isEmpty) lit(null).cast(MapType(kt, StructType(scalars))) else map(byKey: _*)
+        rows.withColumn("__s", m(col("__k"))).filter(col("__s").isNotNull)
+          .select(col("*") +: scalars.map(f => col(s"__s.${f.name}")): _*).drop("__s")
+      }
+    }
   }
 
   /** The Jelinek-Mercer bigram mixture
@@ -597,14 +637,15 @@ object Ranking {
   }
 
   /** The KN bottom level `Pc(w) = (N1+(·w) + 1) / (B + V)` over the
-    * joined left-neighbor count `__cu`, bigram-type total `__nbig` and
-    * vocabulary — add-1 smoothed (textbook KN gives an unseen word zero
-    * mass; the pool contains OOV tokens by construction, so the family
-    * keeps finite mass everywhere). A keyed model whose reference had
-    * no bigram joins no `__nbig` row and still bottoms out finite. */
+    * joined left-neighbor count `__cu`, bigram-type total
+    * `n_bigram_types` and vocabulary — add-1 smoothed (textbook KN
+    * gives an unseen word zero mass; the pool contains OOV tokens by
+    * construction, so the family keeps finite mass everywhere). A
+    * keyed model whose reference had no bigram has B = 0 and still
+    * bottoms out finite. */
   private def knBottom: Column =
     (coalesce(col("__cu"), lit(0L)).cast("double") + lit(1.0)) /
-      (coalesce(col("__nbig"), lit(0L)) + col("vocab")).cast("double")
+      (col("n_bigram_types") + col("vocab")).cast("double")
 
   /** Score every pool document under the reference LM with
     * Jelinek-Mercer interpolation
@@ -630,7 +671,7 @@ object Ranking {
         .join(model.bigrams, ks ++ Seq("w1", "w2"), "left")
         .join(model.contexts, ks :+ "w1", "left")
         .join(model.unigrams.withColumnRenamed("term", "w2"), ks :+ "w2", "left"),
-        model, ks, nbig = false),
+        model, ks),
       jmBigram(lamNum, lamDen))
   }
 
@@ -664,7 +705,7 @@ object Ranking {
           ks ++ Seq("w2", "w3"), "left")
         .join(rekey(model.contexts, ks, col("w1").as("w2"), col("ctx")), ks :+ "w2", "left")
         .join(rekey(model.unigrams, ks, col("term").as("w3"), col("c1")), ks :+ "w3", "left"),
-        model, ks, nbig = false),
+        model, ks),
       mix)
   }
 
@@ -687,11 +728,12 @@ object Ranking {
     * of w2, `T3(w1w2)` = distinct continuations of the context,
     * `N1+(·w3)` = distinct left-neighbors of w3 in the bigram table,
     * `B` = distinct bigram types, `V` = vocabulary. Every table derives
-    * from the model's additive counts at score time, so the stored
-    * deploy and the bit-equal merge carry over to KN unchanged.
+    * from the model's additive counts ([[kn3Tables]]): an order-3 model
+    * carries them, stored with its counts; any other model derives them
+    * here. Either way the stored deploy and the bit-equal merge carry
+    * over to KN unchanged.
     *
-    * Keyed: the per-key totals join is INNER (unmodeled keys absent);
-    * the per-key bigram-type total joins LEFT ([[withScalars]]). Scale
+    * Keyed: a key with no totals row is absent ([[withScalars]]). Scale
     * shape and determinism: [[scoreGrams]]. Returns (id, [keyCol],
     * n_trigrams, logprob) for every pool doc with ≥ 3 tokens.
     */
@@ -701,18 +743,7 @@ object Ranking {
     require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
     val ks = keysOf(model, keyCol, 3)
     val d = dNum.toDouble / dDen
-    def by(df: DataFrame, g: String*) = df.groupBy(cols(ks ++ g): _*)
-    // continuation tables, each one partial-aggregated groupBy over a
-    // MODEL table (trigram/bigram rows are distinct per key, so
-    // count(*) IS the distinct-continuation count). C3 is the stored
-    // tctx's sum, taken in T3's aggregate instead of read. cbig's
-    // not-null filter is the one its join infers, stated so that C2's
-    // copy of it is the same plan and its exchange runs once
-    val t3 = by(model.trigrams, "w1", "w2").agg(sum("ct").as("ctx3"), count(lit(1)).as("__t3"))
-    val cbig = by(model.trigrams.filter(col("w2").isNotNull && col("w3").isNotNull), "w2", "w3")
-      .agg(count(lit(1)).as("__cc"))
-    val c2 = by(cbig, "w2").agg(sum("__cc").as("__c2"), count(lit(1)).as("__t2"))
-    val cu = by(model.bigrams, "w2").agg(count(lit(1)).as("__cu"))
+    val Seq(t3, cbig, c2, cu) = model.kn3
     val p2 = knLevel(d, "__cc", "__c2", "__t2", knBottom)
     val p3 = knLevel(d, "ct", "ctx3", "__t3", p2)
     scoreGrams(pool, idCol, textCol, keyCol, 3, "n_trigrams")(
@@ -723,7 +754,7 @@ object Ranking {
         .join(cbig, ks ++ Seq("w2", "w3"), "left")
         .join(c2, ks :+ "w2", "left")
         .join(rekey(cu, ks, col("w2").as("w3"), col("__cu")), ks :+ "w3", "left"),
-        model, ks, nbig = true),
+        model, ks),
       p3)
   }
 
@@ -803,7 +834,7 @@ object Ranking {
       .join(cc2, ks ++ Seq("w4", "w5"), "left")
       .join(c2, ks :+ "w4", "left")
       .join(rekey(cu, ks, col("w2").as("w5"), col("__cu")), ks :+ "w5", "left"),
-      model, ks, nbig = true)
+      model, ks)
     docMeans(rows.select(cols("__id" +: ks) ++ Seq(col("__tf"), logp9(p5)): _*),
       idCol, keyCol, "n_5grams")
   }
@@ -994,24 +1025,25 @@ object Ranking {
     * table, a NULL cutoff, a repeated or NULL key, or (unkeyed) more
     * than one row: a repeated key would emit each of its docs once per
     * row, and a NULL `v_mid` would send every doc below `v_head` to
-    * `tail` ([[perplexityBucket]]). The schema comes from the footer
-    * ([[Readers.parquet]]), so the check's one collect is the read's
-    * only job, and the rows it checked come back as a local relation:
-    * collecting them again runs no job.
+    * `tail` ([[perplexityBucket]]). The rows are read on the driver
+    * ([[Readers.parquetRows]]), so the read runs no job, and the rows it
+    * checked come back as a local relation: collecting them again runs
+    * no job either.
     */
   def readRefLmCutoffs(spark: SparkSession, path: String,
       keyCol: Option[String] = None): DataFrame = {
-    val ks = keyCol.toSeq
-    val cuts = Readers.parquet(spark, path).select(cols(ks ++ Seq("v_head", "v_mid")): _*)
-    val rows = cuts.collect()
-    val keys = rows.map(r => ks.indices.map(r.get))
+    val names = keyCol.toSeq ++ Seq("v_head", "v_mid")
+    val k = keyCol.size
+    val read = Readers.parquetRows(spark, path)
     def fail(why: String) = s"reference-LM cutoff artifact at $path $why"
-    require(rows.nonEmpty, fail("is empty"))
-    require(rows.forall(r => !r.isNullAt(ks.size) && !r.isNullAt(ks.size + 1)),
+    require(read.nonEmpty, fail("is empty"))
+    val rows = read.map(r => Row.fromSeq(names.map(r.getAs[Any])))
+    val keys = rows.map(r => (0 until k).map(r.get))
+    require(rows.forall(r => !r.isNullAt(k) && !r.isNullAt(k + 1)),
       fail("has a NULL v_head or v_mid"))
     require(keys.distinct.length == rows.length && !keys.exists(_.contains(null)),
-      fail(keyCol.fold("has more than one row")(k => s"has a repeated or NULL $k")))
-    spark.createDataFrame(rows.toSeq.asJava, cuts.schema)
+      fail(keyCol.fold("has more than one row")(c => s"has a repeated or NULL $c")))
+    spark.createDataFrame(rows.asJava, StructType(names.map(read.head.schema(_))))
   }
 
   /** Run independent artifact-table writes CONCURRENTLY, safely. Naive
@@ -1059,45 +1091,55 @@ object Ranking {
     * stored-artifact deploy pattern (the IVF centroid-table /
     * stored-gate shape applied to the reference LM): the scoring fleet
     * reads counts, never retrains. Order 2 writes `unigram`, `bigram`,
-    * `ctx` and `totals`; order 3 adds `trigram` and `tctx`; order 5
-    * adds `fourgram` and `fivegram`. The independent writes overlap
-    * through [[writeTablesParallel]].
+    * `ctx` and `totals`; order 3 adds `trigram`, `tctx` and the KN
+    * tables `t3`, `cbig`, `c2` and `cu` ([[kn3Tables]]); order 5 adds
+    * `fourgram` and `fivegram` to order 2's and order 3's counts and
+    * contexts. The independent writes overlap through
+    * [[writeTablesParallel]].
     */
   def writeRefLm(model: RefLmModel, path: String): Unit =
     writeTablesParallel((countTables.map(_._1).zip(model.counts) ++
-      Seq("ctx", "tctx").zip(model.contextTables) :+ ("totals" -> model.totals))
+      Seq("ctx", "tctx").zip(model.contextTables) ++ kn3Names.zip(model.knTables) :+
+      ("totals" -> model.totals))
       .map { case (name, df) => (df, s"$path/$name", name == "totals") })
 
   /** Read back a [[writeRefLm]] artifact of any order and key shape:
     * the stored order is the run of count tables present, and only
-    * those tables (plus the contexts they need) are read, each schema
-    * from its footer ([[Readers.parquet]]). Fails fast on a totals table
-    * that signals an empty or partially-written model, which would
-    * otherwise score every document NULL: unkeyed, exactly one non-null
-    * row with a positive token count; keyed, a non-empty table. That
-    * check's collect is the read's one job, and the model's totals are
-    * a local relation of the rows it collected; unkeyed, the bigram-type
-    * count comes from the bigram table's footers
-    * ([[Readers.parquetRowCount]]). An unkeyed scorer then reads its
-    * scalars with no job ([[withScalars]]).
+    * those tables (plus the contexts they need and, at order 3, the KN
+    * tables `t3`, `cbig`, `c2` and `cu` when all four are there) are
+    * read, each schema from its footer ([[Readers.parquet]]). Fails
+    * fast on a totals table that signals an empty or partially-written
+    * model, which would otherwise score every document NULL: unkeyed,
+    * exactly one non-null row with a positive token count; keyed, a
+    * non-empty table. The totals rows are read on the driver
+    * ([[Readers.parquetRows]], no job), and the model's totals are a
+    * local relation of them, so a scorer reads its scalars as literals
+    * ([[withScalars]]). A totals table written without
+    * `n_bigram_types` gets it from one count job over the bigrams.
     */
   def readRefLm(spark: SparkSession, path: String): RefLmModel = {
     val tot = Readers.parquet(spark, s"$path/totals")
-    val rows = tot.collect()
+    val stored = Readers.parquetRows(spark, s"$path/totals")
     val keyed = tot.columns.headOption.contains("__k")
-    if (keyed) require(rows.nonEmpty,
+    if (keyed) require(stored.nonEmpty,
       s"keyed reference-LM artifact at $path has an empty totals table")
-    else require(rows.length == 1 && !rows(0).isNullAt(0) && rows(0).getLong(0) > 0,
+    else require(stored.length == 1 && !stored(0).isNullAt(0) && stored(0).getLong(0) > 0,
       s"reference-LM artifact at $path has an empty or invalid totals table")
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def has(name: String) = fs.exists(new Path(dir, name))
     def read(name: String) = Readers.parquet(spark, s"$path/$name")
-    val counts = countTables.map(_._1)
-      .takeWhile(name => fs.exists(new Path(dir, name)))
-      .map(read)
+    val counts = countTables.map(_._1).takeWhile(has).map(read)
+    val k = if (keyed) 1 else 0
+    val (rows, schema) = if (tot.columns.contains("n_bigram_types")) (stored, tot.schema) else {
+      val nb = counts(1).groupBy(cols(tot.columns.take(k)): _*).count().collect()
+        .map(r => r.toSeq.take(k) -> r.getLong(k)).toMap
+      (stored.map(r => Row.fromSeq(r.toSeq :+ nb.getOrElse(r.toSeq.take(k), 0L))),
+        tot.schema.add("n_bigram_types", LongType, nullable = false))
+    }
     RefLmModel(counts, Seq("ctx", "tctx").take(counts.size - 1).map(read),
-      spark.createDataFrame(rows.toSeq.asJava, tot.schema),
-      Option.when(!keyed)(Readers.parquetRowCount(spark, s"$path/bigram")).flatten)
+      spark.createDataFrame(rows.asJava, schema),
+      if (counts.size == 3 && kn3Names.forall(has)) kn3Names.map(read) else Nil)
   }
 
   /** The merged model of [[mergeIntoStoredRefLmReturning]] plus the
@@ -1170,9 +1212,9 @@ object Ranking {
     val ks = keyCols(keyCol)
     val d = refLmTrain(delta, textCol, isRef, stored.order, keyCol)
     // every merged count table persists: each feeds its own staged
-    // write plus a derived one (unigram → totals, bigram → ctx,
-    // trigram → tctx), and without the pin every write re-runs the
-    // delta tokenization
+    // write plus derived ones (unigram → totals; bigram → ctx, totals
+    // and cu; trigram → tctx, t3, cbig and c2), and without the pin
+    // every write re-runs the delta tokenization
     val counts = stored.counts.zip(d.counts).zipWithIndex.map { case ((s, t), i) =>
       val c = countTables(i)._2
       s.unionByName(t).groupBy(cols(ks ++ gramCols(i + 1)): _*).agg(sum(c).as(c))

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.jdk.CollectionConverters._
 import scala.util.{Try, Using}
 
 import com.univocity.parsers.csv.CsvParser
@@ -13,9 +12,11 @@ import org.apache.hadoop.util.LineReader
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
-import org.apache.spark.sql.execution.datasources.CodecStreams
+import org.apache.spark.sql.execution.datasources.{CodecStreams, FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -43,7 +44,8 @@ import org.apache.spark.sql.types._
   *   - extension dispatch `.csv` / `.json` (`GetLoader`,
   *     `loader.go:203-213`).
   *   - parquet: the schema is read from one footer on the driver
-  *     ([[parquet]]), so this read runs no Spark job either.
+  *     ([[parquet]]), so this read runs no Spark job either; a small
+  *     table's rows can be read on the driver too ([[parquetRows]]).
   *
   * Reads are streaming multi-partition scans — nothing is materialized
   * driver-side, unlike the reference's ReadAll.
@@ -150,23 +152,31 @@ object Readers {
     * error is then Spark's own).
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    parquetFooterSchema(spark, path)
-      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+    parquetFooter(spark, path)
+      .fold(spark.read.parquet(path)) { case (_, schema) => spark.read.schema(schema).parquet(path) }
 
-  /** The row count of the parquet at `path`, summed on the driver from
-    * the row groups in its data files' footers: no Spark job. None
-    * where the footers cannot stand for the rows [[parquet]] reads: a
-    * glob, a directory with subdirectories, no data file, or a footer
-    * that does not read.
+  /** The rows of the parquet at `path`, read on the driver with no Spark
+    * job — for the tables of a few rows that a caller collects whole (a
+    * stamp, a model's totals, a cutoff table), where a job costs more
+    * than the read. Spark's own parquet reader (the one a scan runs,
+    * returning rows, not batches) reads each data file in path order
+    * under the schema [[parquet]] reads with, and each row converts as a
+    * collect converts it, carrying that schema. Where [[parquet]] falls
+    * back to Spark's read, this falls back to Spark's read and collect.
     */
-  def parquetRowCount(spark: SparkSession, path: String): Option[Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    parquetLeaves(spark, path).map(_.filterNot(f => parquetSummaries(f.getPath.getName)))
-      .filter(_.nonEmpty)
-      .flatMap(files => Try(files.map(f => ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER)
-        .getBlocks.asScala.map(_.getRowCount).sum).sum).toOption)
-  }
+  def parquetRows(spark: SparkSession, path: String): Seq[Row] =
+    parquetFooter(spark, path).fold(parquet(spark, path).collect().toSeq) { case (files, schema) =>
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+        new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        graftbridge.newHadoopConf(spark))
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      files.flatMap { f =>
+        val it = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath),
+          0L, f.getLen, fileSize = f.getLen))
+        try it.map(toRow(_).asInstanceOf[Row]).toVector
+        finally it match { case c: java.io.Closeable => c.close(); case _ => () }
+      }
+    }
 
   private val parquetSummaries = Set("_common_metadata", "_metadata")
 
@@ -183,17 +193,28 @@ object Readers {
       .map(_.sortBy(_.getPath.toString))
   }
 
-  private def parquetFooterSchema(spark: SparkSession, path: String): Option[StructType] = {
+  /** The data files of the parquet at `path` (its summary files left
+    * out) and the schema Spark's inference gives them, read from one
+    * footer: the one `ParquetUtils.inferSchema` reads when it does not
+    * merge schemas (`_common_metadata`, else `_metadata`, else the first
+    * data file by path), converted under the session's parquet settings
+    * (`nanosAsLong`, `binaryAsString`, ...). None where one footer
+    * cannot stand for the schema: `mergeSchema` on, a glob, a directory
+    * with subdirectories, or no footer to read.
+    */
+  private def parquetFooter(spark: SparkSession, path: String): Option[(Seq[FileStatus], StructType)] = {
     val sql = graftbridge.sqlConf(spark)
     val conf = spark.sparkContext.hadoopConfiguration
     val leaves = if (sql.isParquetSchemaMergingEnabled) None else parquetLeaves(spark, path)
     leaves.flatMap { files =>
       def named(n: String) = files.find(_.getPath.getName == n)
-      named("_common_metadata").orElse(named("_metadata"))
-        .orElse(files.find(f => !parquetSummaries(f.getPath.getName)))
-    }.flatMap(f => Try(new Footer(f.getPath, ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))).toOption)
-      .map(ParquetFileFormat.readSchemaFromFooter(_, new ParquetToSparkSchemaConverter(sql)))
+      val data = files.filterNot(f => parquetSummaries(f.getPath.getName))
+      named("_common_metadata").orElse(named("_metadata")).orElse(data.headOption)
+        .flatMap(f => Try(new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))).toOption)
+        .map(footer => data -> ParquetFileFormat.readSchemaFromFooter(
+          footer, new ParquetToSparkSchemaConverter(sql)))
+    }
   }
 
   /** The first line of file `p` that is not blank, BOM dropped. */

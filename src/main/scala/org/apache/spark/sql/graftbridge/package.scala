@@ -59,6 +59,12 @@ package object graftbridge {
   def sqlConf(spark: SparkSession): SQLConf =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf
 
+  /** A new Hadoop conf of the session, as a file scan builds its own:
+    * the context's conf plus the session's SQL confs.
+    */
+  def newHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
   /** Whether Spark's file listing skips a file or directory of this
     * name: hidden `_`/`.` names, except the parquet summary files.
     */

@@ -37,7 +37,7 @@ class KeyedRefLmMergeSpec extends AnyFunSuite {
   private def bigSet(m: Ranking.RefLmModel) =
     m.bigrams.as[(String, String, String, Long)].collect().toSet
   private def totSet(m: Ranking.RefLmModel) =
-    m.totals.as[(String, Long, Long)].collect().toSet
+    m.totals.as[(String, Long, Long, Long)].collect().toSet
 
   test("keyed merge == keyed retrain on the union; replay-guarded; new keys appear") {
     val dir = Files.createTempDirectory("keyed-reflm-merge").toString

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Ranking
-import graft.sources.Readers
 
 /** The order-2, order-3 and Kneser-Ney order-3 scorers, keyed and
   * unkeyed, inline-trained and stored, against a hand reference that
@@ -150,12 +149,20 @@ class LmScorerEdgeSpec extends AnyFunSuite {
     assert(!plan(Ranking.readRefLm(spark, dir)).contains("BroadcastNestedLoopJoin"))
   }
 
-  test("a bigram table written as several parquet files counts its rows from the footers") {
-    val m = Ranking.refLmTrain(refDf, "text", lit(true), 3)
-    val p = Files.createTempDirectory("lm-edge-footer").resolve("bigram").toString
-    m.bigrams.repartition(3).write.parquet(p)
-    assert(new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet")) > 1)
-    assert(Readers.parquetRowCount(spark, p).contains(spark.read.parquet(p).count()))
-    assert(Readers.parquetRowCount(spark, s"$p/*").isEmpty, "a glob is Spark's to expand")
+  test("stored totals carry each key's bigram-type count, 0 for a key with no bigram") {
+    // "L4" trains a unigram but no bigram
+    val refs4 = refDf.union(Seq((9L, "d", "L4")).toDF("id", "text", "lang"))
+    for (key <- Seq(None, Some("lang"))) {
+      val m = Ranking.refLmTrain(refs4, "text", lit(true), 3, key)
+      val p = Files.createTempDirectory("lm-edge-nbig").resolve("model").toString
+      Ranking.writeRefLm(m, p)
+      val ks = key.map(_ => col("__k")).toSeq
+      val expect = m.bigrams.groupBy(ks: _*).count().collect()
+        .map(r => r.toSeq.init -> r.getLong(ks.size)).toMap
+      val got = Ranking.readRefLm(spark, p).totals.collect()
+        .map(r => r.toSeq.take(ks.size) -> r.getAs[Long]("n_bigram_types")).toMap
+      assert(got == expect ++ key.map(_ => Seq("L4") -> 0L), key)
+      assert(key.isDefined || got.values.toSeq == Seq(Counts(refs.map(_._1.split(" ").toSeq)).b))
+    }
   }
 }

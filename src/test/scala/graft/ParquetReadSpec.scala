@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -75,7 +75,8 @@ class ParquetReadSpec extends AnyFunSuite {
       val m = Ranking.refLmTrain(docs, "text", lit(true), order, keyCol)
       Ranking.writeRefLm(m, p)
       val tables = new java.io.File(p).list().toSeq.filterNot(_.startsWith("."))
-      assert(tables.size == order + (if (order == 2) 2 else 3))
+      // counts, contexts and totals, plus an order-3 model's KN tables
+      assert(tables.size == order + (if (order == 2) 2 else 3) + (if (order == 3) 4 else 0))
       for (t <- tables) sameAsSpark(s"$p/$t")
       assert(JobCount.inGroup(spark, "parquet-footer-read")(
         tables.foreach(t => Readers.parquet(spark, s"$p/$t").schema)) == 0)
@@ -121,5 +122,41 @@ class ParquetReadSpec extends AnyFunSuite {
     assert(errorClass(Readers.parquet(spark, absent)) == errorClass(spark.read.parquet(absent)))
     val glob = s"$a*"
     sameAsSpark(glob)
+  }
+
+  private def sorted(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
+
+  test("parquetRows reads every row on the driver as Spark's collect does, with no job") {
+    val dir = Files.createTempDirectory("graft-rows")
+    val p = dir.resolve("multi").toString
+    (1 to 6).map(i => (Option.when(i % 3 != 0)(i * 1000000007L), Option.when(i % 2 == 0)(i / 3.0),
+      Option.when(i != 4)(s"s$i"), i))
+      .toDF("l", "d", "s", "i")
+      .withColumn("dec", (lit("123456789012345678901234567").cast("decimal(38,0)") * col("i"))
+        .cast("decimal(38,0)"))
+      .withColumn("dec_s", col("dec").cast("string")).drop("i")
+      .withColumn("dec", when(col("l").isNotNull, col("dec")))
+      .repartition(3).write.parquet(p)
+    assert(new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet")) > 1)
+    var got = Seq.empty[Row]
+    assert(JobCount.inGroup(spark, "parquet-rows") { got = Readers.parquetRows(spark, p) } == 0)
+    val expect = spark.read.parquet(p).collect().toSeq
+    assert(got.size == 6 && sorted(got) == sorted(expect))
+    assert(got.forall(_.schema == expect.head.schema))
+    assert(got.exists(r => r.isNullAt(0) && r.isNullAt(1)) && got.exists(_.isNullAt(2)))
+    val empty = dir.resolve("empty").toString
+    Seq.empty[(Long, String)].toDF("l", "s").write.parquet(empty)
+    assert(JobCount.inGroup(spark, "parquet-rows") { got = Readers.parquetRows(spark, empty) } == 0)
+    assert(got.isEmpty)
+  }
+
+  test("parquetRows of a glob falls back to Spark's read and returns the same rows") {
+    val p = Files.createTempDirectory("graft-rows-glob").resolve("t").toString
+    Seq((1L, "a"), (2L, null), (3L, "c")).toDF("id", "s").repartition(2).write.parquet(p)
+    val glob = s"$p/*.parquet"
+    var got = Seq.empty[Row]
+    assert(JobCount.inGroup(spark, "parquet-rows-glob") { got = Readers.parquetRows(spark, glob) } > 0)
+    assert(sorted(got) == sorted(spark.read.parquet(p).collect().toSeq))
+    assert(sorted(got) == sorted(Readers.parquetRows(spark, p)))
   }
 }

@@ -48,7 +48,7 @@ class RefLm3Spec extends AnyFunSuite {
     assert(m.triContexts.as[(String, String, Long)].collect().toSet ==
       Set(("a", "b", 2L), ("b", "a", 1L)))
     // the base model rides along unchanged
-    assert(m.totals.as[(Long, Long)].collect().toSeq == Seq((7L, 3L)))
+    assert(m.totals.as[(Long, Long, Long)].collect().toSeq == Seq((7L, 3L, 3L)))
   }
 
   test("scores are the hand-computed backoff chain; short docs unscored") {
@@ -86,8 +86,8 @@ class RefLm3Spec extends AnyFunSuite {
       full.triContexts.as[(String, String, Long)].collect().toSet)
     assert(merged.unigrams.as[(String, Long)].collect().toSet ==
       full.unigrams.as[(String, Long)].collect().toSet)
-    assert(merged.totals.as[(Long, Long)].collect().toSeq ==
-      full.totals.as[(Long, Long)].collect().toSeq)
+    assert(merged.totals.as[(Long, Long, Long)].collect().toSeq ==
+      full.totals.as[(Long, Long, Long)].collect().toSeq)
     // scoring under merged vs retrained is identical
     val pool = refPoolDocs.filter(!col("is_ref"))
     assert(Ranking.refLm3Score(pool, "id", "text", merged)

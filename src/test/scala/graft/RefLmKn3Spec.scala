@@ -9,7 +9,7 @@ import graft.operators.Ranking
 
 /** Round-16 extension: interpolated Kneser-Ney smoothing at order 3
   * (q198) — CCNet's actual smoothing family, derived ENTIRELY from the
-  * stored order-3 count tables (no new artifact, no new merge path).
+  * order-3 count tables (stored with them: StoredKnTablesSpec).
   * Hand computations mirror the engine's arithmetic exactly: the
   * continuation counts as integers, the KN chain as one IEEE double
   * expression with the same parenthesization, ln rounded to 9 decimals

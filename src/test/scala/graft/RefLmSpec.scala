@@ -42,7 +42,7 @@ class RefLmSpec extends AnyFunSuite {
       Set(("a", "b", 2L), ("b", "a", 2L), ("b", "c", 1L)))
     assert(m.contexts.as[(String, Long)].collect().toMap ==
       Map("a" -> 2L, "b" -> 3L))
-    assert(m.totals.as[(Long, Long)].collect().toSeq == Seq((7L, 3L)))
+    assert(m.totals.as[(Long, Long, Long)].collect().toSeq == Seq((7L, 3L, 3L)))
   }
 
   test("scores are the hand-computed λ-mixture, finite on OOV") {
@@ -138,8 +138,8 @@ class RefLmSpec extends AnyFunSuite {
     val m = Ranking.refLmTrain(docs, "text", col("is_ref"), keyCol = Some("lang"))
 
     // one-pass training produced BOTH models
-    assert(m.totals.as[(String, Long, Long)].collect().toSet ==
-      Set(("L1", 5L, 2L), ("L2", 2L, 2L)))
+    assert(m.totals.as[(String, Long, Long, Long)].collect().toSet ==
+      Set(("L1", 5L, 2L, 2L), ("L2", 2L, 2L, 1L)))
 
     val got = Ranking.refLmScore(
         docs.filter(!col("is_ref")), "id", "text", m, keyCol = Some("lang"))
@@ -195,8 +195,8 @@ class RefLmSpec extends AnyFunSuite {
       full.bigrams.as[(String, String, Long)].collect().toSet)
     assert(merged.contexts.as[(String, Long)].collect().toSet ==
       full.contexts.as[(String, Long)].collect().toSet)
-    assert(merged.totals.as[(Long, Long)].collect().toSeq ==
-      full.totals.as[(Long, Long)].collect().toSeq)
+    assert(merged.totals.as[(Long, Long, Long)].collect().toSeq ==
+      full.totals.as[(Long, Long, Long)].collect().toSeq)
     // and scoring under either is identical
     val pool = refPoolDocs.filter(!col("is_ref"))
     assert(Ranking.refLmScore(pool, "id", "text", merged)
@@ -217,7 +217,7 @@ class RefLmSpec extends AnyFunSuite {
     def modelCounts() = (
       Ranking.readRefLm(spark, p).unigrams.as[(String, Long)].collect().toSet,
       Ranking.readRefLm(spark, p).bigrams.as[(String, String, Long)].collect().toSet,
-      Ranking.readRefLm(spark, p).totals.as[(Long, Long)].collect().toSeq)
+      Ranking.readRefLm(spark, p).totals.as[(Long, Long, Long)].collect().toSeq)
     val delta = refPoolDocs.filter(col("id") === 2L)
     assert(Ranking.mergeIntoStoredRefLm(spark, p, delta, "text",
       batchId = Some(7L)))
@@ -265,8 +265,8 @@ class RefLmSpec extends AnyFunSuite {
         stored.unigrams.as[(String, Long)].collect().toSet)
       assert(ret.model.bigrams.as[(String, String, Long)].collect().toSet ==
         stored.bigrams.as[(String, String, Long)].collect().toSet)
-      assert(ret.model.totals.as[(Long, Long)].collect().toSeq ==
-        stored.totals.as[(Long, Long)].collect().toSeq)
+      assert(ret.model.totals.as[(Long, Long, Long)].collect().toSeq ==
+        stored.totals.as[(Long, Long, Long)].collect().toSeq)
       // and the scoring path off the returned frames matches q182's
       // one-shot arithmetic (the frames ARE the model)
       val pool = refPoolDocs.filter(!col("is_ref"))
@@ -299,8 +299,8 @@ class RefLmSpec extends AnyFunSuite {
       "text", lit(true))
     assert(grown.unigrams.as[(String, Long)].collect().toSet ==
       full.unigrams.as[(String, Long)].collect().toSet)
-    assert(grown.totals.as[(Long, Long)].collect().toSeq ==
-      full.totals.as[(Long, Long)].collect().toSeq)
+    assert(grown.totals.as[(Long, Long, Long)].collect().toSeq ==
+      full.totals.as[(Long, Long, Long)].collect().toSeq)
   }
 
   test("readRefLm fails fast on an empty-reference artifact") {

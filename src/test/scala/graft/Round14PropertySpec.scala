@@ -41,8 +41,8 @@ class Round14PropertySpec extends AnyFunSuite {
         full.bigrams.as[(String, String, Long)].collect().toSet, s"trial $trial bigrams")
       assert(merged.contexts.as[(String, Long)].collect().toSet ==
         full.contexts.as[(String, Long)].collect().toSet, s"trial $trial contexts")
-      assert(merged.totals.as[(Long, Long)].collect().toSeq ==
-        full.totals.as[(Long, Long)].collect().toSeq, s"trial $trial totals")
+      assert(merged.totals.as[(Long, Long, Long)].collect().toSeq ==
+        full.totals.as[(Long, Long, Long)].collect().toSeq, s"trial $trial totals")
     }
   }
 

@@ -95,8 +95,8 @@ class Round15PropertySpec extends AnyFunSuite {
       assert(merged.bigrams.as[(String, String, Long)].collect().toSet ==
         full.bigrams.as[(String, String, Long)].collect().toSet,
         s"trial $trial bigrams")
-      assert(merged.totals.as[(Long, Long)].collect().toSeq ==
-        full.totals.as[(Long, Long)].collect().toSeq, s"trial $trial totals")
+      assert(merged.totals.as[(Long, Long, Long)].collect().toSeq ==
+        full.totals.as[(Long, Long, Long)].collect().toSeq, s"trial $trial totals")
     }
   }
 

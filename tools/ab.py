@@ -21,6 +21,11 @@ compiled classes, and the original's runs fail with NoClassDefFoundError.
 
 Each tree builds itself on its first run (perfbench caches the build
 under its `.bench_build/`); build time is not in any metric.
+
+Host steal (the CPU time the hypervisor gave to other guests, read from
+the `cpu` line of /proc/stat around each pair) is printed with each pair
+and over the whole set, and written with every run to `--out`: a timing
+claim reports it.
 """
 import argparse
 import json
@@ -70,11 +75,35 @@ def run(tree_dir, workload, seed, seconds):
         return None
 
 
+def cpu_times():
+    """(steal, total) jiffies of the `cpu` line of /proc/stat, or None
+    where there is no such file."""
+    try:
+        with open("/proc/stat") as f:
+            fields = f.readline().split()
+    except OSError:
+        return None
+    ticks = [int(x) for x in fields[1:]]
+    # steal is the 8th value; guest time is already counted in user
+    return ticks[7], sum(ticks[:8])
+
+
+def steal_share(before, after):
+    """Steal as a share of all CPU time between two cpu_times() reads."""
+    if not before or not after or after[1] == before[1]:
+        return None
+    return (after[0] - before[0]) / (after[1] - before[1])
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
     q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, med, q3
+
+
+def pct(share):
+    return "n/a" if share is None else f"{100 * share:.1f}%"
 
 
 def fmt(v):
@@ -130,11 +159,15 @@ def main():
 
     pairs, failed = [], {"parent": 0, "change": 0}
     attempted = {"parent": 0, "change": 0}
+    set_start = cpu_times()
     for i, seed in enumerate(a.seeds):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         got = {}
+        pair_start = cpu_times()
         for side in order:
+            run_start = cpu_times()
             r = run(sides[side], a.workload, seed, seconds)
+            run_steal = steal_share(run_start, cpu_times())
             got[side] = r
             if r:
                 attempted[side] += r.get("attempted", 0)
@@ -142,14 +175,17 @@ def main():
             if a.out:
                 with open(a.out, "a") as f:
                     f.write(json.dumps({"workload": a.workload, "seed": seed, "side": side,
-                                        "first": order[0], "result": r}) + "\n")
+                                        "first": order[0], "steal": run_steal,
+                                        "result": r}) + "\n")
         pairs.append((got["parent"], got["change"]))
+        pair_steal = steal_share(pair_start, cpu_times())
         op = [(s, (got[s] or {}).get("metrics", {}).get("op_s", {}).get("value")) for s in order]
         print(f"pair {i + 1} seed {seed}: " +
-              ", ".join(f"{s} op_s={v}" for s, v in op), file=sys.stderr)
+              ", ".join(f"{s} op_s={v}" for s, v in op) + f", steal {pct(pair_steal)}",
+              file=sys.stderr)
 
     print(f"workload {a.workload}, {len(pairs)} pairs, seeds {a.seeds[0]}..{a.seeds[-1]}, "
-          f"--seconds {seconds:g}")
+          f"--seconds {seconds:g}, host steal {pct(steal_share(set_start, cpu_times()))}")
     report(bench["end_to_end"], pairs, sys.stdout)
     for side in ("parent", "change"):
         print(f"{side}: failed ops {failed[side]}/{attempted[side]}, "
