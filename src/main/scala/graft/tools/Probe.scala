@@ -29,18 +29,15 @@ object Probe {
           graft.operators.Dedup.minhashSignatures(
             graft.Tables.load(s, dir, "documents"), "doc_id", "text", 9),
           "doc_id", 9, 3)),
-      // q198's scoring frame: the stored order-3 model, the stamp
-      // observed on the pool. q198 returns a local relation, so this is
-      // where its scoring plan shows
+      // q198's scoring frame: q198's own stored order-3 model, the
+      // stamp observed on the pool. q198 returns a local relation, so
+      // this is where its scoring plan shows
       "x_kn3_scored" -> ((s, dir) => {
-        val docs = graft.Tables.load(s, dir, "documents")
-        val p = java.nio.file.Files.createTempDirectory("probe-kn3").toString
-        graft.operators.Ranking.writeRefLm(graft.operators.Ranking.refLmTrain(
-          docs, "text", org.apache.spark.sql.functions.col("lang") === "en", 3), s"$p/model")
-        graft.core.SnapshotStamp.write(docs, "doc_id", s"$p/stamp")
+        val lm = graft.SparkEntry.storedLm(s, dir, graft.SparkEntry.Lm3)
         graft.operators.Ranking.refLmKn3Score(
-          graft.core.SnapshotStamp.observeFresh(docs, "doc_id", s"$p/stamp")._1,
-          "doc_id", "text", graft.operators.Ranking.readRefLm(s, s"$p/model"))
+          graft.core.SnapshotStamp.observeFresh(
+            graft.Tables.load(s, dir, "documents"), "doc_id", lm.stamp)._1,
+          "doc_id", "text", graft.operators.Ranking.readRefLm(s, lm.table("model")))
       })
     )
     // `all` expands to every SparkEntry query (live per-query output —

@@ -38,14 +38,15 @@ class EntrySpec extends AnyFunSuite {
         java.nio.file.Paths.get(dir, f.getName))
     }
     def fresh(name: String) = SparkEntry.queries(name)(spark, dir).count()
-    assert(fresh("q179_stored_gate") > 0)
-    assert(fresh("q180_stored_probe") > 0)
-    assert(fresh("q190_reflm_increment") > 0)
-    assert(fresh("q192_stored_reflm3") > 0)
-    assert(fresh("q189_stored_reflm_by_lang") > 0)
-    assert(fresh("q196_stored_reflm3_by_lang") > 0)
-    assert(fresh("q198_kn3_buckets") > 0)
-    assert(fresh("q201_stored_kn3_gate") > 0)
+    def stampFresh() = SparkEntry.queries("q184_corpus_stamp")(spark, dir)
+      .select("fresh").collect().map(_.getBoolean(0)).toSeq
+    val stamped = Seq("q179_stored_gate", "q180_stored_probe", "q183_stored_reflm",
+      "q189_stored_reflm_by_lang", "q190_reflm_increment", "q192_stored_reflm3",
+      "q196_stored_reflm3_by_lang", "q198_kn3_buckets", "q199_keyed_reflm3_increment",
+      "q200_kn3_by_lang", "q201_stored_kn3_gate", "q202_kn5_buckets", "q203_kn5_by_lang",
+      "q204_curate_perplexity", "q205_stored_kn5_gate", "q207_unigram_encode")
+    stamped.foreach(name => assert(fresh(name) > 0, name))
+    assert(stampFresh() == Seq(true))
     // mutate both source tables the artifacts measure (drop one row)
     Seq("documents", "embeddings").foreach { t =>
       val idCol = if (t == "documents") "doc_id" else "vec_id"
@@ -65,14 +66,35 @@ class EntrySpec extends AnyFunSuite {
       // shared FileStatusCache must be told the listing changed
       spark.catalog.refreshByPath(s"$dir/$t.parquet")
     }
-    Seq("q179_stored_gate", "q180_stored_probe", "q190_reflm_increment",
-        "q192_stored_reflm3", "q189_stored_reflm_by_lang",
-        "q196_stored_reflm3_by_lang", "q198_kn3_buckets", "q201_stored_kn3_gate")
-      .foreach { name =>
-        val e = intercept[IllegalArgumentException] { fresh(name) }
-        assert(e.getMessage.contains("stale artifact stamp"),
-          s"$name must fail the freshness assert, got: ${e.getMessage}")
-      }
+    stamped.foreach { name =>
+      val e = intercept[IllegalArgumentException] { fresh(name) }
+      assert(e.getMessage.contains("stale artifact stamp"),
+        s"$name must fail the freshness assert, got: ${e.getMessage}")
+    }
+    // the stamp report serves no artifact: it reports the staleness
+    assert(stampFresh() == Seq(false))
+  }
+
+  test("stored builds once per (dir, name): a second call runs no job and keeps one stamp") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("entry-stored").toString
+    Files.copy(java.nio.file.Paths.get(sf, "documents.parquet"),
+      java.nio.file.Paths.get(dir, "documents.parquet"))
+    var builds = 0
+    def build() = SparkEntry.stored(spark, dir, "spec-memo") { base =>
+      builds += 1
+      Files.writeString(base.resolve("x.txt"), "x")
+    }
+    val first = build()
+    var second: SparkEntry.Stored = null
+    val jobs = JobCount.inGroup(spark, "entry-stored-memo") { second = build() }
+    assert(second.base == first.base && builds == 1)
+    assert(jobs == 0, s"the memoized call ran $jobs jobs")
+    import scala.jdk.CollectionConverters._
+    val stamps = Files.walk(first.base).iterator().asScala
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString == "stamp").toSeq
+    assert(stamps == Seq(first.base.resolve("stamp")), stamps)
+    assert(spark.read.parquet(first.stamp).count() == 1)
   }
 
   test("localFrame memo guard: an over-cap artifact fails fast instead of OOMing the driver") {

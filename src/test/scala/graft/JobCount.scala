@@ -5,8 +5,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.Assertions.assert
 import org.scalatest.concurrent.Eventually.{eventually, interval, timeout}
 import org.scalatest.time.SpanSugar._
@@ -23,16 +24,27 @@ object JobCount {
     sites(spark, groupPrefix)(body).size
 
   /** The short call sites (`collect at Ranking.scala:123`) of the jobs
-    * [[apply]] counts, in start order. */
+    * [[apply]] counts, in start order. A job of a SQL execution is named
+    * by the execution's call site, the action that ran it: adaptive
+    * execution submits its query-stage jobs from a pool thread, so their
+    * own call site names only that thread. Any other job is named by its
+    * result stage, the last one. */
   def sites(spark: SparkSession, groupPrefix: String)(body: => Any): Seq[String] = {
     val sc = spark.sparkContext
     val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    // an execution's start event reaches the bus before any of its jobs
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
-      // a job's call site names its result stage, the last one
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add((Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""),
-          e.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name)))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => executions.put(x.executionId.toString, x.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.add((prop("spark.jobGroup.id").getOrElse(""),
+          prop("spark.sql.execution.id").flatMap(id => Option(executions.get(id)))
+            .getOrElse(e.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name))))
+      }
     }
     sc.addSparkListener(listener)
     try {

@@ -85,15 +85,21 @@ class LmJobsSpec extends AnyFunSuite {
     assert(sites.size <= 12, s"a gate micro-batch ran ${sites.size} jobs: ${sites.mkString("; ")}")
   }
 
+  /** Every query served by `SparkEntry.serveStoredLm`. */
+  private val servedLmQueries = Seq("q183_stored_reflm", "q189_stored_reflm_by_lang",
+    "q192_stored_reflm3", "q196_stored_reflm3_by_lang", "q198_kn3_buckets",
+    "q200_kn3_by_lang", "q201_stored_kn3_gate", "q202_kn5_buckets", "q203_kn5_by_lang",
+    "q205_stored_kn5_gate")
+
   test("a fresh stored deploy runs no stamp job; a changed corpus fails naming both stamps") {
     val dir = newCorpusDir("graft-lm-stale")
-    for (q <- Seq("q198_kn3_buckets", "q201_stored_kn3_gate")) {
+    for (q <- servedLmQueries) {
       // the stored stamp is read on the driver: no job at SnapshotStamp.scala
       val stampJobs = warmPassSites(q, dir)._2.filter(_.contains("SnapshotStamp.scala"))
       assert(stampJobs.isEmpty, s"$q ran stamp jobs: ${stampJobs.mkString("; ")}")
     }
     writeCorpus(dir, 301)
-    for (q <- Seq("q198_kn3_buckets", "q201_stored_kn3_gate")) {
+    for (q <- servedLmQueries) {
       val e = intercept[IllegalArgumentException](SparkEntry.queries(q)(spark, dir).collect())
       assert(e.getMessage.contains("stale artifact stamp"), q)
       assert(e.getMessage.contains("(300,") && e.getMessage.contains("(301,"), e.getMessage)
