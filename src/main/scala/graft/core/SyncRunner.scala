@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, when}
+import org.apache.spark.sql.functions.{col, count, current_timestamp, lit, when}
 
 import graft.config.{DbConfig, DependencyGraph, SyncConfig, TableSyncConfig}
 import graft.sinks.JdbcSyncWriter
@@ -69,15 +69,18 @@ private final case class TableOps(
   *   1. on the sync thread, one table at a time: resolve each table's
   *      live DB columns over the driver connection
   *   2. per table, on the pool, under one job group for the run:
-  *      a. read file (CSV/JSON by extension), lazily: a CSV header is
-  *         parsed on the driver, so the read runs no Spark job, and
-  *         RFC3339 cells convert per cell in the cast to the DB's types
+  *      a. read file (CSV/JSON by extension), lazily: a CSV header or
+  *         a JSON file's first record is parsed on the driver, so the
+  *         read runs no Spark job, and RFC3339 cells convert per cell in
+  *         the cast to the DB's types
   *      b. read current DB table; resolve the actual sync column set as
   *         file-columns ∩ db-columns ∩ configured columns; the PK must
   *         survive (`determineActualSyncColumns`, `dbsync.go:321-344`)
   *      c. diff mode: the tagged change set, collected in one action
   *         that also tallies strict PK validation ([[Differ.diff]]);
-  *         overwrite mode: the scale probe and collect (or snapshot)
+  *         overwrite mode: the scale count and collect (or snapshot).
+  *         A JSON file's checks are read after that first full action
+  *         ([[Readers.requireJson]])
   *   3. await the tables in insert order; the first failure in that
   *      order aborts the run, after the job group is cancelled, every
   *      task has ended and every overwrite snapshot is released — so
@@ -198,12 +201,13 @@ object SyncRunner {
           // reinsert runs through Spark's parallel JDBC writer after
           // the commit — executors open their own connections, which
           // would otherwise deadlock on (or not see) the driver
-          // transaction's uncommitted delete.
+          // transaction's uncommitted delete. SyncResult carries Int
+          // counts (reference parity): a >2^31-row overwrite saturates.
           insertOrder.map { n =>
             val o = ops(n)
             o.cfg.mode match {
               case SyncConfig.ModeOverwrite if o.overwriteDf.isDefined =>
-                SyncResult(n, o.cfg.mode, 0, 0, 0)
+                SyncResult(n, o.cfg.mode, math.min(o.overwriteCount, Int.MaxValue.toLong).toInt, 0, 0)
               case SyncConfig.ModeOverwrite =>
                 val ins = JdbcSyncWriter.bulkInsert(
                   conn, n, o.cols, o.overwriteRows, o.cfg.timestampColumns)
@@ -224,31 +228,21 @@ object SyncRunner {
       // bulkInsert. Per-partition commits: a failure here leaves the
       // overwrite table partially loaded (documented relaxation) —
       // re-running the sync restores it (deleteAll + reinsert).
-      if (config.dryRun) results
-      else {
-        val counts = insertOrder.flatMap { n =>
-          ops(n).overwriteDf.map { df =>
-            val o = ops(n)
-            val extraTs = o.cfg.timestampColumns.filterNot(o.cols.contains)
-            val withTs = extraTs.foldLeft(df)((d, c) =>
-              d.withColumn(c, org.apache.spark.sql.functions.current_timestamp()))
-            JdbcSyncWriter.appendDistributed(withTs, config.db, n)
-            n -> o.overwriteCount
-          }
-        }.toMap
-        if (counts.isEmpty) results
-        else results.map(r =>
-          counts.get(r.table).fold(r)(c =>
-            // SyncResult carries Int counts (reference parity);
-            // saturate rather than wrap for a >2^31-row overwrite
-            r.copy(inserts = math.min(c, Int.MaxValue.toLong).toInt)))
+      if (!config.dryRun) insertOrder.foreach { n =>
+        val o = ops(n)
+        o.overwriteDf.foreach { df =>
+          val extraTs = o.cfg.timestampColumns.filterNot(o.cols.contains)
+          JdbcSyncWriter.appendDistributed(
+            extraTs.foldLeft(df)((d, c) => d.withColumn(c, current_timestamp())), config.db, n)
+        }
       }
+      results
     } catch {
       case e: Throwable =>
         JdbcSyncWriter.rollbackQuietly(conn)
         throw e
     } finally {
-      // the overwrite snapshots are pinned since their scale probe; the
+      // the overwrite snapshots are pinned since their scale count; the
       // append above is their last reader, and a failed run has none
       releaseSnapshots(ops.values)
       JdbcSyncWriter.closeQuietly(conn)
@@ -343,8 +337,8 @@ object SyncRunner {
     *
     * File column types are cast to the DB schema: the reference leans
     * on MySQL's implicit coercion at INSERT time; casting up front keeps
-    * the diff and strict JDBC drivers coherent. A string column turns
-    * into its DB type per cell ([[Readers.asDbType]]), so an RFC3339
+    * the diff and strict JDBC drivers coherent. A string or JSON column
+    * turns into its DB type per cell ([[Readers.asDbType]]), so an RFC3339
     * cell converts as the reference's `convertValue` converts it, in the
     * same projection as the cast. A zero-column file (e.g.
     * JSON `[]`) becomes an empty relation in the DB's shape — the
@@ -406,7 +400,8 @@ object SyncRunner {
     * The same action tallies the file's strict PK validation: a file
     * with any invalid key throws here, with
     * [[PrimaryKeyValidator.validateStrict]]'s message, before the
-    * caller writes anything.
+    * caller writes anything. A JSON file's own checks, observed by the
+    * same action, throw first ([[Readers.requireJson]]).
     */
   private[graft] def collectChanges(
       diff: DiffOperations,
@@ -422,6 +417,7 @@ object SyncRunner {
     val changes = if (deletes) diff.changes else diff.changes.filter(op =!= Differ.Delete)
     val selected = changes.select((values ++ before :+ op): _*)
     val collected = selected.collect().toSeq
+    Readers.requireJson(selected)
     PrimaryKeyValidator.requireValid(pk, diff.pkReport(selected))
     val byOp = collected.groupBy(_.getAs[String](Differ.OpCol))
     def rows(tag: String): Seq[Row] = byOp.getOrElse(tag, Nil)
@@ -433,20 +429,18 @@ object SyncRunner {
       config: SyncConfig,
       t: TableSyncConfig,
       dbCols: Seq[String]): TableOps = {
-
-    // RFC3339 converts per cell in syncFrames' cast, not by a sniffing pass
-    val file = Readers.forPath(spark, t.filePath, t.columns, sniffTimestamps = false)
+    val file = Readers.forPath(spark, t.filePath, t.columns)
     val SyncFrames(cols, pk, fileSel, dbSel) = syncFrames(config.db, dbCols, t, file)
 
     t.mode match {
       case SyncConfig.ModeOverwrite =>
-        // Scale gate: count-probe threshold+1 rows (a count, not a
-        // collect — learning "too big" must not itself spike driver
-        // heap with threshold rows). At or below the threshold the
-        // file collects and the strict single-transaction driver path
-        // runs (reference parity); above it the whole file never
-        // collects — the frame rides to the post-commit distributed
-        // append. <= 0 keeps the driver path unconditionally.
+        // Scale gate: count the file (a count, not a collect — learning
+        // "too big" must not itself spike driver heap with threshold
+        // rows). At or below the threshold the file collects and the
+        // strict single-transaction driver path runs (reference parity);
+        // above it the whole file never collects — the frame rides to the
+        // post-commit distributed append. <= 0 keeps the driver path
+        // unconditionally.
         //
         // FK guard: the distributed reinsert lands AFTER the main
         // transaction commits, but tables DEPENDING on this one insert
@@ -455,24 +449,29 @@ object SyncRunner {
         // therefore always takes the driver path, whatever its size.
         val hasDependents = config.tables.exists(_.dependencies.contains(t.name))
         val thr = config.overwriteDistributedThreshold
-        // Persist ONE snapshot before probing: the probe, the exact
-        // count and the post-commit append otherwise each re-evaluate
-        // fileSel, so a source file rewritten mid-run could make the
-        // reported insert count disagree with the rows written. The
-        // cache pins the rows the probe saw; the append releases it.
+        // Persist ONE snapshot before counting: the count, the collect
+        // and the post-commit append otherwise each re-evaluate fileSel,
+        // so a source file rewritten mid-run could make the reported
+        // insert count disagree with the rows written. The cache pins the
+        // rows the count saw; the append releases it. Each full action
+        // over the file is checked on the frame it ran.
         val snapshot =
           if (thr > 0 && thr < Int.MaxValue - 1 && !hasDependents)
             Some(fileSel.persist(
               org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           else None
         try {
-          val probeCount = snapshot.fold(-1L)(_.limit(thr.toInt + 1).count())
+          val counted = snapshot.map(_.select(count(lit(1))))
+          val n = counted.fold(-1L)(_.collect()(0).getLong(0))
+          counted.foreach(Readers.requireJson)
           val dbN = if (config.dryRun) dbSel.count() else 0L
-          if (probeCount > thr && probeCount >= 0)
+          if (n > thr && n >= 0)
             TableOps(t, cols, pk, Nil, Nil, Nil, Nil, dbN,
-              overwriteDf = snapshot, overwriteCount = snapshot.get.count())
+              overwriteDf = snapshot, overwriteCount = n)
           else {
-            val rows = snapshot.getOrElse(fileSel).collect()
+            val frame = snapshot.getOrElse(fileSel)
+            val rows = frame.collect()
+            Readers.requireJson(frame)
             snapshot.foreach(_.unpersist(false))
             TableOps(t, cols, pk, Nil, Nil, Nil, rows.toSeq, dbN,
               overwriteCount = rows.length.toLong)

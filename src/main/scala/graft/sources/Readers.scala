@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.{Try, Using}
 
+import com.fasterxml.jackson.core.{JsonProcessingException, JsonToken}
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -16,6 +17,8 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.catalyst.json.JSONOptions
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
 import org.apache.spark.sql.execution.datasources.{CodecStreams, FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
@@ -32,15 +35,16 @@ import org.apache.spark.sql.types._
   *     header are silently dropped (`loader.go:109-115`). The header is
   *     parsed on the driver and every column read as a string, so the
   *     read itself runs no Spark job.
-  *   - JSON: whole-file array of objects (multiLine), requested
-  *     columns missing from the data are an error (`loader.go:189-193`).
-  *   - RFC3339 (`loader.go:28-43`): the reference converts per *cell*.
-  *     A sync does the same inside its cast to the DB's types
-  *     ([[asDbType]]), and reads its file with `sniffTimestamps = false`.
-  *     A standalone read instead promotes, after load, each string
-  *     column whose non-null values are all RFC3339 instants to
-  *     TimestampType ([[promoteRfc3339]]): a DataFrame column has one
-  *     type, and no target type is known to convert into.
+  *   - JSON: whole-file array of objects (or one object), parsed once:
+  *     the first record's keys are read on the driver, and each value
+  *     keeps its own JSON type as a VARIANT cell (`loader.go:163`).
+  *     Invalid JSON and a record missing a required key
+  *     (`loader.go:185-193`) are observed as the data is read, and fail
+  *     the caller after its action ([[requireJson]]). This read runs no
+  *     Spark job either.
+  *   - RFC3339 (`loader.go:28-43`): converts per *cell* inside the cast
+  *     to the DB's types ([[asDbType]]), as the reference's
+  *     `convertValue` does. No reader promotes a column.
   *   - extension dispatch `.csv` / `.json` (`GetLoader`,
   *     `loader.go:203-213`).
   *   - parquet: the schema is read from one footer on the driver
@@ -52,7 +56,7 @@ import org.apache.spark.sql.types._
   */
 object Readers {
 
-  /** Names each CSV read's row-shape observation apart: two reads
+  /** Names each CSV and JSON read's observation apart: two reads
     * observed under one name cannot meet in one plan.
     */
   private val observations = new AtomicLong
@@ -68,20 +72,21 @@ object Readers {
     when(c.rlike(Rfc3339), try_to_timestamp(c))
 
   /** Column `c` of `df` as a value of the DB column type `t`. A string
-    * column going into a string, date or timestamp column converts per
-    * cell as the reference's `convertValue` does (`loader.go:28-43`): an
-    * RFC3339 instant becomes that timestamp and then `t` (into VARCHAR,
-    * the timestamp's rendering); any other cell is cast as it stands. An
-    * RFC3339-shaped cell that names no instant is such a cell: into
-    * VARCHAR it stays raw, into TIMESTAMP its cast fails. Into any other
-    * type (BOOLEAN, a number, binary) a string is cast as it stands: a
-    * timestamp has no BOOLEAN or binary cast under ANSI, and an instant
-    * is no number. Any other column is cast.
+    * or VARIANT column going into a string, date or timestamp column
+    * converts per cell as the reference's `convertValue` does
+    * (`loader.go:28-43`): a cell whose string form is an RFC3339 instant
+    * becomes that timestamp and then `t` (into VARCHAR, the timestamp's
+    * rendering); any other cell is cast as it stands. An RFC3339-shaped
+    * cell that names no instant is such a cell: into VARCHAR it stays
+    * raw, into TIMESTAMP its cast fails. Into any other type (BOOLEAN, a
+    * number, binary) the cell is cast as it stands: a timestamp has no
+    * BOOLEAN or binary cast under ANSI, and an instant is no number. Any
+    * other column is cast.
     */
   def asDbType(df: DataFrame, c: String, t: DataType): Column =
     (df.schema(c).dataType, t) match {
-      case (StringType, StringType | DateType | TimestampType | TimestampNTZType) =>
-        coalesce(rfc3339Instant(col(c)).cast(t), col(c).cast(t))
+      case (StringType | VariantType, StringType | DateType | TimestampType | TimestampNTZType) =>
+        coalesce(rfc3339Instant(col(c).cast(StringType)).cast(t), col(c).cast(t))
       case (`t`, _) => col(c)
       case _ => col(c).cast(t)
     }
@@ -90,8 +95,7 @@ object Readers {
       spark: SparkSession,
       path: String,
       delimiter: String = ",",
-      columns: Seq[String] = Nil,
-      sniffTimestamps: Boolean = true): DataFrame = {
+      columns: Seq[String] = Nil): DataFrame = {
     val options = Map("header" -> "true", "sep" -> delimiter, "mode" -> "FAILFAST")
     val schema = StructType(csvHeader(spark, path, options).map(StructField(_, StringType)))
     val read = spark.read.options(options).schema(schema).csv(path)
@@ -104,10 +108,8 @@ object Readers {
       else read.observe(s"__csv_whole_rows_${observations.getAndIncrement()}",
         count(when(schema.fieldNames.map(read(_).isNull).reduce(_ && _), 1)))
     // CSV drops requested columns that are absent, silently.
-    val projected =
-      if (columns.isEmpty) df
-      else df.select(columns.filter(df.columns.contains).map(col): _*)
-    if (sniffTimestamps) promoteRfc3339(projected) else projected
+    if (columns.isEmpty) df
+    else df.select(columns.filter(df.columns.contains).map(col): _*)
   }
 
   /** The column names Spark's header inference gives the CSV at `path`,
@@ -124,20 +126,26 @@ object Readers {
       spark: SparkSession, path: String, options: Map[String, String]): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val parsed = new CSVOptions(options, true, spark.conf.get("spark.sql.session.timeZone"))
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
-    val files = Option(fs.globStatus(p)).toSeq.flatten.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq
-        .filter(f => f.isFile && !hidden(f.getPath.getName))
-      else Seq(st)
-    }.sortBy((f: FileStatus) => (-f.getLen, f.getPath.toString))
+    val files = dataFiles(spark, path).sortBy((f: FileStatus) => (-f.getLen, f.getPath.toString))
     files.iterator.flatMap(f => firstLine(conf, f.getPath, parsed)).nextOption()
       .flatMap(line => Option(new CsvParser(parsed.asParserSettings).parseLine(line)))
       .fold(Seq.empty[String]) { row =>
         val caseSensitive = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
         CSVUtils.makeSafeHeader(row, caseSensitive, parsed).toSeq
       }
+  }
+
+  /** The files a text-source read of `path` scans: the matches of a
+    * glob, a directory's visible files. */
+  private def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+    Option(fs.globStatus(p)).toSeq.flatten.flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq
+        .filter(f => f.isFile && !hidden(f.getPath.getName))
+      else Seq(st)
+    }
   }
 
   /** The parquet at `path`, read under the schema Spark's inference
@@ -236,145 +244,145 @@ object Readers {
       found
     }
 
-  def json(
-      spark: SparkSession,
-      path: String,
-      columns: Seq[String] = Nil,
-      sniffTimestamps: Boolean = true): DataFrame = {
-    val df = spark.read.option("multiLine", "true").json(path)
-    if (df.columns.contains("_corrupt_record"))
-      throw new IllegalArgumentException(s"invalid JSON in $path")
-    // Cheap whole-file check first: requested columns absent from the
-    // inferred (union) schema are missing from EVERY record.
-    val missing = columns.filterNot(df.columns.contains)
-    if (missing.nonEmpty)
-      throw new IllegalArgumentException(
-        s"missing key(s) ${missing.mkString(", ")} in JSON records of $path")
-    // Per-record key-PRESENCE check (`loader.go:185-193`): the reference
-    // errors when ANY record lacks a required key, and `"k": null` is
-    // NOT missing. The inferred read yields null for both cases, so
-    // presence is checked on the raw records: each record parsed into a
-    // map (values as raw JSON text) and probed with map_contains_key.
-    // Auto-detect parity (`loader.go:174-182`): with no requested
-    // columns the required set is the FIRST record's keys, sorted — and
-    // the result is projected to exactly those keys, so a key appearing
-    // only in later records is dropped like the reference drops it.
-    // wholeTextFiles is per-file — the same parallelism the multiLine
-    // (non-splittable) inferred read already has.
-    import spark.implicits._
-    // A multiLine file may be a top-level ARRAY (many records) or one
-    // top-level OBJECT (one record — Spark reads it as a single row).
-    // The array parse returns null for the object form, which would
-    // silently skip the per-record check — fall back to wrapping the
-    // object parse as a one-record array.
-    val asArray = from_json(col("j"), ArrayType(MapType(StringType, StringType)))
-    val asObject = from_json(col("j"), MapType(StringType, StringType))
-    val recs = spark.sparkContext.wholeTextFiles(path).values.toDF("j")
-      .select(posexplode(
-        when(asArray.isNotNull, asArray)
-          .when(asObject.isNotNull, array(asObject))).as(Seq("i", "rec")))
-    val required: Seq[String] =
-      if (columns.nonEmpty) columns
-      else recs.filter(col("i") === 0).select(map_keys(col("rec")))
-        .collect().headOption.map(_.getSeq[String](0).sorted).getOrElse(Nil)
-    if (required.nonEmpty) {
-      val checks = required.zipWithIndex.map { case (c, ix) =>
-        min(when(!map_contains_key(col("rec"), lit(c)), col("i"))).as(s"__m_$ix")
-      }
-      val row = recs.agg(checks.head, checks.tail: _*).collect()(0)
-      val hits = required.zipWithIndex.flatMap { case (c, ix) =>
-        if (row.isNullAt(ix)) None
-        else Some((row.getAs[Number](ix).longValue, ix, c))
-      }
-      // first offending (record, key) in the reference's iteration
-      // order: records outer, required columns inner
-      hits.sorted.headOption.foreach { case (i, _, c) =>
-        throw new IllegalArgumentException(
-          s"JSON file '$path', record $i: missing required key '$c'")
+  /** Names the observation of each JSON read ([[requireJson]]). */
+  private val JsonCheck = "__json_check_"
+
+  /** The JSON array of objects (or one object) at `path`, one row per
+    * record and one VARIANT column per required key: `columns`, or with
+    * none the first record's keys, sorted (`loader.go:174-182`). A cell
+    * is SQL NULL where its record lacks the key, and a JSON `null`
+    * otherwise, whose every cast is NULL.
+    *
+    * Each file is parsed once, whole, by the action that reads the
+    * frame, which also observes the first failure in the reference's
+    * order — invalid JSON, then the first record (records outer,
+    * required keys inner) missing a required key, where `"k": null` is
+    * not missing (`loader.go:185-193`). [[requireJson]] throws it after
+    * that action. The read itself runs no Spark job: with no `columns`,
+    * the first record's keys are streamed on the driver by the Jackson
+    * parser Spark ships, up to the close of that record.
+    */
+  def json(spark: SparkSession, path: String, columns: Seq[String] = Nil): DataFrame = {
+    val keys = if (columns.nonEmpty) columns else jsonKeys(spark, path)
+    val text = col("value")
+    val asArray = from_json(text, ArrayType(MapType(StringType, VariantType)))
+    val asObject = from_json(text, MapType(StringType, VariantType))
+    val (i, rec) = (col("i"), col("rec"))
+    val missing = coalesce(keys.map(k => when(!map_contains_key(rec, lit(k)), lit(k))) :+ lit(null): _*)
+    val problem = when(col("bad"), lit(s"invalid JSON in $path"))
+      .otherwise(concat(lit(s"JSON file '$path', record "), i.cast(StringType),
+        lit(": missing required key '"), missing, lit("'")))
+    // a top-level object is one record; NULL where neither parse holds.
+    // posexplode_outer keeps one row (i NULL) for an invalid or empty
+    // file, so the observation sees the invalid one; the filter drops it
+    spark.read.option("wholetext", "true").text(path)
+      .select(coalesce(asArray, when(asObject.isNotNull, array(asObject))).as("recs"))
+      .select(col("recs").isNull.as("bad"), col("recs"))
+      .select(col("bad"), posexplode_outer(col("recs")).as(Seq("i", "rec")))
+      .observe(s"$JsonCheck${observations.getAndIncrement()}",
+        min(when(problem.isNotNull, struct(coalesce(i, lit(-1)), problem))).as("problem"))
+      .filter(i.isNotNull)
+      .select(keys.map(k => rec.getItem(k).as(k)): _*)
+  }
+
+  /** Throws the failure that a JSON read in `executed`'s plan observed
+    * ([[json]]): invalid JSON or a record missing a required key, as an
+    * `IllegalArgumentException`. Call it only after an action on
+    * `executed` completed, and on the frame that action read: an
+    * observation counts only the rows its action pulled. A JSON read in
+    * the plan whose observation the action did not report is an
+    * `IllegalStateException`.
+    */
+  def requireJson(executed: DataFrame): Unit = {
+    val observed = executed.queryExecution.observedMetrics
+    executed.queryExecution.analyzed.foreach {
+      case m: CollectMetrics if m.name.startsWith(JsonCheck) =>
+        val row = observed.getOrElse(m.name, throw new IllegalStateException(
+          s"JSON check '${m.name}' is not in the executed plan"))
+        Option(row.getStruct(0)).foreach(p => throw new IllegalArgumentException(p.getString(1)))
+      case _ =>
+    }
+  }
+
+  /** The sorted keys of the first record of the JSON at `path` (the
+    * first of its files by path), streamed on the driver up to the close
+    * of that record; no file or no record gives none. Where the first
+    * record has no key, no column of the read carries its check, so the
+    * rest of the file is checked here. Invalid JSON before that point is
+    * an `IllegalArgumentException`.
+    */
+  private def jsonKeys(spark: SparkSession, path: String): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val factory = new JSONOptions(Map.empty[String, String],
+      spark.conf.get("spark.sql.session.timeZone")).buildJsonFactory()
+    def invalid = new IllegalArgumentException(s"invalid JSON in $path")
+    dataFiles(spark, path).sortBy(_.getPath.toString).headOption.fold(Seq.empty[String]) { f =>
+      Using.resource(CodecStreams.createInputStreamWithCloseResource(conf, f.getPath)) { in =>
+        val p = factory.createParser(in)
+        // the keys of the object just opened, its values skipped
+        def keys(): Seq[String] = Iterator.continually(p.nextToken())
+          .takeWhile(_ == JsonToken.FIELD_NAME)
+          .map { _ => val k = p.currentName; p.nextToken(); p.skipChildren(); k }
+          .toVector.distinct.sorted
+        try p.nextToken() match {
+          case null => Nil
+          case JsonToken.START_OBJECT => keys()
+          case JsonToken.START_ARRAY => p.nextToken() match {
+            case JsonToken.END_ARRAY => Nil
+            case JsonToken.START_OBJECT =>
+              val first = keys()
+              if (first.isEmpty)
+                Iterator.continually(p.nextToken()).takeWhile(_ != JsonToken.END_ARRAY).foreach {
+                  case JsonToken.START_OBJECT => p.skipChildren()
+                  case JsonToken.VALUE_NULL => ()
+                  case _ => throw invalid
+                }
+              first
+            case _ => throw invalid
+          }
+          case _ => throw invalid
+        } catch { case _: JsonProcessingException => throw invalid }
       }
     }
-    val projected = if (required.isEmpty) df else df.select(required.map(col): _*)
-    if (sniffTimestamps) promoteRfc3339(projected) else projected
   }
 
   /** XML via Spark 4's built-in XML source: one row per `rowTag`
-    * element; missing requested columns error like JSON (an absent
-    * element is a schema mismatch, not a silent drop). RFC3339
-    * promotion applies, as XML carries no type information either.
+    * element, typed by the source's inference; missing requested columns
+    * error (an absent element is a schema mismatch, not a silent drop).
     */
   def xml(
       spark: SparkSession,
       path: String,
       rowTag: String = "row",
-      columns: Seq[String] = Nil,
-      sniffTimestamps: Boolean = true): DataFrame = {
-    val df = spark.read
-      .format("xml")
-      .option("rowTag", rowTag)
-      .load(path)
-    val missing = columns.filterNot(df.columns.contains)
-    if (missing.nonEmpty)
-      throw new IllegalArgumentException(
-        s"missing element(s) ${missing.mkString(", ")} in XML records of $path")
-    val projected = if (columns.isEmpty) df else df.select(columns.map(col): _*)
-    if (sniffTimestamps) promoteRfc3339(projected) else projected
-  }
+      columns: Seq[String] = Nil): DataFrame =
+    typed(spark.read.format("xml").option("rowTag", rowTag).load(path), columns, s"XML records of $path")
 
   /** Dispatch on file extension (reference `GetLoader`,
     * `loader.go:203-213`; parquet/ORC are the reference's declared
-    * future work, `README.md:351` — free on Spark). `sniffTimestamps`
-    * goes to the CSV, JSON and XML readers; a sync passes `false` and
-    * converts RFC3339 per cell instead ([[asDbType]]).
+    * future work, `README.md:351` — free on Spark).
     */
   def forPath(
       spark: SparkSession,
       path: String,
       columns: Seq[String] = Nil,
-      delimiter: String = ",",
-      sniffTimestamps: Boolean = true): DataFrame = {
+      delimiter: String = ","): DataFrame = {
     val lower = path.toLowerCase
-    if (lower.endsWith(".csv")) csv(spark, path, delimiter, columns, sniffTimestamps)
-    else if (lower.endsWith(".json")) json(spark, path, columns, sniffTimestamps)
-    else if (lower.endsWith(".xml"))
-      xml(spark, path, columns = columns, sniffTimestamps = sniffTimestamps)
-    else if (lower.endsWith(".parquet")) columnar(parquet(spark, path), columns)
-    else if (lower.endsWith(".orc")) columnar(spark.read.orc(path), columns)
+    if (lower.endsWith(".csv")) csv(spark, path, delimiter, columns)
+    else if (lower.endsWith(".json")) json(spark, path, columns)
+    else if (lower.endsWith(".xml")) xml(spark, path, columns = columns)
+    else if (lower.endsWith(".parquet")) typed(parquet(spark, path), columns, "columnar source")
+    else if (lower.endsWith(".orc")) typed(spark.read.orc(path), columns, "columnar source")
     else throw new IllegalArgumentException(
       s"unsupported file format for $path (expected .csv, .json, .xml, .parquet, or .orc)")
   }
 
-  /** Typed columnar sources: projection only (types come from the file
-    * schema; missing requested columns error like JSON).
+  /** Sources typed by their own schema (XML's inference, parquet, ORC):
+    * projection only; a requested column missing from `source` errors.
     */
-  private def columnar(df: DataFrame, columns: Seq[String]): DataFrame = {
+  private def typed(df: DataFrame, columns: Seq[String], source: String): DataFrame = {
     val missing = columns.filterNot(df.columns.contains)
     if (missing.nonEmpty)
-      throw new IllegalArgumentException(
-        s"missing column(s) ${missing.mkString(", ")} in columnar source")
+      throw new IllegalArgumentException(s"missing column(s) ${missing.mkString(", ")} in $source")
     if (columns.isEmpty) df else df.select(columns.map(col): _*)
-  }
-
-  /** Promote string columns that are entirely RFC3339 instants
-    * (ignoring nulls, with at least one value) to TimestampType: the
-    * per-column reading of RFC3339 that a standalone read uses (a sync
-    * converts per cell, [[asDbType]]). One aggregate pass over the data
-    * computes all candidates' verdicts at once. A column holding an
-    * RFC3339-shaped value that names no instant stays a string.
-    */
-  def promoteRfc3339(df: DataFrame): DataFrame = {
-    val candidates = df.schema.fields.collect {
-      case StructField(n, StringType, _, _) => n
-    }
-    if (candidates.isEmpty) return df
-    val checks = candidates.flatMap { n =>
-      Seq(
-        count(when(col(n).isNotNull && rfc3339Instant(col(n)).isNull, 1)).as(s"__bad_$n"),
-        count(when(col(n).isNotNull, 1)).as(s"__n_$n"))
-    }
-    val row = df.agg(checks.head, checks.tail: _*).collect()(0)
-    val promote = candidates.filter { n =>
-      row.getAs[Long](s"__bad_$n") == 0 && row.getAs[Long](s"__n_$n") > 0
-    }.toSet
-    promote.foldLeft(df)((d, n) => d.withColumn(n, to_timestamp(col(n))))
   }
 }

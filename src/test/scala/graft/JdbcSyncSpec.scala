@@ -899,6 +899,59 @@ class JdbcSyncSpec extends AnyFunSuite {
     assert(query("SELECT COUNT(*) FROM zb_t").head.head == 0)
   }
 
+  private def jsonFile(content: String): String = {
+    val f = Files.createTempDirectory("graft-sync").resolve("data.json")
+    Files.writeString(f, content)
+    f.toString
+  }
+
+  test("invalid JSON or a missing key fails the sync before any write, in diff and both overwrite paths") {
+    // the checks are observed by the table's one full action: they must
+    // see every record, also where the overwrite path reads a snapshot
+    dropIfExists("jbad_t")
+    exec("CREATE TABLE jbad_t (id INT PRIMARY KEY, name VARCHAR(20))",
+      "INSERT INTO jbad_t VALUES (9, 'keep')")
+    val inputs: Seq[(String, String => String)] = Seq(
+      """[{"id": 1, "name": "a"}, {"id": 2, "name": "b"""" -> (p => s"invalid JSON in $p"),
+      "[1, 2]" -> (p => s"invalid JSON in $p"),
+      """[{"id": 1, "name": "a"}, {"id": 2, "name": "b"}, {"id": 3}]""" ->
+        (p => s"JSON file '$p', record 2: missing required key 'name'"))
+    for ((content, message) <- inputs; (mode, thr) <- Seq(("diff", 500000L),
+         ("overwrite", 500000L), ("overwrite", 1L))) {
+      val f = jsonFile(content)
+      val cfg = SyncConfig(db, Seq(TableSyncConfig(name = "jbad_t", filePath = f, mode = mode,
+        primaryKey = "id", deleteNotInFile = mode == "diff")), overwriteDistributedThreshold = thr)
+      spark.catalog.clearCache()
+      val e = intercept[IllegalArgumentException](SyncRunner.run(spark, cfg))
+      assert(e.getMessage == message(f), s"$mode $thr $content")
+      assert(query("SELECT id, name FROM jbad_t") == Seq(Seq(9, "keep")), s"$mode $thr $content")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$mode $thr $content")
+    }
+  }
+
+  test("a JSON sync runs no more Spark jobs than its CSV twin, in diff and overwrite mode") {
+    dropIfExists("jtwin_t")
+    exec("CREATE TABLE jtwin_t (id INT PRIMARY KEY, name VARCHAR(20), score DOUBLE)")
+    val rows = Seq((1, "a", 1.5), (2, "b", 2.25), (3, "c", 3.0))
+    val csv = csvFile("id,name,score\n" + rows.map { case (i, n, v) => s"$i,$n,$v" }.mkString("\n"))
+    val json = jsonFile(rows.map { case (i, n, v) => s"""{"id": $i, "name": "$n", "score": $v}""" }
+      .mkString("[", ",", "]"))
+    for (mode <- Seq("diff", "overwrite")) {
+      def jobs(f: String): Int = {
+        exec("DELETE FROM jtwin_t", "INSERT INTO jtwin_t VALUES (1, 'old', 1.5), (9, 'x', 0.0)")
+        val n = JobCount(spark, "graft-sync-")(SyncRunner.run(spark, SyncConfig(db, Seq(
+          TableSyncConfig(name = "jtwin_t", filePath = f, mode = mode, primaryKey = "id",
+            deleteNotInFile = mode == "diff")))))
+        assert(query("SELECT id, name, score FROM jtwin_t ORDER BY id") ==
+          rows.map { case (i, n, v) => Seq(i, n, v) }, s"$mode $f")
+        n
+      }
+      val (csvJobs, jsonJobs) = (jobs(csv), jobs(json))
+      info(s"$mode: JSON $jsonJobs jobs, CSV $csvJobs")
+      assert(jsonJobs <= csvJobs, s"$mode: JSON $jsonJobs jobs, CSV $csvJobs")
+    }
+  }
+
   test("a two-table FK diff sync runs at most 6 Spark jobs") {
     // one change-set collect per table, 3 jobs each under AQE (two
     // shuffle map stages and the result): the file reads add none

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.types.{StringType, TimestampType}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.VariantType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Readers
@@ -17,6 +18,14 @@ class ReadersSpec extends AnyFunSuite {
     f.toString
   }
 
+  /** The rows of `df`, then the checks its JSON reads observed: a JSON
+    * read reports invalid JSON or a missing key after an action. */
+  private def readAll(df: DataFrame): Seq[Row] = {
+    val rows = df.collect().toSeq
+    Readers.requireJson(df)
+    rows
+  }
+
   test("csv: header, projection silently drops missing columns") {
     val p = tmpFile("a.csv", "id,name,email\n1,alice,a@x\n2,bob,b@x\n")
     val df = Readers.csv(spark, p, columns = Seq("id", "email", "ghost"))
@@ -28,21 +37,6 @@ class ReadersSpec extends AnyFunSuite {
     val p = tmpFile("b.csv", "id;name\n1;alice\n")
     val df = Readers.csv(spark, p, delimiter = ";")
     assert(df.columns.toSeq == Seq("id", "name"))
-  }
-
-  test("csv: RFC3339 columns are promoted to timestamps") {
-    val p = tmpFile("c.csv",
-      "id,at,label\n1,2023-12-25T15:30:45Z,x\n2,2023-12-25T16:30:45+09:00,y\n")
-    val df = Readers.csv(spark, p)
-    assert(df.schema("at").dataType == TimestampType)
-    assert(df.schema("label").dataType == StringType)
-  }
-
-  test("csv: an RFC3339-shaped value that names no instant keeps its column a string") {
-    val p = tmpFile("bad.csv", "id,at\n1,2023-12-25T15:30:45Z\n2,2023-02-30T00:00:00Z\n")
-    val df = Readers.csv(spark, p)
-    assert(df.schema("at").dataType == StringType)
-    assert(df.collect().map(_.getString(1)).toSeq == Seq("2023-12-25T15:30:45Z", "2023-02-30T00:00:00Z"))
   }
 
   // (case, files as name -> content, delimiter)
@@ -65,24 +59,31 @@ class ReadersSpec extends AnyFunSuite {
       files.foreach { case (n, content) => Files.writeString(dir.resolve(n), content) }
       val p = if (files.size == 1) dir.resolve(files.head._1).toString else dir.toString
       val spark0 = spark.read.option("header", "true").option("sep", delimiter).csv(p)
-      val ours = Readers.csv(spark, p, delimiter = delimiter, sniffTimestamps = false)
+      val ours = Readers.csv(spark, p, delimiter = delimiter)
       assert(ours.columns.toSeq == spark0.columns.toSeq)
       // a directory's smaller file has a short row, which FAILFAST rejects
       if (files.size > 1) assert(ours.columns.toSeq == Seq("id", "name", "extra"))
       else assert(ours.collect().toSeq == spark0.collect().toSeq)
     }
 
-  test("csv: the read itself runs no Spark job") {
-    val p = tmpFile("j.csv", "id,at,label\n1,2023-12-25T15:30:45Z,x\n")
-    val sc = spark.sparkContext
-    val jobs = JobCount(spark, "readers-header-read") {
-      sc.setJobGroup("readers-header-read", null)
-      try Readers.csv(spark, p, sniffTimestamps = false).columns finally sc.clearJobGroup()
-    }
-    assert(jobs == 0)
-  }
+  // (case, file name, content, requested columns)
+  private val readCases: Seq[(String, String, String, Seq[String])] = Seq(
+    ("csv", "j.csv", "id,at,label\n1,2023-12-25T15:30:45Z,x\n", Nil),
+    ("json", "j.json", """[{"id": 1, "at": "2023-12-25T15:30:45Z"}, {"id": 2, "at": null}]""", Nil),
+    ("json with columns", "k.json", """[{"id": 1, "at": "x"}, {"id": 2, "at": "y"}]""", Seq("at", "id")))
 
-  test("xml: rowTag records, projection, RFC3339 promotion, dispatch") {
+  for ((label, name, content, columns) <- readCases)
+    test(s"$label: the read itself runs no Spark job") {
+      val p = tmpFile(name, content)
+      val sc = spark.sparkContext
+      val jobs = JobCount(spark, "readers-header-read") {
+        sc.setJobGroup("readers-header-read", null)
+        try Readers.forPath(spark, p, columns).columns finally sc.clearJobGroup()
+      }
+      assert(jobs == 0)
+    }
+
+  test("xml: rowTag records, projection, dispatch") {
     val p = tmpFile("r.xml",
       """<rows>
         |  <row><id>1</id><name>alice</name><at>2023-12-25T15:30:45Z</at></row>
@@ -90,7 +91,6 @@ class ReadersSpec extends AnyFunSuite {
         |</rows>""".stripMargin)
     val df = Readers.xml(spark, p, rowTag = "row")
     assert(df.count() == 2)
-    assert(df.schema("at").dataType == TimestampType)
     val e = intercept[IllegalArgumentException] {
       Readers.xml(spark, p, rowTag = "row", columns = Seq("id", "ghost"))
     }
@@ -103,9 +103,10 @@ class ReadersSpec extends AnyFunSuite {
     val p = tmpFile("d.json",
       """[{"id": 1, "name": "alice"}, {"id": 2, "name": "bob"}]""")
     val df = Readers.json(spark, p, columns = Seq("id", "name"))
-    assert(df.count() == 2)
+    assert(readAll(df).size == 2)
+    assert(df.schema.map(_.dataType).toSet == Set(VariantType))
     val e = intercept[IllegalArgumentException] {
-      Readers.json(spark, p, columns = Seq("id", "email"))
+      readAll(Readers.json(spark, p, columns = Seq("id", "email")))
     }
     assert(e.getMessage.contains("email"))
   }
@@ -118,17 +119,19 @@ class ReadersSpec extends AnyFunSuite {
         | {"id": 2, "name": "bob"},
         | {"id": 3, "name": "carol", "email": "c@x"}]""".stripMargin)
     val e = intercept[IllegalArgumentException] {
-      Readers.json(spark, p, columns = Seq("id", "name", "email"))
+      readAll(Readers.json(spark, p, columns = Seq("id", "name", "email")))
     }
     assert(e.getMessage.contains("record 1") &&
       e.getMessage.contains("missing required key 'email'"))
     // columns not requesting the partial key load fine
-    assert(Readers.json(spark, p, columns = Seq("id", "name")).count() == 3)
+    assert(readAll(Readers.json(spark, p, columns = Seq("id", "name"))).size == 3)
     // an explicit JSON null is PRESENT (reference: jsonObj[col] ok=true)
+    // and reads as a JSON null, an absent key as SQL NULL
     val pn = tmpFile("n.json",
       """[{"id": 1, "email": "a@x"}, {"id": 2, "email": null}]""")
     val dfn = Readers.json(spark, pn, columns = Seq("id", "email"))
-    assert(dfn.count() == 2)
+    assert(readAll(dfn.selectExpr("id::int", "email::string", "email IS NULL")) ==
+      Seq(Row(1, "a@x", false), Row(2, null, false)))
   }
 
   test("json: auto-detect uses first record's sorted keys; later-record gap errors") {
@@ -140,23 +143,28 @@ class ReadersSpec extends AnyFunSuite {
     val df = Readers.json(spark, p)
     assert(df.columns.toSeq == Seq("a", "b")) // sorted, no "extra"
     val pBad = tmpFile("g.json", """[{"a": 1, "b": 2}, {"a": 3}]""")
-    val e = intercept[IllegalArgumentException](Readers.json(spark, pBad))
+    val e = intercept[IllegalArgumentException](readAll(Readers.json(spark, pBad)))
     assert(e.getMessage.contains("record 1") &&
       e.getMessage.contains("missing required key 'b'"))
   }
 
   test("json: empty array loads as empty result") {
     val p = tmpFile("e.json", "[]")
-    assert(Readers.json(spark, p).count() == 0)
+    assert(readAll(Readers.json(spark, p)).isEmpty)
+    // with no key to read, no column carries the check: the driver
+    // checks the whole file as it looks for the first record's keys
+    for (bad <- Seq("[{}, 1]", "[1, 2]", "[{}, {\"a\": 1}"))
+      assert(intercept[IllegalArgumentException](Readers.json(spark, tmpFile("b.json", bad)))
+        .getMessage.startsWith("invalid JSON in "), bad)
   }
 
   test("json: single top-level object gets the same per-record check") {
     // the array-schema parse yields null for an object file; without
     // the object fallback the presence check silently skipped it
     val p = tmpFile("o.json", """{"id": 1, "name": "alice"}""")
-    assert(Readers.json(spark, p, columns = Seq("id", "name")).count() == 1)
+    assert(readAll(Readers.json(spark, p, columns = Seq("id", "name"))).size == 1)
     val e = intercept[IllegalArgumentException] {
-      Readers.json(spark, p, columns = Seq("id", "email"))
+      readAll(Readers.json(spark, p, columns = Seq("id", "email")))
     }
     assert(e.getMessage.contains("email"))
     // auto-detect takes the object's own sorted keys
