@@ -740,13 +740,14 @@ object SparkEntry {
     * measured increment clones and merges the odd half into, so their
     * window holds only the increment's own lifecycle (r14's cap-kill
     * fix). Stored counts are UNPRUNED (the additive-merge contract);
-    * KN5 deploys apply KenLM-style singleton pruning as the score-time
-    * view. Built directly, never through a result memo: q181/q182 and
+    * the order-5 models derive their stored KN tables at `minCount` 2,
+    * KenLM-style singleton pruning, which every KN5 deploy serves.
+    * Built directly, never through a result memo: q181/q182 and
     * the other inline-train queries are measured paying their own
     * training.
     */
   private[graft] final case class RefLmSpec(
-      name: String, order: Int, keyed: Boolean, half: Boolean = false) {
+      name: String, order: Int, keyed: Boolean, half: Boolean = false, minCount: Long = 1) {
     /** The reference slice, a new Column per call: a build may run on
       * any prewarm lane, and no expression tree is shared across
       * concurrent plans (the race `Ranking.writeTablesParallel`
@@ -760,11 +761,11 @@ object SparkEntry {
   private val Lm2 = RefLmSpec("reflm", 2, keyed = false)
   private val Lm2Half = RefLmSpec("reflm-base", 2, keyed = false, half = true)
   private[graft] val Lm3 = RefLmSpec("reflm3", 3, keyed = false)
-  private val Lm5 = RefLmSpec("reflm5", 5, keyed = false)
+  private[graft] val Lm5 = RefLmSpec("reflm5", 5, keyed = false, minCount = 2)
   private val KeyedLm2 = RefLmSpec("reflm-keyed", 2, keyed = true)
   private val KeyedLm3 = RefLmSpec("reflm3-keyed", 3, keyed = true)
   private val KeyedLm3Half = RefLmSpec("reflm3-keyed-base", 3, keyed = true, half = true)
-  private val KeyedLm5 = RefLmSpec("reflm5-keyed", 5, keyed = true)
+  private val KeyedLm5 = RefLmSpec("reflm5-keyed", 5, keyed = true, minCount = 2)
 
   private val RefLms =
     Seq(Lm2, Lm2Half, Lm3, Lm5, KeyedLm2, KeyedLm3, KeyedLm3Half, KeyedLm5)
@@ -772,7 +773,8 @@ object SparkEntry {
   private[graft] def storedLm(s: SparkSession, dir: String, l: RefLmSpec): Stored =
     stored(s, dir, l.name) { base =>
       operators.Ranking.writeRefLm(operators.Ranking.refLmTrain(T(s, dir, "documents"),
-        "text", l.slice, l.order, Option.when(l.keyed)("lang")), base.resolve("model").toString)
+        "text", l.slice, l.order, Option.when(l.keyed)("lang"), l.minCount),
+        base.resolve("model").toString)
     }
 
   /** A scorer of the stored-LM deploys: (pool, model, key) to the
@@ -780,24 +782,22 @@ object SparkEntry {
   private type LmScorer =
     (DataFrame, operators.Ranking.RefLmModel, Option[String]) => DataFrame
 
-  private val kn3Scorer: LmScorer =
-    (d, m, k) => operators.Ranking.refLmKn3Score(d, "doc_id", "text", m, keyCol = k)
-
-  /** KN5 at the serving pruning config, min counts 2/2. */
-  private val kn5Scorer: LmScorer = (d, m, k) => operators.Ranking.refLmKn5Score(
-    d, "doc_id", "text", m, minCount5 = 2, minCount4 = 2, keyCol = k)
+  /** Kneser-Ney at the model's own order, and so at the pruning its
+    * stored KN tables were derived at. */
+  private val knScorer: LmScorer =
+    (d, m, k) => operators.Ranking.refLmKnScore(d, "doc_id", "text", m, m.order, keyCol = k)
 
   /** A STORED per-language cutoff table at `cutoffs`: the tertile
     * cutoffs of `model`'s scores under `score`, measured on the full
     * corpus. A gate must serve the scorer and pruning config its
     * cutoffs were measured under (JM- and KN-measured cutoffs differ,
     * as do pruned and unpruned ones), so each gate owns its table: KN3
-    * for q201/q204, KN5 at min counts 2/2 for q205.
+    * for q201/q204, KN5 of the model pruned at 2 for q205.
     */
   private final case class CutoffSpec(name: String, model: RefLmSpec, score: LmScorer)
 
-  private val Kn3Cutoffs = CutoffSpec("kn3-keyed-cutoffs", KeyedLm3, kn3Scorer)
-  private val Kn5Cutoffs = CutoffSpec("kn5-keyed-cutoffs", KeyedLm5, kn5Scorer)
+  private val Kn3Cutoffs = CutoffSpec("kn3-keyed-cutoffs", KeyedLm3, knScorer)
+  private val Kn5Cutoffs = CutoffSpec("kn5-keyed-cutoffs", KeyedLm5, knScorer)
   private val RefLmCutoffs = Seq(Kn3Cutoffs, Kn5Cutoffs)
 
   /** The measurement observes the model's stamp on its corpus scan, so
@@ -2533,7 +2533,7 @@ object SparkEntry {
     // (freshness-stamped; nothing retrains): the continuation tables
     // are groupBys over the counts, written with them and re-derived by
     // a merge, so the bit-equal incremental merge carries over to KN)
-    "q198_kn3_buckets" -> ((s, dir) => serveStoredLm(s, dir, Lm3)(kn3Scorer)),
+    "q198_kn3_buckets" -> ((s, dir) => serveStoredLm(s, dir, Lm3)(knScorer)),
 
     // ---- extension: keyed ORDER-3 incremental lifecycle ----
     // q190's measured increment for the per-language fleet: clone the
@@ -2566,7 +2566,7 @@ object SparkEntry {
     // document scores under ITS language's interpolated-KN chain, its
     // KN tables read per key from the SAME stored keyed order-3
     // artifact q196 deploys from (freshness-stamped; nothing retrains)
-    "q200_kn3_by_lang" -> ((s, dir) => serveStoredLm(s, dir, KeyedLm3)(kn3Scorer)),
+    "q200_kn3_by_lang" -> ((s, dir) => serveStoredLm(s, dir, KeyedLm3)(knScorer)),
 
     // ---- extension: KN deploy at STORED per-language cutoffs ----
     // the production gate shape (q189/q196's stored-threshold
@@ -2577,25 +2577,25 @@ object SparkEntry {
     // ranks, so the rollup is bit-identical to q200's (shared oracle):
     // the deploy must reproduce exactly what the measurement saw
     "q201_stored_kn3_gate" -> ((s, dir) =>
-      serveStoredLm(s, dir, KeyedLm3, Some(Kn3Cutoffs))(kn3Scorer)),
+      serveStoredLm(s, dir, KeyedLm3, Some(Kn3Cutoffs))(knScorer)),
 
     // ---- extension: 5-gram Kneser-Ney with count pruning ----
     // CCNet's production depth (its KenLM models are 5-gram
-    // interpolated KN): the stored artifact adds only raw 4-/5-gram
-    // counts (contexts and continuation tables derive at score time,
-    // so the additive merge stays bit-equal), and KenLM's singleton
-    // pruning runs as the SCORE-TIME view minCount=2 on both high
-    // orders — the dropped singleton mass routes through the discount
-    // backoff, mirrored in the oracle's pruned CTEs
-    "q202_kn5_buckets" -> ((s, dir) => serveStoredLm(s, dir, Lm5)(kn5Scorer)),
+    // interpolated KN): the stored artifact adds raw 4-/5-gram counts,
+    // unpruned so the additive merge stays bit-equal, and the order-5
+    // KN tables derived at the model's minCount 2 — KenLM's singleton
+    // pruning on both high orders, built once with the model. The
+    // dropped singleton mass routes through the discount backoff,
+    // mirrored in the oracle's pruned CTEs
+    "q202_kn5_buckets" -> ((s, dir) => serveStoredLm(s, dir, Lm5)(knScorer)),
 
     // ---- extension: per-language 5-gram Kneser-Ney ----
     // CCNet's ACTUAL production matrix (one 5-gram interpolated-KN
     // KenLM model per language): every doc scores under ITS language's
-    // stored eight-table chain with per-key singleton pruning as the
-    // score-time view, bucketed at per-language tertiles. Unmodeled
+    // stored KN5 chain, pruned per key at the model's minCount 2,
+    // bucketed at per-language tertiles. Unmodeled
     // languages are absent (the keyed INNER-totals contract)
-    "q203_kn5_by_lang" -> ((s, dir) => serveStoredLm(s, dir, KeyedLm5)(kn5Scorer)),
+    "q203_kn5_by_lang" -> ((s, dir) => serveStoredLm(s, dir, KeyedLm5)(knScorer)),
 
     // ---- extension: KN5 deploy at STORED per-language cutoffs ----
     // q201 at CCNet's production depth: label every document at its
@@ -2604,7 +2604,7 @@ object SparkEntry {
     // bucket). Shares q203's oracle — cutoffs measured on the same
     // pool reproduce the tertile rollup bit-for-bit
     "q205_stored_kn5_gate" -> ((s, dir) =>
-      serveStoredLm(s, dir, KeyedLm5, Some(Kn5Cutoffs))(kn5Scorer)),
+      serveStoredLm(s, dir, KeyedLm5, Some(Kn5Cutoffs))(knScorer)),
 
     // ---- extension: unigram-LM tokenizer training ----
     // the OTHER production tokenizer family next to BPE (Kudo 2018,
@@ -5910,7 +5910,7 @@ object SparkEntry {
         minCount5 = 2, minCount4 = 2),
 
     // per-language 5-gram KN chain replayed per key with the same
-    // score-time pruning views
+    // pruning views
     "q203_kn5_by_lang" ->
       operators.Ranking.refLmKn5BucketsByKeySql(
         "documents", "doc_id", "text", "lang",

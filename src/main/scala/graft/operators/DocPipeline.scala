@@ -426,7 +426,7 @@ object DocPipeline {
     val ppReps = perplexity.fold(semReps) { st =>
       val repDocs = cleaned.join(
         semReps.select(col(idCol)), Seq(idCol), "left_semi")
-      val dropped = Ranking.refLmKn3Score(repDocs, idCol, textCol, st.model,
+      val dropped = Ranking.refLmKnScore(repDocs, idCol, textCol, st.model, 3,
           keyCol = Some(st.keyCol))
         .join(broadcast(st.cutoffs), Seq(st.keyCol))
         .withColumn("__bucket",

@@ -362,8 +362,10 @@ object Ranking {
   // Stored counts stay UNPRUNED: additivity is what makes the
   // incremental merge bit-identical to a retrain, and pruning is not
   // additive (a count crossing the threshold after a merge must
-  // reappear). Pruning is instead a SCORE-TIME view
-  // ([[refLmKn5Score]]'s minCount5/4 — KenLM's singleton pruning).
+  // reappear). Pruning is a property of the MODEL's Kneser-Ney view
+  // (`minCount`, KenLM's singleton pruning): its KN tables derive from
+  // the pruned counts ([[knTables]]), are stored beside the unpruned
+  // ones, and a merge re-derives them at the same `minCount`.
   // --------------------------------------------------------------------
 
   /** A reference LM of order 2, 3 or 5 as exact integer tables — what
@@ -375,8 +377,8 @@ object Ranking {
     *    `tctx` (w1, w2, ctx3) = c(w1 w2 ·) — NOT the bigram count (a
     *    document's final bigram has no continuation);
     *  - `totals`: (n_ref_tokens, vocab, n_bigram_types), one row;
-    *  - `knTables`: an order-3 model's Kneser-Ney tables `t3`, `cbig`,
-    *    `c2` and `cu` ([[kn3Tables]]); empty for any other order.
+    *  - `knTables`: from order 3, the model's Kneser-Ney tables at its
+    *    own order and `minCount` ([[knTables]]), empty at order 2.
     * A keyed model leads every table with `__k` (totals: one row per
     * key) — keyedness is read from that schema, never flagged. Every
     * table but the counts derives from the counts ([[withDerived]]), so
@@ -384,25 +386,20 @@ object Ranking {
     * tables are stored as KenLM stores its model: built once, looked up
     * by every pass. Derived at score time instead, a q198 pass paid 4
     * aggregate jobs of its 17 (300 generated docs, `local[4]`); a
-    * model with no stored KN tables (an order-5 model scored at order
-    * 3, an artifact written without them) still derives them there
-    * ([[kn3]]).
+    * scorer below the model's order, or a model with no stored KN
+    * tables (an artifact written without them), still derives them
+    * there, through the same function ([[refLmKnScore]]).
     */
   final case class RefLmModel(
       counts: Seq[DataFrame], contextTables: Seq[DataFrame], totals: DataFrame,
-      knTables: Seq[DataFrame] = Nil) {
+      knTables: Seq[DataFrame] = Nil, minCount: Long = 1) {
     def order: Int = counts.size
     def keyed: Boolean = totals.columns.headOption.contains("__k")
     def unigrams: DataFrame = counts(0)
     def bigrams: DataFrame = counts(1)
     def trigrams: DataFrame = counts(2)
-    def fourgrams: DataFrame = counts(3)
-    def fivegrams: DataFrame = counts(4)
     def contexts: DataFrame = contextTables(0)
     def triContexts: DataFrame = contextTables(1)
-    /** `t3`, `cbig`, `c2`, `cu`: the stored tables, else derived. */
-    def kn3: Seq[DataFrame] =
-      if (knTables.nonEmpty) knTables else kn3Tables(counts, if (keyed) Seq("__k") else Nil)
   }
 
   /** (stored table name, count column) of the order-k count table. */
@@ -410,8 +407,17 @@ object Ranking {
     "unigram" -> "c1", "bigram" -> "cb", "trigram" -> "ct",
     "fourgram" -> "c4", "fivegram" -> "c5")
 
-  /** The stored names of [[RefLmModel.knTables]], in order. */
-  private val kn3Names = Seq("t3", "cbig", "c2", "cu")
+  /** The per-doc count column of an order-n scorer's output. */
+  private val gramCountCols = Map(2 -> "n_bigrams", 3 -> "n_trigrams", 5 -> "n_5grams")
+
+  /** The continuation-count table and column of KN level j: at j = 2
+    * the names stored order-3 artifacts carry. */
+  private def ccNames(j: Int): (String, String) =
+    if (j == 2) ("cbig", "__cc") else (s"cc$j", s"__cc$j")
+
+  /** The stored names of an order-n model's [[knTables]], in order. */
+  private def knNames(n: Int): Seq[String] =
+    s"t$n" +: (n - 1 to 2 by -1).flatMap(j => Seq(ccNames(j)._1, s"c$j")) :+ "cu"
 
   /** The n-gram columns of an order-n table. */
   private def gramCols(n: Int): Seq[String] =
@@ -461,22 +467,24 @@ object Ranking {
     * fast on it).
     */
   def refLmTrain(docs: DataFrame, textCol: String, isRef: Column,
-      order: Int = 2, keyCol: Option[String] = None): RefLmModel = {
+      order: Int = 2, keyCol: Option[String] = None, minCount: Long = 1): RefLmModel = {
     require(Set(2, 3, 5)(order), s"reference-LM order must be 2, 3 or 5, got $order")
+    require(minCount >= 1, s"the count-pruning threshold must be >= 1, got $minCount")
     val ks = keyCols(keyCol)
     val toks = docs.filter(isRef).select(
       keyCol.map(col(_).as("__k")).toSeq :+ TextAnalysis.tokens(col(textCol)).as("__a"): _*)
     withDerived((1 to order).map { n =>
       gramRows(toks, n, ks).groupBy(cols(ks ++ gramCols(n)): _*)
         .agg(count(lit(1)).as(countTables(n - 1)._2))
-    }, ks)
+    }, ks, minCount)
   }
 
-  /** The model over additive `counts`: context tables, totals and, at
-    * order 3, the KN tables re-derive from them (vocab is NOT additive
-    * across overlapping vocabularies, so a merge must re-derive, never
-    * add). A key with no bigram has `n_bigram_types` 0. */
-  private def withDerived(counts: Seq[DataFrame], ks: Seq[String]): RefLmModel = {
+  /** The model over additive `counts`: context tables, totals and, from
+    * order 3, the KN tables at `minCount` re-derive from them (vocab is
+    * NOT additive across overlapping vocabularies, so a merge must
+    * re-derive, never add). A key with no bigram has `n_bigram_types`
+    * 0. */
+  private def withDerived(counts: Seq[DataFrame], ks: Seq[String], minCount: Long): RefLmModel = {
     val ctx = counts(1).groupBy(cols(ks :+ "w1"): _*).agg(sum("cb").as("ctx"))
     val tctx = counts.lift(2).map(
       _.groupBy(cols(ks ++ Seq("w1", "w2")): _*).agg(sum("ct").as("ctx3")))
@@ -486,29 +494,44 @@ object Ranking {
       .select(cols(ks ++ Seq("n_ref_tokens", "vocab")) :+
         coalesce(col("n_bigram_types"), lit(0L)).as("n_bigram_types"): _*)
     RefLmModel(counts, ctx +: tctx.toSeq, tot,
-      if (counts.size == 3) kn3Tables(counts, ks) else Nil)
+      if (counts.size >= 3) knTables(counts, ks, counts.size, minCount) else Nil, minCount)
   }
 
-  /** The Kneser-Ney tables of [[refLmKn3Score]] over a model's counts
-    * of order ≥ 3, each one partial-aggregated groupBy over a count
-    * table (trigram/bigram rows are distinct per key, so count(*) IS
-    * the distinct-continuation count), each led by the key:
-    *  - `t3` (w1, w2, ctx3, __t3): C3 and T3 of the context;
-    *  - `cbig` (w2, w3, __cc): the continuation count c'(w2 w3);
-    *  - `c2` (w2, __c2, __t2): C2 and T2 of w2, over `cbig`;
+  /** The order-k count table as the KN tables read it: at `minCount` > 1
+    * orders 4 and 5 keep only the n-grams seen at least that often. */
+  private def prunedCounts(counts: Seq[DataFrame], k: Int, minCount: Long): DataFrame =
+    if (k >= 4 && minCount > 1) counts(k - 1).filter(col(countTables(k - 1)._2) >= lit(minCount))
+    else counts(k - 1)
+
+  /** The Kneser-Ney tables of an order-n [[refLmKnScore]] over a model's
+    * counts ([[knNames]]), each one partial-aggregated groupBy over a
+    * count table (its rows are distinct per key, so count(*) IS the
+    * distinct-continuation count), each led by the key and keyed by the
+    * n-gram positions it is grouped on:
+    *  - `t<n>` (w1..w(n-1), ctx<n>, __t<n>): context total and type count
+    *    of the top order, over its raw (pruned) counts;
+    *  - for each lower level j from n − 1 down to 2, the continuation
+    *    counts `cc<j>` (w2..w(j+1), __cc<j>) = N1+(· w2..w(j+1)) over the
+    *    (pruned) table one order up, and `c<j>` (w2..wj, __c<j>, __t<j>),
+    *    their total and type count per context;
     *  - `cu` (w2, __cu): distinct left neighbors of w2 in the bigrams.
-    * `cbig`'s not-null filter is the one its join infers, stated so
-    * that derived at score time, C2's copy of it is the same plan and
-    * its exchange runs once.
+    * Order 3 gives `t3`, `cbig` (level 2 is `cbig`/`__cc`), `c2` and
+    * `cu`. A continuation table's not-null filter is the one its join
+    * infers, stated so that derived at score time, the copy of it under
+    * `c<j>` is the same plan and its exchange runs once.
     */
-  private[graft] def kn3Tables(counts: Seq[DataFrame], ks: Seq[String]): Seq[DataFrame] = {
-    def by(df: DataFrame, g: String*) = df.groupBy(cols(ks ++ g): _*)
-    val cbig = by(counts(2).filter(col("w2").isNotNull && col("w3").isNotNull), "w2", "w3")
-      .agg(count(lit(1)).as("__cc"))
-    Seq(by(counts(2), "w1", "w2").agg(sum("ct").as("ctx3"), count(lit(1)).as("__t3")),
-      cbig,
-      by(cbig, "w2").agg(sum("__cc").as("__c2"), count(lit(1)).as("__t2")),
-      by(counts(1), "w2").agg(count(lit(1)).as("__cu")))
+  private[graft] def knTables(counts: Seq[DataFrame], ks: Seq[String], n: Int,
+      minCount: Long): Seq[DataFrame] = {
+    def by(df: DataFrame, g: Seq[String]) = df.groupBy(cols(ks ++ g): _*)
+    val levels = (n - 1 to 2 by -1).flatMap { j =>
+      val (g, cc) = ((2 to j + 1).map(i => s"w$i"), ccNames(j)._2)
+      val cont = by(prunedCounts(counts, j + 1, minCount)
+        .filter(g.map(col(_).isNotNull).reduce(_ && _)), g).agg(count(lit(1)).as(cc))
+      Seq(cont, by(cont, g.init).agg(sum(cc).as(s"__c$j"), count(lit(1)).as(s"__t$j")))
+    }
+    (by(prunedCounts(counts, n, minCount), gramCols(n).init)
+      .agg(sum(countTables(n - 1)._2).as(s"ctx$n"), count(lit(1)).as(s"__t$n")) +: levels) :+
+      by(counts(1), Seq("w2")).agg(count(lit(1)).as("__cu"))
   }
 
   /** The scorer-side key list, checked against the model: an order-n
@@ -556,7 +579,7 @@ object Ranking {
   private def logp9(p: Column): Column =
     round(log(p), 9).cast("decimal(18,9)").as("logp9")
 
-  /** The scoring shape of the order-2/3 scorers: `chain` joins the
+  /** The scoring shape of every scorer: `chain` joins the
     * model onto every n-gram OCCURRENCE of the pool ([[poolGrams]]) and
     * `p` is its probability; [[docMeans]] aggregates per doc once at
     * `__tf` = 1, so its exact decimal sums (and every score) are those
@@ -568,8 +591,8 @@ object Ranking {
     * distinct n-gram, join the log-probs back) paid a tokenize
     * checkpoint, a distinct exchange and a join-back broadcasting every
     * per-doc row, 29 jobs a pass; per occurrence the pass runs 17.
-    * Grouping per doc first, as [[refLmKn5Score]] does, cost about 1.2
-    * s more CPU, and so did a `repartition` on the id.
+    * Grouping per doc first cost about 1.2 s more CPU, and so did a
+    * `repartition` on the id.
     */
   private def scoreGrams(pool: DataFrame, idCol: String, textCol: String,
       keyCol: Option[String], n: Int, cntCol: String)(
@@ -709,140 +732,72 @@ object Ranking {
       mix)
   }
 
-  /** Score every pool document under an order-3 reference LM with
-    * INTERPOLATED KNESER-NEY smoothing (Kneser & Ney 1995; the
-    * interpolated formulation of Chen & Goodman 1998, "An Empirical
-    * Study of Smoothing Techniques for Language Modeling") — the
-    * smoothing CCNet's actual KenLM models use. Absolute discount
-    * `D = dNum/dDen` (default 3/4 — exactly representable in IEEE, so
-    * the replay is bit-portable):
+  /** Score every pool document under an order-`order` reference LM (3
+    * or 5; the model's order or above) with INTERPOLATED KNESER-NEY
+    * smoothing (Kneser & Ney 1995; the interpolated formulation of Chen
+    * & Goodman 1998, "An Empirical Study of Smoothing Techniques for
+    * Language Modeling") — the smoothing CCNet's actual KenLM models
+    * use, at its production depth 5. Absolute discount `D = dNum/dDen`
+    * (default 3/4 — exactly representable in IEEE, so the replay is
+    * bit-portable). The TOP order uses raw counts, every lower order
+    * continuation counts derived from the table ONE order up:
     *
-    *   P₃(w3|w1w2) = (max(c(w1w2w3)−D, 0) + D·T3(w1w2)·P₂(w3|w2)) / C3(w1w2)
-    *   P₂(w3|w2)   = (max(c'(w2w3)−D, 0) + D·T2(w2)·Pc(w3)) / C2(w2)
-    *   Pc(w3)      = (N1+(·w3) + 1) / (B + V)
+    *   Pₙ(wₙ|w1..wₙ₋₁) = (max(c(w1..wₙ)−D, 0) + D·Tₙ·Pₙ₋₁) / Cₙ
+    *   Pⱼ(wₙ|..)       = (max(N1+(· wₙ₋ⱼ₊₁..wₙ)−D, 0) + D·Tⱼ·Pⱼ₋₁) / Cⱼ
+    *   Pc(wₙ)          = (N1+(· wₙ) + 1) / (B + V)
     *
-    * each level backing off entirely when its context total is 0. The
-    * LOWER orders use CONTINUATION counts (KN's defining move):
-    * `c'(w2w3) = N1+(·w2w3)` = distinct w1 preceding the bigram in a
-    * trigram, `C2(w2) = Σ_x c'(w2x)`, `T2(w2)` = distinct continuations
-    * of w2, `T3(w1w2)` = distinct continuations of the context,
-    * `N1+(·w3)` = distinct left-neighbors of w3 in the bigram table,
-    * `B` = distinct bigram types, `V` = vocabulary. Every table derives
-    * from the model's additive counts ([[kn3Tables]]): an order-3 model
-    * carries them, stored with its counts; any other model derives them
-    * here. Either way the stored deploy and the bit-equal merge carry
-    * over to KN unchanged.
+    * each level backing off entirely when its context total C is 0.
+    * `N1+(· x)` counts the distinct words preceding x, `Cⱼ` sums the
+    * level's continuation counts over the context, `T` counts the
+    * context's distinct continuations, `B` = distinct bigram types,
+    * `V` = vocabulary. Every table derives from the model's additive
+    * counts ([[knTables]]) at the model's `minCount`: a model carries
+    * them at its own order, stored with its counts; at a lower order,
+    * or where none are stored, they derive here through the same
+    * function. Either way the stored deploy and the bit-equal merge
+    * carry over to KN unchanged. The chain is one join per table, level
+    * by level, each table re-keyed onto the positions of the scored
+    * n-gram its level conditions on.
     *
     * Keyed: a key with no totals row is absent ([[withScalars]]). Scale
     * shape and determinism: [[scoreGrams]]. Returns (id, [keyCol],
-    * n_trigrams, logprob) for every pool doc with ≥ 3 tokens.
+    * n_trigrams or n_5grams, logprob) for every pool doc with at least
+    * `order` tokens.
     */
-  def refLmKn3Score(pool: DataFrame, idCol: String, textCol: String,
-      model: RefLmModel, dNum: Int = 3, dDen: Int = 4,
+  def refLmKnScore(pool: DataFrame, idCol: String, textCol: String,
+      model: RefLmModel, order: Int, dNum: Int = 3, dDen: Int = 4,
       keyCol: Option[String] = None): DataFrame = {
+    require(order == 3 || order == 5, s"a Kneser-Ney scorer has order 3 or 5, got $order")
     require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
-    val ks = keysOf(model, keyCol, 3)
+    val ks = keysOf(model, keyCol, order)
     val d = dNum.toDouble / dDen
-    val Seq(t3, cbig, c2, cu) = model.kn3
-    val p2 = knLevel(d, "__cc", "__c2", "__t2", knBottom)
-    val p3 = knLevel(d, "ct", "ctx3", "__t3", p2)
-    scoreGrams(pool, idCol, textCol, keyCol, 3, "n_trigrams")(
-      triples => withScalars(triples
-        .join(model.trigrams, ks ++ Seq("w1", "w2", "w3"), "left")
-        .join(t3, ks ++ Seq("w1", "w2"), "left")
-        // the continuation bigram of (w1,w2,w3) is keyed (w2,w3) already
-        .join(cbig, ks ++ Seq("w2", "w3"), "left")
-        .join(c2, ks :+ "w2", "left")
-        .join(rekey(cu, ks, col("w2").as("w3"), col("__cu")), ks :+ "w3", "left"),
+    val top +: levelTables :+ cu =
+      if (order == model.order && model.knTables.nonEmpty) model.knTables
+      else knTables(model.counts, ks, order, model.minCount)
+    // a table grouped on w2.. shifts `by` positions right in the n-gram
+    def at(df: DataFrame, by: Int) = if (by == 0) df else rekey(df, ks,
+      df.columns.toSeq.drop(ks.size).map(c =>
+        if (c.matches("w\\d+")) col(c).as(s"w${c.tail.toInt + by}") else col(c)): _*)
+    // level j conditions on the last j positions, w(order-j+1)..w(order)
+    val levels = levelTables.grouped(2).toSeq.zip(order - 1 to 2 by -1)
+    val p = (2 until order).foldLeft(knBottom)((lower, j) =>
+      knLevel(d, ccNames(j)._2, s"__c$j", s"__t$j", lower))
+    scoreGrams(pool, idCol, textCol, keyCol, order, gramCountCols(order))(
+      grams => withScalars(levels.foldLeft(grams
+          .join(prunedCounts(model.counts, order, model.minCount), ks ++ gramCols(order), "left")
+          .join(top, ks ++ gramCols(order).init, "left")) { case (df, (Seq(cont, ctx), j)) =>
+          val g = (order - j + 1 to order).map(i => s"w$i")
+          df.join(at(cont, order - j - 1), ks ++ g, "left")
+            .join(at(ctx, order - j - 1), ks ++ g.init, "left")
+        }.join(at(cu, order - 2), ks :+ s"w$order", "left"),
         model, ks),
-      p3)
-  }
-
-  /** Score every pool document under 5-gram INTERPOLATED KNESER-NEY —
-    * [[refLmKn3Score]] at CCNet's production depth. The TOP order uses
-    * raw counts, every lower order continuation counts N1+(·w…) derived
-    * from the raw table ONE order up:
-    *
-    *   P₅ = (max(c(w1..w5)−D,0) + D·T5·P₄) / C5   (raw 5-gram counts)
-    *   P₄ = (max(N1+(·w2..w5)−D,0) + D·T4·P₃) / C4  (from 5-grams)
-    *   P₃ = (max(N1+(·w3w4w5)−D,0) + D·T3·P₂) / C3  (from 4-grams)
-    *   P₂ = (max(N1+(·w4w5)−D,0) + D·T2·Pc) / C2    (from trigrams)
-    *   Pc = (N1+(·w5) + 1) / (B + V)                (from bigrams)
-    *
-    * `minCount5`/`minCount4` (default 1 = no pruning) drop raw 5-/4-
-    * gram rows BELOW the threshold before any derivation — KenLM's
-    * count pruning as a score-time view: every derived table
-    * re-derives from the pruned table, so the pruned distribution stays
-    * normalized. The stored artifact is untouched.
-    *
-    * Scale shape: the model-join chain runs over the per-doc 5-tuple
-    * rows (one groupBy per doc first; its exchange is what spreads the
-    * chain across tasks). The order-2/3 scorers join per occurrence
-    * instead, ungrouped ([[scoreGrams]], with its measurement); at
-    * order 5 a per-doc 5-tuple is nearly always one occurrence (sf0.1:
-    * 250,704 per-doc rows vs 250,282 distinct 5-tuples). Key contract
-    * as [[refLmKn3Score]]. Returns (id, [keyCol], n_5grams,
-    * logprob) for every pool doc with ≥ 5 tokens.
-    */
-  def refLmKn5Score(pool: DataFrame, idCol: String, textCol: String,
-      model: RefLmModel, dNum: Int = 3, dDen: Int = 4,
-      minCount5: Long = 1, minCount4: Long = 1,
-      keyCol: Option[String] = None): DataFrame = {
-    require(dNum > 0 && dNum < dDen, s"need 0 < D < 1, got $dNum/$dDen")
-    require(minCount5 >= 1 && minCount4 >= 1,
-      s"count-pruning thresholds must be >= 1, got $minCount5/$minCount4")
-    val ks = keysOf(model, keyCol, 5)
-    val d = dNum.toDouble / dDen
-    def by(df: DataFrame, g: String*) = df.groupBy(cols(ks ++ g): _*)
-    // pruned raw views — every derivation below reads these
-    val five = model.fivegrams.filter(col("c5") >= lit(minCount5))
-    val four = model.fourgrams.filter(col("c4") >= lit(minCount4))
-    // top order: context totals + type counts over pruned 5-grams
-    val ce5 = by(five, "w1", "w2", "w3", "w4")
-      .agg(sum("c5").as("__c5x"), count(lit(1)).as("__t5"))
-    // order 4: continuation counts from the 5-gram table
-    val cc4 = by(five, "w2", "w3", "w4", "w5").agg(count(lit(1)).as("__cc4"))
-    val c4 = by(cc4, "w2", "w3", "w4")
-      .agg(sum("__cc4").as("__c4x"), count(lit(1)).as("__t4"))
-    // order 3: continuation counts from the 4-gram table, keyed as the
-    // (w3,w4,w5) trigram of the scored 5-tuple
-    val cc3 = rekey(by(four, "w2", "w3", "w4").agg(count(lit(1)).as("__cc3")), ks,
-      col("w2").as("w3"), col("w3").as("w4"), col("w4").as("w5"), col("__cc3"))
-    val c3 = by(cc3, "w3", "w4")
-      .agg(sum("__cc3").as("__c3x"), count(lit(1)).as("__t3"))
-    // order 2: continuation counts from the trigram table, keyed (w4,w5)
-    val cc2 = rekey(by(model.trigrams, "w2", "w3").agg(count(lit(1)).as("__cc2")), ks,
-      col("w2").as("w4"), col("w3").as("w5"), col("__cc2"))
-    val c2 = by(cc2, "w4").agg(sum("__cc2").as("__c2x"), count(lit(1)).as("__t2"))
-    // bottom: left-neighbor counts from the bigram table + B + V
-    val cu = by(model.bigrams, "w2").agg(count(lit(1)).as("__cu"))
-    val p2 = knLevel(d, "__cc2", "__c2x", "__t2", knBottom)
-    val p3 = knLevel(d, "__cc3", "__c3x", "__t3", p2)
-    val p4 = knLevel(d, "__cc4", "__c4x", "__t4", p3)
-    val p5 = knLevel(d, "c5", "__c5x", "__t5", p4)
-    // the per-doc 5-tuple frame: the groupBy's exchange is also what
-    // spreads the join chain across tasks (the raw explode runs inside
-    // the scan's split count)
-    val rows = withScalars(poolGrams(pool, idCol, textCol, keyCol, 5)
-      .groupBy(cols(("__id" +: ks) ++ gramCols(5)): _*).agg(count(lit(1)).as("__tf"))
-      .join(five, ks ++ gramCols(5), "left")
-      .join(ce5, ks ++ Seq("w1", "w2", "w3", "w4"), "left")
-      .join(cc4, ks ++ Seq("w2", "w3", "w4", "w5"), "left")
-      .join(c4, ks ++ Seq("w2", "w3", "w4"), "left")
-      .join(cc3, ks ++ Seq("w3", "w4", "w5"), "left")
-      .join(c3, ks ++ Seq("w3", "w4"), "left")
-      .join(cc2, ks ++ Seq("w4", "w5"), "left")
-      .join(c2, ks :+ "w4", "left")
-      .join(rekey(cu, ks, col("w2").as("w5"), col("__cu")), ks :+ "w5", "left"),
-      model, ks)
-    docMeans(rows.select(cols("__id" +: ks) ++ Seq(col("__tf"), logp9(p5)): _*),
-      idCol, keyCol, "n_5grams")
+      knLevel(d, countTables(order - 1)._2, s"ctx$order", s"__t$order", p))
   }
 
   /** The per-doc count column of a scored frame — `n_bigrams`,
     * `n_trigrams` or `n_5grams` by the scorer's order. */
   def countCol(scored: DataFrame): String = {
-    val cs = scored.columns.filter(Set("n_bigrams", "n_trigrams", "n_5grams"))
+    val cs = scored.columns.filter(gramCountCols.values.toSet)
     require(cs.length == 1,
       s"a scored frame carries exactly one n-gram count column, got [${cs.mkString(", ")}]")
     cs.head
@@ -1092,22 +1047,23 @@ object Ranking {
     * stored-gate shape applied to the reference LM): the scoring fleet
     * reads counts, never retrains. Order 2 writes `unigram`, `bigram`,
     * `ctx` and `totals`; order 3 adds `trigram`, `tctx` and the KN
-    * tables `t3`, `cbig`, `c2` and `cu` ([[kn3Tables]]); order 5 adds
-    * `fourgram` and `fivegram` to order 2's and order 3's counts and
-    * contexts. The independent writes overlap through
-    * [[writeTablesParallel]].
+    * tables `t3`, `cbig`, `c2` and `cu`; order 5 adds `fourgram` and
+    * `fivegram`, and its KN tables are those of order 5 ([[knNames]]).
+    * The totals carry the model's `minCount` as `kn_min_count`. The
+    * independent writes overlap through [[writeTablesParallel]].
     */
   def writeRefLm(model: RefLmModel, path: String): Unit =
     writeTablesParallel((countTables.map(_._1).zip(model.counts) ++
-      Seq("ctx", "tctx").zip(model.contextTables) ++ kn3Names.zip(model.knTables) :+
-      ("totals" -> model.totals))
+      Seq("ctx", "tctx").zip(model.contextTables) ++ knNames(model.order).zip(model.knTables) :+
+      ("totals" -> model.totals.withColumn("kn_min_count", lit(model.minCount))))
       .map { case (name, df) => (df, s"$path/$name", name == "totals") })
 
   /** Read back a [[writeRefLm]] artifact of any order and key shape:
     * the stored order is the run of count tables present, and only
-    * those tables (plus the contexts they need and, at order 3, the KN
-    * tables `t3`, `cbig`, `c2` and `cu` when all four are there) are
-    * read, each schema from its footer ([[Readers.parquet]]). Fails
+    * those tables (plus the contexts they need and the order's KN
+    * tables when all of them are there) are read, each schema from its
+    * footer ([[Readers.parquet]]), with the `minCount` the totals
+    * record (1 where they record none). Fails
     * fast on a totals table that signals an empty or partially-written
     * model, which would otherwise score every document NULL: unkeyed,
     * exactly one non-null row with a positive token count; keyed, a
@@ -1131,15 +1087,19 @@ object Ranking {
     def read(name: String) = Readers.parquet(spark, s"$path/$name")
     val counts = countTables.map(_._1).takeWhile(has).map(read)
     val k = if (keyed) 1 else 0
-    val (rows, schema) = if (tot.columns.contains("n_bigram_types")) (stored, tot.schema) else {
-      val nb = counts(1).groupBy(cols(tot.columns.take(k)): _*).count().collect()
+    val minCount = if (tot.columns.contains("kn_min_count")) stored.head.getAs[Long]("kn_min_count") else 1L
+    val names = tot.columns.toSeq.filterNot(_ == "kn_min_count")
+    val scalars = stored.map(r => Row.fromSeq(names.map(r.getAs[Any])))
+    val (rows, schema) = if (names.contains("n_bigram_types")) (scalars, StructType(names.map(tot.schema(_)))) else {
+      val nb = counts(1).groupBy(cols(names.take(k)): _*).count().collect()
         .map(r => r.toSeq.take(k) -> r.getLong(k)).toMap
-      (stored.map(r => Row.fromSeq(r.toSeq :+ nb.getOrElse(r.toSeq.take(k), 0L))),
-        tot.schema.add("n_bigram_types", LongType, nullable = false))
+      (scalars.map(r => Row.fromSeq(r.toSeq :+ nb.getOrElse(r.toSeq.take(k), 0L))),
+        StructType(names.map(tot.schema(_))).add("n_bigram_types", LongType, nullable = false))
     }
+    val kn = knNames(counts.size)
     RefLmModel(counts, Seq("ctx", "tctx").take(counts.size - 1).map(read),
       spark.createDataFrame(rows.asJava, schema),
-      if (counts.size == 3 && kn3Names.forall(has)) kn3Names.map(read) else Nil)
+      if (counts.size >= 3 && kn.forall(has)) kn.map(read) else Nil, minCount)
   }
 
   /** The merged model of [[mergeIntoStoredRefLmReturning]] plus the
@@ -1213,14 +1173,14 @@ object Ranking {
     val d = refLmTrain(delta, textCol, isRef, stored.order, keyCol)
     // every merged count table persists: each feeds its own staged
     // write plus derived ones (unigram → totals; bigram → ctx, totals
-    // and cu; trigram → tctx, t3, cbig and c2), and without the pin
-    // every write re-runs the delta tokenization
+    // and cu; trigram → tctx and the KN tables above it), and without
+    // the pin every write re-runs the delta tokenization
     val counts = stored.counts.zip(d.counts).zipWithIndex.map { case ((s, t), i) =>
       val c = countTables(i)._2
       s.unionByName(t).groupBy(cols(ks ++ gramCols(i + 1)): _*).agg(sum(c).as(c))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    val merged = withDerived(counts, ks)
+    val merged = withDerived(counts, ks, stored.minCount)
     val staged = new Path(live.getParent, live.getName + "__merging")
     if (fs.exists(staged)) fs.delete(staged, true)
     try {
@@ -1554,7 +1514,7 @@ object Ranking {
        |FROM scored CROSS JOIN cuts
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** DuckDB SQL twin of order-3 [[refLmTrain]] → [[refLmKn3Score]] →
+  /** DuckDB SQL twin of order-3 [[refLmTrain]] → [[refLmKnScore]] →
     * [[refLmPerplexityBuckets]] — the interpolated Kneser-Ney chain
     * replayed exactly: same continuation-count derivations from the
     * same base count tables, same discount literal (an exact IEEE
@@ -1665,7 +1625,7 @@ object Ranking {
        |GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  /** DuckDB SQL twin of order-5 [[refLmTrain]] → [[refLmKn5Score]] →
+  /** DuckDB SQL twin of order-5 [[refLmTrain]] → [[refLmKnScore]] →
     * [[refLmPerplexityBuckets]]: the full 5-gram interpolated-KN
     * chain — raw counts at the top, continuation counts N1+ derived
     * one order up at every lower level, add-1 bottom — with the
@@ -1934,7 +1894,7 @@ object Ranking {
        |JOIN vmid ON scored.k = vmid.k
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** DuckDB SQL twin of keyed order-3 [[refLmTrain]] → [[refLmKn3Score]] →
+  /** DuckDB SQL twin of keyed order-3 [[refLmTrain]] → [[refLmKnScore]] →
     * [[refLmPerplexityBuckets]]: the keyed-bucket chain under
     * interpolated Kneser-Ney — [[refLmKn3BucketsSql]]'s discount
     * arithmetic with the key riding every count AND continuation
@@ -2073,7 +2033,7 @@ object Ranking {
        |  GROUP BY 1, 2)""".stripMargin
   }
 
-  /** DuckDB SQL twin of keyed order-5 [[refLmTrain]] → [[refLmKn5Score]]
+  /** DuckDB SQL twin of keyed order-5 [[refLmTrain]] → [[refLmKnScore]]
     * → [[refLmPerplexityBuckets]]: the 5-gram interpolated-KN
     * chain with the key riding every table ([[refLmKn5BucketsSql]]'s
     * arithmetic, including the score-time count-pruning views) and

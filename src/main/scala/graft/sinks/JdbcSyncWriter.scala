@@ -19,11 +19,11 @@ import graft.config.DbConfig
   * (`dbsync.go:830-891`), chunked IN-list DELETE (`dbsync.go:895-913`)
   * — then committed once.
   *
-  * Scale path: when a diff is NOT small (bulk backfill), use
-  * [[appendDistributed]] for the insert set — Spark's parallel JDBC
-  * writer with batched statements — and stage updates into a temp
-  * table merged by the database (semantics-relaxing: per-partition
-  * commits). The single-tx path is the parity default.
+  * Scale path: an overwrite whose file is too large to collect
+  * deletes inside the transaction, commits, then loads the file with
+  * [[appendDistributed]] — Spark's parallel JDBC writer with batched
+  * statements (semantics-relaxing: per-partition commits). Diffs take
+  * the single-transaction path only, the parity default.
   */
 object JdbcSyncWriter {
 
@@ -36,17 +36,6 @@ object JdbcSyncWriter {
     val c = DriverManager.getConnection(db.url, db.properties)
     c.setAutoCommit(false)
     c
-  }
-
-  /** SQL identifiers interpolated into DDL/DML built here must be plain
-    * (letters, digits, underscore, optional schema qualifier): they come
-    * from config, not user data, and quoting would change case semantics
-    * across Derby/MySQL/Postgres. Reject anything else.
-    */
-  private[sinks] def requirePlainIdentifier(name: String): String = {
-    require(name.matches("[A-Za-z_][A-Za-z0-9_]*(\\.[A-Za-z_][A-Za-z0-9_]*)?"),
-      s"unsafe SQL identifier: '$name'")
-    name
   }
 
   /** Rolls back `conn`, swallowing a failure of the rollback itself:
@@ -103,13 +92,6 @@ object JdbcSyncWriter {
       } finally rs.close()
     }.find(_.nonEmpty).getOrElse(Nil)
   }
-
-  /** Table existence via JDBC metadata ([[tableMetadata]]) — no
-    * failed-statement probing, which on Postgres would abort the open
-    * transaction.
-    */
-  def tableExists(conn: Connection, table: String): Boolean =
-    tableMetadata(conn, table)(_.getTables(null, _, _, Array("TABLE")))(_ => ()).nonEmpty
 
   /** Live table columns in ordinal order via JDBC metadata
     * ([[tableMetadata]]; reference `getTableColumns`,
@@ -246,65 +228,4 @@ object JdbcSyncWriter {
       .mode("append")
       .option("batchsize", batchSize)
       .jdbc(db.url, table, db.properties)
-
-  /** Scale-out upsert: stage the upsert set through Spark's parallel
-    * JDBC writer, then run ONE set-based MERGE inside the database.
-    *
-    * This is the path for diffs too large to collect to the driver:
-    * executors load the staging table concurrently (per-partition
-    * commits — the staging table is scratch, so that is harmless), and
-    * the visible table changes in a single atomic MERGE statement.
-    * Works on any MERGE-capable target (Derby, MySQL 8 via its upsert
-    * dialects, Postgres 15+, ...).
-    *
-    * Returns the number of rows merged (staged row count).
-    */
-  def mergeViaStaging(
-      df: DataFrame,
-      db: DbConfig,
-      table: String,
-      pk: String,
-      cols: Seq[String],
-      batchSize: Int = BatchSize): Long = {
-    requirePlainIdentifier(table)
-    (pk +: cols).foreach(requirePlainIdentifier)
-    val staging = s"${table}_graft_stage"
-    val conn = connect(db)
-    try {
-      val st = conn.createStatement()
-      // metadata probe, not a speculative DROP: a failed statement aborts
-      // the open transaction on Postgres (autocommit is off)
-      if (tableExists(conn, staging)) st.executeUpdate(s"DROP TABLE $staging")
-      st.executeUpdate(
-        s"CREATE TABLE $staging AS SELECT ${cols.mkString(", ")} FROM $table WITH NO DATA")
-      conn.commit()
-      st.close()
-    } finally conn.close()
-
-    val staged = df.select(cols.map(org.apache.spark.sql.functions.col): _*)
-    staged.write.mode("append").option("batchsize", batchSize)
-      .jdbc(db.url, staging, db.properties)
-
-    val conn2 = connect(db)
-    try {
-      val nonPk = cols.filterNot(_ == pk)
-      val setList = nonPk.map(c => s"t.$c = s.$c").mkString(", ")
-      val insertCols = cols.mkString(", ")
-      val insertVals = cols.map(c => s"s.$c").mkString(", ")
-      val st = conn2.createStatement()
-      st.executeUpdate(
-        s"""MERGE INTO $table t USING $staging s ON t.$pk = s.$pk
-           |WHEN MATCHED THEN UPDATE SET $setList
-           |WHEN NOT MATCHED THEN INSERT ($insertCols) VALUES ($insertVals)""".stripMargin)
-      val rs = st.executeQuery(s"SELECT COUNT(*) FROM $staging")
-      rs.next()
-      val n = rs.getLong(1)
-      st.executeUpdate(s"DROP TABLE $staging")
-      conn2.commit()
-      st.close()
-      n
-    } catch {
-      case e: Throwable => rollbackQuietly(conn2); throw e
-    } finally closeQuietly(conn2)
-  }
 }

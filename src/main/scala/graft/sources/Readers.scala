@@ -38,10 +38,10 @@ import org.apache.spark.sql.types._
   *   - JSON: whole-file array of objects (or one object), parsed once:
   *     the first record's keys are read on the driver, and each value
   *     keeps its own JSON type as a VARIANT cell (`loader.go:163`).
-  *     Invalid JSON and a record missing a required key
-  *     (`loader.go:185-193`) are observed as the data is read, and fail
-  *     the caller after its action ([[requireJson]]). This read runs no
-  *     Spark job either.
+  *     Invalid JSON (text after the value too) and a record missing a
+  *     required key (`loader.go:185-193`) are observed as the data is
+  *     read, and fail the caller after its action ([[requireJson]]).
+  *     This read runs no Spark job either.
   *   - RFC3339 (`loader.go:28-43`): converts per *cell* inside the cast
   *     to the DB's types ([[asDbType]]), as the reference's
   *     `convertValue` does. No reader promotes a column.
@@ -254,13 +254,16 @@ object Readers {
     * otherwise, whose every cast is NULL.
     *
     * Each file is parsed once, whole, by the action that reads the
-    * frame, which also observes the first failure in the reference's
-    * order — invalid JSON, then the first record (records outer,
-    * required keys inner) missing a required key, where `"k": null` is
-    * not missing (`loader.go:185-193`). [[requireJson]] throws it after
-    * that action. The read itself runs no Spark job: with no `columns`,
-    * the first record's keys are streamed on the driver by the Jackson
-    * parser Spark ships, up to the close of that record.
+    * frame (its tokens scanned once more for text after the value),
+    * which also observes the first failure in the reference's
+    * order — invalid JSON (text after the top-level value included, as
+    * `json.Unmarshal` rejects it), then the first record (records
+    * outer, required keys inner) missing a required key, where
+    * `"k": null` is not missing but a `null` record, the reference's nil
+    * map, misses every key (`loader.go:185-193`). [[requireJson]] throws
+    * it after that action. The read itself runs no Spark job: with no
+    * `columns`, the first record's keys are streamed on the driver by
+    * the Jackson parser Spark ships, up to the close of that record.
     */
   def json(spark: SparkSession, path: String, columns: Seq[String] = Nil): DataFrame = {
     val keys = if (columns.nonEmpty) columns else jsonKeys(spark, path)
@@ -268,7 +271,8 @@ object Readers {
     val asArray = from_json(text, ArrayType(MapType(StringType, VariantType)))
     val asObject = from_json(text, MapType(StringType, VariantType))
     val (i, rec) = (col("i"), col("rec"))
-    val missing = coalesce(keys.map(k => when(!map_contains_key(rec, lit(k)), lit(k))) :+ lit(null): _*)
+    val missing = coalesce(keys.map(k =>
+      when(rec.isNull || !map_contains_key(rec, lit(k)), lit(k))) :+ lit(null): _*)
     val problem = when(col("bad"), lit(s"invalid JSON in $path"))
       .otherwise(concat(lit(s"JSON file '$path', record "), i.cast(StringType),
         lit(": missing required key '"), missing, lit("'")))
@@ -276,8 +280,9 @@ object Readers {
     // posexplode_outer keeps one row (i NULL) for an invalid or empty
     // file, so the observation sees the invalid one; the filter drops it
     spark.read.option("wholetext", "true").text(path)
-      .select(coalesce(asArray, when(asObject.isNotNull, array(asObject))).as("recs"))
-      .select(col("recs").isNull.as("bad"), col("recs"))
+      .select(coalesce(asArray, when(asObject.isNotNull, array(asObject))).as("recs"),
+        trailingText(jsonOptions(spark))(text).as("trailing"))
+      .select((col("recs").isNull || col("trailing")).as("bad"), col("recs"))
       .select(col("bad"), posexplode_outer(col("recs")).as(Seq("i", "rec")))
       .observe(s"$JsonCheck${observations.getAndIncrement()}",
         min(when(problem.isNotNull, struct(coalesce(i, lit(-1)), problem))).as("problem"))
@@ -304,6 +309,21 @@ object Readers {
     }
   }
 
+  /** The options `from_json` parses with, so the driver's and the
+    * executors' Jackson parsers accept the same text. */
+  private def jsonOptions(spark: SparkSession): JSONOptions =
+    new JSONOptions(Map.empty[String, String], spark.conf.get("spark.sql.session.timeZone"))
+
+  /** Whether a file's text holds anything after its first JSON value, or
+    * fails to parse: `from_json` stops at the end of that value. Runs in
+    * the projection of the read, so it adds no job. */
+  private def trailingText(options: JSONOptions) = udf { (s: String) =>
+    Using.resource(options.buildJsonFactory().createParser(s)) { p =>
+      try { p.nextToken(); p.skipChildren(); p.nextToken() != null }
+      catch { case _: JsonProcessingException => true }
+    }
+  }
+
   /** The sorted keys of the first record of the JSON at `path` (the
     * first of its files by path), streamed on the driver up to the close
     * of that record; no file or no record gives none. Where the first
@@ -313,8 +333,7 @@ object Readers {
     */
   private def jsonKeys(spark: SparkSession, path: String): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val factory = new JSONOptions(Map.empty[String, String],
-      spark.conf.get("spark.sql.session.timeZone")).buildJsonFactory()
+    val factory = jsonOptions(spark).buildJsonFactory()
     def invalid = new IllegalArgumentException(s"invalid JSON in $path")
     dataFiles(spark, path).sortBy(_.getPath.toString).headOption.fold(Seq.empty[String]) { f =>
       Using.resource(CodecStreams.createInputStreamWithCloseResource(conf, f.getPath)) { in =>

@@ -21,8 +21,8 @@ import graft.operators.Ranking
   *
   * One gate serves every order and smoothing, keyed or not: the caller
   * passes the scorer the cutoffs were measured under as a function of
-  * (batch, model), e.g. `(b, m) => Ranking.refLmKn3Score(b, "doc_id",
-  * "text", m, keyCol = Some("lang"))`. With `keyCol` every doc gates at
+  * (batch, model), e.g. `(b, m) => Ranking.refLmKnScore(b, "doc_id",
+  * "text", m, 3, keyCol = Some("lang"))`. With `keyCol` every doc gates at
   * ITS key's model and cutoff row (one model per language).
   *
   * Why `foreachBatch` and not a streaming aggregation: scoring needs

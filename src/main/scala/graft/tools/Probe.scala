@@ -29,16 +29,11 @@ object Probe {
           graft.operators.Dedup.minhashSignatures(
             graft.Tables.load(s, dir, "documents"), "doc_id", "text", 9),
           "doc_id", 9, 3)),
-      // q198's scoring frame: q198's own stored order-3 model, the
-      // stamp observed on the pool. q198 returns a local relation, so
-      // this is where its scoring plan shows
-      "x_kn3_scored" -> ((s, dir) => {
-        val lm = graft.SparkEntry.storedLm(s, dir, graft.SparkEntry.Lm3)
-        graft.operators.Ranking.refLmKn3Score(
-          graft.core.SnapshotStamp.observeFresh(
-            graft.Tables.load(s, dir, "documents"), "doc_id", lm.stamp)._1,
-          "doc_id", "text", graft.operators.Ranking.readRefLm(s, lm.table("model")))
-      })
+      // q198's and q202's scoring frames: the query's own stored model,
+      // the stamp observed on the pool. Both queries return a local
+      // relation, so this is where their scoring plans show
+      "x_kn3_scored" -> knScored(graft.SparkEntry.Lm3),
+      "x_kn5_scored" -> knScored(graft.SparkEntry.Lm5)
     )
     // `all` expands to every SparkEntry query (live per-query output —
     // unlike Bench, which prints one line at the very end)
@@ -73,5 +68,14 @@ object Probe {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
     spark.stop()
+  }
+
+  private def knScored(spec: graft.SparkEntry.RefLmSpec)(
+      s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+    val lm = graft.SparkEntry.storedLm(s, dir, spec)
+    graft.operators.Ranking.refLmKnScore(
+      graft.core.SnapshotStamp.observeFresh(
+        graft.Tables.load(s, dir, "documents"), "doc_id", lm.stamp)._1,
+      "doc_id", "text", graft.operators.Ranking.readRefLm(s, lm.table("model")), spec.order)
   }
 }

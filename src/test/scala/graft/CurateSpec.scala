@@ -418,8 +418,8 @@ class CurateSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang")
     val m = Ranking.refLmTrain(
       ref, "text", lit(true), 3, Some("lang"))
-    val scored = Ranking.refLmKn3Score(
-      corpus, "doc_id", "text", m, keyCol = Some("lang"))
+    val scored = Ranking.refLmKnScore(
+      corpus, "doc_id", "text", m, 3, keyCol = Some("lang"))
     // stored cutoffs measured under the KN scorer (the q201
     // discipline), with L3's row withheld — a half-deployed fleet
     val cuts = Ranking.refLmCutoffs(scored, Some("lang"))

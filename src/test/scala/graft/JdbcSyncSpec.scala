@@ -52,26 +52,6 @@ class JdbcSyncSpec extends AnyFunSuite {
   private def dropIfExists(table: String): Unit =
     try exec(s"DROP TABLE $table") catch { case _: Exception => () }
 
-  test("tableExists: metadata probe with LIKE-wildcard escaping") {
-    dropIfExists("probe_tbl")
-    dropIfExists("probeXtbl")
-    exec("CREATE TABLE probeXtbl (id INT)")
-    val c = JdbcSyncWriter.connect(db)
-    try {
-      // '_' must be escaped: probe_tbl would LIKE-match probeXtbl otherwise
-      assert(!JdbcSyncWriter.tableExists(c, "probe_tbl"))
-      assert(JdbcSyncWriter.tableExists(c, "probeXtbl"))
-      exec("CREATE TABLE probe_tbl (id INT)")
-      assert(JdbcSyncWriter.tableExists(c, "probe_tbl"))
-    } finally {
-      // Derby counts the metadata reads as an open transaction
-      try c.rollback() catch { case _: Exception => () }
-      c.close()
-    }
-    dropIfExists("probe_tbl")
-    dropIfExists("probeXtbl")
-  }
-
   test("tableColumns: only the current schema's table, '_' matched literally") {
     dropIfExists("other.col_t")
     dropIfExists("col_t")
@@ -523,41 +503,6 @@ class JdbcSyncSpec extends AnyFunSuite {
     assert(query("SELECT COUNT(*) FROM empty_noop").head.head == 1)
   }
 
-  test("scale-out upsert: staged MERGE inserts and updates atomically") {
-    import spark.implicits._
-    dropIfExists("merge_t")
-    exec(
-      "CREATE TABLE merge_t (id INT PRIMARY KEY, name VARCHAR(50), score DOUBLE)",
-      "INSERT INTO merge_t VALUES (1, 'keep', 1.0), (2, 'old', 2.0)")
-    val upserts = Seq((2, "new", 2.5), (3, "add", 3.0)).toDF("id", "name", "score")
-    val n = graft.sinks.JdbcSyncWriter.mergeViaStaging(
-      upserts, db, "merge_t", "id", Seq("id", "name", "score"))
-    assert(n == 2)
-    assert(query("SELECT id, name, score FROM merge_t ORDER BY id") ==
-      Seq(Seq(1, "keep", 1.0), Seq(2, "new", 2.5), Seq(3, "add", 3.0)))
-    // staging table is cleaned up
-    intercept[Exception](query("SELECT COUNT(*) FROM merge_t_graft_stage"))
-  }
-
-  test("a failed staged MERGE reports its own error when the rollback fails too") {
-    import spark.implicits._
-    dropIfExists("mrb_t_graft_stage")
-    dropIfExists("mrb_t")
-    exec(
-      "CREATE TABLE mrb_t (id INT PRIMARY KEY, score DOUBLE CHECK (score >= 0))",
-      "INSERT INTO mrb_t VALUES (1, 1.0)")
-    // the staging table takes no CHECK, so the MERGE is what fails
-    val upserts = Seq((1, -5.0), (2, 3.0)).toDF("id", "score")
-    try {
-      val e = intercept[java.sql.SQLException](JdbcSyncWriter.mergeViaStaging(
-        upserts, DbConfig(RollbackFailingDriver.url(db.url)), "mrb_t", "id", Seq("id", "score")))
-      assert(e.getMessage.toLowerCase.contains("check constraint"), e.getMessage)
-    } finally RollbackFailingDriver.release()
-    assert(query("SELECT id, score FROM mrb_t") == Seq(Seq(1, 1.0)))
-    dropIfExists("mrb_t_graft_stage")
-    dropIfExists("mrb_t")
-  }
-
   test("custom sql function array_dot registers and evaluates") {
     graft.functions.GraftFunctions.register(spark)
     val got = spark.sql(
@@ -905,17 +850,14 @@ class JdbcSyncSpec extends AnyFunSuite {
     f.toString
   }
 
-  test("invalid JSON or a missing key fails the sync before any write, in diff and both overwrite paths") {
-    // the checks are observed by the table's one full action: they must
-    // see every record, also where the overwrite path reads a snapshot
+  /** Syncs each JSON file content in diff and both overwrite paths and
+    * asserts it fails with its message before any write. The checks are
+    * observed by the table's one full action: they must see every
+    * record, also where the overwrite path reads a snapshot. */
+  private def assertJsonFailsBeforeWrite(inputs: Seq[(String, String => String)]): Unit = {
     dropIfExists("jbad_t")
     exec("CREATE TABLE jbad_t (id INT PRIMARY KEY, name VARCHAR(20))",
       "INSERT INTO jbad_t VALUES (9, 'keep')")
-    val inputs: Seq[(String, String => String)] = Seq(
-      """[{"id": 1, "name": "a"}, {"id": 2, "name": "b"""" -> (p => s"invalid JSON in $p"),
-      "[1, 2]" -> (p => s"invalid JSON in $p"),
-      """[{"id": 1, "name": "a"}, {"id": 2, "name": "b"}, {"id": 3}]""" ->
-        (p => s"JSON file '$p', record 2: missing required key 'name'"))
     for ((content, message) <- inputs; (mode, thr) <- Seq(("diff", 500000L),
          ("overwrite", 500000L), ("overwrite", 1L))) {
       val f = jsonFile(content)
@@ -927,6 +869,25 @@ class JdbcSyncSpec extends AnyFunSuite {
       assert(query("SELECT id, name FROM jbad_t") == Seq(Seq(9, "keep")), s"$mode $thr $content")
       assert(spark.sharedState.cacheManager.isEmpty, s"$mode $thr $content")
     }
+  }
+
+  test("invalid JSON or a missing key fails the sync before any write, in diff and both overwrite paths") {
+    assertJsonFailsBeforeWrite(Seq(
+      """[{"id": 1, "name": "a"}, {"id": 2, "name": "b"""" -> (p => s"invalid JSON in $p"),
+      "[1, 2]" -> (p => s"invalid JSON in $p"),
+      """[{"id": 1, "name": "a"}, {"id": 2, "name": "b"}, {"id": 3}]""" ->
+        (p => s"JSON file '$p', record 2: missing required key 'name'")))
+  }
+
+  test("a null record or text after the JSON value fails the sync before any write") {
+    // the reference unmarshals a null element to a nil map, which lacks
+    // the first required key, and rejects any text after the value
+    assertJsonFailsBeforeWrite(Seq(
+      """[{"id": 1, "name": "a"}, null]""" ->
+        (p => s"JSON file '$p', record 1: missing required key 'id'"),
+      """[{"id": 1, "name": "a"}] x""" -> (p => s"invalid JSON in $p"),
+      """[{"id": 1, "name": "a"}] [{"id": 2, "name": "b"}]""" -> (p => s"invalid JSON in $p"),
+      """{"id": 1, "name": "a"} }""" -> (p => s"invalid JSON in $p")))
   }
 
   test("a JSON sync runs no more Spark jobs than its CSV twin, in diff and overwrite mode") {

@@ -10,7 +10,7 @@ import graft.operators.Ranking
 import graft.streaming.StreamingPerplexity
 
 /** Job budgets of the stored-LM path, counted under a job group: whole
-  * q198 and q200 passes over a small generated corpus, one streaming
+  * q198, q200, q202, q203 and q205 passes over a small generated corpus, one streaming
   * gate micro-batch, and the read of a stored cutoff artifact that
   * every gate start pays. Plus the freshness contract of the stored
   * deploys: a fresh pass runs no stamp job of its own, and a corpus
@@ -67,16 +67,26 @@ class LmJobsSpec extends AnyFunSuite {
     assert(sites.size <= 11, s"a q200 pass ran ${sites.size} jobs: ${sites.mkString("; ")}")
   }
 
+  // the order-5 deploys read their KN tables stored with the model at
+  // its minCount (2): 23, 23 and 21 jobs while they derived them per pass
+  for ((query, budget) <- Seq("q202_kn5_buckets" -> 15, "q203_kn5_by_lang" -> 15,
+      "q205_stored_kn5_gate" -> 13))
+    test(s"one $query pass off its stored KN5 tables runs at most $budget Spark jobs") {
+      val (rows, sites) = warmPassSites(query, corpusDir)
+      assert(rows.nonEmpty)
+      assert(sites.size <= budget, s"a $query pass ran ${sites.size} jobs: ${sites.mkString("; ")}")
+    }
+
   test("one KN3 gate micro-batch runs at most 12 Spark jobs") {
     val dir = Files.createTempDirectory("graft-lm-gate-jobs").toString
     val docs = corpus(300)
     val m = Ranking.refLmTrain(docs, "text", col("doc_id") <= 200, 3)
     Ranking.writeRefLm(m, s"$dir/model")
     Ranking.writeRefLmCutoffs(Ranking.refLmCutoffs(
-      Ranking.refLmKn3Score(docs, "doc_id", "text", m)), s"$dir/cutoffs")
+      Ranking.refLmKnScore(docs, "doc_id", "text", m, 3)), s"$dir/cutoffs")
     val batch = docs.filter(col("doc_id") > 200).select("doc_id", "text")
     def gate(id: Long) = StreamingPerplexity.gateBatch(batch, "doc_id",
-      (b, m) => Ranking.refLmKn3Score(b, "doc_id", "text", m),
+      (b, m) => Ranking.refLmKnScore(b, "doc_id", "text", m, 3),
       s"$dir/model", s"$dir/cutoffs", s"$dir/decisions", id)
     gate(0L)
     val sites = JobCount.sitesInGroup(spark, "lm-jobs-gate")(gate(1L))

@@ -106,7 +106,7 @@ class LmScorerEdgeSpec extends AnyFunSuite {
       (c, g) => c.jm2(g(0), g(1))),
     ("order 3", 3, (df, id, m, k) => Ranking.refLm3Score(df, id, "text", m, keyCol = k),
       (c, g) => c.jm3(g)),
-    ("KN3", 3, (df, id, m, k) => Ranking.refLmKn3Score(df, id, "text", m, keyCol = k),
+    ("KN3", 3, (df, id, m, k) => Ranking.refLmKnScore(df, id, "text", m, 3, keyCol = k),
       (c, g) => c.kn3(g)))
 
   private def scoredMap(df: DataFrame, idCol: String, keyed: Boolean): Map[Long, (String, Long, Double)] = {
@@ -141,7 +141,7 @@ class LmScorerEdgeSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("lm-edge-bnlj").resolve("model").toString
     Ranking.writeRefLm(inline, dir)
     def plan(m: Ranking.RefLmModel) = {
-      val scored = Ranking.refLmKn3Score(poolDf("doc_id"), "doc_id", "text", m)
+      val scored = Ranking.refLmKnScore(poolDf("doc_id"), "doc_id", "text", m, 3)
       scored.collect()
       scored.queryExecution.executedPlan.toString
     }

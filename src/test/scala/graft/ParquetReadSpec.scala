@@ -22,8 +22,8 @@ class ParquetReadSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  /** The sf0.01 test tables (TESTDATA.md), beside the project. */
-  private val sf = Paths.get("..", "testdata", "sf0.01")
+  /** The sf0.01 test tables, at their TESTDATA.md location. */
+  private val sf = Paths.get("/root/testdata/sf0.01")
 
   private def sameAsSpark(p: String): Unit =
     assert(Readers.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
@@ -75,8 +75,9 @@ class ParquetReadSpec extends AnyFunSuite {
       val m = Ranking.refLmTrain(docs, "text", lit(true), order, keyCol)
       Ranking.writeRefLm(m, p)
       val tables = new java.io.File(p).list().toSeq.filterNot(_.startsWith("."))
-      // counts, contexts and totals, plus an order-3 model's KN tables
-      assert(tables.size == order + (if (order == 2) 2 else 3) + (if (order == 3) 4 else 0))
+      // counts, contexts and totals, plus from order 3 the model's KN
+      // tables: 4 at order 3, 8 at order 5
+      assert(tables.size == order + (if (order == 2) 2 else 3) + (if (order == 2) 0 else 2 * order - 2))
       for (t <- tables) sameAsSpark(s"$p/$t")
       assert(JobCount.inGroup(spark, "parquet-footer-read")(
         tables.foreach(t => Readers.parquet(spark, s"$p/$t").schema)) == 0)

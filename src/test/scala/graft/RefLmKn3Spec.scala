@@ -54,8 +54,8 @@ class RefLmKn3Spec extends AnyFunSuite {
 
   test("KN scores are the hand-computed discount chain; unseen stays finite") {
     val m = Ranking.refLmTrain(docs, "text", col("is_ref"), 3)
-    val got = Ranking.refLmKn3Score(
-        docs.filter(!col("is_ref")), "id", "text", m)
+    val got = Ranking.refLmKnScore(
+        docs.filter(!col("is_ref")), "id", "text", m, 3)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
 
     // doc 3 "a b a b":
@@ -83,8 +83,8 @@ class RefLmKn3Spec extends AnyFunSuite {
 
   test("discount sanity: seen mass above unseen, probabilities in (0, 1]") {
     val m = Ranking.refLmTrain(docs, "text", col("is_ref"), 3)
-    val scored = Ranking.refLmKn3Score(
-        docs.filter(!col("is_ref")), "id", "text", m)
+    val scored = Ranking.refLmKnScore(
+        docs.filter(!col("is_ref")), "id", "text", m, 3)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap
     // every mean logprob is finite and <= 0 (probabilities <= 1)
     assert(scored.values.forall(v => !v.isNaN && !v.isInfinite && v <= 0.0))
@@ -110,14 +110,14 @@ class RefLmKn3Spec extends AnyFunSuite {
       (12L, "a b a b", "L2", false), (13L, "x y z", "L2", false)
     ).toDF("id", "text", "lang", "is_ref")
     val km = Ranking.refLmTrain(keyed, "text", col("is_ref"), 3, Some("lang"))
-    val got = Ranking.refLmKn3Score(
-        keyed.filter(!col("is_ref")), "id", "text", km, keyCol = Some("lang"))
+    val got = Ranking.refLmKnScore(
+        keyed.filter(!col("is_ref")), "id", "text", km, 3, keyCol = Some("lang"))
       .as[(Long, String, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     val expect = Seq("L1", "L2").flatMap { lang =>
       val slice = keyed.filter(col("lang") === lang)
       val m = Ranking.refLmTrain(slice, "text", col("is_ref"), 3)
-      Ranking.refLmKn3Score(slice.filter(!col("is_ref")), "id", "text", m)
+      Ranking.refLmKnScore(slice.filter(!col("is_ref")), "id", "text", m, 3)
         .as[(Long, Long, Double)].collect()
         .map(r => r._1 -> ((lang, r._2, r._3)))
     }.toMap
@@ -136,19 +136,19 @@ class RefLmKn3Spec extends AnyFunSuite {
     assert(Ranking.mergeIntoStoredRefLm(spark, p,
       docs.filter(col("id") === 2L), "text", batchId = Some(7L)))
     val pool = docs.filter(!col("is_ref"))
-    val viaMerge = Ranking.refLmKn3Score(
-        pool, "id", "text", Ranking.readRefLm(spark, p))
+    val viaMerge = Ranking.refLmKnScore(
+        pool, "id", "text", Ranking.readRefLm(spark, p), 3)
       .orderBy("id").collect().map(_.toSeq).toSeq
-    val viaRetrain = Ranking.refLmKn3Score(
+    val viaRetrain = Ranking.refLmKnScore(
         pool, "id", "text",
-        Ranking.refLmTrain(docs, "text", col("is_ref"), 3))
+        Ranking.refLmTrain(docs, "text", col("is_ref"), 3), 3)
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(viaMerge == viaRetrain)
     // replay of the same batch id is a no-op and scores are unchanged
     assert(!Ranking.mergeIntoStoredRefLm(spark, p,
       docs.filter(col("id") === 2L), "text", batchId = Some(7L)))
-    val replayed = Ranking.refLmKn3Score(
-        pool, "id", "text", Ranking.readRefLm(spark, p))
+    val replayed = Ranking.refLmKnScore(
+        pool, "id", "text", Ranking.readRefLm(spark, p), 3)
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(replayed == viaMerge)
   }

@@ -15,7 +15,8 @@ import graft.operators.Ranking
   * Goodman 1998), the chain as one IEEE double expression with the
   * engine's parenthesization, ln rounded to 9 per distinct 5-tuple,
   * exact decimal doc sums, one final 6-round. Count pruning is a
-  * SCORE-TIME view (the stored artifact stays unpruned and additive).
+  * property of the model's KN tables (its counts stay unpruned and
+  * additive).
   */
 class RefLmKn5Spec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -60,8 +61,8 @@ class RefLmKn5Spec extends AnyFunSuite {
 
   test("KN5 scores are the hand-computed five-level discount chain") {
     val m = Ranking.refLmTrain(docs, "text", col("is_ref"), 5)
-    val got = Ranking.refLmKn5Score(
-        docs.filter(!col("is_ref")), "id", "text", m)
+    val got = Ranking.refLmKnScore(
+        docs.filter(!col("is_ref")), "id", "text", m, 5)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     val lp10 = mean6(Seq(kn5(1, 2, 2, 1, 2, 2, 1, 2, 2, 1, 2, 2, 1)))
     val lp11 = mean6(Seq(kn5(0, 2, 2, 0, 2, 2, 0, 2, 2, 0, 2, 2, 0)))
@@ -77,15 +78,15 @@ class RefLmKn5Spec extends AnyFunSuite {
     assert(got(10L)._2 > got(11L)._2 && got(11L)._2 < got(12L)._2)
   }
 
-  test("count pruning is a score-time view: singletons route through the backoff") {
+  test("count pruning is a model property: singletons route through the backoff") {
     val m = Ranking.refLmTrain(docs, "text", col("is_ref"), 5)
-    // minCount5=2 drops BOTH 5-grams (each ct 1); minCount4=2 keeps
-    // only abcd:2 — so for (a,b,c,d,e) every level above order 2
+    // minCount=2 drops BOTH 5-grams (each ct 1) and keeps only the
+    // 4-gram abcd:2 — so for (a,b,c,d,e) every level above order 2
     // zeroes out (cc3 is keyed by the quint's (c,d,e), and the pruned
     // 4-gram table's only continuation key is (b,c,d))
-    val got = Ranking.refLmKn5Score(
-        docs.filter(!col("is_ref")), "id", "text", m,
-        minCount5 = 2, minCount4 = 2)
+    val pruned = Ranking.refLmTrain(docs, "text", col("is_ref"), 5, minCount = 2)
+    val got = Ranking.refLmKnScore(
+        docs.filter(!col("is_ref")), "id", "text", pruned, 5)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap
     val lp10p = mean6(Seq(kn5(0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 2, 2, 1)))
     assert(got(10L) == lp10p)
@@ -93,10 +94,11 @@ class RefLmKn5Spec extends AnyFunSuite {
     // unseen doc still bottoms out at the same Pc
     assert(got(12L) == BigDecimal(math.log(1.0 / 11))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    // the stored frames are untouched — unpruned scoring still matches
-    // the unpruned hand chain afterwards
-    val unpruned = Ranking.refLmKn5Score(
-        docs.filter(col("id") === 10L), "id", "text", m)
+    // the counts stay unpruned — the same counts at minCount 1 still
+    // match the unpruned hand chain
+    assert(pruned.counts.map(_.count()) == m.counts.map(_.count()))
+    val unpruned = Ranking.refLmKnScore(
+        docs.filter(col("id") === 10L), "id", "text", m, 5)
       .as[(Long, Long, Double)].collect()
     assert(unpruned.head._3 ==
       mean6(Seq(kn5(1, 2, 2, 1, 2, 2, 1, 2, 2, 1, 2, 2, 1))))
@@ -111,19 +113,19 @@ class RefLmKn5Spec extends AnyFunSuite {
     assert(Ranking.mergeIntoStoredRefLm(spark, p,
       docs.filter(col("id") === 2L), "text", batchId = Some(7L)))
     val pool = docs.filter(!col("is_ref"))
-    val viaMerge = Ranking.refLmKn5Score(
-        pool, "id", "text", Ranking.readRefLm(spark, p))
+    val viaMerge = Ranking.refLmKnScore(
+        pool, "id", "text", Ranking.readRefLm(spark, p), 5)
       .orderBy("id").collect().map(_.toSeq).toSeq
-    val viaRetrain = Ranking.refLmKn5Score(
+    val viaRetrain = Ranking.refLmKnScore(
         pool, "id", "text",
-        Ranking.refLmTrain(docs, "text", col("is_ref"), 5))
+        Ranking.refLmTrain(docs, "text", col("is_ref"), 5), 5)
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(viaMerge == viaRetrain)
     // replay of the same batch id is a no-op across all eight tables
     assert(!Ranking.mergeIntoStoredRefLm(spark, p,
       docs.filter(col("id") === 2L), "text", batchId = Some(7L)))
-    val replayed = Ranking.refLmKn5Score(
-        pool, "id", "text", Ranking.readRefLm(spark, p))
+    val replayed = Ranking.refLmKnScore(
+        pool, "id", "text", Ranking.readRefLm(spark, p), 5)
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(replayed == viaMerge)
   }
@@ -142,22 +144,20 @@ class RefLmKn5Spec extends AnyFunSuite {
       (12L, "e d c b a", "L2", false),
       (13L, "u v w x y", "L2", false)
     ).toDF("id", "text", "lang", "is_ref")
-    val km = Ranking.refLmTrain(keyed, "text", col("is_ref"), 5, Some("lang"))
-    for ((mc5, mc4) <- Seq((1L, 1L), (2L, 2L))) {
-      val got = Ranking.refLmKn5Score(
-          keyed.filter(!col("is_ref")), "id", "text", km,
-          minCount5 = mc5, minCount4 = mc4, keyCol = Some("lang"))
+    for (minCount <- Seq(1L, 2L)) {
+      val km = Ranking.refLmTrain(keyed, "text", col("is_ref"), 5, Some("lang"), minCount)
+      val got = Ranking.refLmKnScore(
+          keyed.filter(!col("is_ref")), "id", "text", km, 5, keyCol = Some("lang"))
         .as[(Long, String, Long, Double)].collect()
         .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
       val expect = Seq("L1", "L2").flatMap { lang =>
         val slice = keyed.filter(col("lang") === lang)
-        val m = Ranking.refLmTrain(slice, "text", col("is_ref"), 5)
-        Ranking.refLmKn5Score(slice.filter(!col("is_ref")), "id", "text", m,
-            minCount5 = mc5, minCount4 = mc4)
+        val m = Ranking.refLmTrain(slice, "text", col("is_ref"), 5, minCount = minCount)
+        Ranking.refLmKnScore(slice.filter(!col("is_ref")), "id", "text", m, 5)
           .as[(Long, Long, Double)].collect()
           .map(r => r._1 -> ((lang, r._2, r._3)))
       }.toMap
-      assert(got == expect, s"minCount=($mc5,$mc4)")
+      assert(got == expect, s"minCount=$minCount")
     }
   }
 
@@ -177,9 +177,9 @@ class RefLmKn5Spec extends AnyFunSuite {
       "n_trigrams" -> ((df, id, mm, k) =>
         Ranking.refLm3Score(df, id, "text", mm, keyCol = k)),
       "n_trigrams" -> ((df, id, mm, k) =>
-        Ranking.refLmKn3Score(df, id, "text", mm, keyCol = k)),
+        Ranking.refLmKnScore(df, id, "text", mm, 3, keyCol = k)),
       "n_5grams" -> ((df, id, mm, k) =>
-        Ranking.refLmKn5Score(df, id, "text", mm, keyCol = k)))
+        Ranking.refLmKnScore(df, id, "text", mm, 5, keyCol = k)))
     def scores(df: DataFrame, idCol: String, cnt: String) =
       df.select(col(idCol), col(cnt), col("logprob"))
         .as[(Long, Long, Double)].collect().toSet
@@ -217,11 +217,11 @@ class RefLmKn5Spec extends AnyFunSuite {
       keyed.filter(col("id") === 2L), "text",
       batchId = Some(3L), keyCol = Some("lang")))
     val pool = keyed.filter(!col("is_ref"))
-    val viaMerge = Ranking.refLmKn5Score(
-        pool, "id", "text", Ranking.readRefLm(spark, p), keyCol = Some("lang"))
+    val viaMerge = Ranking.refLmKnScore(
+        pool, "id", "text", Ranking.readRefLm(spark, p), 5, keyCol = Some("lang"))
       .orderBy("id").collect().map(_.toSeq).toSeq
-    val viaRetrain = Ranking.refLmKn5Score(pool, "id", "text",
-        Ranking.refLmTrain(keyed, "text", col("is_ref"), 5, Some("lang")),
+    val viaRetrain = Ranking.refLmKnScore(pool, "id", "text",
+        Ranking.refLmTrain(keyed, "text", col("is_ref"), 5, Some("lang")), 5,
         keyCol = Some("lang"))
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(viaMerge == viaRetrain)

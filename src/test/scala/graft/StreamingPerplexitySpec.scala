@@ -259,7 +259,7 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     // measured under its own scorer
     val scorers: Seq[(String, (DataFrame, String, Ranking.RefLmModel) => DataFrame)] = Seq(
       "jm3" -> ((df, id, m) => Ranking.refLm3Score(df, id, "text", m)),
-      "kn3" -> ((df, id, m) => Ranking.refLmKn3Score(df, id, "text", m)))
+      "kn3" -> ((df, id, m) => Ranking.refLmKnScore(df, id, "text", m, 3)))
     scorers.foreach { case (name, score) =>
       val cutPath = s"$dir/cutoffs_$name"
       Ranking.writeRefLmCutoffs(
@@ -381,13 +381,13 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     // must come from the same smoothing it scores with
     Ranking.writeRefLmCutoffs(
       Ranking.refLmCutoffs(
-        Ranking.refLmKn3Score(calib, "id", "text", m, keyCol = Some("lang")), Some("lang")),
+        Ranking.refLmKnScore(calib, "id", "text", m, 3, keyCol = Some("lang")), Some("lang")),
       cutPath)
 
     val stream = MemoryStream[LangDoc]
     val decDir = s"$dir/decisions"
     val q = StreamingPerplexity.start(stream.toDF(), "doc_id",
-      (b, m) => Ranking.refLmKn3Score(b, "doc_id", "text", m, keyCol = Some("lang")),
+      (b, m) => Ranking.refLmKnScore(b, "doc_id", "text", m, 3, keyCol = Some("lang")),
       modelPath, cutPath, decDir, s"$dir/ck", keyCol = Some("lang"))
     try {
       stream.addData(
@@ -413,10 +413,10 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     assert(dec(105L)._1 == "L3" && dec(105L)._3 == "unmeasured"
       && dec(105L)._2.isDefined)
     // decisions carry the KN score, not the JM one
-    val knExpect = Ranking.refLmKn3Score(
+    val knExpect = Ranking.refLmKnScore(
         Seq((100L, "a b a b a", "L1"), (101L, "a b a b a", "L2"))
           .toDF("doc_id", "text", "lang"),
-        "doc_id", "text", Ranking.readRefLm(spark, modelPath), keyCol = Some("lang"))
+        "doc_id", "text", Ranking.readRefLm(spark, modelPath), 3, keyCol = Some("lang"))
       .as[(Long, String, Long, Double)].collect()
       .map(r => r._1 -> r._4).toMap
     assert(dec(100L)._2.get == knExpect(100L))
@@ -474,25 +474,24 @@ class StreamingPerplexitySpec extends AnyFunSuite {
       (2L, "e d c b a e d c b a", "L2"),
       (3L, "p q r s t p q r s t", "L3")
     ).toDF("id", "text", "lang")
-    val m = Ranking.refLmTrain(refs, "text", lit(true), 5, Some("lang"))
+    // the SERVING pruning config (minCount 2) is the model's, stored with it
+    val m = Ranking.refLmTrain(refs, "text", lit(true), 5, Some("lang"), minCount = 2)
     Ranking.writeRefLm(m, modelPath)
     val calib = Seq(
       (10L, "a b c d e a", "L1"), (11L, "v w x y z", "L1"),
       (12L, "e d c b a e", "L2"), (13L, "v w x y z", "L2"),
       (14L, "p q r", "L3")
     ).toDF("id", "text", "lang")
-    // cutoffs measured at the SERVING pruning config (2/2)
+    // cutoffs measured at that pruning config
     Ranking.writeRefLmCutoffs(
       Ranking.refLmCutoffs(
-        Ranking.refLmKn5Score(calib, "id", "text", m,
-          minCount5 = 2, minCount4 = 2, keyCol = Some("lang")), Some("lang")),
+        Ranking.refLmKnScore(calib, "id", "text", m, 5, keyCol = Some("lang")), Some("lang")),
       cutPath)
 
     val stream = MemoryStream[LangDoc]
     val decDir = s"$dir/decisions"
     val q = StreamingPerplexity.start(stream.toDF(), "doc_id",
-      (b, m) => Ranking.refLmKn5Score(b, "doc_id", "text", m,
-        minCount5 = 2, minCount4 = 2, keyCol = Some("lang")),
+      (b, m) => Ranking.refLmKnScore(b, "doc_id", "text", m, 5, keyCol = Some("lang")),
       modelPath, cutPath, decDir, s"$dir/ck", keyCol = Some("lang"))
     try {
       stream.addData(
@@ -514,11 +513,10 @@ class StreamingPerplexitySpec extends AnyFunSuite {
     assert(dec(105L)._1 == "L3" && dec(105L)._3 == "unmeasured"
       && dec(105L)._2.isDefined)
     // decisions carry the PRUNED-config KN5 score
-    val knExpect = Ranking.refLmKn5Score(
+    val knExpect = Ranking.refLmKnScore(
         Seq((100L, "a b c d e a b", "L1"), (101L, "a b c d e a b", "L2"))
           .toDF("doc_id", "text", "lang"),
-        "doc_id", "text", Ranking.readRefLm(spark, modelPath),
-        minCount5 = 2, minCount4 = 2, keyCol = Some("lang"))
+        "doc_id", "text", Ranking.readRefLm(spark, modelPath), 5, keyCol = Some("lang"))
       .as[(Long, String, Long, Double)].collect()
       .map(r => r._1 -> r._4).toMap
     assert(dec(100L)._2.get == knExpect(100L))
